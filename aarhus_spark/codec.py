@@ -78,7 +78,9 @@ def vbyte_decode(buf: np.ndarray, n: int, offset: int = 0) -> tuple[np.ndarray, 
     loops over byte-positions (≤10), not values."""
     if n == 0:
         return np.empty(0, dtype=np.uint64), offset
-    b = buf[offset:]
+    # a uint64 takes at most 10 VByte bytes: scanning only the next 10·n
+    # keeps one block's decode O(block), not O(rest of the payload)
+    b = buf[offset:offset + 10 * n]
     is_last = (b & 0x80) == 0
     # index of the terminating byte of each of the first n values
     ends = np.flatnonzero(is_last)[:n]

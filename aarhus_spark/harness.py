@@ -227,7 +227,7 @@ def _bm25_oracle_sql(k: int = 10, by_url: bool = False,
     via the correlated mterms count) has to match while the queries
     text becomes the optional should clauses gated by
     min_should_match (a term in both clauses counts once, as must —
-    the max(kind) dedup mirrors operators/search._qterms_with_kinds)."""
+    the max(kind) dedup mirrors operators/search._QueryAnalysis.kinds_df)."""
     queries = queries if queries is not None else FLAGSHIP_QUERIES
     corpus = corpus_ctes if corpus_ctes is not None else _CORPUS_CTES_DUCK
     vals = ", ".join(f"({qid}, '{qt}')" for qid, qt in queries)

@@ -38,24 +38,29 @@ def spill_totals(spark: SparkSession) -> tuple[int, int]:
         return 0, 0
 
 
+# a stage's metrics are final only once it reaches one of these states;
+# an inactive PENDING stage (queued behind its parents) has not run yet
+FINAL_STAGE_STATUSES = frozenset({"COMPLETE", "SKIPPED", "FAILED"})
+
+
 class SpillTracker:
     """Per-stage spill deltas: ``delta()`` returns the spill accrued
     since the previous call (or construction).
 
-    Incremental scan (r8): ``spill_totals`` pays one py4j round trip
-    PER STAGE IN THE APP'S HISTORY (~0.4 ms each — 70 ms at 180
-    stages, measured), and build/compact call ``delta()`` at every
-    stage boundary, so in a long session the metrics read itself grew
-    into the timed region (seconds per build late in a bench run).
-    ``stageList`` returns stages stageId-DESCENDING, so the tracker
-    scans only stages newer than the last FINALIZED one and keeps a
-    running sum. A stage is finalized (its value added to the running
-    sum, never re-read) only once it is no longer active — completed
-    stages' metrics are final. Caveat, documented: a cluster-mode
-    stage re-run after a fetch failure (same stageId, new attempt)
-    that spills MORE in the re-run is under-counted by the already-
-    finalized first attempt; local mode never re-runs stages, and the
-    metrics sink trades that corner for O(new stages) boundary cost."""
+    Incremental sum (r8): build/compact call ``delta()`` at every stage
+    boundary, so re-adding every stage of a long session on each call
+    would grow the metrics read into the timed region. The tracker
+    keeps a running sum over FINALIZED stages — every stage id up to
+    ``_final_max`` whose attempts all reached COMPLETE, SKIPPED or
+    FAILED (``FINAL_STAGE_STATUSES``); their metrics never change
+    again, so only newer stages' metrics are read and added. A stage
+    that is merely not active (PENDING, waiting on its parents) is not
+    final: it may still run and spill. The scan filters on
+    ``stageId > _final_max`` over the whole ``stageList``, whatever
+    order the status store returns it in. Caveat, documented: a
+    cluster-mode stage re-run after a fetch failure with a NEW attempt
+    started after its id was finalized is not counted; local mode
+    never re-runs stages."""
 
     def __init__(self, spark: SparkSession):
         self._spark = spark
@@ -64,35 +69,48 @@ class SpillTracker:
         self._final_disk = 0
         self._last_mem, self._last_disk = self._totals()
 
+    def _stages(self) -> list[tuple[int, str, int, int]]:
+        """(stageId, status, memoryBytesSpilled, diskBytesSpilled) per
+        stage attempt with stageId > _final_max."""
+        sc = self._spark.sparkContext
+        jvm = sc._jvm
+        store = sc._jsc.sc().statusStore()
+        empty = jvm.java.util.ArrayList()
+        darr = sc._gateway.new_array(jvm.double, 0)
+        seq = store.stageList(empty, False, False, darr, empty)
+        out = []
+        for i in range(seq.size()):
+            sd = seq.apply(i)
+            sid = sd.stageId()
+            if sid > self._final_max:
+                out.append((sid, sd.status().toString(),
+                            int(sd.memoryBytesSpilled()),
+                            int(sd.diskBytesSpilled())))
+        return out
+
     def _totals(self) -> tuple[int, int]:
         try:
-            sc = self._spark.sparkContext
-            jvm = sc._jvm
-            store = sc._jsc.sc().statusStore()
-            empty = jvm.java.util.ArrayList()
-            darr = sc._gateway.new_array(jvm.double, 0)
-            seq = store.stageList(empty, False, False, darr, empty)
-            active = set(sc.statusTracker().getActiveStageIds())
-            recent = []               # (stageId, mem, disk), id desc
-            for i in range(seq.size()):
-                sd = seq.apply(i)
-                sid = sd.stageId()
-                if sid <= self._final_max:
-                    break             # older stages already summed
-                recent.append((sid, int(sd.memoryBytesSpilled()),
-                               int(sd.diskBytesSpilled())))
-            mem = self._final_mem + sum(r[1] for r in recent)
-            disk = self._final_disk + sum(r[2] for r in recent)
-            # finalize the contiguous inactive run just above _final_max
-            for sid, m, d in sorted(recent):
-                if sid in active:
-                    break
-                self._final_max = sid
-                self._final_mem += m
-                self._final_disk += d
-            return mem, disk
+            recent = self._stages()
         except Exception:
             return self._last_mem, self._last_disk
+        mem = self._final_mem + sum(r[2] for r in recent)
+        disk = self._final_disk + sum(r[3] for r in recent)
+        # finalize the run of stage ids just above _final_max whose
+        # attempts are all in a final state; stop at the first that is not
+        per: dict[int, list] = {}     # stageId -> [all final, mem, disk]
+        for sid, status, m, d in recent:
+            p = per.setdefault(sid, [True, 0, 0])
+            p[0] = p[0] and status in FINAL_STAGE_STATUSES
+            p[1] += m
+            p[2] += d
+        for sid in sorted(per):
+            done, m, d = per[sid]
+            if not done:
+                break
+            self._final_max = sid
+            self._final_mem += m
+            self._final_disk += d
+        return mem, disk
 
     def delta(self) -> dict:
         mem, disk = self._totals()

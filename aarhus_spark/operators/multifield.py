@@ -18,17 +18,11 @@ ES's behaviour for a missing field).  This reuses the entire existing
 build/search stack unchanged: per-field df/avgdl/N statistics fall out
 of each field's own index, exactly like Lucene's per-field postings.
 
-Query side: per-field exact disjunctive BM25 (the TAAT path,
-deterministic sorted fold) without top-k truncation, then one
-hash-aggregation per (query, doc) combining per-field scores with a
-deterministic field-sorted fold. The combination is EXACT (not a
-rescoring of per-field top-k). Scale: per-field scoring is the same
-O(query-term postings) stream the single-field engine ships; the
-combine step is one extra shuffle keyed (query_id, docid) over docs
-matching ≥1 field — the same key the per-field aggregation already
-produced, so AQE coalesces it; a WAND-style upper-bound prune across
-fields is the known follow-up, not a blocker (ES block-max applies
-per field the same way).
+Query side: one block-max WAND kernel per query over the field-tagged
+candidate rows of every field (Broder'03 / Ding & Suel'11 with a
+combined cross-field interval bound), exact and bit-identical to the
+field-sorted fold of per-field TAAT scores; no per-field match set is
+materialized or shuffled.
 """
 
 from __future__ import annotations
@@ -36,6 +30,7 @@ from __future__ import annotations
 import json
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -121,321 +116,167 @@ def list_fields(out_root: str) -> list[str]:
         return json.load(f)["fields"]
 
 
-# pruned top-k dispatch threshold. OPT-IN by default (effectively
-# infinite): the round-8 measurements found the exhaustive combiner
-# still faster at 200k AND 900k docs on the harness field shape —
-# the 40-char title field puts thousands of docs into single
-# (tf, dl) score classes, block-max bounds degenerate under those
-# ties, and the per-field WAND top-k' passes stop pruning (see
-# OPTIMIZATION_r08.md §7 for the walls). The pruned path stays
-# available (prune=True / this env knob) for corpora whose fields
-# have discriminative score distributions; it is bit-identical
-# (pytest-pinned incl. a tie-heavy fixture).
-import os as _os
-
-MULTI_MATCH_PRUNE_MIN_DOCS = int(
-    _os.environ.get("AARHUS_MM_PRUNE_MIN_DOCS", 1 << 62))
-
-
 def search_multi_match(spark: SparkSession, index_root: str,
                        queries: DataFrame, k: int = 10,
                        fields: list[str] | None = None,
                        boosts: dict[str, float] | None = None,
                        mode: str = "best_fields",
-                       tie_breaker: float = 0.0,
-                       prune: bool | None = None) -> DataFrame:
+                       tie_breaker: float = 0.0) -> DataFrame:
     """ES ``multi_match`` top-k over a multi-field index.
 
     ``best_fields``: score = max over fields + tie_breaker · (sum of
     the other fields) — ES dis_max with tie_breaker (default 0.0 ⇒
     pure max). ``most_fields``: score = sum over fields. Per-field
     boosts multiply that field's BM25 score (ES ``fields=["f^2"]``).
+    Queries are (query_id, qtext) rows; other columns are ignored.
 
-    Exact, not a rescoring — on BOTH paths. ``prune=None`` dispatches
-    on corpus size (like search_topk's fan-out dispatch):
-
-    - exhaustive (small index / forced ``prune=False``): every (query,
-      doc, field) BM25 score is the full TAAT value and the cross-field
-      fold runs over a field-name-sorted struct array, so FP summation
-      order is deterministic (same device as the per-field term fold).
-    - pruned (large index / forced ``prune=True``): Fagin-style
-      threshold algorithm over the per-field block-max WAND engines —
-      per-field exact top-k' (WAND never materializes the match set),
-      combined-score upper bound τ for every UNSEEN doc from the
-      per-field k'-th scores, exact re-score of the candidate union
-      via a candidate-restricted TAAT decode (rows pruned BEFORE the
-      shuffle), and k' escalation until ≥ k candidates beat τ
-      strictly or every field is exhausted. Scores are bit-identical
-      to the exhaustive path: per-field scores come from the same
-      TAAT fold restricted to candidates (restriction does not change
-      a surviving pair's fold entries), and the cross-field combine
-      runs in the same field-name-sorted order (pytest-pinned
-      pruned ≡ exhaustive).
+    One pass, shaped like :func:`~.search.search_wand`: every field's
+    candidate segment rows, tagged with their field, are unioned,
+    broadcast-joined with the analyzed query terms and scored by ONE
+    block-max WAND kernel per query (:func:`_multi_match_one_query`),
+    so no (query, doc, field) score is ever materialized or shuffled.
+    Exact, not a rescoring of per-field top-k lists: each field's score
+    is the same sorted-term fold as ``search_taat``, times the field's
+    boost, and the fields fold in field-name order from 0.0 — the sum
+    left to right, the best with ``greatest`` — so scores are
+    bit-identical to summing per-field TAAT scores in that order.
+    Above one docid range (``default_n_ranges``) the kernel runs per
+    (query, docid range) and the ranges merge like
+    ``search_wand_ranges``.
     """
+    from .search import (RESULT_SCHEMA, _chain_stats, _dfg_or_none,
+                         _merge_ranges, _QueryAnalysis, _range_join,
+                         candidate_segments, default_n_ranges)
+
     if mode not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match mode: {mode!r}")
-    fields = fields or list_fields(index_root)
+    fields = sorted(set(fields or list_fields(index_root)))
     boosts = boosts or {}
-    if prune is None:
-        with open(os.path.join(index_root, MULTIFIELD_MANIFEST)) as f:
-            n_docs = json.load(f).get("N", 0)
-        prune = (n_docs >= MULTI_MATCH_PRUNE_MIN_DOCS
-                 and 0.0 <= tie_breaker <= 1.0
-                 and all(float(b) >= 0.0 for b in boosts.values()))
-    if prune:
-        return _multi_match_pruned(spark, index_root, queries, k, fields,
-                                   boosts, mode, tie_breaker)
-    return _multi_match_exhaustive(spark, index_root, queries, k, fields,
-                                   boosts, mode, tie_breaker)
-
-
-def _multi_match_exhaustive(spark: SparkSession, index_root: str,
-                            queries: DataFrame, k: int,
-                            fields: list[str], boosts: dict[str, float],
-                            mode: str, tie_breaker: float) -> DataFrame:
-    """The full-materialization combiner (docstring contract above) —
-    the bit-equality twin of the pruned path."""
-    from pyspark.sql.window import Window
-
-    from .search import search_taat
-
-    per: list[DataFrame] = []
+    qa = _QueryAnalysis(spark, queries.select("query_id", "qtext"))
+    if not qa.terms:
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+    fstats, seg, dead = [], None, np.empty(0, dtype=np.int64)
     for name in fields:
-        s = search_taat(spark, _field_dir(index_root, name), queries,
-                        k=(1 << 31) - 1)
-        b = float(boosts.get(name, 1.0))
-        per.append(s.select(
-            "query_id", "docid", F.lit(name).alias("field"),
-            (F.col("score") * F.lit(b)).alias("fscore")))
-    u = per[0]
-    for p in per[1:]:
-        u = u.unionByName(p)
-    fs = (u.groupBy("query_id", "docid")
-          .agg(F.sort_array(F.collect_list(
-              F.struct("field", "fscore"))).alias("fs")))
-    total = F.aggregate("fs", F.lit(0.0), lambda a, x: a + x["fscore"])
-    best = F.aggregate("fs", F.lit(0.0),
-                       lambda a, x: F.greatest(a, x["fscore"]))
+        fdir = _field_dir(index_root, name)
+        n_docs, avgdl, _, fdead = _chain_stats(spark, fdir)
+        fseg = candidate_segments(spark, fdir, qa.terms)
+        fstats.append((name, n_docs, avgdl,
+                       _dfg_or_none(spark, fdir, qa.terms, fseg, fdead),
+                       float(boosts.get(name, 1.0))))
+        # docids are shared across fields: a doc dead in one is dead
+        dead = np.union1d(dead, fdead)
+        fseg = fseg.withColumn("field", F.lit(name))
+        seg = fseg if seg is None else seg.unionByName(fseg)
+    args = (fstats, dead, mode, float(tie_breaker), k)
+
+    with open(os.path.join(index_root, MULTIFIELD_MANIFEST)) as f:
+        n_ranges = default_n_ranges(json.load(f)["N"])
+    if n_ranges <= 1:
+        return (seg.join(F.broadcast(qa.qterms_df()), "term")
+                .groupBy("query_id")
+                .applyInPandas(lambda g: _multi_match_one_query(g, *args),
+                               RESULT_SCHEMA))
+    dirs = [_field_dir(index_root, name) for name in fields]
+    seg_r = _range_join(spark, seg, qa.qterms_df(), dirs, n_ranges)
+    if seg_r is None:
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+
+    def run(g: pd.DataFrame) -> pd.DataFrame:
+        return _multi_match_one_query(g, *args,
+                                      range_lo=int(g["lo"].iloc[0]),
+                                      range_hi=int(g["hi"].iloc[0]))
+
+    return _merge_ranges(seg_r.groupBy("query_id", "rng")
+                         .applyInPandas(run, RESULT_SCHEMA), k)
+
+
+def _combine(fscores: np.ndarray, hit: np.ndarray, mode: str,
+             tie_breaker: float) -> np.ndarray:
+    """Cross-field combine of boosted per-field scores (rows = fields
+    in name order, columns = docs; ``hit`` marks the fields a doc
+    matched). Folds from 0.0 over the matched fields in row order —
+    ``total`` adds left to right, ``best`` takes ``greatest`` — so the
+    double arithmetic is the field-sorted fold of ES's combine:
+    most_fields = total, best_fields = best + tie·(total − best)."""
+    total = np.zeros(fscores.shape[1], dtype=np.float64)
+    best = np.zeros(fscores.shape[1], dtype=np.float64)
+    for v, m in zip(fscores, hit):
+        total = np.where(m, total + v, total)
+        best = np.where(m, np.maximum(best, v), best)
     if mode == "most_fields":
-        scored = fs.withColumn("score", total)
-    else:
-        scored = fs.withColumn(
-            "score", best + F.lit(float(tie_breaker)) * (total - best))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (scored.drop("fs")
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+        return total
+    return best + tie_breaker * (total - best)
 
 
-def _combine_rows(rows_by_field: dict[str, "pd.DataFrame"],
-                  boosts: dict[str, float], mode: str,
-                  tie_breaker: float) -> "pd.DataFrame":
-    """Driver-side cross-field combine over candidate (query, doc)
-    pairs, replicating the exhaustive fold bit-for-bit: per pair, the
-    boosted per-field scores fold in FIELD-NAME-SORTED order —
-    ``sum`` starts at 0.0 and adds left-to-right (= the exhaustive
-    ``aggregate`` over ``sort_array(struct(field, fscore))``), ``best``
-    is the same fold with ``greatest``. Returns (query_id, docid,
-    score) rows."""
-    import numpy as np
+def _multi_match_one_query(g: pd.DataFrame, fstats: list[tuple],
+                           dead: np.ndarray, mode: str, tie_breaker: float,
+                           k: int, range_lo: int = 0,
+                           range_hi: int | None = None) -> pd.DataFrame:
+    """Exact combined top-k for one query (or one docid range of it)
+    over field-tagged candidate rows.
 
-    frames = []
-    for name in sorted(rows_by_field):
-        pdf = rows_by_field[name]
-        if not len(pdf):
+    ``fstats`` = (field, N, avgdl, df map or None, boost) per field in
+    name order. Every field's blocks go into ONE block table (term
+    indexes field-major, terms sorted within a field) cut into one set
+    of elementary intervals (``search._BlockScan``). A candidate's
+    per-field score is that field's sorted-term ``np.add.at`` fold —
+    exactly ``_wand_one_query``'s — times the field's boost; fields
+    combine by :func:`_combine`.
+
+    Pruning: an interval's bound is the combine of boost_f · Σ (covering
+    block bounds of field f). The combine is monotone in every field
+    score when every boost is ≥ 0 and 0 ≤ tie_breaker ≤ 1, so the
+    bound then holds for every doc in the interval; it is widened by a
+    relative 1e-12 so double rounding in the combine can never drop it
+    below a real score. For any other parameters the bound is +inf:
+    the same kernel, exact, without pruning."""
+    from .search import _block_table, _BlockScan, _empty_result, _TopK
+
+    if range_hi is None:
+        range_hi = np.iinfo(np.int64).max
+    blocks: list[tuple] = []
+    idfs: list[float] = []
+    avgdls: list[float] = []
+    field_of_ti: list[int] = []
+    for fi, (name, n_docs, avgdl, dfg, _boost) in enumerate(fstats):
+        gf = g[g["field"] == name]
+        if not len(gf):
             continue
-        b = float(boosts.get(name, 1.0))
-        frames.append(pd.DataFrame({
-            "query_id": pdf["query_id"].astype("int64"),
-            "docid": pdf["docid"].astype("int64"),
-            "field": name,
-            "fscore": pdf["score"].astype("float64") * b,
-        }))
-    if not frames:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "docid": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    allp = pd.concat(frames, ignore_index=True)
-    # fold order: (query, doc) group, fields ascending — concat order
-    # already is field-name-sorted; a stable groupby preserves it
-    out_q, out_d, out_s = [], [], []
-    allp = allp.sort_values(["query_id", "docid", "field"], kind="stable")
-    q = allp["query_id"].to_numpy()
-    d = allp["docid"].to_numpy()
-    fsc = allp["fscore"].to_numpy()
-    n = len(allp)
-    change = np.flatnonzero((q[1:] != q[:-1]) | (d[1:] != d[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    for s, e in zip(starts, ends):
-        total = 0.0
-        best = 0.0
-        for v in fsc[s:e]:
-            total = total + float(v)
-            best = best if best >= float(v) else float(v)
-        if mode == "most_fields":
-            sc = total
-        else:
-            sc = best + float(tie_breaker) * (total - best)
-        out_q.append(int(q[s])); out_d.append(int(d[s])); out_s.append(sc)
-    return pd.DataFrame({"query_id": out_q, "docid": out_d, "score": out_s})
-
-
-def _multi_match_pruned(spark: SparkSession, index_root: str,
-                        queries: DataFrame, k: int,
-                        fields: list[str], boosts: dict[str, float],
-                        mode: str, tie_breaker: float) -> DataFrame:
-    """Threshold-algorithm combiner (contract in search_multi_match).
-
-    Per round: per-field exact top-k' via the block-max WAND engine
-    (search_topk — never materializes a match set), candidate union +
-    per-field thresholds τ_f (k'-th boosted score; 0 when the field is
-    exhausted below k'), exact scores for ALL candidates from a
-    candidate-restricted TAAT decode per field, combine driver-side in
-    the exhaustive fold order, accept a query when its k-th candidate
-    strictly beats combine(τ) — an unseen doc scores ≤ τ_f per field
-    and the combine is monotone in each argument for 0 ≤ tie ≤ 1 —
-    or when every field is exhausted; otherwise k' escalates ×4.
-    """
-    import numpy as np
-
-    from .search import RESULT_SCHEMA, search_taat, search_topk
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    qp = queries.select("query_id", "qtext").toPandas()
-    pending = [int(x) for x in qp["query_id"]]
-    results: dict[int, pd.DataFrame] = {}
-    kprime = max(4 * k, 40)
-    while pending:
-        sub_q = spark.createDataFrame(
-            qp[qp["query_id"].isin(pending)], "query_id long, qtext string")
-        # per-field jobs are independent — run them concurrently so the
-        # second field back-fills the first's task tail (guide §2.6)
-        with ThreadPoolExecutor(max_workers=len(fields)) as pool:
-            futs = {name: pool.submit(
-                lambda n=name: search_topk(
-                    spark, _field_dir(index_root, n), sub_q,
-                    k=kprime).toPandas()) for name in fields}
-            tops: dict[str, pd.DataFrame] = {
-                name: f.result() for name, f in futs.items()}
-        # candidate union + per-(query, field) thresholds. d_star = the
-        # docid of the k'-th hit: WAND returns (score desc, docid asc),
-        # so any UNSEEN doc whose field score TIES τ_f must have a
-        # docid > d_star_f — the tie-break lever that settles
-        # tie-heavy fields (e.g. short title fields, where thousands of
-        # docs share one (tf, dl) score class and τ never drops).
-        cand_pairs: dict[int, set] = {qid: set() for qid in pending}
-        tau: dict[int, dict[str, float]] = {qid: {} for qid in pending}
-        d_star: dict[int, dict[str, int]] = {qid: {} for qid in pending}
-        exhausted: dict[int, bool] = {qid: True for qid in pending}
-        for name in fields:
-            b = float(boosts.get(name, 1.0))
-            t = tops[name]
-            for qid, g in t.groupby("query_id"):
-                qid = int(qid)
-                cand_pairs[qid].update(int(x) for x in g["docid"])
-                if len(g) >= kprime:
-                    last = g.loc[g["rank"].idxmax()]
-                    tau[qid][name] = b * float(last["score"])
-                    d_star[qid][name] = int(last["docid"])
-                    exhausted[qid] = False
-        cand_docids = np.array(
-            sorted({d for s in cand_pairs.values() for d in s}),
-            dtype=np.int64)
-        if cand_docids.size == 0:
-            for qid in pending:
-                results[qid] = pd.DataFrame(
-                    {"query_id": pd.Series([], dtype="int64"),
-                     "rank": pd.Series([], dtype="int32"),
-                     "docid": pd.Series([], dtype="int64"),
-                     "score": pd.Series([], dtype="float64")})
-            break
-        # exact per-field scores for candidates only: the TAAT decode
-        # drops non-candidates before its shuffle; the fold for a
-        # surviving pair is unchanged, so scores are bit-identical.
-        # Concurrent per field, like the top-k' pass above.
-        with ThreadPoolExecutor(max_workers=len(fields)) as pool:
-            futs = {name: pool.submit(
-                lambda n=name: search_taat(
-                    spark, _field_dir(index_root, n), sub_q,
-                    return_matches=True,
-                    _candidate_docids=cand_docids).toPandas())
-                for name in fields}
-            rows_by_field: dict[str, pd.DataFrame] = {
-                name: f.result() for name, f in futs.items()}
-        comb = _combine_rows(rows_by_field, boosts, mode, tie_breaker)
-        # keep only each query's own candidate pairs (the docid-level
-        # decode restriction spans queries, so query A's fold may have
-        # produced pairs for query B's candidates — drop those; they
-        # are exact scores but unproven-complete for A's ranking)
-        if len(comb):
-            mask = [int(dd) in cand_pairs.get(int(qq), ())
-                    for qq, dd in zip(comb["query_id"], comb["docid"])]
-            comb = comb[pd.Series(mask, index=comb.index)]
-        still: list[int] = []
-        for qid in pending:
-            g = (comb[comb["query_id"] == qid]
-                 .sort_values(["score", "docid"],
-                              ascending=[False, True], kind="stable")
-                 if len(comb) else comb)
-            taus = tau[qid]
-            tvals = [taus.get(name, 0.0) for name in sorted(fields)]
-            total_t = 0.0
-            best_t = 0.0
-            for v in tvals:
-                total_t += v
-                best_t = best_t if best_t >= v else v
-            bound = (total_t if mode == "most_fields"
-                     else best_t + float(tie_breaker) * (total_t - best_t))
-            n_above = int((g["score"] > bound).sum()) if len(g) else 0
-            accepted = exhausted[qid] or n_above >= k
-            if not accepted and len(g) >= k:
-                # tie-aware acceptance: the k-th candidate may TIE the
-                # bound. An unseen doc tying it must (a) hit τ_f in the
-                # field(s) realizing the bound — for most_fields or
-                # tie_breaker > 0 that is EVERY non-exhausted field
-                # (the combine is strictly increasing per coordinate);
-                # for pure best_fields, SOME bound-achieving field —
-                # and (b) rank below k' there, i.e. have docid >
-                # d_star_f (WAND order is score desc, docid asc). So
-                # the k-th candidate wins every such tie when its docid
-                # ≤ the smallest docid an unseen tying doc can have.
-                row_k = g.iloc[k - 1]
-                if float(row_k["score"]) == bound:
-                    ds = d_star[qid]
-                    if mode == "best_fields" and float(tie_breaker) == 0.0:
-                        # unseen tying doc needs ONE bound-achieving
-                        # field → its docid > min of those d_stars
-                        lims = [ds[n] for n in ds
-                                if taus.get(n, 0.0) == bound]
-                        lim = min(lims) if lims else None
-                    else:
-                        # …needs EVERY non-exhausted field at τ → its
-                        # docid > max of all d_stars
-                        lim = max(ds.values()) if ds else None
-                    if lim is not None and int(row_k["docid"]) <= lim:
-                        accepted = True
-            if accepted:
-                top = g.head(k).reset_index(drop=True)
-                results[qid] = pd.DataFrame({
-                    "query_id": top["query_id"].astype("int64"),
-                    "rank": pd.Series(
-                        range(1, len(top) + 1), dtype="int32"),
-                    "docid": top["docid"].astype("int64"),
-                    "score": top["score"].astype("float64"),
-                })
-            else:
-                still.append(qid)
-        pending = still
-        kprime *= 4
-    out = (pd.concat([results[qid] for qid in sorted(results)],
-                     ignore_index=True)
-           if results else
-           pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                         "rank": pd.Series([], dtype="int32"),
-                         "docid": pd.Series([], dtype="int64"),
-                         "score": pd.Series([], dtype="float64")}))
-    return spark.createDataFrame(out, RESULT_SCHEMA)
+        _, fidfs, fblocks = _block_table(gf, n_docs, avgdl, dfg,
+                                         ti0=len(idfs))
+        blocks += fblocks
+        idfs += fidfs
+        avgdls += [avgdl] * len(fidfs)
+        field_of_ti += [fi] * len(fidfs)
+    scan = _BlockScan(blocks, range_lo, range_hi, idfs, avgdls,
+                      field_of_ti, len(fstats))
+    if not scan.blocks:
+        return _empty_result()
+    boost = np.array([s[4] for s in fstats], dtype=np.float64)[:, None]
+    if (boost >= 0.0).all() and 0.0 <= tie_breaker <= 1.0:
+        ub = _combine(boost * scan.ubs, np.ones(scan.ubs.shape, dtype=bool),
+                      mode, tie_breaker) * (1.0 + 1e-12)
+    else:
+        ub = np.full(scan.ends.size, np.inf)
+    fi_of = np.array(field_of_ti, dtype=np.int64)
+    top = _TopK(k)
+    for iv, lo_d, hi_d in scan.walk(ub, top):
+        per_term, _ = scan.gather(iv, lo_d, hi_d)
+        if not per_term:
+            continue
+        alld = np.concatenate([p[0] for p in per_term])
+        allc = np.concatenate([p[1] for p in per_term])
+        allf = np.concatenate([np.full(p[0].size, fi_of[p[2]])
+                               for p in per_term])
+        uniq, inv = np.unique(alld, return_inverse=True)
+        fscores = np.zeros((len(fstats), uniq.size), dtype=np.float64)
+        # adds in array order = field-major, sorted-term order
+        np.add.at(fscores, (allf, inv), allc)
+        hit = np.zeros(fscores.shape, dtype=bool)
+        hit[allf, inv] = True
+        scores = _combine(fscores * boost, hit, mode, tie_breaker)
+        if dead.size:
+            keep = ~np.isin(uniq, dead)
+            uniq, scores = uniq[keep], scores[keep]
+        top.push(*top.mask(uniq, scores))
+    return top.frame(int(g["query_id"].iloc[0]))

@@ -36,6 +36,7 @@ stage would be pure overhead.
 
 from __future__ import annotations
 
+import functools
 import heapq
 import json
 import os
@@ -66,17 +67,32 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     ``defaultParallelism`` slices, so EVERY materialization of the
     frame — a broadcast hash-relation build, a LocalTableScan feed, a
     ``collect`` — schedules a full task wave (~0.3 s for a 25-row
-    frame at local[32], measured r8). The pandas/Arrow path embeds the
-    rows in the logical plan as a LocalRelation instead: broadcast
-    builds and collects run driver-side, job-free (same pipeline
-    measured 0.55 → 0.26 s). Values are identical — the explicit DDL
-    ``schema`` drives the Arrow conversion exactly as it drove the
-    list path (oracle suite re-verified). ``schema`` must be a flat
-    comma-separated DDL (no struct/map fields — the column-name parse
-    splits on top-level commas only)."""
-    names = [f.strip().split()[0] for f in schema.split(",")]
-    return spark.createDataFrame(pd.DataFrame(list(rows), columns=names),
-                                 schema=schema)
+    frame at local[32], measured r8). An Arrow table embeds the rows in
+    the logical plan as a LocalRelation instead: broadcast builds and
+    collects run driver-side, job-free (same pipeline measured 0.55 →
+    0.26 s). The table is typed from the DDL ``schema`` and carries
+    explicit validity, so ``None`` stays NULL and the plan stays a
+    LocalRelation whether or not
+    ``spark.sql.execution.arrow.pyspark.enabled`` is set (a pandas
+    frame would turn ``None`` in a float column into NaN, which only
+    the Arrow conversion maps back to NULL)."""
+    import pyarrow as pa
+
+    arrow_schema = _arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema))
+
+
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(schema: str):
+    """Arrow schema of a DDL string (parsed once per process: the DDL
+    parse is a JVM round trip, and local_df's schemas are constants)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(schema))
 
 
 def localize_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
@@ -243,33 +259,6 @@ def analyze_queries(queries: DataFrame) -> DataFrame:
             yield ex
 
     return queries.mapInPandas(tok, schema="query_id long, term string")
-
-
-def analyze_neg_queries(queries: DataFrame) -> DataFrame | None:
-    """ES bool.must_not clause analysis: if the queries DataFrame
-    carries a nullable ``neg_qtext`` column, analyze it with the SAME
-    frozen tokenizer as the positive text and return distinct
-    (query_id, term) exclusion pairs; None when the column is absent
-    (the common no-bool case costs nothing)."""
-    if "neg_qtext" not in queries.columns:
-        return None
-    nq = (queries.filter(F.col("neg_qtext").isNotNull())
-          .select("query_id", F.col("neg_qtext").alias("qtext")))
-    return analyze_queries(nq)
-
-
-def analyze_must_queries(queries: DataFrame) -> DataFrame | None:
-    """ES bool.must clause analysis: a nullable ``must_qtext`` column
-    holds per-query REQUIRED terms — every analyzed must-term (OOV
-    included) has to match, while ``qtext`` becomes the optional
-    should-clause set (matched count ≥ min_should_match, default 0 when
-    a must clause is present — exactly ES's default). None when the
-    column is absent."""
-    if "must_qtext" not in queries.columns:
-        return None
-    mq = (queries.filter(F.col("must_qtext").isNotNull())
-          .select("query_id", F.col("must_qtext").alias("qtext")))
-    return analyze_queries(mq)
 
 
 def _check_bool_args(require_all: bool, min_should_match: int | None,
@@ -534,10 +523,11 @@ class _QueryAnalysis:
         return self._spark.createDataFrame(self.qterms_pdf, QTERMS_SCHEMA)
 
     def kinds_df(self) -> DataFrame:
-        """The _qterms_with_kinds frame (kind 0=should/1=must/2=must_not,
-        max-deduped per (query, term)) as a LocalTableScan; plain qterms
-        when no bool clause exists — same contract as the DataFrame
-        version."""
+        """Should/must/must_not (query_id, term) pairs with a ``kind``
+        flag (0/1/2), max-deduped per (query, term) — a term in both
+        should and must counts once as must; an excluded term keeps
+        only the exclusion — as a LocalTableScan; plain qterms when no
+        bool clause exists."""
         if self.neg_pdf is None and self.must_pdf is None:
             return self.qterms_df()
         frames = [self.qterms_pdf.assign(kind=0)]
@@ -615,16 +605,8 @@ def search_taat(
     min_should_match: int | None = None,
     score_mode: str = "bm25",
     return_matches: bool = False,
-    _candidate_docids: np.ndarray | None = None,
 ) -> DataFrame:
     """Distributed top-k. Returns (query_id, rank, docid, score).
-
-    ``_candidate_docids`` (internal — the multi_match pruned combiner):
-    a SORTED unique docid array; the decode pass drops every other
-    docid BEFORE the shuffle, so the fold/aggregation runs over
-    candidate rows only. Scores for surviving (query, doc) pairs are
-    bit-identical to the unrestricted run (the per-pair fold sees
-    exactly the same entries). bm25 score_mode only.
 
     ``return_matches=True`` (round 7) skips the final top-k window and
     returns the full scored match set (query_id, docid, score) — the
@@ -678,9 +660,6 @@ def search_taat(
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     _check_score_mode(score_mode)
     prox = score_mode == "proximity"
-    if _candidate_docids is not None and prox:
-        raise ValueError("_candidate_docids supports score_mode='bm25' only")
-    cand_arr = _candidate_docids
     qa = _QueryAnalysis(spark, queries)
     terms, neg_terms, must_terms = qa.terms, qa.neg_terms, qa.must_terms
     has_must = qa.must_pdf is not None
@@ -721,13 +700,6 @@ def search_taat(
                 docids = np.concatenate([p[0] for p in parts])
                 tfs = np.concatenate([p[1] for p in parts])
                 dls = np.concatenate([p[2] for p in parts])
-                if cand_arr is not None:
-                    # prune NON-candidates before the shuffle (a term's
-                    # docids are unique; cand_arr sorted unique)
-                    keep = np.isin(docids, cand_arr, assume_unique=True)
-                    if not keep.any():
-                        continue
-                    docids, tfs, dls = docids[keep], tfs[keep], dls[keep]
                 w = _idf(float(dfg[term]) if dfg is not None
                          else float(row_df), n_docs)
                 # exact: partial recomputed from (tf, dl) with the
@@ -830,6 +802,203 @@ def search_taat(
 # Q5: block-max WAND (per-query, interval-at-a-time, exact)
 # ---------------------------------------------------------------------------
 
+def _empty_result() -> pd.DataFrame:
+    return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
+                         "rank": pd.Series([], dtype="int32"),
+                         "docid": pd.Series([], dtype="int64"),
+                         "score": pd.Series([], dtype="float64")})
+
+
+def _block_table(g: pd.DataFrame, n_docs: int, avgdl: float,
+                 dfg: dict | None, ti0: int = 0
+                 ) -> tuple[list[str], list[float], list[tuple]]:
+    """Sorted terms, their idfs, and the block-max table of one index's
+    term rows: one ``(start, end, ub, ti, payload, offset, end_byte)``
+    tuple per posting block, ``ti`` = ti0 + the term's sorted position
+    (the frozen summation order §1.3.4). Chunks of the same term behave
+    as extra blocks.
+
+    Rows from a delta/base mix are ordered by (first_docid, chunk) —
+    src docid ranges are disjoint across dirs by construction
+    (docid_offset). Block bounds stored at build time used that dir's
+    avgdl; rescale by max(1, avgdl/src_avgdl) — a proven-safe upper
+    bound (partial is increasing in avgdl; see load_stats_multi
+    docstring). Each row's first block starts at the row's TRUE
+    first_docid (stored since format v3), so a block never covers
+    intervals before its first posting."""
+    # plain column zip — no pandas row materialization (an iterrows
+    # here costs one Python Series build per (term, chunk) row)
+    src_it = g["src_avgdl"] if "src_avgdl" in g.columns else [None] * len(g)
+    term_rows: dict[str, list[tuple]] = {}
+    for row in zip(g["term"], g["chunk"], g["first_docid"], g["df"],
+                   g["blocks"], g["postings"], src_it):
+        term_rows.setdefault(row[0], []).append(row)
+    terms = sorted(term_rows)
+    idfs: list[float] = []
+    blocks: list[tuple] = []
+    for ti, t in enumerate(terms, ti0):
+        rows = sorted(term_rows[t], key=lambda r: (int(r[2]), int(r[1])))
+        idf = _idf(float(dfg[t]) if dfg is not None else float(rows[0][3]),
+                   n_docs)
+        idfs.append(idf)
+        for (_t, _chunk, first_docid, _df, blks, payload, src_avgdl) in rows:
+            buf = np.frombuffer(payload, dtype=np.uint8)
+            scale = max(1.0, avgdl / float(src_avgdl)) if src_avgdl is not None else 1.0
+            prev_last = int(first_docid) - 1
+            for bi, b in enumerate(blks):
+                # end byte = next block's offset (payload end for the
+                # last) — bounds the lazy position decode in proximity
+                # mode, exactly like the phrase two-pass path
+                blk_end = (int(blks[bi + 1]["offset"])
+                           if bi + 1 < len(blks) else buf.size)
+                blocks.append((prev_last + 1, int(b["last_docid"]),
+                               idf * float(b["max_partial"]) * scale,
+                               ti, buf, int(b["offset"]), blk_end))
+                prev_last = int(b["last_docid"])
+    return terms, idfs, blocks
+
+
+class _BlockScan:
+    """Interval-at-a-time scan over a block table — the machinery both
+    block-max WAND kernels share (:func:`_wand_one_query`,
+    ``multifield._multi_match_one_query``).
+
+    Blocks wholly outside [range_lo, range_hi] are dropped; the docid
+    space is cut into elementary intervals at the surviving block
+    ends. ``ubs[grp, iv]`` sums, in block-table order, the bounds of
+    the blocks covering interval ``iv`` whose term index maps to bound
+    group ``grp`` (``group_of_ti``; a single group when None). Blocks
+    decode lazily, at most once, the first time an interval they
+    cover is scored; a term's contribution is idf·partial(tf, dl) with
+    that term's avgdl (``avgdls[ti]``)."""
+
+    def __init__(self, blocks: list[tuple], range_lo: int, range_hi: int,
+                 idfs: list[float], avgdls: list[float],
+                 group_of_ti: list[int] | None = None, n_groups: int = 1,
+                 prox: bool = False):
+        self.blocks = [b for b in blocks
+                       if b[1] >= range_lo and b[0] <= range_hi]
+        self.range_lo, self.range_hi = range_lo, range_hi
+        self.idfs, self.avgdls, self.prox = idfs, avgdls, prox
+        self.ends = np.unique(np.array([b[1] for b in self.blocks],
+                                       dtype=np.int64))
+        self.starts = np.concatenate(([0], self.ends[:-1] + 1))
+        n_iv = self.ends.size
+        self.ubs = np.zeros((n_groups, n_iv), dtype=np.float64)
+        self.cover: list[list[int]] = [[] for _ in range(n_iv)]
+        for bi, (s, e, ub, ti, _buf, _off, _end) in enumerate(self.blocks):
+            lo = np.searchsorted(self.ends, s, side="left")
+            hi = np.searchsorted(self.ends, e, side="left")
+            grp = group_of_ti[ti] if group_of_ti is not None and ti >= 0 else 0
+            self.ubs[grp, lo:hi + 1] += ub
+            for iv in range(lo, hi + 1):
+                self.cover[iv].append(bi)
+        self.decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self.neg: dict[int, np.ndarray] = {}      # must_not block docids
+        self.ext: dict[int, tuple[np.ndarray, int]] = {}  # prox: (tfs, pos_off)
+        self.pos: dict[int, np.ndarray] = {}      # prox: decoded positions
+
+    def walk(self, ub: np.ndarray, top: "_TopK") -> Iterator[tuple[int, int, int]]:
+        """(interval, lo_docid, hi_docid) in descending-bound order,
+        clipped to the docid range; stops once every remaining
+        interval's bound is strictly below the k-th score (ties keep
+        flowing — exact top-k)."""
+        for iv in np.argsort(-ub, kind="stable"):
+            if top.full() and ub[iv] < top.theta:
+                break
+            lo_d = max(int(self.starts[iv]), self.range_lo)
+            hi_d = min(int(self.ends[iv]), self.range_hi)
+            if lo_d <= hi_d:
+                yield iv, lo_d, hi_d
+
+    def gather(self, iv: int, lo_d: int, hi_d: int
+               ) -> tuple[list[tuple], list[np.ndarray]]:
+        """Per-term ``(docids, contribs, ti, bi, sel)`` for the docs in
+        [lo_d, hi_d], in ascending term-index order, and the must_not
+        docids there (blocks with ti = -1 contribute no score; they only
+        collect exclusion docids)."""
+        from ..scoring import partial as _partial
+
+        per_term: list[tuple] = []
+        excl: list[np.ndarray] = []
+        for bi in sorted(self.cover[iv], key=lambda b: self.blocks[b][3]):
+            _s, _e, _ub, ti, buf, off, _end = self.blocks[bi]
+            if ti < 0:
+                if bi not in self.neg:
+                    self.neg[bi] = decode_block(buf, off)[0]
+                dneg = self.neg[bi]
+                mneg = (dneg >= lo_d) & (dneg <= hi_d)
+                if mneg.any():
+                    excl.append(dneg[mneg])
+                continue
+            if bi not in self.decoded:
+                if self.prox:
+                    # ext variant records where the position stream
+                    # starts; the stream itself decodes lazily, only
+                    # for blocks whose docs survive the theta mask
+                    d, t, l, pos_off = decode_block_ext(buf, off)
+                    self.ext[bi] = (t, pos_off)
+                else:
+                    d, t, l = decode_block(buf, off)
+                self.decoded[bi] = (
+                    d, self.idfs[ti] * _partial(t, l, self.avgdls[ti]))
+            d, c = self.decoded[bi]
+            sel = (d >= lo_d) & (d <= hi_d)
+            if sel.any():
+                per_term.append((d[sel], c[sel], ti, bi, sel))
+        return per_term, excl
+
+
+class _TopK:
+    """Exact top-k by (score desc, docid asc): a (score, -docid)
+    min-heap whose root score is the pruning threshold ``theta``."""
+
+    def __init__(self, k: int):
+        self.k = k
+        self.heap: list[tuple[float, int]] = []
+        self.theta = -np.inf
+
+    def full(self) -> bool:
+        return len(self.heap) >= self.k
+
+    def mask(self, docids: np.ndarray, scores: np.ndarray
+             ) -> tuple[np.ndarray, np.ndarray]:
+        """Numpy-mask before the Python heap loop: once the heap is
+        full, a candidate with score < theta can never enter it —
+        (sc, -d) < (theta, -d0) whenever sc < theta, regardless of
+        docid. Ties (sc == theta) MUST survive: they can still win on
+        the docid tiebreak. Keeps the per-interval Python work
+        O(survivors), not O(interval size), on flat-score tails."""
+        if not self.full():
+            return docids, scores
+        keep = scores >= self.theta
+        if keep.all():
+            return docids, scores
+        return docids[keep], scores[keep]
+
+    def push(self, docids: np.ndarray, scores: np.ndarray) -> None:
+        heap, k = self.heap, self.k
+        for d, sc in zip(docids.tolist(), scores.tolist()):
+            item = (sc, -d)
+            if len(heap) < k:
+                heapq.heappush(heap, item)
+                if len(heap) == k:
+                    self.theta = heap[0][0]
+            elif heap and item > heap[0]:
+                heapq.heapreplace(heap, item)
+                self.theta = heap[0][0]
+
+    def frame(self, qid: int) -> pd.DataFrame:
+        ranked = sorted(((sc, -nd) for sc, nd in self.heap),
+                        key=lambda x: (-x[0], x[1]))
+        return pd.DataFrame({
+            "query_id": qid,
+            "rank": np.arange(1, len(ranked) + 1, dtype=np.int32),
+            "docid": np.array([d for _, d in ranked], dtype=np.int64),
+            "score": np.array([s for s, _ in ranked], dtype=np.float64),
+        })
+
+
 def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                     dfg: dict | None = None,
                     range_lo: int = 0, range_hi: int | None = None,
@@ -895,8 +1064,6 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     the phrase path uses. Bit-identical to search_taat's proximity
     mode (the width funnels through the same _min_window_flat and the
     adjustment is the same double expression s * (1.0/(1.0+w)))."""
-    from ..scoring import partial as _partial
-
     prox = score_mode == "proximity"
 
     if range_hi is None:
@@ -910,20 +1077,8 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
         if len(g) == 0:
             # no positive term has postings here — nothing can score
             # (a must_not-only query is not a top-k relevance query)
-            return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                                 "rank": pd.Series([], dtype="int32"),
-                                 "docid": pd.Series([], dtype="int64"),
-                                 "score": pd.Series([], dtype="float64")})
-    # term-level structures; chunks of the same term behave as extra
-    # blocks. Plain column zip — no pandas row materialization (the
-    # codebase idiom; an iterrows here costs one Python Series build per
-    # (term, chunk) row).
-    src_it = g["src_avgdl"] if "src_avgdl" in g.columns else [None] * len(g)
-    term_rows: dict[str, list[tuple]] = {}
-    for row in zip(g["term"], g["chunk"], g["first_docid"], g["df"],
-                   g["blocks"], g["postings"], src_it):
-        term_rows.setdefault(row[0], []).append(row)
-    terms = sorted(term_rows)  # frozen summation order §1.3.4
+            return _empty_result()
+    terms, idfs, blocks = _block_table(g, n_docs, avgdl, dfg)
     # must-clause term indexes; a must term with NO postings in this
     # group leaves len(must_ti) < n_must and every interval skips —
     # the OOV-must → empty contract falls out for free
@@ -931,89 +1086,22 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                if must_terms is not None else None)
     track_ti = must_ti is not None or min_match is not None
 
-    # block table: (start, end, ub, term_idx, payload_ref, offset).
-    # Rows from a delta/base mix are ordered by (first_docid, chunk) —
-    # src docid ranges are disjoint across dirs by construction
-    # (docid_offset). Block bounds stored at build time used that dir's
-    # avgdl; rescale by max(1, avgdl/src_avgdl) — a proven-safe upper
-    # bound (partial is increasing in avgdl; see load_stats_multi
-    # docstring). Each row's first block starts at the row's TRUE
-    # first_docid (stored since format v3), so a block never covers
-    # intervals before its first posting.
-    blocks = []
-    idfs = {}
-    for ti, t in enumerate(terms):
-        rows = sorted(term_rows[t], key=lambda r: (int(r[2]), int(r[1])))
-        df_t = float(dfg[t]) if dfg is not None else float(rows[0][3])
-        idfs[t] = _idf(df_t, n_docs)
-        for (_t, _chunk, first_docid, _df, blks, payload, src_avgdl) in rows:
-            buf = np.frombuffer(payload, dtype=np.uint8)
-            scale = max(1.0, avgdl / float(src_avgdl)) if src_avgdl is not None else 1.0
-            prev_last = int(first_docid) - 1
-            for bi, b in enumerate(blks):
-                # end byte = next block's offset (payload end for the
-                # last) — bounds the lazy position decode in proximity
-                # mode, exactly like the phrase two-pass path
-                blk_end = (int(blks[bi + 1]["offset"])
-                           if bi + 1 < len(blks) else buf.size)
-                blocks.append((prev_last + 1, int(b["last_docid"]),
-                               idfs[t] * float(b["max_partial"]) * scale,
-                               ti, buf, int(b["offset"]), blk_end))
-                prev_last = int(b["last_docid"])
-
     # must_not blocks ride the same table with term index -1: zero
     # upper-bound contribution (they can only REMOVE candidates), but
     # present in the interval cover so the gather loop can decode them
     # lazily and mask their docids
     if gneg is not None and len(gneg):
-        neg_rows: dict[str, list[tuple]] = {}
-        for row in zip(gneg["term"], gneg["chunk"], gneg["first_docid"],
-                       gneg["df"], gneg["blocks"], gneg["postings"]):
-            neg_rows.setdefault(row[0], []).append(row)
-        for t in sorted(neg_rows):
-            for (_t, _chunk, first_docid, _df, blks, payload) in sorted(
-                    neg_rows[t], key=lambda r: (int(r[2]), int(r[1]))):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                prev_last = int(first_docid) - 1
-                for b in blks:
-                    blocks.append((prev_last + 1, int(b["last_docid"]), 0.0,
-                                   -1, buf, int(b["offset"]), 0))
-                    prev_last = int(b["last_docid"])
+        blocks += [(s, e, 0.0, -1, buf, off, end) for s, e, _ub, _ti, buf, off, end
+                   in _block_table(gneg, n_docs, avgdl, dfg)[2]]
 
-    # drop blocks wholly outside the docid range, then build
-    # elementary intervals at the surviving block ends
-    blocks = [b for b in blocks if b[1] >= range_lo and b[0] <= range_hi]
-    if not blocks:
-        return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                             "rank": pd.Series([], dtype="int32"),
-                             "docid": pd.Series([], dtype="int64"),
-                             "score": pd.Series([], dtype="float64")})
-    ends = np.unique(np.array([b[1] for b in blocks], dtype=np.int64))
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    # upper bound per interval = sum of covering block bounds
-    n_iv = ends.size
-    ubs = np.zeros(n_iv, dtype=np.float64)
-    cover: list[list[int]] = [[] for _ in range(n_iv)]
-    for bi, (s, e, ub, ti, buf, off, _end) in enumerate(blocks):
-        lo = np.searchsorted(ends, s, side="left")
-        hi = np.searchsorted(ends, e, side="left")
-        ubs[lo:hi + 1] += ub
-        for iv in range(lo, hi + 1):
-            cover[iv].append(bi)
-
-    order = np.argsort(-ubs, kind="stable")
-    heap: list[tuple[float, int]] = []  # (score, -docid) min-heap of top-k
-    theta = -np.inf
-    decoded_cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-    neg_cache: dict[int, np.ndarray] = {}   # must_not block docids
-    ext_cache: dict[int, tuple[np.ndarray, int]] = {}  # prox: (tfs, pos_off)
-    pos_cache: dict[int, np.ndarray] = {}   # prox: lazily decoded positions
-
-    for iv in order:
-        if len(heap) >= k and ubs[iv] < theta:
-            break  # every remaining interval is strictly below the kth score
+    scan = _BlockScan(blocks, range_lo, range_hi, idfs,
+                      [avgdl] * len(idfs), prox=prox)
+    if not scan.blocks:
+        return _empty_result()
+    top = _TopK(k)
+    for iv, lo_d, hi_d in scan.walk(scan.ubs[0], top):
         if track_ti:
-            cov = {blocks[b][3] for b in cover[iv]} - {-1}
+            cov = {scan.blocks[b][3] for b in scan.cover[iv]} - {-1}
             if must_ti is not None:
                 # every must term has to cover the interval; should
                 # coverage has to reach the should minimum
@@ -1023,38 +1111,9 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                     continue
             elif min_match is not None and len(cov) < min_match:
                 continue  # fewer positive terms cover the interval than must match
-        lo_d = max(int(starts[iv]), range_lo)
-        hi_d = min(int(ends[iv]), range_hi)
-        if lo_d > hi_d:
-            continue
-        # gather contributions per term in sorted-term order; must_not
-        # blocks (ti = -1, sorted first) only collect exclusion docids
-        per_term: list[tuple] = []
-        excl: list[np.ndarray] = []
-        for bi in sorted(cover[iv], key=lambda b: blocks[b][3]):
-            s, e, ub, ti, buf, off, _end = blocks[bi]
-            if ti < 0:
-                if bi not in neg_cache:
-                    neg_cache[bi] = decode_block(buf, off)[0]
-                dneg = neg_cache[bi]
-                mneg = (dneg >= lo_d) & (dneg <= hi_d)
-                if mneg.any():
-                    excl.append(dneg[mneg])
-                continue
-            if bi not in decoded_cache:
-                if prox:
-                    # ext variant records where the position stream
-                    # starts; the stream itself decodes lazily, only
-                    # for blocks whose docs survive the theta mask
-                    d, t, l, pos_off = decode_block_ext(buf, off)
-                    ext_cache[bi] = (t, pos_off)
-                else:
-                    d, t, l = decode_block(buf, off)
-                decoded_cache[bi] = (d, idfs[terms[ti]] * _partial(t, l, avgdl))
-            d, c = decoded_cache[bi]
-            sel = (d >= lo_d) & (d <= hi_d)
-            if sel.any():
-                per_term.append((d[sel], c[sel], ti, bi, sel))
+        # contributions per term in sorted-term order; must_not blocks
+        # only collect exclusion docids
+        per_term, excl = scan.gather(iv, lo_d, hi_d)
         if not per_term:
             continue
         alld = np.concatenate([p[0] for p in per_term])
@@ -1093,24 +1152,13 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                 uniq, scores = uniq[keep], scores[keep]
                 if uniq.size == 0:
                     continue
-        if len(heap) >= k:
-            # numpy-mask before the Python heap loop: a candidate with
-            # score < theta can never enter the top-k — (sc, -d) < (theta,
-            # -d0) whenever sc < theta, regardless of docid. Ties (sc ==
-            # theta) MUST survive the mask: they can still win on the
-            # docid tiebreak. Keeps the per-interval Python work
-            # O(survivors), not O(interval size), on flat-score tails.
-            # in proximity mode `scores` here are still the raw BM25
-            # sums — upper bounds of the adjusted scores (factor ≤ 1),
-            # so the mask keeps a superset and pruning stays exact
-            keep = scores >= theta
-            if not keep.all():
-                uniq, scores = uniq[keep], scores[keep]
-                if uniq.size == 0:
-                    continue
+        # in proximity mode `scores` here are still the raw BM25 sums —
+        # upper bounds of the adjusted scores (factor ≤ 1), so the
+        # theta mask keeps a superset and pruning stays exact
+        uniq, scores = top.mask(uniq, scores)
         if prox and uniq.size:
             # positions ONLY for theta-surviving candidates: decode a
-            # block's position stream at most once (pos_cache), slice
+            # block's position stream at most once (scan.pos), slice
             # the interval's docs (sel), then the candidates' runs
             didx_l: list[np.ndarray] = []
             pos_l: list[np.ndarray] = []
@@ -1119,12 +1167,12 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                 m = np.isin(dsel, uniq, assume_unique=True)
                 if not m.any():
                     continue
-                tf_full, pos_off2 = ext_cache[bi2]
-                if bi2 not in pos_cache:
-                    _s2, _e2, _ub2, _ti2, buf2, _off2, end2 = blocks[bi2]
-                    pos_cache[bi2] = decode_positions_at(
+                tf_full, pos_off2 = scan.ext[bi2]
+                if bi2 not in scan.pos:
+                    buf2, end2 = scan.blocks[bi2][4], scan.blocks[bi2][6]
+                    scan.pos[bi2] = decode_positions_at(
                         buf2, pos_off2, tf_full, end=end2)
-                pos_sel = pos_cache[bi2][np.repeat(sel2, tf_full)]
+                pos_sel = scan.pos[bi2][np.repeat(sel2, tf_full)]
                 tf_sel = tf_full[sel2]
                 idx = np.searchsorted(uniq, dsel[m])
                 didx_l.append(np.repeat(idx, tf_sel[m]))
@@ -1144,62 +1192,8 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                     widths[i] = _min_window_flat(posf[lo2:hi2],
                                                  labf[lo2:hi2])
             scores = scores * (1.0 / (1.0 + widths.astype(np.float64)))
-        for d, sc in zip(uniq.tolist(), scores.tolist()):
-            item = (sc, -d)
-            if len(heap) < k:
-                heapq.heappush(heap, item)
-                if len(heap) == k:
-                    theta = heap[0][0]
-            elif item > heap[0]:
-                heapq.heapreplace(heap, item)
-                theta = heap[0][0]
-
-    ranked = sorted(((sc, -nd) for sc, nd in heap), key=lambda x: (-x[0], x[1]))
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, len(ranked) + 1, dtype=np.int32),
-        "docid": np.array([d for _, d in ranked], dtype=np.int64),
-        "score": np.array([s for s, _ in ranked], dtype=np.float64),
-    })
-
-
-def _mq_term_map(mq: DataFrame | None) -> dict[int, set] | None:
-    """Per-query analyzed must-term sets (driver-side, tiny — same
-    cardinality class as the query term lists already collected);
-    None when there is no must clause at all."""
-    if mq is None:
-        return None
-    out: dict[int, set] = {}
-    for r in mq.collect():
-        out.setdefault(int(r["query_id"]), set()).add(r["term"])
-    return out
-
-
-def _qn_map(qterms: DataFrame) -> dict[int, int]:
-    """|distinct analyzed terms| per query — the conjunctive target
-    count (OOV terms included, so a must-clause on a missing term
-    empties the result, exactly ES bool.must)."""
-    rows = qterms.groupBy("query_id").agg(F.count("*").alias("qn")).collect()
-    return {int(r["query_id"]): int(r["qn"]) for r in rows}
-
-
-def _qterms_with_kinds(qterms: DataFrame, nq: DataFrame | None,
-                       mq: DataFrame | None) -> DataFrame:
-    """Union should/must/must_not (query_id, term) pairs into one
-    joinable frame with a ``kind`` flag (0=should, 1=must, 2=must_not),
-    deduplicated per (query, term) by max(kind): a term in both should
-    and must counts (and scores) once as must; a term that is also
-    excluded keeps only the exclusion — a must+must_not conflict then
-    empties the query via the must count, exactly ES. Returns qterms
-    unchanged (no kind column) when there are no bool clauses."""
-    if nq is None and mq is None:
-        return qterms
-    out = qterms.withColumn("kind", F.lit(0))
-    if mq is not None:
-        out = out.unionByName(mq.withColumn("kind", F.lit(1)))
-    if nq is not None:
-        out = out.unionByName(nq.withColumn("kind", F.lit(2)))
-    return out.groupBy("query_id", "term").agg(F.max("kind").alias("kind"))
+        top.push(uniq, scores)
+    return top.frame(qid)
 
 
 def search_wand(
@@ -1315,8 +1309,6 @@ def search_wand_ranges(
     in exactly one range and all its term rows whose docid span covers
     it are present in that range's group.
     """
-    from pyspark.sql.window import Window
-
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     _check_score_mode(score_mode)
     qa = _QueryAnalysis(spark, queries)
@@ -1331,32 +1323,9 @@ def search_wand_ranges(
     seg = candidate_segments(spark, index_dir, all_terms)
     dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
     qn = qa.qn_map() if require_all else None
-    seg = seg.withColumn("__max_docid", F.element_at("blocks", -1)["last_docid"])
-    seg_q = seg.join(F.broadcast(qterms_j), "term")
-
-    # range bounds from the ACTUAL docid domain (per-dir docid_offset +
-    # N), not [0, n_docs): a delta index queried alone has all docids
-    # ≥ its offset, which [0, n_docs) would silently miss entirely
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
+    seg_r = _range_join(spark, seg, qterms_j, _as_dirs(index_dir), n_ranges)
+    if seg_r is None:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(n_ranges)],
-        "rng int, lo long, hi long")
-    # a row joins exactly the ranges its TRUE docid span
-    # [first_docid, __max_docid] intersects — both bounds are needed:
-    # without the low side, a tail term whose postings sit late in the
-    # docid space is copied into every earlier range's group (~n_ranges/2
-    # replication, ×512 at the fan-out cap) and decodes nothing there.
-    # Exactness never depends on this pruning, only task size does: any
-    # row holding a posting for a doc in [lo, hi] spans that doc's docid
-    # and therefore joins the range.
-    seg_r = seg_q.join(F.broadcast(ranges),
-                       (F.col("__max_docid") >= F.col("lo"))
-                       & (F.col("first_docid") <= F.col("hi")))
 
     def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         if must_by_q is not None:
@@ -1374,7 +1343,49 @@ def search_wand_ranges(
                                min_match=mm, dead=dead,
                                score_mode=score_mode)
 
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA)
+    return _merge_ranges(
+        seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA), k)
+
+
+def _range_join(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
+                dirs: list[str], n_ranges: int) -> DataFrame | None:
+    """Candidate rows ⋈ query terms ⋈ ``n_ranges`` fixed global docid
+    ranges (columns rng, lo, hi) — the (query, range) groups of the
+    chunk-parallel WAND paths. None when the docid domain is empty.
+
+    Range bounds come from the ACTUAL docid domain (per-dir
+    docid_offset + N), not [0, n_docs): a delta index queried alone has
+    all docids ≥ its offset, which [0, n_docs) would silently miss
+    entirely. A row joins exactly the ranges its TRUE docid span
+    [first_docid, __max_docid] intersects — both bounds are needed:
+    without the low side, a tail term whose postings sit late in the
+    docid space is copied into every earlier range's group
+    (~n_ranges/2 replication, ×512 at the fan-out cap) and decodes
+    nothing there. Exactness never depends on this pruning, only task
+    size does: any row holding a posting for a doc in [lo, hi] spans
+    that doc's docid and therefore joins the range."""
+    dom_lo, dom_hi = docid_domain(dirs)
+    if dom_hi < dom_lo:
+        return None
+    width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
+    ranges = local_df(
+        spark,
+        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
+         for r in range(n_ranges)],
+        "rng int, lo long, hi long")
+    seg_q = (seg.withColumn("__max_docid",
+                            F.element_at("blocks", -1)["last_docid"])
+             .join(F.broadcast(qterms), "term"))
+    return seg_q.join(F.broadcast(ranges),
+                      (F.col("__max_docid") >= F.col("lo"))
+                      & (F.col("first_docid") <= F.col("hi")))
+
+
+def _merge_ranges(cands: DataFrame, k: int) -> DataFrame:
+    """The Q6 window over per-(query, range) top-k candidates (≤
+    n_ranges·k per query): global rank by (score desc, docid asc)."""
+    from pyspark.sql.window import Window
+
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (cands.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -1384,26 +1395,6 @@ def search_wand_ranges(
 # ---------------------------------------------------------------------------
 # Q8: phrase queries over positional postings (format v4)
 # ---------------------------------------------------------------------------
-
-def analyze_phrase_queries(queries: DataFrame) -> DataFrame:
-    """(query_id, qtext) -> (query_id, qpos, term) — ORDERED and
-    duplicate-keeping, unlike :func:`analyze_queries`: the phrase
-    "the data the" is three constraints at offsets 0, 1, 2."""
-
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ex = pd.DataFrame({"query_id": pdf["query_id"],
-                               "term": tokenize_series(pdf["qtext"])})
-            ex = ex.explode("term", ignore_index=True).dropna(subset=["term"])
-            if len(ex) == 0:
-                continue
-            ex["qpos"] = ex.groupby("query_id", sort=False).cumcount().astype(np.int32)
-            yield ex[["query_id", "qpos", "term"]]
-
-    return queries.mapInPandas(tok, schema="query_id long, qpos int, term string")
-
 
 def _sloppy_match(phrase: list[tuple[int, str]],
                   per_term: dict[str, tuple], inter: np.ndarray,
@@ -1806,8 +1797,8 @@ def search_phrase(
 
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     # per-query (qpos, term) structure, driver-side (tiny): the same
-    # frozen tokenizer as analyze_phrase_queries, ordered and
-    # duplicate-keeping, without the mapInPandas+collect job
+    # frozen tokenizer, ordered and duplicate-keeping (the phrase
+    # "the data the" is three constraints at offsets 0, 1, 2)
     qp = queries.select("query_id", "qtext").toPandas()
     phrases: dict[int, list[tuple[int, str]]] = {}
     for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):

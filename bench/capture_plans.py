@@ -2,11 +2,11 @@
 
 Usage: python bench/capture_plans.py <out_dir> [index_dir]
 
-Works against BOTH the round-7 and round-8 trees (same public API), so
-the judge's before/after plan files come from the same script:
+Uses only the public query API, so before/after plan files for two
+trees come from the same script:
 
-    python bench/capture_plans.py plans/r08   # after (current tree)
-    PYTHONPATH=/tmp/r7tree python bench/capture_plans.py /tmp/before
+    python bench/capture_plans.py plans/r09            # current tree
+    PYTHONPATH=<other tree> python bench/capture_plans.py <before dir>
 
 The index must already exist (bench.py leaves /tmp/aarhus_bench_idx_0.1).
 Explain only — no job runs beyond the analysis/dictionary lookups the
@@ -87,8 +87,8 @@ def main():
             f.write(txt)
         print("wrote", name)
 
-    # multi_match: the exhaustive combiner's single-DAG plan, and (r8
-    # only) the pruned path's candidate-restricted TAAT stage plan
+    # multi_match: one field-tagged union → broadcast query-term join
+    # → one exchange into the per-query WAND kernel
     try:
         from aarhus_spark.operators.multifield import search_multi_match
         mf_idx = idx_dir + "_mfplans"
@@ -98,27 +98,11 @@ def main():
             build_field_indexes(spark, pages, mf_idx, fields={
                 "text": F.col("text"),
                 "title": F.substring(F.col("text"), 1, 40)})
-        try:
-            mm = search_multi_match(spark, mf_idx, qdf, k=10, prune=False)
-            r8_tree = True
-        except TypeError:            # round-7 signature has no `prune`
-            mm = search_multi_match(spark, mf_idx, qdf, k=10)
-            r8_tree = False
-        with open(os.path.join(out_dir, "multi_match_exhaustive.txt"), "w") as f:
+        mm = search_multi_match(spark, mf_idx, qdf, k=10,
+                                boosts={"title": 2.0})
+        with open(os.path.join(out_dir, "multi_match.txt"), "w") as f:
             f.write(grab(mm))
-        print("wrote multi_match_exhaustive")
-        if r8_tree:
-            import numpy as np
-            cand = np.arange(0, 50, dtype=np.int64)
-            restricted = search_taat(
-                spark, os.path.join(mf_idx, "field=text"), qdf,
-                return_matches=True, _candidate_docids=cand)
-            with open(os.path.join(
-                    out_dir, "multi_match_pruned_rescore_stage.txt"), "w") as f:
-                f.write(grab(restricted))
-            print("wrote multi_match_pruned_rescore_stage")
-        else:
-            print("skipping pruned-stage plan (round-7 tree)")
+        print("wrote multi_match")
     except Exception as e:  # pragma: no cover
         print("multi_match plans failed:", e)
     spark.stop()

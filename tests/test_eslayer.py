@@ -506,6 +506,23 @@ def test_histogram_vs_python_twin(spark, eidx):
 
 
 def test_range_agg_empty_buckets_kept(spark, eidx):
+    _check_range_agg(spark, eidx)
+
+
+def test_range_agg_arrow_conversion_off(spark, eidx):
+    """Open range ends must stay NULL in a session whose pandas↔Arrow
+    conversion is off (Spark's default): a NaN bound makes the open
+    ``*-30`` bucket count 0."""
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        _check_range_agg(spark, eidx)
+    finally:
+        spark.conf.set(key, old)
+
+
+def _check_range_agg(spark, eidx):
     from aarhus_spark.operators.eslayer import search_range_agg
     out, oidx, _, _ = eidx
     # last range deliberately empty (no fixture doc is that long);

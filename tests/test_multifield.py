@@ -240,8 +240,65 @@ def test_fuzzy_search_equals_expanded_disjunction(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# pruned (threshold-algorithm) multi_match ≡ exhaustive combiner
+# block-max multi_match kernel ≡ exhaustive per-field TAAT fold
 # ---------------------------------------------------------------------------
+
+@pytest.fixture(scope="module")
+def reference(spark):
+    """Exhaustive multi_match in plain Python: per (query, doc), the
+    boosted per-field scores — per-field TAAT with unbounded k, run once
+    per (index, query set) — fold in field-name order from 0.0, the sum
+    left to right and the best with greatest; then rank by (score desc,
+    docid asc) and cut at k. Rows (query_id, rank, docid, score)."""
+    from aarhus_spark.operators.multifield import list_fields
+    from aarhus_spark.operators.search import search_taat
+    field_scores: dict = {}
+
+    def run(root, queries, k, boosts, mode, tie):
+        key = (root, tuple(queries))
+        if key not in field_scores:
+            qdf = spark.createDataFrame(queries, "query_id long, qtext string")
+            field_scores[key] = {
+                name: _scores(search_taat(
+                    spark, os.path.join(root, f"field={name}"), qdf,
+                    k=(1 << 31) - 1))
+                for name in list_fields(root)}
+        return _fold(field_scores[key], k, boosts, mode, tie)
+    return run
+
+
+def _fold(per, k, boosts, mode, tie):
+    combined: dict = {}
+    for name in sorted(per):
+        b = float(boosts.get(name, 1.0))
+        for qd, sc in per[name].items():
+            total, best = combined.get(qd, (0.0, 0.0))
+            v = sc * b
+            combined[qd] = (total + v, best if best >= v else v)
+    by_q: dict = {}
+    for (qid, docid), (total, best) in combined.items():
+        score = total if mode == "most_fields" else best + tie * (total - best)
+        by_q.setdefault(qid, []).append((-score, docid))
+    return sorted((qid, rank, docid, -neg)
+                  for qid, rows in by_q.items()
+                  for rank, (neg, docid) in enumerate(sorted(rows)[:k], 1))
+
+
+def _kernel_rows(spark, root, queries, k, boosts, mode, tie):
+    from aarhus_spark.operators.multifield import search_multi_match
+    qdf = spark.createDataFrame(queries, "query_id long, qtext string")
+    res = search_multi_match(spark, root, qdf, k=k, boosts=boosts, mode=mode,
+                             tie_breaker=tie)
+    return sorted(tuple(r) for r in
+                  res.select("query_id", "rank", "docid", "score").collect())
+
+
+# "pie" occurs in titles only, "durian" and "word3" in texts only
+_MF_QUERIES = [(0, "apple"), (1, "banana cherry"), (2, "durian"),
+               (3, "zzzznomatch"), (4, "pie"), (5, "apple banana cherry")]
+_TIE_QUERIES = [(0, "apple"), (1, "apple pie"), (2, "cherry"), (3, "pie"),
+                (4, "word3")]
+
 
 @pytest.mark.parametrize("mode,tie,boost,k", [
     ("best_fields", 0.0, 1.0, 2),
@@ -250,53 +307,43 @@ def test_fuzzy_search_equals_expanded_disjunction(spark, sf_dir):
     ("most_fields", 0.0, 2.0, 3),
     ("most_fields", 0.0, 1.0, 100),
 ])
-def test_multi_match_pruned_equals_exhaustive(spark, mf_index, mode, tie,
-                                              boost, k):
-    """The Fagin-style pruned combiner must return BIT-identical rows to
-    the exhaustive fold — same docids, same ranks, same float64 scores —
-    for every mode/tie_breaker/boost/k combination (small k forces the
-    threshold check; k=100 exhausts every field)."""
-    from aarhus_spark.operators.multifield import search_multi_match
+def test_multi_match_kernel_equals_exhaustive(spark, mf_index, reference,
+                                              mode, tie, boost, k):
+    """The pruning kernel returns BIT-identical rows to the exhaustive
+    fold — same docids, ranks and float64 scores — for every
+    mode/tie_breaker/boost/k (small k makes the interval bound prune;
+    k=100 exceeds every match set)."""
     out, _ = mf_index
-    qdf = spark.createDataFrame(
-        [(0, "apple"), (1, "banana cherry"), (2, "durian"),
-         (3, "zzzznomatch")],
-        "query_id long, qtext string")
-    kw = dict(k=k, boosts={"title": boost}, mode=mode, tie_breaker=tie)
-    ex = search_multi_match(spark, out, qdf, prune=False, **kw).collect()
-    pr = search_multi_match(spark, out, qdf, prune=True, **kw).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    ex_m = {key(r): (r["docid"], r["score"]) for r in ex}
-    pr_m = {key(r): (r["docid"], r["score"]) for r in pr}
-    assert ex_m == pr_m     # exact equality incl. float64 bit value
+    args = (out, _MF_QUERIES, k, {"title": boost}, mode, tie)
+    assert _kernel_rows(spark, *args) == reference(*args)
 
 
-def test_multi_match_pruned_escalates(spark, mf_index):
-    """k' escalation path: with k equal to the full match count the
-    first round can't prove the bound for every query, so the loop must
-    escalate and still terminate with the exhaustive answer."""
-    from aarhus_spark.operators.multifield import search_multi_match
+def test_multi_match_k_equals_match_count(spark, mf_index, reference):
+    """k equal to the full match count: the heap fills only with the
+    last match, so no interval is ever pruned — still the exhaustive
+    answer."""
     out, _ = mf_index
-    qdf = spark.createDataFrame([(0, "apple banana cherry")],
-                                "query_id long, qtext string")
-    ex = search_multi_match(spark, out, qdf, k=5, prune=False,
-                            mode="most_fields").collect()
-    pr = search_multi_match(spark, out, qdf, k=5, prune=True,
-                            mode="most_fields").collect()
-    assert sorted(map(tuple, ex)) == sorted(map(tuple, pr))
+    args = (out, [(0, "apple banana cherry")], 5, {}, "most_fields", 0.0)
+    rows = _kernel_rows(spark, *args)
+    assert len(rows) == 5 and rows == reference(*args)
 
 
 @pytest.fixture(scope="module")
 def mf_tie_index(spark, tmpdir_session):
-    """Tie-heavy fixture: 40 docs share an IDENTICAL title ("apple
-    pie", same tf/dl → one score class) — the shape that defeats a
-    naive Fagin threshold (τ never drops below the tie value), so the
-    pruned combiner's tie-aware acceptance is what terminates."""
+    """Tie-heavy fixture: 400 docs (docids 0-399, four title blocks)
+    share an IDENTICAL title ("apple pie", same tf/dl → one score
+    class), the shape in which per-field block bounds cannot separate
+    docs, so ranking falls to the docid tiebreak at the pruning
+    threshold. Doc 300 also holds "pie" in its text, so for the query
+    "pie" the interval of docids 256-383 has the highest bound and
+    fills the top-k first; the tying lower docids scored later must
+    still displace its tied docs."""
     from aarhus_spark.operators.multifield import build_field_indexes
     rows = []
-    for i in range(40):
-        rows.append((f"u://tie{i:02d}", "apple pie",
-                     f"banana cherry text{i} apple" if i % 3 == 0
+    for i in range(400):
+        rows.append((f"u://tie{i:03d}", "apple pie",
+                     "pie pie pie durian" if i == 300
+                     else f"banana cherry text{i} apple" if i % 3 == 0
                      else f"durian text{i}"))
     for i in range(15):
         rows.append((f"u://var{i:02d}", f"cherry title{i}",
@@ -320,15 +367,38 @@ def mf_tie_index(spark, tmpdir_session):
     ("best_fields", 0.4, 2.0, 5),
     ("most_fields", 0.0, 2.0, 5),
 ])
-def test_multi_match_pruned_tie_heavy(spark, mf_tie_index, mode, tie,
-                                      boost, k):
-    from aarhus_spark.operators.multifield import search_multi_match
-    qdf = spark.createDataFrame(
-        [(0, "apple"), (1, "apple pie"), (2, "cherry")],
-        "query_id long, qtext string")
-    kw = dict(k=k, boosts={"title": boost}, mode=mode, tie_breaker=tie)
-    ex = search_multi_match(spark, mf_tie_index, qdf, prune=False, **kw).collect()
-    pr = search_multi_match(spark, mf_tie_index, qdf, prune=True, **kw).collect()
-    key = lambda r: (r["query_id"], r["rank"])
-    assert ({key(r): (r["docid"], r["score"]) for r in ex}
-            == {key(r): (r["docid"], r["score"]) for r in pr})
+def test_multi_match_kernel_tie_heavy(spark, mf_tie_index, reference, mode,
+                                      tie, boost, k):
+    args = (mf_tie_index, _TIE_QUERIES, k, {"title": boost}, mode, tie)
+    assert _kernel_rows(spark, *args) == reference(*args)
+
+
+@pytest.mark.parametrize("mode", ["best_fields", "most_fields"])
+@pytest.mark.parametrize("tie", [0.0, 0.3, 1.0])
+def test_multi_match_kernel_equals_reference(spark, mf_index, mf_tie_index,
+                                             reference, mode, tie):
+    """Kernel ≡ test-local reference fold, bit for bit, across the
+    cases that stress the bound: the tie-heavy index, a negative boost
+    (bound = +inf, no pruning), k larger than every match set, and
+    queries whose terms occur in one field only."""
+    out, _ = mf_index
+    for root, queries, boosts, k in [
+            (out, _MF_QUERIES, {"title": 3.0}, 1),
+            (out, _MF_QUERIES, {"title": -1.5}, 3),
+            (out, _MF_QUERIES, {}, 1000),
+            (mf_tie_index, _TIE_QUERIES, {"title": 2.0}, 4),
+            (mf_tie_index, _TIE_QUERIES, {"text": 0.5, "title": -0.25}, 6)]:
+        args = (root, queries, k, boosts, mode, tie)
+        assert _kernel_rows(spark, *args) == reference(*args), args
+
+
+def test_multi_match_docid_ranges_equal_single_group(spark, mf_tie_index,
+                                                     reference, monkeypatch):
+    """Above one docid range the kernel runs per (query, range) and
+    merges with the search_wand_ranges window — same rows as the
+    single-group path."""
+    from aarhus_spark.operators import search
+    args = (mf_tie_index, _TIE_QUERIES, 7, {"title": 2.0}, "best_fields", 0.3)
+    single = _kernel_rows(spark, *args)
+    monkeypatch.setattr(search, "default_n_ranges", lambda n_docs: 4)
+    assert _kernel_rows(spark, *args) == single == reference(*args)

@@ -85,3 +85,69 @@ spark.stop()
     payload = json.loads(res.stdout.strip().splitlines()[-1])
     assert payload["N"] > 300
     assert payload["disk"] > 0, payload  # the forced sort spill is recorded
+
+
+class _FakeStage:
+    """A status-store StageData stand-in (stageId, status, spills)."""
+
+    def __init__(self, sid, status, mem, disk):
+        self.sid, self.st, self.mem, self.disk = sid, status, mem, disk
+
+    def stageId(self):
+        return self.sid
+
+    def status(self):
+        st = self.st
+        return type("Status", (), {"toString": lambda self: st})()
+
+    def memoryBytesSpilled(self):
+        return self.mem
+
+    def diskBytesSpilled(self):
+        return self.disk
+
+
+class _FakeSeq(list):
+    def size(self):
+        return len(self)
+
+    def apply(self, i):
+        return self[i]
+
+
+class _FakeSpark:
+    """Just enough of SparkSession/py4j for SpillTracker: the status
+    store's ``stageList`` returns ``self.stages`` in the given order."""
+
+    def __init__(self):
+        from types import SimpleNamespace as NS
+        self.stages: list = []
+        store = NS(stageList=lambda *a: _FakeSeq(self.stages))
+        tracker = NS(getActiveStageIds=lambda: [
+            s.sid for s in self.stages if s.st == "ACTIVE"])
+        self.sparkContext = NS(
+            _jvm=NS(java=NS(util=NS(ArrayList=list)), double=float),
+            _gateway=NS(new_array=lambda *a: []),
+            _jsc=NS(sc=lambda: NS(statusStore=lambda: store)),
+            statusTracker=lambda: tracker)
+
+
+def test_spilltracker_counts_pending_stage_that_spills_later():
+    """A stage that is PENDING (inactive, zero metrics) when read must not
+    be finalized: when it later runs and spills, the spill is counted —
+    also when the store lists stages in ascending id order."""
+    from aarhus_spark.metrics import SpillTracker
+    fake = _FakeSpark()
+    fake.stages = [_FakeStage(0, "COMPLETE", 10, 100),
+                   _FakeStage(1, "PENDING", 0, 0)]
+    tr = SpillTracker(fake)
+    fake.stages = [_FakeStage(0, "COMPLETE", 10, 100),
+                   _FakeStage(1, "COMPLETE", 7, 500),
+                   _FakeStage(2, "ACTIVE", 0, 30)]
+    assert tr.delta() == {"mem_spill_bytes": 7, "disk_spill_bytes": 530}
+    fake.stages = [_FakeStage(0, "COMPLETE", 10, 100),
+                   _FakeStage(1, "COMPLETE", 7, 500),
+                   _FakeStage(2, "COMPLETE", 1, 60),
+                   _FakeStage(3, "SKIPPED", 0, 0)]
+    assert tr.delta() == {"mem_spill_bytes": 1, "disk_spill_bytes": 30}
+    assert tr.delta() == {"mem_spill_bytes": 0, "disk_spill_bytes": 0}
