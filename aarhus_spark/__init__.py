@@ -23,4 +23,8 @@ Layout
 - ``streaming``  windowed aggregation ops (batch analogs X1-X3)
 """
 
+from . import _zipcache
+
+_zipcache.install()
+
 __version__ = "0.5.0"

@@ -45,7 +45,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -68,11 +68,14 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     frame — a broadcast hash-relation build, a LocalTableScan feed, a
     ``collect`` — schedules a full task wave (~0.3 s for a 25-row
     frame at local[32], measured r8). An Arrow table embeds the rows in
-    the logical plan as a LocalRelation instead: broadcast builds and
-    collects run driver-side, job-free (same pipeline measured 0.55 →
-    0.26 s). The table is typed from the DDL ``schema`` and carries
-    explicit validity, so ``None`` stays NULL and the plan stays a
-    LocalRelation whether or not
+    the logical plan as a LocalRelation instead (same pipeline measured
+    0.55 → 0.26 s). On Spark 4.1.2 a ``collect`` of it is job-free
+    (~6 ms), but not every use is: a ``BroadcastExchange`` over its
+    LocalTableScan still runs one job of ``defaultParallelism`` tasks
+    to build the relation, and so does ``toPandas`` with Arrow
+    conversion on (one job, 4 tasks at local[4]). The table is typed
+    from the DDL ``schema`` and carries explicit validity, so ``None``
+    stays NULL and the plan stays a LocalRelation whether or not
     ``spark.sql.execution.arrow.pyspark.enabled`` is set (a pandas
     frame would turn ``None`` in a float column into NaN, which only
     the Arrow conversion maps back to NULL)."""
@@ -116,12 +119,39 @@ def localize_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     return spark.createDataFrame(queries.toPandas(), schema=queries.schema)
 
 
+# ---------------------------------------------------------------------------
+# Per-directory index state, read once per commit
+# ---------------------------------------------------------------------------
+
+def _commit_key(path: str) -> tuple[int, int, int] | None:
+    """(st_mtime_ns, st_size, st_ino) of the file or directory that
+    commits one piece of an index dir; None when it does not exist."""
+    try:
+        st = os.stat(path)
+    except FileNotFoundError:
+        return None
+    return st.st_mtime_ns, st.st_size, st.st_ino
+
+
+# index dir -> (commit key of its stats.json, parsed stats)
+_stats_cache: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+
 def load_stats(index_dir: str) -> dict:
     """Read stats.json and REFUSE a layout-version mismatch: e.g. a v0.1
     index dir (tail rows present in BOTH segments/ and fragments/) read
     by layered-store code would silently double-serve tail postings —
-    wrong scores, no error. Readers must fail loudly instead."""
-    with open(IndexPaths(index_dir).stats) as f:
+    wrong scores, no error. Readers must fail loudly instead.
+
+    Parsed once per commit: build and compaction write stats.json last,
+    so its :func:`_commit_key` changes whenever the dir is rebuilt and
+    the cached dict is reused until then. Callers must not mutate it."""
+    path = IndexPaths(index_dir).stats
+    key = _commit_key(path)   # before the read: a file replaced meanwhile is re-read next call
+    hit = _stats_cache.get(index_dir)
+    if key is not None and hit is not None and hit[0] == key:
+        return hit[1]
+    with open(path) as f:
         st = json.load(f)
     ver = st.get("format_version")
     if ver != FORMAT_VERSION:
@@ -130,7 +160,81 @@ def load_stats(index_dir: str) -> dict:
             f"this engine reads version {FORMAT_VERSION}. Reading a mismatched "
             f"layout silently corrupts results (e.g. tail postings served "
             f"twice); rebuild the index or run the matching engine version.")
+    if key is not None:
+        _stats_cache[index_dir] = (key, st)
     return st
+
+
+class _IndexReaders:
+    """One session's readers over one committed index dir: the
+    segments / fragments / dictionary DataFrames (each a parquet
+    relation whose file listing is taken once, when it is created) and
+    the dir's tombstone rows. Valid for the stats.json commit ``key``;
+    the tombstones carry their own key, the ``tombstones/`` dir's,
+    because ``build_delta`` writes them after stats.json. A cache of
+    readers, not of results: every query still scans the files."""
+
+    def __init__(self, spark: SparkSession, index_dir: str, key: tuple):
+        self._spark, self._dir, self.key = spark, index_dir, key
+        self._tomb_key: tuple | None = ()    # () = not read yet
+        self._tombs: pd.DataFrame | None = None
+
+    @functools.cached_property
+    def segments(self) -> DataFrame:
+        return read_segments(self._spark, self._dir)
+
+    @functools.cached_property
+    def fragments(self) -> DataFrame:
+        return read_fragments(self._spark, self._dir)
+
+    @functools.cached_property
+    def dictionary(self) -> DataFrame:
+        return read_dictionary(self._spark, self._dir)
+
+    def tombstones(self) -> pd.DataFrame | None:
+        """(docid, dl) rows of this dir's tombstones/, or None."""
+        tpath = os.path.join(self._dir, "tombstones")
+        key = _commit_key(tpath)
+        if key != self._tomb_key:
+            tombs = None
+            if key is not None and any(f.endswith(".parquet")
+                                       for f in os.listdir(tpath)):
+                # schema'd like every engine sink (doclens' types): no
+                # footer-inference job before the collect
+                tombs = (self._spark.read.schema("docid long, dl long")
+                         .parquet(tpath).toPandas())
+            self._tomb_key, self._tombs = key, tombs
+        return self._tombs
+
+
+def _readers(spark: SparkSession, index_dir: str) -> _IndexReaders:
+    """The session's :class:`_IndexReaders` for ``index_dir``, rebuilt
+    when stats.json has a new commit key (validated by load_stats). The
+    map lives on the session object, so it dies with the session; a
+    WeakKeyDictionary would not let it die, because every DataFrame
+    holds its session."""
+    key = _commit_key(IndexPaths(index_dir).stats)
+    cache = spark.__dict__.setdefault("_aarhus_index_readers", {})
+    r = cache.get(index_dir)
+    if key is None or r is None or r.key != key:
+        load_stats(index_dir)
+        r = cache[index_dir] = _IndexReaders(spark, index_dir, key)
+    return r
+
+
+def _sql_in(col: str, values) -> Column:
+    """``col IN (v, …)`` as ONE parsed expression. ``Column.isin`` makes
+    a py4j round trip per literal (hundreds per search call); the parsed
+    form is the same ``In`` predicate and reaches the parquet scan as
+    the same PushedFilters. Strings are escaped for Spark's default
+    SQL string literals; integers carry the ``L`` (bigint) suffix."""
+    values = list(values)
+    if not values:
+        return F.col(col).isin([])
+    lits = [f"{int(v)}L" if isinstance(v, (int, np.integer))
+            else "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for v in values]
+    return F.expr(f"{col} IN ({', '.join(lits)})")
 
 
 def _as_dirs(index_dir) -> list[str]:
@@ -167,26 +271,22 @@ def load_tombstones(spark: SparkSession, dirs) -> tuple[np.ndarray, int]:
     harness verifies depends on all three).
 
     Returns (sorted dead docid array, Σdl of dead docs). Collected to
-    the driver: tombstones are bounded by re-crawls per delta between
-    compactions — the same cardinality class as the query-term lists
-    the scorers already broadcast. Compaction purges them; the bound is
-    ENFORCED (config.TOMBSTONE_BUDGET): past it this raises instead of
-    silently bloating every scorer closure and broadcast.
+    the driver (once per ``tombstones/`` commit, see
+    :class:`_IndexReaders`): tombstones are bounded by re-crawls per
+    delta between compactions — the same cardinality class as the
+    query-term lists the scorers already broadcast. Compaction purges
+    them; the bound is ENFORCED (config.TOMBSTONE_BUDGET): past it this
+    raises instead of silently bloating every scorer closure and
+    broadcast.
 
     Defense in depth: docids are DEDUPLICATED across the chain before
     the Σdl — a duplicate tombstone row (e.g. from a buggy writer)
     would otherwise corrupt N_eff/avgdl_eff and feed a non-unique
     array into the assume_unique np.isin calls downstream.
     """
-    import pandas as pd
-
     from ..config import TOMBSTONE_BUDGET
-    frames = []
-    for d in _as_dirs(dirs):
-        tpath = os.path.join(d, "tombstones")
-        if os.path.isdir(tpath) and any(
-                f.endswith(".parquet") for f in os.listdir(tpath)):
-            frames.append(spark.read.parquet(tpath).select("docid", "dl").toPandas())
+    frames = [t for t in (_readers(spark, d).tombstones() for d in _as_dirs(dirs))
+              if t is not None]
     if not frames:
         return np.empty(0, dtype=np.int64), 0
     pdf = pd.concat(frames, ignore_index=True).drop_duplicates("docid")
@@ -360,6 +460,7 @@ def candidate_segments(spark: SparkSession, index_dir, terms: list[str]) -> Data
     out = None
     for d in dirs:
         st = load_stats(d)
+        readers = _readers(spark, d)
         maxpost = int(st.get("build_config", {}).get(
             "max_postings_per_row", 1 << 62))
         seg = None
@@ -369,8 +470,7 @@ def candidate_segments(spark: SparkSession, index_dir, terms: list[str]) -> Data
         # not scanned or unioned at all. Missing key (pre-r8 index) =
         # scan as before.
         if st.get("has_head", True):
-            seg = (read_segments(spark, d)
-                   .filter(F.col("term").isin(terms)))
+            seg = readers.segments.filter(_sql_in("term", terms))
         frag_dir = IndexPaths(d).fragments
         if st.get("has_tail", os.path.isdir(frag_dir) and bool(os.listdir(frag_dir))):
             # fragment rows are written in xxhash64(term) order (the
@@ -379,13 +479,9 @@ def candidate_segments(spark: SparkSession, index_dir, terms: list[str]) -> Data
             # (driver-side hashing.xxhash64 ≡ Spark's xxhash64, pinned
             # by test) so tail lookups still skip row groups; the exact
             # term filter stays for hash-collision correctness
-            tail = read_fragments(spark, d)
-            tfilter = (F.col("term").isin(terms)
-                       & ~F.col("is_head") & (F.col("n") <= maxpost))
-            if "thash" in tail.columns:
-                tfilter = F.col("thash").isin(
-                    [spark_xxhash64(t) for t in terms]) & tfilter
-            tail = (tail.filter(tfilter)
+            tfilter = _sql_in("thash", [spark_xxhash64(t) for t in terms]) & (
+                _sql_in("term", terms) & ~F.col("is_head") & (F.col("n") <= maxpost))
+            tail = (readers.fragments.filter(tfilter)
                     .select("term", F.col("n").alias("df"), "cf",
                             F.lit(0).alias("chunk"), "n", "first_docid",
                             "blocks", "postings"))
@@ -417,8 +513,8 @@ def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
     query terms' postings, like the scorer scan itself."""
     out: dict[str, int] = {}
     for d in _as_dirs(index_dir):
-        rows = (read_dictionary(spark, d)
-                .filter(F.col("term").isin(terms))
+        rows = (_readers(spark, d).dictionary
+                .filter(_sql_in("term", terms))
                 .select("term", "df").collect())
         for r in rows:
             out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
@@ -474,9 +570,12 @@ class _QueryAnalysis:
     narrow Arrow ``toPandas`` + the identical frozen tokenizer
     (``textops.tokenize_series``) replaces all of it; the qterms frames
     handed to joins become LocalTableScans, whose broadcast build has
-    no Python stage. Bit-identical analysis by construction: the same
-    tokenizer runs over the same strings (pinned by tests against
-    ``analyze_queries``).
+    no Python stage, but each broadcast build is still one Spark job,
+    and so is the ``toPandas`` here with Arrow conversion on, even over
+    a LocalRelation (:func:`local_df`); that is why a single-dir
+    ``search_topk`` still runs 4 jobs. Bit-identical analysis by
+    construction: the same tokenizer runs over the same strings
+    (pinned by tests against ``analyze_queries``).
     """
 
     def __init__(self, spark: SparkSession, queries: DataFrame):
@@ -1882,7 +1981,7 @@ def _expand_dict_terms(spark: SparkSession, index_dir, cond,
     dirs = _as_dirs(index_dir)
     dic = None
     for d in dirs:
-        piece = (read_dictionary(spark, d)
+        piece = (_readers(spark, d).dictionary
                  .select("term", "df").filter(cond))
         dic = piece if dic is None else dic.unionByName(piece)
     rows = (dic.groupBy("term").agg(F.sum("df").alias("df"))

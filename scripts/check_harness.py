@@ -1,10 +1,20 @@
 """Local stand-in for the driver's correctness gate: run every
 queries() entry on Spark and its oracle_sql() twin on DuckDB over the
 same sf dir; compare row count, column names, and order-insensitive
-values. Usage: python scripts/check_harness.py [sf_dir] [name ...]"""
+values.
+
+Usage:
+
+    python scripts/check_harness.py [--session {engine,default}] [sf_dir] [name ...]
+
+``--session engine`` (the default) runs in the engine's ``get_spark``
+session; ``--session default`` runs in a bare ``SparkSession.builder``
+session at Spark's default SQL config (Arrow conversion off, AQE
+untuned), so a result that depends on session config shows up."""
 
 from __future__ import annotations
 
+import argparse
 import decimal
 import math
 import sys
@@ -29,15 +39,29 @@ def normalize(rows, cols):
     return sorted(out, key=repr)
 
 
+def session(kind: str):
+    master = "local[8]"
+    if kind == "engine":
+        from aarhus_spark.session import get_spark
+        return get_spark("check-harness", master=master)
+    from pyspark.sql import SparkSession
+    return SparkSession.builder.appName("check-harness-default").master(master).getOrCreate()
+
+
 def main():
     import duckdb
-    from aarhus_spark.session import get_spark
     from aarhus_spark.harness import TABLES
     import __spark_entry__ as entry  # the REAL driver surface
 
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("--session", choices=("engine", "default"), default="engine")
+    args, sys.argv[1:] = p.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
-    spark = get_spark("check-harness", master="local[8]")
+    spark = session(args.session)
+    print(f"session={args.session} arrow="
+          f"{spark.conf.get('spark.sql.execution.arrow.pyspark.enabled')} "
+          f"aqe={spark.conf.get('spark.sql.adaptive.enabled')}")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
