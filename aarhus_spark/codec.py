@@ -36,8 +36,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_MASKS = [np.uint64(0x7F) << np.uint64(7 * i) for i in range(10)]
-
 
 def _vbyte_encode_arr(values: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """Encode a non-negative int64 array to VByte. Returns the uint8

@@ -84,10 +84,9 @@ from pyspark.sql.window import Window
 
 from ..config import TOP_K
 from ..textops import tokenize
-from .build import IndexPaths, read_dictionary, read_doclens
-from .search import (RESULT_SCHEMA, _as_dirs, load_stats_multi, local_df,
-                     localize_queries, search_phrase, search_taat,
-                     search_topk)
+from .build import read_dictionary, read_doclens
+from .search import (_as_dirs, load_stats_multi, local_df, localize_queries,
+                     search_phrase, search_taat, search_topk)
 
 # url host — same expression in the DuckDB twin (harness)
 HOST_RE = r"^https?://([^/]+)"

@@ -54,7 +54,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .build import IndexPaths, build_index, read_doclens
+from .build import build_index, read_doclens
 from .search import load_stats
 
 
@@ -191,10 +191,3 @@ def build_delta(
         return stats
     fresh = new_pages_only(spark, pages, base_dirs, on_recrawl=on_recrawl)
     return build_index(spark, fresh, delta_dir, docid_offset=offset, **build_kwargs)
-
-
-def index_chain(base_dirs: list[str] | str, delta_dir: str | None = None) -> list[str]:
-    dirs = [base_dirs] if isinstance(base_dirs, str) else list(base_dirs)
-    if delta_dir and os.path.exists(IndexPaths(delta_dir).stats):
-        dirs.append(delta_dir)
-    return dirs

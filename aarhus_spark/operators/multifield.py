@@ -130,7 +130,7 @@ def search_multi_match(spark: SparkSession, index_root: str,
     boosts multiply that field's BM25 score (ES ``fields=["f^2"]``).
     Queries are (query_id, qtext) rows; other columns are ignored.
 
-    One pass, shaped like :func:`~.search.search_wand`: every field's
+    One pass, shaped like :func:`~.search.search_topk`: every field's
     candidate segment rows, tagged with their field, are unioned,
     broadcast-joined with the analyzed query terms and scored by ONE
     block-max WAND kernel per query (:func:`_multi_match_one_query`),
@@ -141,12 +141,12 @@ def search_multi_match(spark: SparkSession, index_root: str,
     left to right, the best with ``greatest`` — so scores are
     bit-identical to summing per-field TAAT scores in that order.
     Above one docid range (``default_n_ranges``) the kernel runs per
-    (query, docid range) and the ranges merge like
-    ``search_wand_ranges``.
+    (query, docid range) and the ranges merge
+    (:func:`~.search._per_query`).
     """
     from .search import (RESULT_SCHEMA, _chain_stats, _dfg_or_none,
-                         _merge_ranges, _QueryAnalysis, _range_join,
-                         candidate_segments, default_n_ranges)
+                         _per_query, _QueryAnalysis, candidate_segments,
+                         default_n_ranges)
 
     if mode not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match mode: {mode!r}")
@@ -168,26 +168,13 @@ def search_multi_match(spark: SparkSession, index_root: str,
         fseg = fseg.withColumn("field", F.lit(name))
         seg = fseg if seg is None else seg.unionByName(fseg)
     args = (fstats, dead, mode, float(tie_breaker), k)
-
     with open(os.path.join(index_root, MULTIFIELD_MANIFEST)) as f:
         n_ranges = default_n_ranges(json.load(f)["N"])
-    if n_ranges <= 1:
-        return (seg.join(F.broadcast(qa.qterms_df()), "term")
-                .groupBy("query_id")
-                .applyInPandas(lambda g: _multi_match_one_query(g, *args),
-                               RESULT_SCHEMA))
-    dirs = [_field_dir(index_root, name) for name in fields]
-    seg_r = _range_join(spark, seg, qa.qterms_df(), dirs, n_ranges)
-    if seg_r is None:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-
-    def run(g: pd.DataFrame) -> pd.DataFrame:
-        return _multi_match_one_query(g, *args,
-                                      range_lo=int(g["lo"].iloc[0]),
-                                      range_hi=int(g["hi"].iloc[0]))
-
-    return _merge_ranges(seg_r.groupBy("query_id", "rng")
-                         .applyInPandas(run, RESULT_SCHEMA), k)
+    return _per_query(
+        spark, seg, qa.qterms_df(),
+        [_field_dir(index_root, name) for name in fields], n_ranges, k,
+        lambda qid, g, lo, hi: _multi_match_one_query(
+            g, *args, range_lo=lo, range_hi=hi))
 
 
 def _combine(fscores: np.ndarray, hit: np.ndarray, mode: str,

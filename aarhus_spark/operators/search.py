@@ -13,7 +13,7 @@ Q1→Q4 ``search_taat``  — distributed term-at-a-time. Segment rows for
   frozen contract (§1.3.4) no matter how Spark shuffles. Scales to any
   corpus: the shuffle is bounded by the postings of the query terms.
 
-Q1→Q5 ``search_wand`` — per-query block-max pruning. Each query's
+Q1→Q5 ``search_topk`` — per-query block-max pruning. Each query's
   term rows are gathered with ``applyInPandas`` and scored document-
   at-a-time over the block-max metadata: the docid space is cut into
   elementary intervals at block boundaries, each interval's upper
@@ -28,10 +28,12 @@ Q7 ``brute_force_scorer_sql`` — the SQL-expressible twin used by the
   harness (DuckDB oracle): explode-tokenize → term stats → fold.
 
 ``search_topk`` is the DEFAULT entry point: it sizes the chunk-parallel
-fan-out from the index stats (``default_n_ranges``) and routes to
-``search_wand_ranges`` — falling back to the single-group ``search_wand``
-only when one range suffices (small indexes), where the extra merge
-stage would be pure overhead.
+fan-out from the index stats (``default_n_ranges``). Every top-k kernel
+(WAND, phrase, phrase_prefix, spans, intervals, multi_match) runs
+through one dispatcher, :func:`_per_query`: one group per query when one
+range suffices (small indexes, no merge stage), otherwise one group per
+(query, docid range) plus a merge window. ``search_wand`` and
+``search_wand_ranges`` are ``search_topk`` with the fan-out fixed.
 """
 
 from __future__ import annotations
@@ -342,24 +344,8 @@ def docid_domain(dirs: list[str]) -> tuple[int, int]:
 
 
 # ---------------------------------------------------------------------------
-# Q1: query analysis (same frozen tokenizer as the build)
+# Query argument checks and the proximity min-cover window
 # ---------------------------------------------------------------------------
-
-def analyze_queries(queries: DataFrame) -> DataFrame:
-    """(query_id, qtext) -> distinct (query_id, term)."""
-
-    def tok(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.dropna(subset=["qtext"])   # must-only bool queries
-            if len(pdf) == 0:
-                continue
-            ex = pd.DataFrame({"query_id": pdf["query_id"],
-                               "term": tokenize_series(pdf["qtext"])})
-            ex = ex.explode("term").dropna(subset=["term"]).drop_duplicates()
-            yield ex
-
-    return queries.mapInPandas(tok, schema="query_id long, term string")
-
 
 def _check_bool_args(require_all: bool, min_should_match: int | None,
                      has_must: bool = False) -> None:
@@ -550,17 +536,13 @@ def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
     return out
 
 
-def _collect_terms(qterms: DataFrame) -> list[str]:
-    return [r["term"] for r in qterms.select("term").distinct().collect()]
-
-
 QTERMS_SCHEMA = "query_id long, term string"
 
 
 class _QueryAnalysis:
     """Driver-side analysis of the (human-scale) query table.
 
-    The previous per-clause pipeline (``analyze_queries`` mapInPandas →
+    A distributed per-clause pipeline (mapInPandas tokenize →
     ``distinct`` exchange → ``collect``, once per should/must/must_not
     clause) launched up to three Spark jobs per search call just to
     learn the query terms — ~0.4 s each at local[32] — and the later
@@ -573,9 +555,8 @@ class _QueryAnalysis:
     no Python stage, but each broadcast build is still one Spark job,
     and so is the ``toPandas`` here with Arrow conversion on, even over
     a LocalRelation (:func:`local_df`); that is why a single-dir
-    ``search_topk`` still runs 4 jobs. Bit-identical analysis by
-    construction: the same tokenizer runs over the same strings
-    (pinned by tests against ``analyze_queries``).
+    ``search_topk`` still runs 4 jobs. The build's tokenizer runs over
+    the same strings, so query and index terms agree by construction.
     """
 
     def __init__(self, spark: SparkSession, queries: DataFrame):
@@ -602,8 +583,8 @@ class _QueryAnalysis:
 
     @staticmethod
     def _explode(qp: pd.DataFrame, col: str) -> pd.DataFrame:
-        """Distinct (query_id, term) — the exact analyze_queries
-        transform (tokenize → explode → dropna → drop_duplicates)."""
+        """Distinct (query_id, term) of one text column (tokenize →
+        explode → dropna → drop_duplicates)."""
         pdf = qp.dropna(subset=[col])
         if not len(pdf):
             return pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
@@ -1108,7 +1089,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                     score_mode: str = "bm25") -> pd.DataFrame:
     """When (range_lo, range_hi) restrict the docid space, only docs in
     that range are scored (blocks outside are never decoded) — the
-    chunk-parallel mode of :func:`search_wand_ranges`. Exact within the
+    chunk-parallel mode of :func:`_per_query`. Exact within the
     range: a doc's full term set is present in any group that contains
     rows overlapping its docid.
 
@@ -1295,68 +1276,6 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     return top.frame(qid)
 
 
-def search_wand(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOP_K,
-    require_all: bool = False,
-    min_should_match: int | None = None,
-    score_mode: str = "bm25",
-) -> DataFrame:
-    """Per-query exact top-k with block-max pruning; one applyInPandas
-    group per query (ES-style shard fan-in happens inside the group —
-    the gathered rows are already per-term encoded bytes, tiny relative
-    to the corpus). ``require_all=True`` = conjunctive bool.must with
-    mandatory-term interval skipping (see _wand_one_query) — the scale
-    path for conjunctive queries; bit-identical to
-    ``search_taat(require_all=True)`` (asserted in tests).
-    ``min_should_match``, a ``neg_qtext`` column (bool.must_not), and a
-    ``must_qtext`` column (mixed bool.must + optional should clauses)
-    carry the remaining ES bool semantics — see search_taat; all three
-    paths are bit-identical (asserted in tests).
-    ``score_mode="proximity"``: opt-in position-window score weighting
-    (contract in :func:`_wand_one_query`)."""
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
-    _check_score_mode(score_mode)
-    qa = _QueryAnalysis(spark, queries)
-    terms, must_terms = qa.terms, qa.must_terms
-    must_by_q = qa.must_term_map()
-    _check_bool_args(require_all, min_should_match,
-                     has_must=must_by_q is not None)
-    if not terms and not must_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    qterms_j = qa.kinds_df()
-    all_terms = qa.all_terms
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
-    qn = qa.qn_map() if require_all else None
-
-    seg_q = seg.join(F.broadcast(qterms_j), "term")
-
-    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        if must_by_q is not None:
-            mt = frozenset(must_by_q.get(int(key[0]), ()))
-            return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                                   min_match=min_should_match,
-                                   must_terms=mt, n_must=len(mt), dead=dead,
-                                   score_mode=score_mode)
-        mm = qn[int(key[0])] if qn is not None else min_should_match
-        return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                               min_match=mm, dead=dead,
-                               score_mode=score_mode)
-
-    return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-
-def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
-    """Size the chunk-parallel fan-out from corpus stats: ~4M docs per
-    range keeps a range's decoded slice of a head posting list (≤ range
-    width postings/term) comfortably inside one task's memory at any
-    corpus size, capped at 512 groups per query."""
-    return max(1, min(512, -(-n_docs // target_docs_per_range)))
-
-
 def search_topk(
     spark: SparkSession,
     index_dir: str,
@@ -1367,90 +1286,99 @@ def search_topk(
     min_should_match: int | None = None,
     score_mode: str = "bm25",
 ) -> DataFrame:
-    """THE default query path. Derives the chunk-parallel fan-out from
-    the index stats and dispatches: one range → single-group WAND (small
-    index fast path, no merge stage); otherwise chunk-parallel WAND over
-    docid ranges (no task ever holds a full head posting list).
-    ``require_all=True`` routes conjunctive (ES bool.must) semantics
-    through the same WAND paths; ``min_should_match`` and a
-    ``neg_qtext`` queries column (bool.must_not) complete the ES bool
-    query surface (see search_taat)."""
-    n_docs, _, _ = load_stats_multi(_as_dirs(index_dir))
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        return search_wand(spark, index_dir, queries, k=k, require_all=require_all,
-                           min_should_match=min_should_match,
-                           score_mode=score_mode)
-    return search_wand_ranges(spark, index_dir, queries, k=k, n_ranges=nr,
-                              require_all=require_all,
-                              min_should_match=min_should_match,
-                              score_mode=score_mode)
-
-
-def search_wand_ranges(
-    spark: SparkSession,
-    index_dir: str,
-    queries: DataFrame,
-    k: int = TOP_K,
-    n_ranges: int = 8,
-    require_all: bool = False,
-    min_should_match: int | None = None,
-    score_mode: str = "bm25",
-) -> DataFrame:
-    """Chunk-parallel exact WAND — the 10^12-scale query path.
-
-    The docid space is cut into ``n_ranges`` fixed global ranges; each
-    (query, range) pair is an independent applyInPandas group running
-    range-restricted block-max WAND (a head term's chunk rows scatter
-    across groups, so no single task ever holds a full head posting
-    list), then per-range candidates are merged with the Q6 window
-    (candidates ≤ n_ranges·k per query). Exact: every doc's docid lies
-    in exactly one range and all its term rows whose docid span covers
-    it are present in that range's group.
-    """
+    """THE default query path: per-query exact top-k with block-max
+    pruning (:func:`_wand_one_query`), dispatched by
+    :func:`_per_query`. ``n_ranges`` defaults to
+    :func:`default_n_ranges` of the chain's raw N: one range → one
+    applyInPandas group per query (small index fast path, no merge
+    stage; the gathered rows are per-term encoded bytes, tiny relative
+    to the corpus); more → chunk-parallel WAND over fixed docid ranges
+    (no task ever holds a full head posting list).
+    ``require_all=True`` = conjunctive bool.must with mandatory-term
+    interval skipping — the scale path for conjunctive queries;
+    ``min_should_match``, a ``neg_qtext`` column (bool.must_not) and a
+    ``must_qtext`` column (mixed bool.must + optional should clauses)
+    carry the remaining ES bool semantics — see search_taat; all paths
+    are bit-identical to it (asserted in tests).
+    ``score_mode="proximity"``: opt-in position-window score weighting
+    (contract in :func:`_wand_one_query`)."""
+    if n_ranges is None:
+        n_ranges = default_n_ranges(load_stats_multi(_as_dirs(index_dir))[0])
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     _check_score_mode(score_mode)
     qa = _QueryAnalysis(spark, queries)
-    terms, must_terms = qa.terms, qa.must_terms
     must_by_q = qa.must_term_map()
     _check_bool_args(require_all, min_should_match,
                      has_must=must_by_q is not None)
-    if not terms and not must_terms:
+    if not qa.terms and not qa.must_terms:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    qterms_j = qa.kinds_df()
     all_terms = qa.all_terms
     seg = candidate_segments(spark, index_dir, all_terms)
     dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
     qn = qa.qn_map() if require_all else None
-    seg_r = _range_join(spark, seg, qterms_j, _as_dirs(index_dir), n_ranges)
-    if seg_r is None:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
 
-    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        if must_by_q is not None:
-            mt = frozenset(must_by_q.get(int(key[0]), ()))
-            return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                                   range_lo=int(g["lo"].iloc[0]),
-                                   range_hi=int(g["hi"].iloc[0]),
-                                   min_match=min_should_match,
-                                   must_terms=mt, n_must=len(mt), dead=dead,
-                                   score_mode=score_mode)
-        mm = qn[int(key[0])] if qn is not None else min_should_match
-        return _wand_one_query(g, n_docs, avgdl, k, dfg,
-                               range_lo=int(g["lo"].iloc[0]),
-                               range_hi=int(g["hi"].iloc[0]),
-                               min_match=mm, dead=dead,
+    def kernel(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
+        # require_all and must_qtext are exclusive (_check_bool_args)
+        mt = (frozenset(must_by_q.get(qid, ())) if must_by_q is not None
+              else None)
+        mm = qn[qid] if qn is not None else min_should_match
+        return _wand_one_query(g, n_docs, avgdl, k, dfg, range_lo=lo,
+                               range_hi=hi, min_match=mm, must_terms=mt,
+                               n_must=len(mt or ()), dead=dead,
                                score_mode=score_mode)
 
-    return _merge_ranges(
-        seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA), k)
+    return _per_query(spark, seg, qa.kinds_df(), _as_dirs(index_dir),
+                      n_ranges, k, kernel)
 
 
-def _range_join(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
-                dirs: list[str], n_ranges: int) -> DataFrame | None:
-    """Candidate rows ⋈ query terms ⋈ ``n_ranges`` fixed global docid
-    ranges (columns rng, lo, hi) — the (query, range) groups of the
-    chunk-parallel WAND paths. None when the docid domain is empty.
+def search_wand(spark: SparkSession, index_dir: str, queries: DataFrame,
+                k: int = TOP_K, require_all: bool = False,
+                min_should_match: int | None = None,
+                score_mode: str = "bm25") -> DataFrame:
+    """:func:`search_topk` with one group per query."""
+    return search_topk(spark, index_dir, queries, k=k, n_ranges=1,
+                       require_all=require_all,
+                       min_should_match=min_should_match,
+                       score_mode=score_mode)
+
+
+def search_wand_ranges(spark: SparkSession, index_dir: str,
+                       queries: DataFrame, k: int = TOP_K, n_ranges: int = 8,
+                       require_all: bool = False,
+                       min_should_match: int | None = None,
+                       score_mode: str = "bm25") -> DataFrame:
+    """:func:`search_topk` over ``n_ranges`` fixed docid ranges (the
+    single-group path when ``n_ranges`` is 1)."""
+    return search_topk(spark, index_dir, queries, k=k, n_ranges=n_ranges,
+                       require_all=require_all,
+                       min_should_match=min_should_match,
+                       score_mode=score_mode)
+
+
+def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
+    """Size the chunk-parallel fan-out from corpus stats: ~4M docs per
+    range keeps a range's decoded slice of a head posting list (≤ range
+    width postings/term) comfortably inside one task's memory at any
+    corpus size, capped at 512 groups per query."""
+    return max(1, min(512, -(-n_docs // target_docs_per_range)))
+
+
+def _per_query(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
+               dirs: list[str], n_ranges: int, k: int, kernel) -> DataFrame:
+    """THE per-query dispatch of every top-k kernel: candidate rows
+    ``seg`` ⋈ (query_id, term) rows ``qterms`` (broadcast), grouped and
+    handed to ``kernel(qid, g, range_lo, range_hi)``, which returns
+    that group's RESULT_SCHEMA top-k.
+
+    ``n_ranges <= 1``: one applyInPandas group per query, range
+    (0, None). Otherwise the docid space is cut into ``n_ranges`` fixed
+    global ranges, each (query, range) pair is an independent group
+    running the kernel restricted to [range_lo, range_hi], and the
+    per-range candidates (≤ n_ranges·k per query) merge with the Q6
+    window: global rank by (score desc, docid asc). Exact: every doc's
+    docid lies in exactly one range, and every term row whose span
+    covers that docid joins the range, so a kernel that only scores
+    docs inside its range sees each doc's full row set once.
 
     Range bounds come from the ACTUAL docid domain (per-dir
     docid_offset + N), not [0, n_docs): a delta index queried alone has
@@ -1463,32 +1391,63 @@ def _range_join(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
     nothing there. Exactness never depends on this pruning, only task
     size does: any row holding a posting for a doc in [lo, hi] spans
     that doc's docid and therefore joins the range."""
+    from pyspark.sql.window import Window
+
+    def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
+        if len(key) == 1:
+            return kernel(int(key[0]), g, 0, None)
+        return kernel(int(key[0]), g, int(g["lo"].iloc[0]),
+                      int(g["hi"].iloc[0]))
+
+    if n_ranges <= 1:
+        return (seg.join(F.broadcast(qterms), "term").groupBy("query_id")
+                .applyInPandas(run, RESULT_SCHEMA))
     dom_lo, dom_hi = docid_domain(dirs)
     if dom_hi < dom_lo:
-        return None
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
     width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
     ranges = local_df(
         spark,
         [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
          for r in range(n_ranges)],
         "rng int, lo long, hi long")
-    seg_q = (seg.withColumn("__max_docid",
+    seg_r = (seg.withColumn("__max_docid",
                             F.element_at("blocks", -1)["last_docid"])
-             .join(F.broadcast(qterms), "term"))
-    return seg_q.join(F.broadcast(ranges),
-                      (F.col("__max_docid") >= F.col("lo"))
-                      & (F.col("first_docid") <= F.col("hi")))
-
-
-def _merge_ranges(cands: DataFrame, k: int) -> DataFrame:
-    """The Q6 window over per-(query, range) top-k candidates (≤
-    n_ranges·k per query): global rank by (score desc, docid asc)."""
-    from pyspark.sql.window import Window
-
+             .join(F.broadcast(qterms), "term")
+             .join(F.broadcast(ranges),
+                   (F.col("__max_docid") >= F.col("lo"))
+                   & (F.col("first_docid") <= F.col("hi"))))
+    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (cands.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
             .select("query_id", "rank", "docid", "score"))
+
+
+def _positional_topk(spark: SparkSession, index_dir, query_terms: dict,
+                     n_ranges: int | None, k: int, kernel) -> DataFrame:
+    """Prologue of the positional ops (phrase, phrase_prefix, spans,
+    intervals) before :func:`_per_query`: chain stats, candidate rows
+    for ``query_terms`` ({query_id: terms the kernel needs}), global df
+    and the distinct (query_id, term) frame. ``n_ranges`` defaults to
+    :func:`default_n_ranges` of N_eff. Calls ``kernel(qid, g, n_docs=,
+    avgdl=, k=, dfg=, range_lo=, range_hi=, dead=)``."""
+    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    terms = sorted({t for ts in query_terms.values() for t in ts})
+    if not terms:
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+    seg = candidate_segments(spark, index_dir, terms)
+    dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
+    qdist = local_df(spark, [(qid, t) for qid, ts in query_terms.items()
+                             for t in sorted(set(ts))], QTERMS_SCHEMA)
+
+    def bound(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
+        return kernel(qid, g, n_docs=n_docs, avgdl=avgdl, k=k, dfg=dfg,
+                      range_lo=lo, range_hi=hi, dead=dead)
+
+    return _per_query(spark, seg, qdist, _as_dirs(index_dir),
+                      n_ranges if n_ranges is not None
+                      else default_n_ranges(n_docs), k, bound)
 
 
 # ---------------------------------------------------------------------------
@@ -1892,9 +1851,6 @@ def search_phrase(
     fixed docid ranges (exact: a doc's anchors/windows are evaluated
     entirely inside the one range that contains its docid, and every
     term row whose span covers that docid joins the range)."""
-    from pyspark.sql.window import Window
-
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     # per-query (qpos, term) structure, driver-side (tiny): the same
     # frozen tokenizer, ordered and duplicate-keeping (the phrase
     # "the data the" is three constraints at offsets 0, 1, 2)
@@ -1908,52 +1864,11 @@ def search_phrase(
             lst = phrases.setdefault(int(qid_), [])
             base = len(lst)
             lst.extend((base + i, t) for i, t in enumerate(toks))
-    terms = sorted({t for p in phrases.values() for _, t in p})
-    if not terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, terms)
-    dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
-    qdist = local_df(
-        spark,
-        [(qid, t) for qid, p in phrases.items() for t in {t for _, t in p}],
-        "query_id long, term string")
-
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        seg_q = seg.join(F.broadcast(qdist), "term")
-
-        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-            return _phrase_one_query(g, phrases[int(key[0])], n_docs, avgdl,
-                                     k, dfg, dead=dead, slop=slop,
-                                     score_mode=score_mode)
-
-        return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1) for r in range(nr)],
-        "rng int, lo long, hi long")
-    seg2 = seg.withColumn("__max_docid", F.element_at("blocks", -1)["last_docid"])
-    seg_r = (seg2.join(F.broadcast(qdist), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-
-    def run_rng(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        return _phrase_one_query(g, phrases[int(key[0])], n_docs, avgdl, k, dfg,
-                                 range_lo=int(g["lo"].iloc[0]),
-                                 range_hi=int(g["hi"].iloc[0]), dead=dead,
-                                 slop=slop, score_mode=score_mode)
-
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run_rng, RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _positional_topk(
+        spark, index_dir, {qid: [t for _, t in p] for qid, p in phrases.items()},
+        n_ranges, k,
+        lambda qid, g, **kw: _phrase_one_query(g, phrases[qid], slop=slop,
+                                               score_mode=score_mode, **kw))
 
 
 # ---------------------------------------------------------------------------
@@ -2276,9 +2191,6 @@ def search_phrase_prefix(
     :func:`search_phrase`: single applyInPandas group per query on a
     small index, chunk-parallel docid ranges on a large one (exact —
     a doc's anchors are evaluated inside its one range)."""
-    from pyspark.sql.window import Window
-
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     qp = queries.select("query_id", "qtext").toPandas()
     phrases: dict[int, list[str]] = {}
     for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):
@@ -2293,60 +2205,11 @@ def search_phrase_prefix(
         plans[qid] = (fixed,
                       expand_prefix_terms(spark, index_dir, prefix,
                                           cap=max_expansions))
-    all_terms = sorted({t for fixed, exps in plans.values()
-                        for t in (*fixed, *exps)})
-    if not all_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
-    qdist = local_df(
-        spark,
-        [(qid, t) for qid, (fixed, exps) in plans.items()
-         for t in sorted(set(fixed) | set(exps))],
-        "query_id long, term string")
-
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        seg_q = seg.join(F.broadcast(qdist), "term")
-
-        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-            fixed, exps = plans[int(key[0])]
-            return _phrase_prefix_one_query(g, fixed, exps, n_docs, avgdl,
-                                            k, dfg, dead=dead)
-
-        return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(nr)],
-        "rng int, lo long, hi long")
-    seg2 = seg.withColumn("__max_docid",
-                          F.element_at("blocks", -1)["last_docid"])
-    seg_r = (seg2.join(F.broadcast(qdist), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-
-    def run_rng(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        fixed, exps = plans[int(key[0])]
-        return _phrase_prefix_one_query(g, fixed, exps, n_docs, avgdl, k,
-                                        dfg,
-                                        range_lo=int(g["lo"].iloc[0]),
-                                        range_hi=int(g["hi"].iloc[0]),
-                                        dead=dead)
-
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run_rng,
-                                                           RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _positional_topk(
+        spark, index_dir,
+        {qid: fixed + exps for qid, (fixed, exps) in plans.items()},
+        n_ranges, k,
+        lambda qid, g, **kw: _phrase_prefix_one_query(g, *plans[qid], **kw))
 
 
 # ---------------------------------------------------------------------------

@@ -40,9 +40,9 @@ the clause terms (term-IN parquet pushdown) group per query
 (applyInPandas), the shared two-pass decode
 (`search._decode_candidate_positions`) intersects docids on scoring
 streams before any position byte is touched, and position streams
-decode only for blocks still holding a candidate. Single-group and
-chunk-parallel range dispatch like Q8 (a doc's spans are evaluated
-entirely inside the one range holding its docid).
+decode only for blocks still holding a candidate. Dispatched like Q8
+by `search._positional_topk` (a doc's spans are evaluated entirely
+inside the one range holding its docid).
 """
 
 from __future__ import annotations
@@ -50,16 +50,13 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import TOP_K
 from ..scoring import partial as _partial
 from ..textops import tokenize
-from .search import (RESULT_SCHEMA, _as_dirs, _chain_stats,
-                     _decode_candidate_positions, _dfg_from_rows,
-                     _dfg_or_none, _exact_anchor_keys, _idf, _sloppy_match,
-                     candidate_segments, default_n_ranges, docid_domain,
-                     local_df)
+from .search import (_decode_candidate_positions, _dfg_from_rows,
+                     _exact_anchor_keys, _idf, _positional_topk,
+                     _sloppy_match)
 
 _MASK32 = np.int64((1 << 32) - 1)
 
@@ -210,60 +207,6 @@ def _span_first_one_query(g: pd.DataFrame, term: str, end: int,
                        n_docs, avgdl, qid, k)
 
 
-def _dispatch(spark: SparkSession, index_dir, queries: DataFrame,
-              plans: dict, all_terms: list[str], kernel, k: int,
-              n_ranges: int | None) -> DataFrame:
-    """Shared single-group / chunk-parallel dispatch (the Q8 shape):
-    candidate segment rows for each query's terms group per query;
-    above the fan-out threshold the groups split by fixed docid ranges
-    and a final window merges (exact — spans never cross a doc)."""
-    from pyspark.sql.window import Window
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
-    if not all_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
-    qdist = local_df(
-        spark,
-        [(qid, t) for qid, terms in plans.items() for t in sorted(set(terms))],
-        "query_id long, term string")
-    nr = n_ranges if n_ranges is not None else default_n_ranges(n_docs)
-    if nr <= 1:
-        seg_q = seg.join(F.broadcast(qdist), "term")
-
-        def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-            return kernel(g, int(key[0]), n_docs, avgdl, k, dfg, 0, None,
-                          dead)
-
-        return seg_q.groupBy("query_id").applyInPandas(run, RESULT_SCHEMA)
-    dom_lo, dom_hi = docid_domain(_as_dirs(index_dir))
-    if dom_hi < dom_lo:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    width = max(1, (dom_hi - dom_lo + 1 + nr - 1) // nr)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(nr)], "rng int, lo long, hi long")
-    seg2 = seg.withColumn("__max_docid",
-                          F.element_at("blocks", -1)["last_docid"])
-    seg_r = (seg2.join(F.broadcast(qdist), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-
-    def run_rng(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
-        return kernel(g, int(key[0]), n_docs, avgdl, k, dfg,
-                      int(g["lo"].iloc[0]), int(g["hi"].iloc[0]), dead)
-
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run_rng,
-                                                           RESULT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
-
-
 def _clauses_of(qtext: str) -> list[str]:
     toks = tokenize(qtext)
     if len(toks) < 2:
@@ -279,15 +222,10 @@ def search_span_near(spark: SparkSession, index_dir, queries: DataFrame,
     Contract in the module docstring. Returns the Q8 result shape."""
     qrows = queries.select("query_id", "qtext").collect()
     plans = {int(r["query_id"]): _clauses_of(r["qtext"]) for r in qrows}
-    all_terms = sorted({t for c in plans.values() for t in c})
-
-    def kernel(g, qid, n_docs, avgdl, kk, dfg, lo, hi, dead):
-        return _span_near_one_query(g, plans[qid], slop, in_order, n_docs,
-                                    avgdl, kk, dfg, lo,
-                                    hi if hi is not None else None, dead)
-
-    return _dispatch(spark, index_dir, queries, plans, all_terms, kernel,
-                     k, n_ranges)
+    return _positional_topk(
+        spark, index_dir, plans, n_ranges, k,
+        lambda qid, g, **kw: _span_near_one_query(g, plans[qid], slop,
+                                                  in_order, **kw))
 
 
 def search_span_not(spark: SparkSession, index_dir, queries: DataFrame,
@@ -307,16 +245,11 @@ def search_span_not(spark: SparkSession, index_dir, queries: DataFrame,
         plans[qid] = toks
         excl[qid] = ex[0]
     # exclude terms must reach the kernel's candidate rows too
-    plans_all = {qid: plans[qid] + [excl[qid]] for qid in plans}
-    all_terms = sorted({t for c in plans_all.values() for t in c})
-
-    def kernel(g, qid, n_docs, avgdl, kk, dfg, lo, hi, dead):
-        return _span_not_one_query(g, plans[qid], excl[qid], pre, post,
-                                   n_docs, avgdl, kk, dfg, lo,
-                                   hi if hi is not None else None, dead)
-
-    return _dispatch(spark, index_dir, queries, plans_all, all_terms,
-                     kernel, k, n_ranges)
+    return _positional_topk(
+        spark, index_dir, {qid: plans[qid] + [excl[qid]] for qid in plans},
+        n_ranges, k,
+        lambda qid, g, **kw: _span_not_one_query(g, plans[qid], excl[qid],
+                                                 pre, post, **kw))
 
 
 def search_span_first(spark: SparkSession, index_dir, queries: DataFrame,
@@ -332,15 +265,10 @@ def search_span_first(spark: SparkSession, index_dir, queries: DataFrame,
         if len(toks) != 1:
             raise ValueError("span_first takes exactly one term")
         plans[int(r["query_id"])] = toks
-    all_terms = sorted({t for c in plans.values() for t in c})
-
-    def kernel(g, qid, n_docs, avgdl, kk, dfg, lo, hi, dead):
-        return _span_first_one_query(g, plans[qid][0], end, n_docs, avgdl,
-                                     kk, dfg, lo,
-                                     hi if hi is not None else None, dead)
-
-    return _dispatch(spark, index_dir, queries, plans, all_terms, kernel,
-                     k, n_ranges)
+    return _positional_topk(
+        spark, index_dir, plans, n_ranges, k,
+        lambda qid, g, **kw: _span_first_one_query(g, plans[qid][0], end,
+                                                   **kw))
 
 
 def _parse_intervals(qtext: str) -> list[list[str]]:
@@ -433,14 +361,9 @@ def search_intervals(spark: SparkSession, index_dir, queries: DataFrame,
     qrows = queries.select("query_id", "qtext").collect()
     plans = {int(r["query_id"]): _parse_intervals(r["qtext"])
              for r in qrows}
-    flat_plans = {qid: [t for alts in cl for t in alts]
-                  for qid, cl in plans.items()}
-    all_terms = sorted({t for c in flat_plans.values() for t in c})
-
-    def kernel(g, qid, n_docs, avgdl, kk, dfg, lo, hi, dead):
-        return _intervals_one_query(g, plans[qid], max_gaps, ordered,
-                                    n_docs, avgdl, kk, dfg, lo,
-                                    hi if hi is not None else None, dead)
-
-    return _dispatch(spark, index_dir, queries, flat_plans, all_terms,
-                     kernel, k, n_ranges)
+    return _positional_topk(
+        spark, index_dir,
+        {qid: [t for alts in cl for t in alts] for qid, cl in plans.items()},
+        n_ranges, k,
+        lambda qid, g, **kw: _intervals_one_query(g, plans[qid], max_gaps,
+                                                  ordered, **kw))

@@ -40,17 +40,3 @@ def partial(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
     if SCALE_K1_PLUS_1:
         out *= K1 + 1.0
     return out
-
-
-def idf_sql(df_col: str, n_docs: int) -> str:
-    """The same idf as an ANSI-SQL expression (for the Q7 brute-force
-    scorer's DuckDB oracle twin — must stay textually in sync with
-    :func:`idf`)."""
-    return f"ln(1.0 + ({n_docs} - {df_col} + 0.5) / ({df_col} + 0.5))"
-
-
-def partial_sql(tf_col: str, dl_col: str, avgdl: float) -> str:
-    """The partial factor as ANSI SQL (twin of :func:`partial`)."""
-    return (
-        f"({tf_col} / ({tf_col} + {K1!r} * (1.0 - {B!r} + {B!r} * {dl_col} / {avgdl!r})))"
-    )

@@ -32,12 +32,6 @@ PAGES_SCHEMA = T.StructType([
     T.StructField("lang", T.StringType()),
 ])
 
-QUERIES_SCHEMA = T.StructType([
-    T.StructField("query_id", T.LongType()),
-    T.StructField("qtext", T.StringType()),
-])
-
-
 def read_pages(spark: SparkSession, source: str) -> DataFrame:
     """S1 pages scan. ``source`` is either ``iceberg:<cat.db.table>``
     (production) or a parquet path/dir (sandbox)."""

@@ -78,6 +78,18 @@ def main():
         spark, idx_dir, ph, slop=3, in_order=True)
     plans["search_highlight"] = lambda: search_highlight(
         spark, idx_dir, qdf, pages, k=10, window=4)
+    # both arms of the per-query dispatcher: the single-group WAND path
+    # through search_topk and the (query, docid range) path of every
+    # positional kernel
+    from aarhus_spark.operators.search import search_phrase_prefix, search_topk
+    plans["search_topk_1"] = lambda: search_topk(spark, idx_dir, qdf,
+                                                 n_ranges=1)
+    plans["search_phrase_ranges"] = lambda: search_phrase(
+        spark, idx_dir, ph, n_ranges=4)
+    plans["search_phrase_prefix_ranges"] = lambda: search_phrase_prefix(
+        spark, idx_dir, ph, n_ranges=4)
+    plans["search_span_ranges"] = lambda: search_span_near(
+        spark, idx_dir, ph, slop=3, in_order=True, n_ranges=4)
     for name, fn in plans.items():
         try:
             txt = grab(fn())

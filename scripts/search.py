@@ -35,8 +35,7 @@ def main() -> None:
     ap.add_argument("--index", required=True)
     ap.add_argument("--queries", required=True)
     ap.add_argument("--k", type=int, default=10)
-    ap.add_argument("--mode", choices=["wand", "taat", "wand-ranges",
-                                       "wand-single", "phrase", "prefix",
+    ap.add_argument("--mode", choices=["wand", "taat", "phrase", "prefix",
                                        "phrase-prefix", "multi-match",
                                        "wildcard", "regexp", "boosting",
                                        "constant-score", "rescore",
@@ -44,8 +43,8 @@ def main() -> None:
                                        "span-first", "match-bool-prefix"],
                     default="wand",
                     help="wand = default dispatcher (chunk-parallel, fan-out "
-                         "auto-sized from index stats); wand-ranges forces the "
-                         "chunk-parallel path; wand-single forces one group/query; "
+                         "auto-sized from index stats; --ranges N fixes it, "
+                         "--ranges 1 is one group per query); "
                          "prefix treats each qtext as a `pre*` wildcard "
                          "(dictionary-expanded, scoring_boolean rewrite); "
                          "phrase-prefix = ES match_phrase_prefix (exact "
@@ -170,9 +169,8 @@ def main() -> None:
     if args.mode == "span-first" and args.first_end is None:
         ap.error("--mode span-first needs --first-end")
 
-    from aarhus_spark.operators.search import (
-        search_phrase, search_taat, search_topk, search_wand,
-        search_wand_ranges)
+    from aarhus_spark.operators.search import (search_phrase, search_taat,
+                                               search_topk)
     from aarhus_spark.session import get_spark
     from aarhus_spark.sources.io import read_queries
 
@@ -195,11 +193,6 @@ def main() -> None:
     if args.mode == "wand":
         res = search_topk(spark, index, qdf, k=args.k, n_ranges=args.ranges,
                           **bool_kw)
-    elif args.mode == "wand-ranges":
-        res = search_wand_ranges(spark, index, qdf, k=args.k,
-                                 n_ranges=args.ranges or 8, **bool_kw)
-    elif args.mode == "wand-single":
-        res = search_wand(spark, index, qdf, k=args.k, **bool_kw)
     elif args.mode == "phrase":
         res = search_phrase(spark, index, qdf, k=args.k, n_ranges=args.ranges,
                             slop=args.slop, score_mode=args.score_mode)

@@ -1,0 +1,103 @@
+"""Value identity across executor parallelism: every op that runs through
+the per-query dispatcher (``search._per_query``) returns the same rows,
+with scores equal bit for bit, in a local[1] session as in the suite's
+local[4] session — with one group per query and with (query, docid
+range) groups."""
+
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TESTS = os.path.dirname(os.path.abspath(__file__))
+
+_TERMS = ["the data", "hash the", "index of", "merge the", "spark", "of in"]
+_PHRASES = ["of the", "the the", "in the", "to the"]
+
+
+def _rows(spark, root: str) -> list[list]:
+    """(op, n_ranges, query_id, rank, docid, score.hex()) for every
+    dispatched op at n_ranges 1 and 3, over the multi-field index
+    ``root`` (its ``field=text`` dir is a plain positional index)."""
+    from aarhus_spark.operators import search
+    from aarhus_spark.operators.multifield import search_multi_match
+    from aarhus_spark.operators.spans import search_span_near
+
+    text = os.path.join(root, "field=text")
+    qdf = spark.createDataFrame(list(enumerate(_TERMS)),
+                                "query_id long, qtext string")
+    ph = spark.createDataFrame(list(enumerate(_PHRASES)),
+                               "query_id long, qtext string")
+    ops = {
+        "topk": lambda nr: search.search_topk(spark, text, qdf, k=7,
+                                              n_ranges=nr),
+        "phrase": lambda nr: search.search_phrase(spark, text, ph, k=7,
+                                                  n_ranges=nr, slop=1),
+        "phrase_prefix": lambda nr: search.search_phrase_prefix(
+            spark, text, ph.selectExpr("query_id", "substr(qtext, 1, 5) AS qtext"),
+            k=7, n_ranges=nr),
+        "span_near": lambda nr: search_span_near(spark, text, ph, slop=2,
+                                                 in_order=False, k=7,
+                                                 n_ranges=nr),
+        # multi_match sizes its fan-out from default_n_ranges alone
+        "multi_match": lambda nr: search_multi_match(
+            spark, root, qdf, k=7, boosts={"title": 2.0}),
+    }
+    out = []
+    sized = search.default_n_ranges
+    try:
+        for nr in (1, 3):
+            search.default_n_ranges = lambda n_docs, nr=nr: nr
+            for name, op in ops.items():
+                out += [[name, nr, r["query_id"], r["rank"], r["docid"],
+                         float(r["score"]).hex()] for r in op(nr).collect()]
+    finally:
+        search.default_n_ranges = sized
+    return sorted(out)
+
+
+@pytest.fixture(scope="module")
+def mf_root(spark, tmpdir_session):
+    from pyspark.sql import functions as F
+    from aarhus_spark.operators.multifield import build_field_indexes
+    from aarhus_spark.sources.fixtures import gen_pages
+    root = os.path.join(tmpdir_session, "parallelism_mf")
+    build_field_indexes(spark, spark.createDataFrame(gen_pages(240)), root,
+                        fields={"text": F.col("text"),
+                                "title": F.substring(F.col("text"), 1, 60)},
+                        n_partitions=2, n_buckets=2, salts=2)
+    return root
+
+
+def test_local1_equals_local4_bitwise(spark, mf_root):
+    # without coalescing, the groups spread over all 8 shuffle partitions
+    # here, against one partition in the local[1] session
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "false")
+        here = _rows(spark, mf_root)
+    finally:
+        spark.conf.set(key, old)
+    # every op and both fan-outs produce hits, so the comparison bites
+    assert {(r[0], r[1]) for r in here} == {
+        (op, nr) for op in ("topk", "phrase", "phrase_prefix", "span_near",
+                            "multi_match") for nr in (1, 3)}
+    code = f"""
+import json, sys
+sys.path[:0] = [{REPO!r}, {TESTS!r}]
+from aarhus_spark.session import get_spark
+from test_parallelism_identity import _rows
+spark = get_spark("local1", master="local[1]", shuffle_partitions=1)
+spark.sparkContext.setLogLevel("ERROR")
+print(json.dumps(_rows(spark, {mf_root!r})))
+spark.stop()
+"""
+    res = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                         text=True, timeout=300,
+                         env={**os.environ, "AARHUS_DRIVER_MEM": "1g"})
+    assert res.returncode == 0, res.stderr[-2000:]
+    assert json.loads(res.stdout.strip().splitlines()[-1]) == here

@@ -8,7 +8,7 @@ import os
 import pytest
 
 from aarhus_spark.operators.build import prepare_pages
-from aarhus_spark.operators.search import analyze_queries, candidate_segments
+from aarhus_spark.operators.search import _QueryAnalysis, candidate_segments
 from aarhus_spark.sources.fixtures import gen_pages
 from aarhus_spark.sources.io import read_pages
 
@@ -74,9 +74,20 @@ def test_tokenize_is_arrow_not_row_python(spark, pages_parquet):
 
 
 def test_query_analysis_no_row_python(spark):
-    qdf = spark.createDataFrame([(0, "a b")], "query_id long, qtext string")
-    plan = _plan(analyze_queries(qdf))
-    assert "BatchEvalPython" not in plan
+    """Query analysis runs in-process, not in Spark tasks: the
+    (query_id, term) frames the scorers join against are
+    LocalRelations, with no Python stage."""
+    qdf = spark.createDataFrame(
+        [(0, "a b", "c", "b d"), (1, "b e", None, None)],
+        "query_id long, qtext string, neg_qtext string, must_qtext string")
+    qa = _QueryAnalysis(spark, qdf)
+    for df in (qa.qterms_df(), qa.kinds_df()):
+        assert "BatchEvalPython" not in _plan(df)
+        assert (df._jdf.queryExecution().optimizedPlan().getClass()
+                .getSimpleName() == "LocalRelation")
+    assert sorted(map(tuple, qa.kinds_df().collect())) == [
+        (0, "a", 0), (0, "b", 1), (0, "c", 2), (0, "d", 1),
+        (1, "b", 0), (1, "e", 0)]
 
 
 def test_range_join_carries_both_span_bounds(spark, tmpdir_session, pages_parquet):
