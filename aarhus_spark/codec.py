@@ -145,33 +145,6 @@ def _pos_undelta(deltas: np.ndarray, tfs: np.ndarray) -> np.ndarray:
     return c - np.repeat(base, tfs)
 
 
-def encode_postings(docids: np.ndarray, tfs: np.ndarray, dls: np.ndarray) -> bytes:
-    """Encode one posting run (docids strictly ascending)."""
-    docids = np.asarray(docids, dtype=np.int64)
-    n = docids.size
-    header = vbyte_encode(np.array([n], dtype=np.int64))
-    if n == 0:
-        return header
-    deltas = np.empty(n, dtype=np.int64)
-    deltas[0] = docids[0]
-    np.subtract(docids[1:], docids[:-1], out=deltas[1:])
-    if n > 1 and deltas[1:].min() <= 0:
-        raise ValueError("encode_postings: docids must be strictly ascending")
-    return header + vbyte_encode(deltas) + vbyte_encode(tfs) + vbyte_encode(dls)
-
-
-def decode_postings(payload: bytes | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a posting run -> (docids int64, tfs int64, dls int64)."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    (n_arr, off) = vbyte_decode(buf, 1, 0)
-    n = int(n_arr[0])
-    deltas, off = vbyte_decode(buf, n, off)
-    tfs, off = vbyte_decode(buf, n, off)
-    dls, off = vbyte_decode(buf, n, off)
-    docids = np.cumsum(deltas.astype(np.int64))
-    return docids, tfs.astype(np.int64), dls.astype(np.int64)
-
-
 def encode_blocks(
     docids: np.ndarray,
     tfs: np.ndarray,
@@ -291,13 +264,7 @@ def encode_blocks(
 
 def decode_block(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode the single block starting at byte ``offset``."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    (n_arr, off) = vbyte_decode(buf, 1, offset)
-    n = int(n_arr[0])
-    deltas, off = vbyte_decode(buf, n, off)
-    tfs, off = vbyte_decode(buf, n, off)
-    dls, off = vbyte_decode(buf, n, off)
-    return np.cumsum(deltas.astype(np.int64)), tfs.astype(np.int64), dls.astype(np.int64)
+    return decode_block_ext(payload, offset)[:3]
 
 
 def decode_block_positions(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
@@ -305,49 +272,8 @@ def decode_block_positions(payload: bytes | np.ndarray, offset: int) -> tuple[np
     (docids, tfs, dls, flat_positions); posting i owns the next tf_i
     position values. Raises on a v3 (position-less) payload — the
     stream would be truncated."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    (n_arr, off) = vbyte_decode(buf, 1, offset)
-    n = int(n_arr[0])
-    deltas, off = vbyte_decode(buf, n, off)
-    tfs, off = vbyte_decode(buf, n, off)
-    dls, off = vbyte_decode(buf, n, off)
-    tfs = tfs.astype(np.int64)
-    pdeltas, off = vbyte_decode(buf, int(tfs.sum()), off)
-    return (np.cumsum(deltas.astype(np.int64)), tfs, dls.astype(np.int64),
-            _pos_undelta(pdeltas, tfs))
-
-
-def decode_block_keep_pos(payload: bytes | np.ndarray, offset: int,
-                          end: int | None = None) -> tuple[np.ndarray, np.ndarray, np.ndarray, list[bytes]]:
-    """Decode a v4 block's docids/tfs/dls but keep the position stream
-    as VERBATIM per-posting byte runs (no value decode, no re-encode) —
-    the compaction path: per-posting runs are independently concatenable
-    (deltas reset at posting starts), so they pass through a docid
-    remap + re-blocking untouched. Value boundaries are found by one
-    vectorized continuation-bit scan.
-
-    ``end`` bounds that scan: pass the NEXT block's byte offset (or the
-    payload length for the last block). Without it the scan runs over
-    the tail of the whole row payload for every block — O(row_bytes ×
-    n_blocks), quadratic for multi-block rows near MAX_POSTINGS_PER_ROW."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    (n_arr, off) = vbyte_decode(buf, 1, offset)
-    n = int(n_arr[0])
-    deltas, off = vbyte_decode(buf, n, off)
-    tfs, off = vbyte_decode(buf, n, off)
-    dls, off = vbyte_decode(buf, n, off)
-    tfs = tfs.astype(np.int64)
-    total = int(tfs.sum())
-    b = buf[off:] if end is None else buf[off:end]
-    ends = np.flatnonzero((b & 0x80) == 0)[:total]      # per-VALUE end bytes
-    if ends.size < total:
-        raise ValueError("decode_block_keep_pos: position stream truncated")
-    psum = np.cumsum(tfs)
-    pe = ends[psum - 1] + 1                              # per-posting byte ends
-    ps = np.concatenate(([0], pe[:-1]))
-    mv = memoryview(b[:int(pe[-1]) if total else 0].tobytes())
-    posb = [bytes(mv[int(s):int(e)]) for s, e in zip(ps, pe)]
-    return np.cumsum(deltas.astype(np.int64)), tfs, dls.astype(np.int64), posb
+    d, tfs, dls, off = decode_block_ext(payload, offset)
+    return d, tfs, dls, decode_positions_at(payload, off, tfs)
 
 
 def decode_block_ext(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
@@ -400,14 +326,14 @@ def decode_blocks_keep_pos_flat(payload: bytes | np.ndarray,
     """Decode every block's scoring streams but keep the position
     sections as ONE verbatim byte buffer with per-posting byte lengths
     — the (pbuf, plens) shape :func:`encode_blocks` re-blocks by pure
-    byte concatenation (``pos_encoded`` path). Unlike
-    :func:`decode_block_keep_pos` this materializes NO per-posting
-    Python bytes objects: per-value boundaries come from one vectorized
-    continuation-bit scan per block and the buffer is sliced
-    numpy-side. The merge path (build.py _make_merger): per-posting
-    position runs are independently concatenable (deltas reset at
-    posting starts), so a docid-preserving merge never needs to decode
-    or re-encode a position value.
+    byte concatenation (``pos_encoded`` path). It materializes NO
+    per-posting Python bytes objects: per-value boundaries come from
+    one vectorized continuation-bit scan per block and the buffer is
+    sliced numpy-side. The merge path (build.py _make_merger) and
+    compaction (compact.py): per-posting position runs are
+    independently concatenable (deltas reset at posting starts), so a
+    merge or docid remap never needs to decode or re-encode a position
+    value.
 
     Returns (docids, tfs, dls, pos_buf uint8, per_posting_byte_lens).
     """
@@ -416,12 +342,7 @@ def decode_blocks_keep_pos_flat(payload: bytes | np.ndarray,
     bounds = offs[1:] + [buf.size]
     ds, ts, ls, pbs, pls = [], [], [], [], []
     for off, end in zip(offs, bounds):
-        (n_arr, o) = vbyte_decode(buf, 1, off)
-        n = int(n_arr[0])
-        deltas, o = vbyte_decode(buf, n, o)
-        tfs, o = vbyte_decode(buf, n, o)
-        dls, o = vbyte_decode(buf, n, o)
-        tfs = tfs.astype(np.int64)
+        d, tfs, dls, o = decode_block_ext(buf, off)
         total = int(tfs.sum())
         b = buf[o:end]
         vends = np.flatnonzero((b & 0x80) == 0)
@@ -440,9 +361,9 @@ def decode_blocks_keep_pos_flat(payload: bytes | np.ndarray,
                 f"{int(pe[-1]) if total else 0} of {b.size} in block — "
                 f"payload/offset mismatch (v3-style payload?)")
         ps = np.concatenate(([0], pe[:-1])) if total else np.empty(0, np.int64)
-        ds.append(np.cumsum(deltas.astype(np.int64)))
+        ds.append(d)
         ts.append(tfs)
-        ls.append(dls.astype(np.int64))
+        ls.append(dls)
         pbs.append(b[:int(pe[-1])] if total else b[:0])
         pls.append(pe - ps)
     if not ds:
@@ -496,17 +417,3 @@ def decode_all_blocks(payload: bytes | np.ndarray, offsets: list[int] | np.ndarr
         return z, z.copy(), z.copy()
     return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
 
-
-def concat_postings(payloads: list[bytes]) -> bytes:
-    """k-way merge of posting runs with pairwise-disjoint, ordered docid
-    ranges (the range-salted case, SURVEY §2.3 T7): decode, verify
-    global ascending order, re-encode as one run."""
-    parts = [decode_postings(p) for p in payloads if p is not None]
-    parts = [p for p in parts if p[0].size]
-    if not parts:
-        return encode_postings(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
-    docids = np.concatenate([p[0] for p in parts])
-    tfs = np.concatenate([p[1] for p in parts])
-    dls = np.concatenate([p[2] for p in parts])
-    order = np.argsort(docids, kind="stable")
-    return encode_postings(docids[order], tfs[order], dls[order])

@@ -476,13 +476,18 @@ def tokenize_postings(pdf: pd.DataFrame) -> pd.DataFrame:
                              "dl": pd.Series([], dtype="int64"),
                              "posb": pd.Series([], dtype="object")})
     docid, codes, uniques, tfs, dl, buf, plens = core
-    boff = np.concatenate(([0], np.cumsum(plens)))
-    mv = memoryview(buf.tobytes())
-    posb = [bytes(mv[int(boff[i]):int(boff[i + 1])]) for i in range(tfs.size)]
     return pd.DataFrame({
         "docid": docid, "term": uniques[codes], "tf": tfs, "dl": dl,
-        "posb": posb,
+        "posb": byte_runs(buf, plens),
     })
+
+
+def byte_runs(buf: np.ndarray, lens: np.ndarray) -> list[bytes]:
+    """Split one contiguous uint8 buffer into per-posting ``bytes``
+    runs of the given lengths (the ``posb`` column's values)."""
+    boff = np.concatenate(([0], np.cumsum(lens)))
+    mv = memoryview(buf.tobytes())
+    return [bytes(mv[int(boff[i]):int(boff[i + 1])]) for i in range(lens.size)]
 
 
 _SALT_MIX = np.uint64(0x9E3779B97F4A7C15)

@@ -48,10 +48,10 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import decode_block_keep_pos
+from ..codec import decode_blocks_keep_pos_flat
 from ..config import (BLOCK_SIZE, FORMAT_VERSION, HEAD_DF_QUANTILE,
                       MAX_POSTINGS_PER_ROW, SALTS)
-from .build import (FragmentCommitter, IndexPaths, _salt_of,
+from .build import (FragmentCommitter, IndexPaths, _salt_of, byte_runs,
                     encode_merge_finalize, read_dictionary, read_doclens,
                     read_fragments)
 
@@ -110,10 +110,12 @@ def _assign_new_docids(spark: SparkSession, doclens: DataFrame,
 def decode_fragments_to_tokens(spark: SparkSession, dirs: list[str]) -> DataFrame:
     """Per-posting (dir_id, docid, term, tf, dl, posb) rows from every
     fragment row of every dir — the fragment encoder's exact inverse.
-    Position runs pass through as VERBATIM bytes (decode_block_keep_pos):
-    per-posting streams are self-delimiting and independently
-    concatenable, so the compacted index reproduces them bit-identically
-    without ever decoding a position value."""
+    Position runs pass through as VERBATIM bytes
+    (decode_blocks_keep_pos_flat, the merger's decoder, which also
+    rejects a block whose position stream does not end at the next
+    block's offset): per-posting streams are self-delimiting and
+    independently concatenable, so the compacted index reproduces them
+    bit-identically without ever decoding a position value."""
     def make_dec(dir_id: int):
         def dec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             # accumulate decoded rows and yield LARGE batches: a yield
@@ -124,27 +126,15 @@ def decode_fragments_to_tokens(spark: SparkSession, dirs: list[str]) -> DataFram
             for pdf in batches:
                 for term, payload, blks in zip(pdf["term"], pdf["postings"],
                                                pdf["blocks"]):
-                    buf = np.frombuffer(payload, dtype=np.uint8)
-                    # bound each block's continuation-bit scan with the
-                    # NEXT block's offset (offsets are ascending): the
-                    # unbounded scan is O(row_bytes × n_blocks)
-                    offs = [int(b["offset"]) for b in blks] + [buf.size]
-                    parts = [decode_block_keep_pos(buf, offs[i], offs[i + 1])
-                             for i in range(len(blks))]
-                    if not parts:
+                    d, tf, dl, pbuf, plens = decode_blocks_keep_pos_flat(
+                        payload, [b["offset"] for b in blks])
+                    if not d.size:
                         continue
-                    posb: list[bytes] = []
-                    for p in parts:
-                        posb.extend(p[3])
                     acc.append(pd.DataFrame({
-                        "dir_id": np.int32(dir_id),
-                        "docid": np.concatenate([p[0] for p in parts]),
-                        "term": term,
-                        "tf": np.concatenate([p[1] for p in parts]),
-                        "dl": np.concatenate([p[2] for p in parts]),
-                        "posb": posb,
+                        "dir_id": np.int32(dir_id), "docid": d, "term": term,
+                        "tf": tf, "dl": dl, "posb": byte_runs(pbuf, plens),
                     }))
-                    acc_rows += len(posb)
+                    acc_rows += d.size
                     if acc_rows >= 65536:
                         yield pd.concat(acc, ignore_index=True)
                         acc, acc_rows = [], 0

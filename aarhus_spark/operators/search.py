@@ -24,8 +24,9 @@ Q1→Q5 ``search_topk`` — per-query block-max pruning. Each query's
   interval-at-a-time so the inner loop is numpy, not per-doc Python).
   Exact top-k: stop condition is strict (<), ties keep flowing.
 
-Q7 ``brute_force_scorer_sql`` — the SQL-expressible twin used by the
-  harness (DuckDB oracle): explode-tokenize → term stats → fold.
+Q7 ``harness.q_bm25_brute_sql`` — the brute-force Spark SQL twin
+  (explode → join → agg → window), checked against the harness's
+  DuckDB oracle ``harness._bm25_oracle_sql``.
 
 ``search_topk`` is the DEFAULT entry point: it sizes the chunk-parallel
 fan-out from the index stats (``default_n_ranges``). Every top-k kernel
@@ -43,7 +44,7 @@ import heapq
 import json
 import os
 import re
-from typing import Iterator
+from typing import Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -1424,30 +1425,90 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
             .select("query_id", "rank", "docid", "score"))
 
 
-def _positional_topk(spark: SparkSession, index_dir, query_terms: dict,
-                     n_ranges: int | None, k: int, kernel) -> DataFrame:
-    """Prologue of the positional ops (phrase, phrase_prefix, spans,
-    intervals) before :func:`_per_query`: chain stats, candidate rows
-    for ``query_terms`` ({query_id: terms the kernel needs}), global df
-    and the distinct (query_id, term) frame. ``n_ranges`` defaults to
-    :func:`default_n_ranges` of N_eff. Calls ``kernel(qid, g, n_docs=,
-    avgdl=, k=, dfg=, range_lo=, range_hi=, dead=)``."""
+class _PositionalTerms(NamedTuple):
+    """One query's terms for :func:`_positional_topk`: a candidate doc
+    holds every ``required`` term and some term of each ``any_of``
+    group; ``optional`` terms are decoded for the match step only
+    (span_not's exclude: never required, never scored). ``scored``:
+    the required and any_of terms in sorted (fold) order; the BM25 sum
+    runs over those present in the group."""
+    required: tuple = ()
+    any_of: tuple = ()
+    optional: tuple = ()
+
+    @property
+    def scored(self) -> list[str]:
+        return sorted({*self.required, *(t for grp in self.any_of for t in grp)})
+
+
+def _positional_topk(spark: SparkSession, index_dir, plans: dict,
+                     n_ranges: int | None, k: int, match) -> DataFrame:
+    """THE decode → match → score skeleton of every positional op
+    (phrase, phrase_prefix, spans, intervals), over :func:`_per_query`.
+
+    Driver side: chain stats, candidate rows for the terms of every
+    ``plans`` entry ({query_id: :class:`_PositionalTerms`}), global df
+    and the distinct (query_id, term) frame; ``n_ranges`` defaults to
+    :func:`default_n_ranges` of N_eff. Per group: the two-pass
+    :func:`_decode_candidate_positions`, then the op's match step
+    ``match(qid, inter, per_term)``, then the ranking — the
+    disjunctive BM25 sum over the query's scored terms in sorted-term
+    fold order (frozen §1.3.4), restricted to the matched docs, and the
+    (score desc, docid asc) top-k cut.
+
+    The match step returns ``(matched_local, widths, only)``: sorted
+    unique indexes into ``inter`` of the matching docs; each one's
+    minimum window width, or None — given widths, scores are
+    multiplied by 1/(1 + width) (proximity mode); and ``{term:
+    docids}`` for scored terms that score only in those docs
+    (phrase_prefix's expansions, which score where they complete the
+    phrase)."""
+    from ..scoring import partial as _partial
+
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    query_terms = {qid: sorted({*p.scored, *p.optional})
+                   for qid, p in plans.items()}
     terms = sorted({t for ts in query_terms.values() for t in ts})
     if not terms:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     seg = candidate_segments(spark, index_dir, terms)
     dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
     qdist = local_df(spark, [(qid, t) for qid, ts in query_terms.items()
-                             for t in sorted(set(ts))], QTERMS_SCHEMA)
+                             for t in ts], QTERMS_SCHEMA)
 
-    def bound(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
-        return kernel(qid, g, n_docs=n_docs, avgdl=avgdl, k=k, dfg=dfg,
-                      range_lo=lo, range_hi=hi, dead=dead)
+    def kernel(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
+        p = plans[qid]
+        inter, per_term = _decode_candidate_positions(
+            g, p.required, p.any_of, p.optional, lo, hi, dead)
+        if inter.size == 0:
+            return _empty_result()
+        matched_local, widths, only = match(qid, inter, per_term)
+        if matched_local.size == 0:
+            return _empty_result()
+        matched = inter[matched_local]
+        df_of = _dfg_from_rows(g, dfg)
+        scores = np.zeros(matched.size, dtype=np.float64)
+        for t in p.scored:
+            if t not in per_term:
+                continue   # an absent any_of alternative
+            d, tf, dl, _pos = per_term[t]
+            sel = np.isin(d, only.get(t, matched), assume_unique=True)
+            idx = np.searchsorted(matched, d[sel])
+            scores[idx] += _idf(float(df_of[t]), n_docs) * _partial(
+                tf[sel], dl[sel], avgdl)
+        if widths is not None:
+            scores *= 1.0 / (1.0 + widths.astype(np.float64))
+        order = np.lexsort((matched, -scores))[:k]
+        return pd.DataFrame({
+            "query_id": qid,
+            "rank": np.arange(1, order.size + 1, dtype=np.int32),
+            "docid": matched[order],
+            "score": scores[order],
+        })
 
     return _per_query(spark, seg, qdist, _as_dirs(index_dir),
                       n_ranges if n_ranges is not None
-                      else default_n_ranges(n_docs), k, bound)
+                      else default_n_ranges(n_docs), k, kernel)
 
 
 # ---------------------------------------------------------------------------
@@ -1486,11 +1547,9 @@ def _sloppy_match(phrase: list[tuple[int, str]],
     o_max = max(o for o, _ in phrase)
     keys_per_constraint: list[np.ndarray] = []
     for o, t in phrase:
-        d, tf, _dl, pos = per_term[t]
-        docc = np.repeat(d, tf)
-        local = np.searchsorted(inter, docc).astype(np.int64)
-        adj = pos.astype(np.int64) - o + o_max          # ≥ 0 (pos ≥ 0, o ≤ o_max)
-        keys_per_constraint.append(np.unique((local << np.int64(32)) | adj))
+        # adjusted = pos − o + o_max ≥ 0 (pos ≥ 0, o ≤ o_max)
+        keys_per_constraint.append(np.unique(
+            _position_keys(per_term, t, inter, o - o_max)))
     window_starts = np.unique(np.concatenate(keys_per_constraint))
     ok = np.ones(window_starts.size, dtype=bool)
     maxkv = window_starts.copy()        # running max of chosen (first) keys
@@ -1583,37 +1642,31 @@ def _sloppy_match(phrase: list[tuple[int, str]],
 
 
 
-def _decode_candidate_positions(g: pd.DataFrame, required_terms: list[str],
-                                range_lo: int = 0,
+def _decode_candidate_positions(g: pd.DataFrame, required, any_of=(),
+                                optional=(), range_lo: int = 0,
                                 range_hi: int | None = None,
-                                dead: np.ndarray | None = None,
-                                optional_terms: tuple = (),
-                                required_groups: list | None = None) -> tuple:
+                                dead: np.ndarray | None = None) -> tuple:
     """Shared two-pass positional decode for every positional kernel
-    (phrase, sloppy phrase, phrase-prefix anchor side, span queries).
+    (the decode step of :func:`_positional_topk`).
 
     PASS 1 decodes scoring streams only (``decode_block_ext`` never
     touches the position bytes, but records where they start), keeps
     per-term blocks overlapping [range_lo, range_hi], and intersects
-    the REQUIRED terms' docids (rows/dirs are docid-disjoint so each
-    term's docids are sorted unique after the ordered concat); dead
-    docids drop from the intersection. PASS 2 decodes the position
-    stream ONLY for blocks that still hold a candidate — picking it up
-    at the byte offset pass 1 recorded, so scoring streams are never
-    decoded twice — and keeps candidate docs' rows per term.
+    the candidate docids (rows/dirs are docid-disjoint so each term's
+    docids are sorted unique after the ordered concat): a doc needs
+    every ``required`` term and at least one term of every ``any_of``
+    group (the intervals query's any_of leaves, phrase_prefix's
+    expansions) — an any_of term, or even a whole block set, may be
+    absent as long as its group is still covered. Dead docids drop from
+    the intersection. PASS 2 decodes the position stream ONLY for
+    blocks that still hold a candidate — picking it up at the byte
+    offset pass 1 recorded, so scoring streams are never decoded twice
+    — and keeps candidate docs' rows per term.
 
-    ``optional_terms`` are decoded and candidate-restricted the same
+    ``optional`` terms are decoded and candidate-restricted the same
     way but do NOT participate in the intersection and may be absent
     (span_not's exclude clause: needed for the overlap test, never a
     match requirement, never scored).
-
-    ``required_groups`` (round 7d, the intervals query's any_of
-    shape) replaces the flat required intersection with an
-    intersection over GROUP UNIONS: a candidate doc needs at least one
-    term of every group; a term — or even a whole block set — may be
-    absent as long as its group is still covered. ``required_terms``
-    must then be the flattened union (it still drives which terms
-    decode).
 
     Returns ``(inter, per_term)`` — sorted candidate docids and
     ``term -> (docids, tfs, dls, flat_positions)`` (positions grouped
@@ -1625,20 +1678,15 @@ def _decode_candidate_positions(g: pd.DataFrame, required_terms: list[str],
     for row in zip(g["term"], g["chunk"], g["first_docid"], g["blocks"],
                    g["postings"], src_it):
         term_rows.setdefault(row[0], []).append(row)
-    if required_groups is None:
-        if any(t not in term_rows for t in required_terms):
-            return none  # a required term has no postings -> no match
-        hard_required = set(required_terms)
-    else:
-        if any(all(t not in term_rows for t in grp)
-               for grp in required_groups):
-            return none  # an entire any_of group is absent -> no match
-        hard_required = set()   # individual terms may be absent
+    groups = [[t] for t in sorted(set(required))] + [list(g_) for g_ in any_of]
+    if any(all(t not in term_rows for t in grp) for grp in groups):
+        return none  # a required term or a whole any_of group is absent
+    hard_required = set(required)
     if range_hi is None:
         range_hi = np.iinfo(np.int64).max
 
-    all_terms = list(required_terms) + [t for t in optional_terms
-                                        if t in term_rows]
+    all_terms = sorted({t for grp in groups for t in grp}) + [
+        t for t in optional if t in term_rows]
     per_term_blocks: dict[str, list[tuple]] = {}   # (d,tf,dl,buf,pos_off,sel,tf_full,blk_end)
     for t in all_terms:
         blocks = []
@@ -1671,8 +1719,6 @@ def _decode_candidate_positions(g: pd.DataFrame, required_terms: list[str],
         return np.concatenate([b[0] for b in blks])
 
     inter = None
-    groups = ([ [t] for t in required_terms ] if required_groups is None
-              else required_groups)
     for grp in groups:
         if len(grp) == 1:
             td = _docids_of(grp[0])
@@ -1709,42 +1755,53 @@ def _decode_candidate_positions(g: pd.DataFrame, required_terms: list[str],
     return inter, per_term
 
 
+def _position_keys(per_term: dict, t: str, inter: np.ndarray,
+                   o: int = 0) -> np.ndarray:
+    """Int64 keys ``(local_docid << 32) | (position − o)`` of every
+    occurrence of ``t`` at a position ≥ ``o`` among the candidate docs,
+    in posting order — sorted, as positions ascend within a posting
+    (local = index into the sorted candidate array ``inter`` — dense,
+    so the composite can never overflow at 10^12-docid scale). Empty
+    when ``t`` has no candidate rows."""
+    if t not in per_term:
+        return np.array([], dtype=np.int64)
+    d, tf, _dl, pos = per_term[t]
+    docc = np.repeat(d, tf)
+    keep = pos >= o
+    local = np.searchsorted(inter, docc[keep]).astype(np.int64)
+    return (local << np.int64(32)) | (pos[keep].astype(np.int64) - o)
+
 
 def _exact_anchor_keys(phrase: list[tuple[int, str]], per_term: dict,
                        inter: np.ndarray) -> np.ndarray:
     """Exact-adjacency anchor intersection over every (offset, term)
-    constraint of an analyzed phrase: returns the sorted int64 keys
-    ``(local_docid << 32) | anchor_position`` of every document
-    position where the exact sequence starts (local = index into the
-    sorted candidate array ``inter`` — dense, so the composite can
-    never overflow at 10^12-docid scale). Repeated terms need no
-    distinctness check here — one anchor a serves offsets o≠o' with
-    distinct positions a+o, a+o' automatically. Empty when no doc
-    holds the sequence."""
-    anchors: np.ndarray | None = None
+    constraint of an analyzed phrase: returns the sorted
+    :func:`_position_keys` ``(local_docid << 32) | anchor_position`` of
+    every document position where the exact sequence starts.
+    Constraints sharing an offset are alternatives for that slot
+    (Lucene MultiPhraseQuery — phrase_prefix's trailing slot lists every
+    expansion), so a slot's keys are the union of its terms'. Repeated
+    terms need no distinctness check — one anchor a serves offsets o≠o'
+    with distinct positions a+o, a+o' automatically. Empty when no doc
+    holds the sequence, and for an empty phrase."""
+    slots: dict[int, list[str]] = {}
     for o, t in phrase:
-        d, tf, _dl, pos = per_term[t]
-        docc = np.repeat(d, tf)
-        keep = pos >= o                      # docc ⊆ inter by pass 2
-        if not keep.any():
-            return np.array([], dtype=np.int64)
-        local = np.searchsorted(inter, docc[keep]).astype(np.int64)
-        key = (local << np.int64(32)) | (pos[keep].astype(np.int64) - o)
-        key = np.unique(key)
-        anchors = key if anchors is None else np.intersect1d(
-            anchors, key, assume_unique=True)
+        slots.setdefault(o, []).append(t)
+    anchors = np.array([], dtype=np.int64)
+    for i, (o, ts) in enumerate(slots.items()):
+        key = np.unique(np.concatenate(
+            [_position_keys(per_term, t, inter, o) for t in ts]))
+        anchors = key if i == 0 else np.intersect1d(anchors, key,
+                                                    assume_unique=True)
         if anchors.size == 0:
-            return anchors
+            break
     return anchors
 
 
-def _phrase_one_query(g: pd.DataFrame, phrase: list[tuple[int, str]],
-                      n_docs: int, avgdl: float, k: int, dfg: dict,
-                      range_lo: int = 0, range_hi: int | None = None,
-                      dead: np.ndarray | None = None,
-                      slop: int = 0,
-                      score_mode: str = "bm25") -> pd.DataFrame:
-    """match_phrase (+ slop) + BM25 top-k over one query's candidate rows.
+def _phrase_match(phrase: list[tuple[int, str]], slop: int,
+                  want_width: bool, inter: np.ndarray,
+                  per_term: dict) -> tuple:
+    """match_phrase (+ slop) match step of :func:`_positional_topk`.
 
     Semantics (documented contract, ES match_phrase parity on the
     filter side):
@@ -1784,53 +1841,24 @@ def _phrase_one_query(g: pd.DataFrame, phrase: list[tuple[int, str]],
     10^12-docid scale; the per-doc Python fallback runs ONLY for the
     rare repeated-term sloppy phrase, on already-matched docs.
     """
-    from ..scoring import partial as _partial
-
-    empty = pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                          "rank": pd.Series([], dtype="int32"),
-                          "docid": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if range_hi is None:
-        range_hi = np.iinfo(np.int64).max
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    distinct_terms = sorted({t for _, t in phrase})
-    inter, per_term = _decode_candidate_positions(
-        g, distinct_terms, range_lo, range_hi, dead)
-    if inter.size == 0:
-        return empty
-
     if slop <= 0:
         anchors = _exact_anchor_keys(phrase, per_term, inter)
-        if anchors.size == 0:
-            return empty
-        matched_local = np.unique(anchors >> np.int64(32))
-        widths = None
-    else:
-        matched_local, widths = _sloppy_match(
-            phrase, per_term, inter, slop,
-            want_width=(score_mode == "proximity"))
-        if matched_local.size == 0:
-            return empty
-    matched = inter[matched_local]
+        return np.unique(anchors >> np.int64(32)), None, {}
+    return (*_sloppy_match(phrase, per_term, inter, slop, want_width), {})
 
-    # BM25 over the distinct phrase terms, sorted-term fold order
-    scores = np.zeros(matched.size, dtype=np.float64)
-    for t in distinct_terms:
-        d, tf, dl, _pos = per_term[t]
-        sel = np.isin(d, matched, assume_unique=True)
-        idx = np.searchsorted(matched, d[sel])
-        scores[idx] += _idf(float(dfg[t]), n_docs) * _partial(tf[sel], dl[sel], avgdl)
-    if score_mode == "proximity" and widths is not None:
-        scores *= 1.0 / (1.0 + widths.astype(np.float64))
 
-    order = np.lexsort((matched, -scores))[:k]
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, order.size + 1, dtype=np.int32),
-        "docid": matched[order],
-        "score": scores[order],
-    })
+def _query_tokens(queries: DataFrame) -> dict[int, list[str]]:
+    """Each query's analyzed ``qtext`` tokens, ordered and
+    duplicate-keeping (the phrase "the data the" is three constraints
+    at offsets 0, 1, 2); rows sharing a query_id concatenate, null or
+    token-less texts add nothing. Read with ``collect``, which runs no
+    job over a LocalRelation (see :func:`local_df`)."""
+    out: dict[int, list[str]] = {}
+    for r in queries.select("query_id", "qtext").collect():
+        toks = tokenize(r["qtext"]) if r["qtext"] is not None else []
+        if toks:
+            out.setdefault(int(r["query_id"]), []).extend(toks)
+    return out
 
 
 def search_phrase(
@@ -1843,7 +1871,7 @@ def search_phrase(
     score_mode: str = "bm25",
 ) -> DataFrame:
     """Phrase top-k (ES match_phrase parity, incl. ``slop`` proximity —
-    semantics in :func:`_phrase_one_query`; ``score_mode="proximity"``
+    semantics in :func:`_phrase_match`; ``score_mode="proximity"``
     additionally weights scores by 1/(1+min window width), closest
     match first) over the positional index.
     Dispatches like :func:`search_topk`: small index -> one
@@ -1851,24 +1879,14 @@ def search_phrase(
     fixed docid ranges (exact: a doc's anchors/windows are evaluated
     entirely inside the one range that contains its docid, and every
     term row whose span covers that docid joins the range)."""
-    # per-query (qpos, term) structure, driver-side (tiny): the same
-    # frozen tokenizer, ordered and duplicate-keeping (the phrase
-    # "the data the" is three constraints at offsets 0, 1, 2)
-    qp = queries.select("query_id", "qtext").toPandas()
-    phrases: dict[int, list[tuple[int, str]]] = {}
-    for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):
-        if qtext_ is None:
-            continue
-        toks = tokenize(qtext_)
-        if toks:
-            lst = phrases.setdefault(int(qid_), [])
-            base = len(lst)
-            lst.extend((base + i, t) for i, t in enumerate(toks))
+    tokens = _query_tokens(queries)
     return _positional_topk(
-        spark, index_dir, {qid: [t for _, t in p] for qid, p in phrases.items()},
+        spark, index_dir,
+        {qid: _PositionalTerms(toks) for qid, toks in tokens.items()},
         n_ranges, k,
-        lambda qid, g, **kw: _phrase_one_query(g, phrases[qid], slop=slop,
-                                               score_mode=score_mode, **kw))
+        lambda qid, inter, per_term: _phrase_match(
+            list(enumerate(tokens[qid])), slop, score_mode == "proximity",
+            inter, per_term))
 
 
 # ---------------------------------------------------------------------------
@@ -2000,178 +2018,37 @@ def search_fuzzy(spark: SparkSession, index_dir, queries: DataFrame,
 MAX_PHRASE_PREFIX_EXPANSIONS = 50   # ES match_phrase_prefix max_expansions
 
 
-def _phrase_prefix_one_query(g: pd.DataFrame, fixed: list[str],
-                             expansions: list[str],
-                             n_docs: int, avgdl: float, k: int, dfg: dict,
-                             range_lo: int = 0, range_hi: int | None = None,
-                             dead: np.ndarray | None = None) -> pd.DataFrame:
-    """match_phrase_prefix top-k over one query's candidate rows.
+def _phrase_prefix_match(fixed: list[str], expansions: list[str],
+                         inter: np.ndarray, per_term: dict) -> tuple:
+    """match_phrase_prefix match step of :func:`_positional_topk`.
 
     Documented contract (ES parity on the filter side): the analyzed
     phrase is ``fixed + [prefix]``; the trailing prefix was expanded
     against the term dictionary into ``expansions`` (df-desc-capped,
     the same deterministic rewrite cap as Q12). A doc matches iff the
     exact token sequence ``fixed + [e]`` occurs for SOME expansion e
-    (slop is a declared non-goal — ES's default slop 0). Matching docs
-    are ranked by the disjunctive BM25 sum over the sorted distinct
-    union of the FIXED terms and the expansions that complete the
-    phrase in THAT doc (each term once — an expansion equal to a fixed
-    term does not double-count), the exactly-SQL-expressible analog of
-    Lucene's MultiPhraseQuery scoring.
-
-    Same two-pass structure as :func:`_phrase_one_query`: pass 1
-    decodes only the scoring streams and intersects docids; pass 2
-    pays for position bytes only in blocks still holding candidates.
-    """
-    from ..scoring import partial as _partial
-
-    empty = pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                          "rank": pd.Series([], dtype="int32"),
-                          "docid": pd.Series([], dtype="int64"),
-                          "score": pd.Series([], dtype="float64")})
-    if range_hi is None:
-        range_hi = np.iinfo(np.int64).max
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    fixed_terms = sorted(set(fixed))
-    term_rows: dict[str, list[tuple]] = {}
-    for row in zip(g["term"], g["chunk"], g["first_docid"], g["blocks"],
-                   g["postings"]):
-        term_rows.setdefault(row[0], []).append(row)
-    if any(t not in term_rows for t in fixed_terms):
-        return empty  # a required fixed term has no postings here
-    exp_here = [e for e in expansions if e in term_rows]
-    if not exp_here:
-        return empty  # no expansion has postings -> nothing completes
-
-    # PASS 1 — scoring streams only
-    per_term_blocks: dict[str, list[tuple]] = {}
-    for t in fixed_terms + [e for e in exp_here if e not in fixed_terms]:
-        blocks = []
-        for (_t, chunk, first, blks, payload) in sorted(
-                term_rows[t], key=lambda r: (int(r[2]), int(r[1]))):
-            buf = np.frombuffer(payload, dtype=np.uint8)
-            prev_last = int(first) - 1
-            for bi, b in enumerate(blks):
-                last = int(b["last_docid"])
-                if last >= range_lo and prev_last + 1 <= range_hi:
-                    d, tf, dl, pos_off = decode_block_ext(buf, int(b["offset"]))
-                    sel = (d >= range_lo) & (d <= range_hi)
-                    if sel.any():
-                        blk_end = (int(blks[bi + 1]["offset"])
-                                   if bi + 1 < len(blks) else buf.size)
-                        blocks.append((d[sel], tf[sel], dl[sel], buf,
-                                       pos_off, sel, tf, blk_end))
-                prev_last = last
-        if blocks:
-            per_term_blocks[t] = blocks
-        elif t in fixed_terms:
-            return empty
-
-    inter = None
-    for t in fixed_terms:
-        td = np.concatenate([b[0] for b in per_term_blocks[t]])
-        inter = td if inter is None else np.intersect1d(inter, td,
-                                                        assume_unique=True)
-        if inter.size == 0:
-            return empty
-    exp_union_l = [np.concatenate([b[0] for b in per_term_blocks[e]])
-                   for e in exp_here if e in per_term_blocks]
-    if not exp_union_l:
-        return empty
-    exp_union = np.unique(np.concatenate(exp_union_l))
-    inter = exp_union if inter is None else np.intersect1d(
-        inter, exp_union, assume_unique=True)
-    if dead is not None and dead.size:
-        inter = inter[~np.isin(inter, dead)]
-    if inter.size == 0:
-        return empty
-
-    # PASS 2 — positions only for blocks still holding candidates
-    per_term: dict[str, tuple] = {}
-    for t, blocks in per_term_blocks.items():
-        ds, tfl, dll, pfl = [], [], [], []
-        for (d, tf, dl, buf, pos_off, sel, tf_full, blk_end) in blocks:
-            keep = np.isin(d, inter, assume_unique=True)
-            if not keep.any():
-                continue
-            pos = decode_positions_at(buf, pos_off, tf_full, end=blk_end)
-            pos = pos[np.repeat(sel, tf_full)]
-            ds.append(d[keep]); tfl.append(tf[keep]); dll.append(dl[keep])
-            pfl.append(pos[np.repeat(keep, tf)])
-        if ds:
-            per_term[t] = (np.concatenate(ds), np.concatenate(tfl),
-                           np.concatenate(dll), np.concatenate(pfl))
-    if any(t not in per_term for t in fixed_terms):
-        return empty
-
-    # anchors over the FIXED constraints (offsets 0..n_fixed-1), exactly
-    # the exact-phrase anchor intersection
-    anchors: np.ndarray | None = None
-    for o, t in enumerate(fixed):
-        d, tf, _dl, pos = per_term[t]
-        docc = np.repeat(d, tf)
-        keep = pos >= o
-        if not keep.any():
-            return empty
-        local = np.searchsorted(inter, docc[keep]).astype(np.int64)
-        key = (local << np.int64(32)) | (pos[keep].astype(np.int64) - o)
-        key = np.unique(key)
-        anchors = key if anchors is None else np.intersect1d(
-            anchors, key, assume_unique=True)
-        if anchors.size == 0:
-            return empty
-
-    # the trailing slot: an anchor completes iff SOME expansion sits at
-    # offset len(fixed); collect (doc, expansion) pairs for scoring
-    o_last = len(fixed)
-    matched_local: np.ndarray | None = None
-    docs_by_exp: dict[str, np.ndarray] = {}
-    for e in exp_here:
-        if e not in per_term:
-            continue
-        d, tf, _dl, pos = per_term[e]
-        docc = np.repeat(d, tf)
-        keep = pos >= o_last
-        if not keep.any():
-            continue
-        local = np.searchsorted(inter, docc[keep]).astype(np.int64)
-        key = np.unique((local << np.int64(32))
-                        | (pos[keep].astype(np.int64) - o_last))
-        hit = key if anchors is None else np.intersect1d(
-            anchors, key, assume_unique=True)
-        if hit.size == 0:
-            continue
-        dloc = np.unique(hit >> np.int64(32))
-        docs_by_exp[e] = inter[dloc]
-        matched_local = dloc if matched_local is None else np.union1d(
-            matched_local, dloc)
-    if matched_local is None or matched_local.size == 0:
-        return empty
-    matched = inter[matched_local]
-
-    # BM25 over sorted distinct (fixed ∪ per-doc matched expansions)
-    scores = np.zeros(matched.size, dtype=np.float64)
-    for t in sorted(set(fixed_terms) | set(docs_by_exp)):
-        d, tf, dl, _pos = per_term[t]
-        if t in fixed_terms:
-            tgt = matched            # fixed terms score on every match
-        else:
-            tgt = docs_by_exp[t]     # expansions only where they complete
-        sel = np.isin(d, tgt, assume_unique=True)
-        if not sel.any():
-            continue
-        idx = np.searchsorted(matched, d[sel])
-        scores[idx] += _idf(float(dfg[t]), n_docs) * _partial(
-            tf[sel], dl[sel], avgdl)
-
-    order = np.lexsort((matched, -scores))[:k]
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, order.size + 1, dtype=np.int32),
-        "docid": matched[order],
-        "score": scores[order],
-    })
+    (slop is a declared non-goal — ES's default slop 0): the trailing
+    slot lists every expansion as an alternative, so the anchors are
+    those of the whole phrase, a single-token query's lone slot
+    included. Matching docs are ranked by the disjunctive BM25 sum over
+    the sorted distinct union of the FIXED terms and the expansions
+    that complete the phrase in THAT doc (each term once — an
+    expansion equal to a fixed term does not double-count), the
+    exactly-SQL-expressible analog of Lucene's MultiPhraseQuery
+    scoring."""
+    slot = len(fixed)
+    anchors = _exact_anchor_keys(
+        list(enumerate(fixed)) + [(slot, e) for e in expansions],
+        per_term, inter)
+    # an expansion scores only in the docs where it fills the slot at
+    # one of those anchors; a fixed term scores in every match
+    only = {}
+    for e in set(expansions) - set(fixed):
+        hit = np.intersect1d(
+            anchors, np.unique(_position_keys(per_term, e, inter, slot)),
+            assume_unique=True)
+        only[e] = inter[np.unique(hit >> np.int64(32))]
+    return np.unique(anchors >> np.int64(32)), None, only
 
 
 def search_phrase_prefix(
@@ -2187,29 +2064,20 @@ def search_phrase_prefix(
     term dictionary (range-pushdown scan, df-desc cap ``max_expansions``
     — ES default 50) and a doc matches iff the exact sequence
     ``fixed + [e]`` occurs for some expansion e. Ranking contract in
-    :func:`_phrase_prefix_one_query`. Dispatches like
+    :func:`_phrase_prefix_match`. Dispatches like
     :func:`search_phrase`: single applyInPandas group per query on a
     small index, chunk-parallel docid ranges on a large one (exact —
     a doc's anchors are evaluated inside its one range)."""
-    qp = queries.select("query_id", "qtext").toPandas()
-    phrases: dict[int, list[str]] = {}
-    for qid_, qtext_ in zip(qp["query_id"], qp["qtext"]):
-        if qtext_ is None:
-            continue
-        toks = tokenize(qtext_)
-        if toks:
-            phrases.setdefault(int(qid_), []).extend(toks)
-    plans: dict[int, tuple[list[str], list[str]]] = {}
-    for qid, toks in phrases.items():
-        fixed, prefix = toks[:-1], toks[-1]
-        plans[qid] = (fixed,
-                      expand_prefix_terms(spark, index_dir, prefix,
-                                          cap=max_expansions))
+    plans = {qid: (toks[:-1], expand_prefix_terms(spark, index_dir, toks[-1],
+                                                  cap=max_expansions))
+             for qid, toks in _query_tokens(queries).items()}
     return _positional_topk(
         spark, index_dir,
-        {qid: fixed + exps for qid, (fixed, exps) in plans.items()},
+        {qid: _PositionalTerms(fixed, [exps])
+         for qid, (fixed, exps) in plans.items()},
         n_ranges, k,
-        lambda qid, g, **kw: _phrase_prefix_one_query(g, *plans[qid], **kw))
+        lambda qid, inter, per_term: _phrase_prefix_match(*plans[qid], inter,
+                                                          per_term))
 
 
 # ---------------------------------------------------------------------------

@@ -35,42 +35,29 @@ declared contract as Q8/Q9: the match filter is the thing under test
 and the DuckDB twin is the disjunctive oracle restricted to matching
 docs.
 
-Plan shape: identical to search_phrase — candidate segment rows for
-the clause terms (term-IN parquet pushdown) group per query
-(applyInPandas), the shared two-pass decode
-(`search._decode_candidate_positions`) intersects docids on scoring
-streams before any position byte is touched, and position streams
-decode only for blocks still holding a candidate. Dispatched like Q8
-by `search._positional_topk` (a doc's spans are evaluated entirely
-inside the one range holding its docid).
+Plan shape: identical to search_phrase — each op is only a match step
+(`_span_near_match`, `_span_not_match`, `_span_first_match`,
+`_intervals_match`) over `search._positional_topk`, which owns the
+rest: candidate segment rows for the clause terms (term-IN parquet
+pushdown) grouped per query or per (query, docid range) — a doc's
+spans are evaluated entirely inside the one range holding its docid —
+the shared two-pass decode (`search._decode_candidate_positions`:
+docids intersect on scoring streams before any position byte is
+touched, and position streams decode only for blocks still holding a
+candidate), the BM25 ranking above and the top-k cut.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import TOP_K
-from ..scoring import partial as _partial
 from ..textops import tokenize
-from .search import (_decode_candidate_positions, _dfg_from_rows,
-                     _exact_anchor_keys, _idf, _positional_topk,
-                     _sloppy_match)
+from .search import (_exact_anchor_keys, _min_window_flat, _position_keys,
+                     _PositionalTerms, _positional_topk, _sloppy_match)
 
 _MASK32 = np.int64((1 << 32) - 1)
-
-
-def _pos_keys(per_term: dict, term: str, inter: np.ndarray) -> np.ndarray:
-    """Sorted int64 keys ``(local_docid << 32) | position`` of every
-    occurrence of ``term`` among the candidate docs (local = index
-    into ``inter``). Empty when the term has no candidate rows."""
-    if term not in per_term:
-        return np.array([], dtype=np.int64)
-    d, tf, _dl, pos = per_term[term]
-    docc = np.repeat(d, tf)
-    local = np.searchsorted(inter, docc).astype(np.int64)
-    return (local << np.int64(32)) | pos.astype(np.int64)
 
 
 def _ordered_chain_locals(clause_keys: list[np.ndarray],
@@ -99,79 +86,24 @@ def _ordered_chain_locals(clause_keys: list[np.ndarray],
     return np.unique(starts[ok] >> np.int64(32))
 
 
-def _span_score(per_term: dict, terms: list[str], matched: np.ndarray,
-                dfg: dict, n_docs: int, avgdl: float, qid: int,
-                k: int) -> pd.DataFrame:
-    """Disjunctive BM25 over the distinct positive terms, restricted to
-    the matched docs — the Q8 scoring contract, sorted-term fold
-    order."""
-    scores = np.zeros(matched.size, dtype=np.float64)
-    for t in sorted(set(terms)):
-        d, tf, dl, _pos = per_term[t]
-        sel = np.isin(d, matched, assume_unique=True)
-        idx = np.searchsorted(matched, d[sel])
-        scores[idx] += _idf(float(dfg[t]), n_docs) * _partial(
-            tf[sel], dl[sel], avgdl)
-    order = np.lexsort((matched, -scores))[:k]
-    return pd.DataFrame({
-        "query_id": qid,
-        "rank": np.arange(1, order.size + 1, dtype=np.int32),
-        "docid": matched[order],
-        "score": scores[order],
-    })
-
-
-_EMPTY = pd.DataFrame({"query_id": pd.Series([], dtype="int64"),
-                       "rank": pd.Series([], dtype="int32"),
-                       "docid": pd.Series([], dtype="int64"),
-                       "score": pd.Series([], dtype="float64")})
-
-
-def _span_near_one_query(g: pd.DataFrame, clauses: list[str], slop: int,
-                         in_order: bool, n_docs: int, avgdl: float,
-                         k: int, dfg: dict, range_lo: int = 0,
-                         range_hi: int | None = None,
-                         dead: np.ndarray | None = None) -> pd.DataFrame:
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    req = sorted(set(clauses))
-    inter, per_term = _decode_candidate_positions(
-        g, req, range_lo, range_hi, dead)
-    if inter.size == 0:
-        return _EMPTY
+def _span_near_match(clauses: list[str], slop: int, in_order: bool,
+                     inter: np.ndarray, per_term: dict) -> tuple:
     width = slop + len(clauses) - 1
     if in_order:
-        keys = [_pos_keys(per_term, t, inter) for t in clauses]
-        matched_local = _ordered_chain_locals(keys, width)
-    else:
-        # the Q9 window kernel with all offsets 0: max−min ≤ width,
-        # distinct positions for repeated clause terms
-        matched_local, _ = _sloppy_match(
-            [(0, t) for t in clauses], per_term, inter, width,
-            want_width=False)
-    if matched_local.size == 0:
-        return _EMPTY
-    return _span_score(per_term, clauses, inter[matched_local], dfg,
-                       n_docs, avgdl, qid, k)
+        keys = [_position_keys(per_term, t, inter) for t in clauses]
+        return _ordered_chain_locals(keys, width), None, {}
+    # the Q9 window kernel with all offsets 0: max−min ≤ width,
+    # distinct positions for repeated clause terms
+    matched_local, _ = _sloppy_match([(0, t) for t in clauses], per_term,
+                                     inter, width)
+    return matched_local, None, {}
 
 
-def _span_not_one_query(g: pd.DataFrame, phrase: list[str], exclude: str,
-                        pre: int, post: int, n_docs: int, avgdl: float,
-                        k: int, dfg: dict, range_lo: int = 0,
-                        range_hi: int | None = None,
-                        dead: np.ndarray | None = None) -> pd.DataFrame:
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    req = sorted(set(phrase))
-    inter, per_term = _decode_candidate_positions(
-        g, req, range_lo, range_hi, dead, optional_terms=(exclude,))
-    if inter.size == 0:
-        return _EMPTY
+def _span_not_match(phrase: list[str], exclude: str, pre: int, post: int,
+                    inter: np.ndarray, per_term: dict) -> tuple:
     anchors = _exact_anchor_keys(list(enumerate(phrase)), per_term, inter)
-    if anchors.size == 0:
-        return _EMPTY
-    ex = np.sort(_pos_keys(per_term, exclude, inter))
-    if ex.size:
+    ex = np.sort(_position_keys(per_term, exclude, inter))
+    if anchors.size and ex.size:
         L = len(phrase)
         a_local = anchors >> np.int64(32)
         a_pos = anchors & _MASK32
@@ -181,30 +113,13 @@ def _span_not_one_query(g: pd.DataFrame, phrase: list[str], exclude: str,
         survive = np.searchsorted(ex, lo) == np.searchsorted(
             ex, hi, side="right")
         anchors = anchors[survive]
-    if anchors.size == 0:
-        return _EMPTY
-    matched_local = np.unique(anchors >> np.int64(32))
-    return _span_score(per_term, phrase, inter[matched_local], dfg,
-                       n_docs, avgdl, qid, k)
+    return np.unique(anchors >> np.int64(32)), None, {}
 
 
-def _span_first_one_query(g: pd.DataFrame, term: str, end: int,
-                          n_docs: int, avgdl: float, k: int, dfg: dict,
-                          range_lo: int = 0, range_hi: int | None = None,
-                          dead: np.ndarray | None = None) -> pd.DataFrame:
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    inter, per_term = _decode_candidate_positions(
-        g, [term], range_lo, range_hi, dead)
-    if inter.size == 0:
-        return _EMPTY
-    keys = _pos_keys(per_term, term, inter)
-    matched_local = np.unique(keys[(keys & _MASK32) < end]
-                              >> np.int64(32))
-    if matched_local.size == 0:
-        return _EMPTY
-    return _span_score(per_term, [term], inter[matched_local], dfg,
-                       n_docs, avgdl, qid, k)
+def _span_first_match(term: str, end: int, inter: np.ndarray,
+                      per_term: dict) -> tuple:
+    keys = _position_keys(per_term, term, inter)
+    return np.unique(keys[(keys & _MASK32) < end] >> np.int64(32)), None, {}
 
 
 def _clauses_of(qtext: str) -> list[str]:
@@ -223,9 +138,10 @@ def search_span_near(spark: SparkSession, index_dir, queries: DataFrame,
     qrows = queries.select("query_id", "qtext").collect()
     plans = {int(r["query_id"]): _clauses_of(r["qtext"]) for r in qrows}
     return _positional_topk(
-        spark, index_dir, plans, n_ranges, k,
-        lambda qid, g, **kw: _span_near_one_query(g, plans[qid], slop,
-                                                  in_order, **kw))
+        spark, index_dir,
+        {qid: _PositionalTerms(cl) for qid, cl in plans.items()}, n_ranges, k,
+        lambda qid, inter, per_term: _span_near_match(
+            plans[qid], slop, in_order, inter, per_term))
 
 
 def search_span_not(spark: SparkSession, index_dir, queries: DataFrame,
@@ -244,12 +160,13 @@ def search_span_not(spark: SparkSession, index_dir, queries: DataFrame,
             raise ValueError("span_not needs a phrase and ONE exclude term")
         plans[qid] = toks
         excl[qid] = ex[0]
-    # exclude terms must reach the kernel's candidate rows too
     return _positional_topk(
-        spark, index_dir, {qid: plans[qid] + [excl[qid]] for qid in plans},
+        spark, index_dir,
+        {qid: _PositionalTerms(plans[qid], optional=(excl[qid],))
+         for qid in plans},
         n_ranges, k,
-        lambda qid, g, **kw: _span_not_one_query(g, plans[qid], excl[qid],
-                                                 pre, post, **kw))
+        lambda qid, inter, per_term: _span_not_match(
+            plans[qid], excl[qid], pre, post, inter, per_term))
 
 
 def search_span_first(spark: SparkSession, index_dir, queries: DataFrame,
@@ -266,9 +183,11 @@ def search_span_first(spark: SparkSession, index_dir, queries: DataFrame,
             raise ValueError("span_first takes exactly one term")
         plans[int(r["query_id"])] = toks
     return _positional_topk(
-        spark, index_dir, plans, n_ranges, k,
-        lambda qid, g, **kw: _span_first_one_query(g, plans[qid][0], end,
-                                                   **kw))
+        spark, index_dir,
+        {qid: _PositionalTerms(toks) for qid, toks in plans.items()},
+        n_ranges, k,
+        lambda qid, inter, per_term: _span_first_match(
+            plans[qid][0], end, inter, per_term))
 
 
 def _parse_intervals(qtext: str) -> list[list[str]]:
@@ -294,47 +213,31 @@ def _parse_intervals(qtext: str) -> list[list[str]]:
     return clauses
 
 
-def _intervals_one_query(g: pd.DataFrame, clauses: list[list[str]],
-                         max_gaps: int, ordered: bool, n_docs: int,
-                         avgdl: float, k: int, dfg: dict,
-                         range_lo: int = 0, range_hi: int | None = None,
-                         dead: np.ndarray | None = None) -> pd.DataFrame:
-    from .search import _min_window_flat
-    dfg = _dfg_from_rows(g, dfg)
-    qid = int(g["query_id"].iloc[0])
-    flat = sorted({t for alts in clauses for t in alts})
-    inter, per_term = _decode_candidate_positions(
-        g, flat, range_lo, range_hi, dead, required_groups=clauses)
-    if inter.size == 0:
-        return _EMPTY
+def _intervals_match(clauses: list[list[str]], max_gaps: int,
+                     ordered: bool, inter: np.ndarray,
+                     per_term: dict) -> tuple:
     width = max_gaps + len(clauses) - 1
     keys = [np.sort(np.concatenate(
-                [_pos_keys(per_term, t, inter) for t in alts]))
+                [_position_keys(per_term, t, inter) for t in alts]))
             for alts in clauses]
     if ordered:
-        matched_local = _ordered_chain_locals(keys, width)
-    else:
-        # per-doc min cover over clause labels: positions are distinct
-        # across clauses by the disjointness contract, so the classic
-        # k-sorted-lists window is exact
-        pos = np.concatenate(keys)
-        labels = np.concatenate([np.full(a.size, i, dtype=np.int64)
-                                 for i, a in enumerate(keys)])
-        locs = pos >> np.int64(32)
-        hits = []
-        for loc in np.unique(locs):
-            m = locs == loc
-            if np.unique(labels[m]).size < len(clauses):
-                continue
-            w = _min_window_flat((pos[m] & _MASK32), labels[m])
-            if w <= width:
-                hits.append(int(loc))
-        matched_local = np.array(hits, dtype=np.int64)
-    if matched_local.size == 0:
-        return _EMPTY
-    present = [t for t in flat if t in per_term]
-    return _span_score(per_term, present, inter[matched_local], dfg,
-                       n_docs, avgdl, qid, k)
+        return _ordered_chain_locals(keys, width), None, {}
+    # per-doc min cover over clause labels: positions are distinct
+    # across clauses by the disjointness contract, so the classic
+    # k-sorted-lists window is exact
+    pos = np.concatenate(keys)
+    labels = np.concatenate([np.full(a.size, i, dtype=np.int64)
+                             for i, a in enumerate(keys)])
+    locs = pos >> np.int64(32)
+    hits = []
+    for loc in np.unique(locs):
+        m = locs == loc
+        if np.unique(labels[m]).size < len(clauses):
+            continue
+        w = _min_window_flat((pos[m] & _MASK32), labels[m])
+        if w <= width:
+            hits.append(int(loc))
+    return np.array(hits, dtype=np.int64), None, {}
 
 
 def search_intervals(spark: SparkSession, index_dir, queries: DataFrame,
@@ -363,7 +266,7 @@ def search_intervals(spark: SparkSession, index_dir, queries: DataFrame,
              for r in qrows}
     return _positional_topk(
         spark, index_dir,
-        {qid: [t for alts in cl for t in alts] for qid, cl in plans.items()},
+        {qid: _PositionalTerms(any_of=cl) for qid, cl in plans.items()},
         n_ranges, k,
-        lambda qid, g, **kw: _intervals_one_query(g, plans[qid], max_gaps,
-                                                  ordered, **kw))
+        lambda qid, inter, per_term: _intervals_match(
+            plans[qid], max_gaps, ordered, inter, per_term))

@@ -5,13 +5,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from aarhus_spark.codec import (
-    concat_postings,
-    decode_postings,
-    encode_postings,
-    vbyte_decode,
-    vbyte_encode,
-)
+from aarhus_spark.codec import vbyte_decode, vbyte_encode
 
 
 @given(st.lists(st.integers(min_value=0, max_value=2**63 - 1), max_size=300))
@@ -30,46 +24,6 @@ def test_vbyte_known_bytes():
     assert vbyte_encode(np.array([127])) == b"\x7f"
     assert vbyte_encode(np.array([128])) == b"\x80\x01"
     assert vbyte_encode(np.array([300])) == b"\xac\x02"
-
-
-@given(
-    st.lists(st.integers(min_value=1, max_value=2**40), min_size=0, max_size=200),
-    st.data(),
-)
-@settings(max_examples=100, deadline=None)
-def test_postings_roundtrip(gaps, data):
-    docids = np.cumsum(np.array(gaps, dtype=np.int64))
-    n = docids.size
-    tfs = np.array(data.draw(st.lists(st.integers(1, 10_000), min_size=n, max_size=n)), dtype=np.int64)
-    dls = np.array(data.draw(st.lists(st.integers(1, 100_000), min_size=n, max_size=n)), dtype=np.int64)
-    payload = encode_postings(docids, tfs, dls)
-    d2, t2, l2 = decode_postings(payload)
-    np.testing.assert_array_equal(d2, docids)
-    np.testing.assert_array_equal(t2, tfs)
-    np.testing.assert_array_equal(l2, dls)
-
-
-def test_encode_rejects_unsorted():
-    with pytest.raises(ValueError):
-        encode_postings(np.array([5, 5]), np.array([1, 1]), np.array([1, 1]))
-    with pytest.raises(ValueError):
-        encode_postings(np.array([7, 3]), np.array([1, 1]), np.array([1, 1]))
-
-
-def test_concat_postings_disjoint_ranges():
-    a = encode_postings(np.array([1, 4, 9]), np.array([1, 2, 3]), np.array([10, 11, 12]))
-    b = encode_postings(np.array([100, 200]), np.array([4, 5]), np.array([13, 14]))
-    merged = concat_postings([b, a])  # out of order on purpose
-    d, t, l = decode_postings(merged)
-    np.testing.assert_array_equal(d, [1, 4, 9, 100, 200])
-    np.testing.assert_array_equal(t, [1, 2, 3, 4, 5])
-    np.testing.assert_array_equal(l, [10, 11, 12, 13, 14])
-
-
-def test_empty_postings_roundtrip():
-    payload = encode_postings(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0, np.int64))
-    d, t, l = decode_postings(payload)
-    assert d.size == t.size == l.size == 0
 
 
 # --- direct encode_blocks ↔ decode_block coverage (the vectorized

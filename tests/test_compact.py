@@ -94,3 +94,33 @@ def test_compact_resume_recomputes_only_missing_bucket(spark, three_indexes,
     want = sorted(map(tuple, search_taat(spark, mono, qdf).collect()))
     got = sorted(map(tuple, search_taat(spark, broken, qdf).collect()))
     assert got == want
+
+
+def test_compact_rejects_misaligned_position_stream(spark, three_indexes,
+                                                    tmpdir_session):
+    """A fragment row whose last block's position stream stops short of
+    the payload end (one trailing byte) must fail the compaction decode,
+    as it fails the build's merger, instead of being copied verbatim."""
+    import glob
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aarhus_spark.operators.compact import decode_fragments_to_tokens
+
+    _, mono, _ = three_indexes
+    bad = os.path.join(tmpdir_session, "cp_misaligned")
+    shutil.copytree(mono, bad)
+    files = glob.glob(os.path.join(IndexPaths(bad).fragments, "**",
+                                   "*.parquet"), recursive=True)
+    assert files
+    for f in files:
+        t = pq.ParquetFile(f).read()
+        i = t.schema.get_field_index("postings")
+        padded = pa.array([p + b"\x00" for p in t.column(i).to_pylist()],
+                          type=t.schema.field(i).type)
+        pq.write_table(t.set_column(i, t.schema.field(i), padded), f)
+    assert decode_fragments_to_tokens(spark, [mono]).count() > 0
+    with pytest.raises(Exception, match="payload/offset mismatch"):
+        decode_fragments_to_tokens(spark, [bad]).count()

@@ -1,8 +1,8 @@
 """Value identity across executor parallelism: every op that runs through
-the per-query dispatcher (``search._per_query``) returns the same rows,
-with scores equal bit for bit, in a local[1] session as in the suite's
-local[4] session — with one group per query and with (query, docid
-range) groups."""
+the per-query dispatcher (``search._per_query``), and ``search_taat``,
+returns the same rows, with scores equal bit for bit, in a local[1]
+session as in the suite's local[4] session — with one group per query
+and with (query, docid range) groups."""
 
 import json
 import os
@@ -24,24 +24,49 @@ def _rows(spark, root: str) -> list[list]:
     ``root`` (its ``field=text`` dir is a plain positional index)."""
     from aarhus_spark.operators import search
     from aarhus_spark.operators.multifield import search_multi_match
-    from aarhus_spark.operators.spans import search_span_near
+    from aarhus_spark.operators.spans import (search_intervals,
+                                              search_span_first,
+                                              search_span_near,
+                                              search_span_not)
 
     text = os.path.join(root, "field=text")
     qdf = spark.createDataFrame(list(enumerate(_TERMS)),
                                 "query_id long, qtext string")
     ph = spark.createDataFrame(list(enumerate(_PHRASES)),
                                "query_id long, qtext string")
+    one = spark.createDataFrame(list(enumerate(["sp", "ind", "th"])),
+                                "query_id long, qtext string")
+    nots = spark.createDataFrame([(0, "of the", "in"), (1, "in the", "of")],
+                                 "query_id long, qtext string, exclude string")
+    firsts = spark.createDataFrame([(0, "data"), (1, "of")],
+                                   "query_id long, qtext string")
+    ivs = spark.createDataFrame([(0, "the|of data"), (1, "in to|a")],
+                                "query_id long, qtext string")
     ops = {
         "topk": lambda nr: search.search_topk(spark, text, qdf, k=7,
                                               n_ranges=nr),
         "phrase": lambda nr: search.search_phrase(spark, text, ph, k=7,
                                                   n_ranges=nr, slop=1),
+        "phrase_proximity": lambda nr: search.search_phrase(
+            spark, text, ph, k=7, n_ranges=nr, slop=2,
+            score_mode="proximity"),
         "phrase_prefix": lambda nr: search.search_phrase_prefix(
             spark, text, ph.selectExpr("query_id", "substr(qtext, 1, 5) AS qtext"),
             k=7, n_ranges=nr),
+        "phrase_prefix_one_token": lambda nr: search.search_phrase_prefix(
+            spark, text, one, k=7, n_ranges=nr),
         "span_near": lambda nr: search_span_near(spark, text, ph, slop=2,
                                                  in_order=False, k=7,
                                                  n_ranges=nr),
+        "span_not": lambda nr: search_span_not(spark, text, nots, pre=1,
+                                               post=1, k=7, n_ranges=nr),
+        "span_first": lambda nr: search_span_first(spark, text, firsts,
+                                                   end=5, k=7, n_ranges=nr),
+        "intervals": lambda nr: search_intervals(spark, text, ivs, max_gaps=2,
+                                                 ordered=False, k=7,
+                                                 n_ranges=nr),
+        # search_taat takes no fan-out: both passes run the same call
+        "taat": lambda nr: search.search_taat(spark, text, qdf, k=7),
         # multi_match sizes its fan-out from default_n_ranges alone
         "multi_match": lambda nr: search_multi_match(
             spark, root, qdf, k=7, boosts={"title": 2.0}),
@@ -84,8 +109,11 @@ def test_local1_equals_local4_bitwise(spark, mf_root):
         spark.conf.set(key, old)
     # every op and both fan-outs produce hits, so the comparison bites
     assert {(r[0], r[1]) for r in here} == {
-        (op, nr) for op in ("topk", "phrase", "phrase_prefix", "span_near",
-                            "multi_match") for nr in (1, 3)}
+        (op, nr) for op in ("topk", "phrase", "phrase_proximity",
+                            "phrase_prefix", "phrase_prefix_one_token",
+                            "span_near", "span_not", "span_first",
+                            "intervals", "taat", "multi_match")
+        for nr in (1, 3)}
     code = f"""
 import json, sys
 sys.path[:0] = [{REPO!r}, {TESTS!r}]

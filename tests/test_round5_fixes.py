@@ -13,9 +13,8 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aarhus_spark.codec import (decode_block_ext, decode_block_keep_pos,
-                                decode_block_positions, decode_positions_at,
-                                encode_blocks)
+from aarhus_spark.codec import (decode_block_ext, decode_block_positions,
+                                decode_positions_at, encode_blocks)
 from aarhus_spark.operators.build import IndexPaths, build_index
 from aarhus_spark.operators.incremental import build_delta
 from aarhus_spark.operators.search import (load_tombstones, search_phrase,
@@ -387,7 +386,7 @@ def test_phrase_delta_only_docid_domain(spark, tmpdir_session):
 
 
 # ---------------------------------------------------------------------------
-# codec: bounded keep-pos scan + ext/positions-at split decode
+# codec: ext/positions-at split decode
 # ---------------------------------------------------------------------------
 
 def test_codec_bounded_and_ext_decoders():
@@ -404,10 +403,6 @@ def test_codec_bounded_and_ext_decoders():
     offs = [b[2] for b in blocks] + [buf.size]
     got_pos, got_d = [], []
     for i in range(len(blocks)):
-        # bounded == unbounded keep-pos, byte for byte
-        d1, t1, l1, p1 = decode_block_keep_pos(buf, offs[i], offs[i + 1])
-        d2, t2, l2, p2 = decode_block_keep_pos(buf, offs[i])
-        assert p1 == p2 and (d1 == d2).all()
         # ext + positions-at == full positional decode
         d3, t3, l3, po = decode_block_ext(buf, offs[i])
         flat = decode_positions_at(buf, po, t3)
