@@ -267,13 +267,17 @@ def decode_block(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, 
     return decode_block_ext(payload, offset)[:3]
 
 
-def decode_block_positions(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+def decode_block_positions(payload: bytes | np.ndarray, offset: int,
+                           end: int | None = None) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
     """Decode a v4 block INCLUDING its position stream ->
     (docids, tfs, dls, flat_positions); posting i owns the next tf_i
-    position values. Raises on a v3 (position-less) payload — the
-    stream would be truncated."""
+    position values. ``end`` is the block's end byte (the next block's
+    offset, or the payload length for the last block): with it, a v3
+    (position-less) block raises wherever it sits in the payload —
+    without it, only a last block does, and an earlier one decodes the
+    next block's bytes as its positions (see :func:`decode_positions_at`)."""
     d, tfs, dls, off = decode_block_ext(payload, offset)
-    return d, tfs, dls, decode_positions_at(payload, off, tfs)
+    return d, tfs, dls, decode_positions_at(payload, off, tfs, end=end)
 
 
 def decode_block_ext(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
@@ -374,11 +378,13 @@ def decode_blocks_keep_pos_flat(payload: bytes | np.ndarray,
 
 
 def decode_all_blocks_positions(payload: bytes | np.ndarray, offsets: list[int] | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode every block of a v4 blocked run with positions."""
+    """Decode every block of a v4 blocked run with positions, each
+    bounded at its block's end (raises on a position-less run)."""
     buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
+    offs = [int(o) for o in offsets]
     ds, ts, ls, ps = [], [], [], []
-    for off in offsets:
-        d, t, l, p = decode_block_positions(buf, int(off))
+    for off, end in zip(offs, offs[1:] + [buf.size]):
+        d, t, l, p = decode_block_positions(buf, off, end)
         ds.append(d); ts.append(t); ls.append(l); ps.append(p)
     if not ds:
         z = np.empty(0, np.int64)

@@ -50,6 +50,15 @@ import os as _os
 
 TOMBSTONE_BUDGET: int = int(_os.environ.get("AARHUS_TOMBSTONE_BUDGET", 2_000_000))
 
+# Max (query_id, term) pairs one top-k call may dispatch. The per-query
+# dispatcher (operators/search._per_query) embeds the pairs in the query
+# plan as one literal map, which every kernel-stage task deserializes,
+# so its size is bounded here, not left to grow with the batch: past it
+# the call raises and asks for a smaller batch. 100k pairs is ~2.5 MB of
+# literal (a 50-query batch of 1024-way prefix expansions fits); no
+# fallback path exists.
+QUERY_ROWS_BUDGET: int = 100_000
+
 # Compaction: broadcast the (dir_id, old_docid) → docid map into the
 # token-remap join while the union corpus is at most this many docs —
 # the token stream (O(postings), the heavy side) is then never

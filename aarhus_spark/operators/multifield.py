@@ -132,7 +132,7 @@ def search_multi_match(spark: SparkSession, index_root: str,
 
     One pass, shaped like :func:`~.search.search_topk`: every field's
     candidate segment rows, tagged with their field, are unioned,
-    broadcast-joined with the analyzed query terms and scored by ONE
+    fanned out to the queries holding their term and scored by ONE
     block-max WAND kernel per query (:func:`_multi_match_one_query`),
     so no (query, doc, field) score is ever materialized or shuffled.
     Exact, not a rescoring of per-field top-k lists: each field's score
@@ -171,7 +171,7 @@ def search_multi_match(spark: SparkSession, index_root: str,
     with open(os.path.join(index_root, MULTIFIELD_MANIFEST)) as f:
         n_ranges = default_n_ranges(json.load(f)["N"])
     return _per_query(
-        spark, seg, qa.qterms_df(),
+        spark, seg, qa.qterms_pdf.itertuples(index=False, name=None),
         [_field_dir(index_root, name) for name in fields], n_ranges, k,
         lambda qid, g, lo, hi: _multi_match_one_query(
             g, *args, range_lo=lo, range_hi=hi))

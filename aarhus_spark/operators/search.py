@@ -44,11 +44,11 @@ import heapq
 import json
 import os
 import re
-from typing import Iterator, NamedTuple
+from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
@@ -76,7 +76,9 @@ def local_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     (~6 ms), but not every use is: a ``BroadcastExchange`` over its
     LocalTableScan still runs one job of ``defaultParallelism`` tasks
     to build the relation, and so does ``toPandas`` with Arrow
-    conversion on (one job, 4 tasks at local[4]). The table is typed
+    conversion on (one job, 4 tasks at local[4]) — so query frames are
+    read with ``collect`` and the dispatcher takes rows, not a frame
+    (:func:`_per_query`). The table is typed
     from the DDL ``schema`` and carries explicit validity, so ``None``
     stays NULL and the plan stays a LocalRelation whether or not
     ``spark.sql.execution.arrow.pyspark.enabled`` is set (a pandas
@@ -170,12 +172,13 @@ def load_stats(index_dir: str) -> dict:
 
 class _IndexReaders:
     """One session's readers over one committed index dir: the
-    segments / fragments / dictionary DataFrames (each a parquet
-    relation whose file listing is taken once, when it is created) and
-    the dir's tombstone rows. Valid for the stats.json commit ``key``;
-    the tombstones carry their own key, the ``tombstones/`` dir's,
-    because ``build_delta`` writes them after stats.json. A cache of
-    readers, not of results: every query still scans the files."""
+    candidate-row layers and the dictionary as DataFrames (each over a
+    parquet relation whose file listing is taken once, when it is
+    created) and the dir's tombstone rows. Valid for the stats.json
+    commit ``key``; the tombstones carry their own key, the
+    ``tombstones/`` dir's, because ``build_delta`` writes them after
+    stats.json. A cache of readers, not of results: every query still
+    scans the files."""
 
     def __init__(self, spark: SparkSession, index_dir: str, key: tuple):
         self._spark, self._dir, self.key = spark, index_dir, key
@@ -183,16 +186,35 @@ class _IndexReaders:
         self._tombs: pd.DataFrame | None = None
 
     @functools.cached_property
-    def segments(self) -> DataFrame:
-        return read_segments(self._spark, self._dir)
-
-    @functools.cached_property
-    def fragments(self) -> DataFrame:
-        return read_fragments(self._spark, self._dir)
-
-    @functools.cached_property
     def dictionary(self) -> DataFrame:
         return read_dictionary(self._spark, self._dir)
+
+    # The candidate-row layers (build.py merge stage) as segment
+    # columns plus the dir's build avgdl (``src_avgdl``: scorers rescale
+    # block bounds by it); None for a layer stats.json records as empty
+    # (a pre-r8 index without the keys scans both).
+    @functools.cached_property
+    def head(self) -> DataFrame | None:
+        st = load_stats(self._dir)
+        if not st.get("has_head", True):
+            return None
+        return (read_segments(self._spark, self._dir)
+                .withColumn("src_avgdl", F.lit(float(st["avgdl"]))))
+
+    @functools.cached_property
+    def tail(self) -> DataFrame | None:
+        """Tail terms, served straight from their single fragment row
+        (df = n, chunk = 0); the build never rewrites them."""
+        st = load_stats(self._dir)
+        frag_dir = IndexPaths(self._dir).fragments
+        if not st.get("has_tail", os.path.isdir(frag_dir) and bool(os.listdir(frag_dir))):
+            return None
+        maxpost = int(st.get("build_config", {}).get("max_postings_per_row", 1 << 62))
+        return (read_fragments(self._spark, self._dir)
+                .filter(~F.col("is_head") & (F.col("n") <= maxpost))
+                .select("term", F.col("n").alias("df"), "cf",
+                        F.lit(0).alias("chunk"), "n", "first_docid", "blocks",
+                        "postings", F.lit(float(st["avgdl"])).alias("src_avgdl")))
 
     def tombstones(self) -> pd.DataFrame | None:
         """(docid, dl) rows of this dir's tombstones/, or None."""
@@ -225,19 +247,22 @@ def _readers(spark: SparkSession, index_dir: str) -> _IndexReaders:
     return r
 
 
-def _sql_in(col: str, values) -> Column:
-    """``col IN (v, …)`` as ONE parsed expression. ``Column.isin`` makes
-    a py4j round trip per literal (hundreds per search call); the parsed
-    form is the same ``In`` predicate and reaches the parquet scan as
-    the same PushedFilters. Strings are escaped for Spark's default
-    SQL string literals; integers carry the ``L`` (bigint) suffix."""
-    values = list(values)
-    if not values:
-        return F.col(col).isin([])
-    lits = [f"{int(v)}L" if isinstance(v, (int, np.integer))
-            else "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal: ``\\`` and ``'`` are
+    backslash-escaped, as Spark's default parser expects."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_in(col: str, values) -> str:
+    """``col IN (v, …)`` as SQL text, for ``DataFrame.filter`` or
+    ``F.expr``: one parse, one py4j call. ``Column.isin`` makes a py4j
+    round trip per literal (hundreds per search call); the parsed form
+    is the same ``In`` predicate and reaches the parquet scan as the
+    same PushedFilters. Strings are quoted by :func:`_sql_str`; integers
+    carry the ``L`` (bigint) suffix. No values: ``false``."""
+    lits = [f"{int(v)}L" if isinstance(v, (int, np.integer)) else _sql_str(str(v))
             for v in values]
-    return F.expr(f"{col} IN ({', '.join(lits)})")
+    return f"{col} IN ({', '.join(lits)})" if lits else "false"
 
 
 def _as_dirs(index_dir) -> list[str]:
@@ -440,53 +465,38 @@ def candidate_segments(spark: SparkSession, index_dir, terms: list[str]) -> Data
 
     The segment store is LAYERED (build.py merge stage): head/oversized
     terms live merged+chunked in ``segments/``; tail terms are served
-    directly from their single fragment row in ``fragments/`` (df = n,
-    chunk = 0) — the build never rewrites them."""
-    dirs = _as_dirs(index_dir)
-    _, _, per_dir = load_stats_multi(dirs)
-    out = None
-    for d in dirs:
-        st = load_stats(d)
+    directly from their single fragment row in ``fragments/``. Each
+    layer's projection is cached per commit (:class:`_IndexReaders`);
+    a call adds one parsed filter per layer."""
+    term_in = _sql_in("term", terms)
+    # fragment rows are written in xxhash64(term) order (the shuffle
+    # sort key), so row-group min/max stats are tight on thash, NOT on
+    # term — push the equivalent hash predicate (driver-side
+    # hashing.xxhash64 ≡ Spark's xxhash64, pinned by test) so tail
+    # lookups still skip row groups; the exact term filter stays for
+    # hash-collision correctness
+    tail_in = f"{_sql_in('thash', [spark_xxhash64(t) for t in terms])} AND {term_in}"
+    parts = []
+    for d in _as_dirs(index_dir):
         readers = _readers(spark, d)
-        maxpost = int(st.get("build_config", {}).get(
-            "max_postings_per_row", 1 << 62))
-        seg = None
-        # layer existence cached in stats.json at build time — no
-        # per-query directory listing, and an EMPTY layer (has_head
-        # False: a corpus with no head terms — every small index) is
-        # not scanned or unioned at all. Missing key (pre-r8 index) =
-        # scan as before.
-        if st.get("has_head", True):
-            seg = readers.segments.filter(_sql_in("term", terms))
-        frag_dir = IndexPaths(d).fragments
-        if st.get("has_tail", os.path.isdir(frag_dir) and bool(os.listdir(frag_dir))):
-            # fragment rows are written in xxhash64(term) order (the
-            # shuffle sort key), so row-group min/max stats are tight on
-            # thash, NOT on term — push the equivalent hash predicate
-            # (driver-side hashing.xxhash64 ≡ Spark's xxhash64, pinned
-            # by test) so tail lookups still skip row groups; the exact
-            # term filter stays for hash-collision correctness
-            tfilter = _sql_in("thash", [spark_xxhash64(t) for t in terms]) & (
-                _sql_in("term", terms) & ~F.col("is_head") & (F.col("n") <= maxpost))
-            tail = (readers.fragments.filter(tfilter)
-                    .select("term", F.col("n").alias("df"), "cf",
-                            F.lit(0).alias("chunk"), "n", "first_docid",
-                            "blocks", "postings"))
-            seg = tail if seg is None else seg.unionByName(tail)
-        if seg is None:      # both layers recorded absent (empty index)
-            from .build import SEGMENT_SCHEMA
-            seg = spark.createDataFrame([], SEGMENT_SCHEMA)
-        seg = seg.withColumn("src_avgdl", F.lit(per_dir[d]))
-        out = seg if out is None else out.unionByName(seg)
-    return out
+        if readers.head is not None:
+            parts.append(readers.head.filter(term_in))
+        if readers.tail is not None:
+            parts.append(readers.tail.filter(tail_in))
+    if not parts:      # every layer recorded absent (empty indexes)
+        from .build import SEGMENT_SCHEMA
+        return (spark.createDataFrame([], SEGMENT_SCHEMA)
+                .withColumn("src_avgdl", F.lit(0.0)))
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
                    seg: DataFrame | None = None,
                    dead: np.ndarray | None = None) -> dict[str, int]:
     """Global df per candidate term = Σ df over the per-dir dictionaries
-    (tiny: ≤ |query terms| rows collected). Reads the dictionary parquet
-    with a pushed ``term IN`` filter instead of aggregating the segment
+    (tiny: ≤ |dirs|·|query terms| rows collected, summed on the driver).
+    ONE ``collect`` over the union of the dirs' dictionary readers, each
+    with a pushed ``term IN`` filter, instead of aggregating the segment
     rows — the segments are then scanned exactly once, by the scorer.
 
     With tombstones (``dead`` non-empty and ``seg`` given): df must
@@ -498,13 +508,12 @@ def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
     (searchsorted skip — on a mostly-live index nearly every block is
     skipped undecoded) and counts dead members per term. Bounded by the
     query terms' postings, like the scorer scan itself."""
+    term_in = _sql_in("term", terms)
+    dicts = [_readers(spark, d).dictionary.filter(term_in).select("term", "df")
+             for d in _as_dirs(index_dir)]
     out: dict[str, int] = {}
-    for d in _as_dirs(index_dir):
-        rows = (_readers(spark, d).dictionary
-                .filter(_sql_in("term", terms))
-                .select("term", "df").collect())
-        for r in rows:
-            out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
+    for r in functools.reduce(DataFrame.union, dicts).collect():
+        out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
     if dead is not None and dead.size and seg is not None and out:
         dead_arr = dead  # closure capture (sorted)
 
@@ -543,28 +552,24 @@ QTERMS_SCHEMA = "query_id long, term string"
 class _QueryAnalysis:
     """Driver-side analysis of the (human-scale) query table.
 
-    A distributed per-clause pipeline (mapInPandas tokenize →
-    ``distinct`` exchange → ``collect``, once per should/must/must_not
-    clause) launched up to three Spark jobs per search call just to
-    learn the query terms — ~0.4 s each at local[32] — and the later
-    broadcast join had to build its hash relation from a Python-stage
-    plan. Query lists are driver-known, human-scale inputs (the same
-    cardinality class every scorer already closure-captures), so ONE
-    narrow Arrow ``toPandas`` + the identical frozen tokenizer
-    (``textops.tokenize_series``) replaces all of it; the qterms frames
-    handed to joins become LocalTableScans, whose broadcast build has
-    no Python stage, but each broadcast build is still one Spark job,
-    and so is the ``toPandas`` here with Arrow conversion on, even over
-    a LocalRelation (:func:`local_df`); that is why a single-dir
-    ``search_topk`` still runs 4 jobs. The build's tokenizer runs over
-    the same strings, so query and index terms agree by construction.
+    Query lists are driver-known, human-scale inputs (the same
+    cardinality class every scorer already closure-captures), so the
+    query columns are read with ONE ``collect`` — job-free over a
+    LocalRelation (:func:`local_df`), unlike an Arrow ``toPandas`` —
+    and analyzed in-process by the identical frozen tokenizer
+    (``textops.tokenize_series``), into per-clause (query_id, term)
+    pandas frames. The build's tokenizer runs over the same strings,
+    so query and index terms agree by construction. The dispatcher
+    takes the pairs as Python rows (:meth:`kinds_pdf`); only
+    ``search_taat`` joins them as frames (:meth:`qterms_df`,
+    :meth:`kinds_df`: LocalRelations, each broadcast a Spark job).
     """
 
     def __init__(self, spark: SparkSession, queries: DataFrame):
         self._spark = spark
         cols = [c for c in ("query_id", "qtext", "neg_qtext", "must_qtext")
                 if c in queries.columns]
-        qp = queries.select(*cols).toPandas()
+        qp = pd.DataFrame(queries.select(*cols).collect(), columns=cols)
         self.qterms_pdf = self._explode(qp, "qtext")
         self.neg_pdf = (self._explode(qp, "neg_qtext")
                         if "neg_qtext" in qp.columns else None)
@@ -603,24 +608,27 @@ class _QueryAnalysis:
     def qterms_df(self) -> DataFrame:
         return self._spark.createDataFrame(self.qterms_pdf, QTERMS_SCHEMA)
 
-    def kinds_df(self) -> DataFrame:
+    def kinds_pdf(self) -> pd.DataFrame:
         """Should/must/must_not (query_id, term) pairs with a ``kind``
         flag (0/1/2), max-deduped per (query, term) — a term in both
         should and must counts once as must; an excluded term keeps
-        only the exclusion — as a LocalTableScan; plain qterms when no
-        bool clause exists."""
+        only the exclusion; plain qterms (no ``kind``) when no bool
+        clause exists."""
         if self.neg_pdf is None and self.must_pdf is None:
-            return self.qterms_df()
+            return self.qterms_pdf
         frames = [self.qterms_pdf.assign(kind=0)]
         if self.must_pdf is not None:
             frames.append(self.must_pdf.assign(kind=1))
         if self.neg_pdf is not None:
             frames.append(self.neg_pdf.assign(kind=2))
         allp = pd.concat(frames, ignore_index=True)
-        kinds = (allp.groupby(["query_id", "term"], as_index=False)["kind"]
-                 .max())
+        return allp.groupby(["query_id", "term"], as_index=False)["kind"].max()
+
+    def kinds_df(self) -> DataFrame:
+        """:meth:`kinds_pdf` as a LocalTableScan."""
+        kinds = self.kinds_pdf()
         return self._spark.createDataFrame(
-            kinds, QTERMS_SCHEMA + ", kind int")
+            kinds, QTERMS_SCHEMA + (", kind int" if "kind" in kinds else ""))
 
     def qn_df(self) -> DataFrame:
         """|distinct analyzed terms| per query (the require_all target)."""
@@ -1328,8 +1336,8 @@ def search_topk(
                                n_must=len(mt or ()), dead=dead,
                                score_mode=score_mode)
 
-    return _per_query(spark, seg, qa.kinds_df(), _as_dirs(index_dir),
-                      n_ranges, k, kernel)
+    return _per_query(spark, seg, qa.kinds_pdf().itertuples(index=False, name=None),
+                      _as_dirs(index_dir), n_ranges, k, kernel)
 
 
 def search_wand(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -1364,12 +1372,21 @@ def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
     return max(1, min(512, -(-n_docs // target_docs_per_range)))
 
 
-def _per_query(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
+def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
                dirs: list[str], n_ranges: int, k: int, kernel) -> DataFrame:
     """THE per-query dispatch of every top-k kernel: candidate rows
-    ``seg`` ⋈ (query_id, term) rows ``qterms`` (broadcast), grouped and
+    ``seg`` fanned out to the queries that hold their term, grouped and
     handed to ``kernel(qid, g, range_lo, range_hi)``, which returns
     that group's RESULT_SCHEMA top-k.
+
+    ``qterms`` are driver-side (query_id, term[, kind]) rows. They
+    reach the plan as one ``inline(from_json('<json>', …)[term])``,
+    which Catalyst folds into a map literal: no broadcast join, whose
+    build was a Spark job (``F.create_map`` with one literal per entry
+    measured 10–29% slower). Past ``config.QUERY_ROWS_BUDGET`` pairs
+    this raises. The kernel stage runs over ``min(groups,
+    defaultParallelism)`` hash partitions of the group key, which AQE
+    does not coalesce into one task and the ``groupBy`` reuses.
 
     ``n_ranges <= 1``: one applyInPandas group per query, range
     (0, None). Otherwise the docid space is cut into ``n_ranges`` fixed
@@ -1385,14 +1402,34 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
     docid_offset + N), not [0, n_docs): a delta index queried alone has
     all docids ≥ its offset, which [0, n_docs) would silently miss
     entirely. A row joins exactly the ranges its TRUE docid span
-    [first_docid, __max_docid] intersects — both bounds are needed:
-    without the low side, a tail term whose postings sit late in the
-    docid space is copied into every earlier range's group
+    [first_docid, __max_docid] intersects (range ids from integer
+    division, clamped to the domain's ranges) — both bounds are
+    needed: without the low side, a tail term whose postings sit late
+    in the docid space is copied into every earlier range's group
     (~n_ranges/2 replication, ×512 at the fan-out cap) and decodes
     nothing there. Exactness never depends on this pruning, only task
     size does: any row holding a posting for a doc in [lo, hi] spans
     that doc's docid and therefore joins the range."""
     from pyspark.sql.window import Window
+
+    from ..config import QUERY_ROWS_BUDGET
+
+    rows = list(qterms)
+    if len(rows) > QUERY_ROWS_BUDGET:
+        raise ValueError(
+            f"one top-k call dispatches {len(rows)} (query, term) pairs, past the "
+            f"enforced budget of {QUERY_ROWS_BUDGET} (config.QUERY_ROWS_BUDGET): "
+            f"they ride in the plan as one literal map — split the query batch.")
+    fan: dict[str, list[dict]] = {}
+    for qid, term, *kind in rows:
+        fan.setdefault(term, []).append(
+            {"query_id": int(qid), **({"kind": int(kind[0])} if kind else {})})
+    struct = "query_id:bigint" + (",kind:int" if rows and len(rows[0]) > 2 else "")
+    fanned = seg.selectExpr("*", (
+        f"inline(from_json({_sql_str(json.dumps(fan, separators=(',', ':')))}, "
+        f"'map<string,array<struct<{struct}>>>')[term])"))
+    n_groups = len({r[0] for r in rows}) * max(1, n_ranges)
+    n_parts = max(1, min(n_groups, spark.sparkContext.defaultParallelism))
 
     def run(key: tuple, g: pd.DataFrame) -> pd.DataFrame:
         if len(key) == 1:
@@ -1401,24 +1438,26 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: DataFrame,
                       int(g["hi"].iloc[0]))
 
     if n_ranges <= 1:
-        return (seg.join(F.broadcast(qterms), "term").groupBy("query_id")
+        return (fanned.repartition(n_parts, "query_id").groupBy("query_id")
                 .applyInPandas(run, RESULT_SCHEMA))
     dom_lo, dom_hi = docid_domain(dirs)
     if dom_hi < dom_lo:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
-    ranges = local_df(
-        spark,
-        [(r, dom_lo + r * width, dom_lo + (r + 1) * width - 1)
-         for r in range(n_ranges)],
-        "rng int, lo long, hi long")
-    seg_r = (seg.withColumn("__max_docid",
-                            F.element_at("blocks", -1)["last_docid"])
-             .join(F.broadcast(qterms), "term")
-             .join(F.broadcast(ranges),
-                   (F.col("__max_docid") >= F.col("lo"))
-                   & (F.col("first_docid") <= F.col("hi"))))
-    cands = seg_r.groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA)
+
+    def rng_of(col: str) -> str:
+        return f"least({n_ranges - 1}, greatest(0, ({col} - {dom_lo}) div {width}))"
+
+    seg_r = (fanned
+             .selectExpr("*", "element_at(blocks, -1).last_docid AS __max_docid")
+             .selectExpr("*", f"explode(sequence({rng_of('first_docid')}, "
+                              f"{rng_of('__max_docid')})) AS rng")
+             .selectExpr("*", f"{dom_lo} + rng * {width} AS lo",
+                         f"{dom_lo} + (rng + 1) * {width} - 1 AS hi")
+             # the membership the range ids encode (drops no row)
+             .filter("__max_docid >= lo AND first_docid <= hi"))
+    cands = (seg_r.repartition(n_parts, "query_id", "rng")
+             .groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (cands.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)
@@ -1448,7 +1487,7 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
 
     Driver side: chain stats, candidate rows for the terms of every
     ``plans`` entry ({query_id: :class:`_PositionalTerms`}), global df
-    and the distinct (query_id, term) frame; ``n_ranges`` defaults to
+    and the distinct (query_id, term) rows; ``n_ranges`` defaults to
     :func:`default_n_ranges` of N_eff. Per group: the two-pass
     :func:`_decode_candidate_positions`, then the op's match step
     ``match(qid, inter, per_term)``, then the ranking — the
@@ -1473,8 +1512,6 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     seg = candidate_segments(spark, index_dir, terms)
     dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
-    qdist = local_df(spark, [(qid, t) for qid, ts in query_terms.items()
-                             for t in ts], QTERMS_SCHEMA)
 
     def kernel(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
         p = plans[qid]
@@ -1506,7 +1543,9 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
             "score": scores[order],
         })
 
-    return _per_query(spark, seg, qdist, _as_dirs(index_dir),
+    return _per_query(spark, seg,
+                      [(qid, t) for qid, ts in query_terms.items() for t in ts],
+                      _as_dirs(index_dir),
                       n_ranges if n_ranges is not None
                       else default_n_ranges(n_docs), k, kernel)
 

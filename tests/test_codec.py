@@ -86,3 +86,37 @@ def test_encode_blocks_rejects_unsorted():
     from aarhus_spark.codec import encode_blocks
     with pytest.raises(ValueError):
         encode_blocks(np.array([5, 5]), np.array([1, 1]), np.array([1, 1]), 10.0, 4)
+
+
+def test_positional_decoders_bound_each_block_at_its_end():
+    """A block without a position stream must raise wherever it sits in
+    the row, not only as the row's last block: bounded at its end (the
+    next block's offset), its stream cannot run on into the next
+    block's header and deltas and return them as positions."""
+    from aarhus_spark.codec import (decode_all_blocks_positions,
+                                    decode_block_positions, encode_blocks)
+    docids = np.arange(1, 13, dtype=np.int64) * 3
+    tfs = np.array([1, 2, 1, 3] * 3, dtype=np.int64)
+    dls = np.full(12, 9, dtype=np.int64)
+    bare, bare_blocks = encode_blocks(docids, tfs, dls, 9.0, 4)
+    offs = [b[2] for b in bare_blocks]
+    assert len(offs) == 3
+    buf = np.frombuffer(bare, dtype=np.uint8)
+    for i, off in enumerate(offs):
+        end = offs[i + 1] if i + 1 < len(offs) else buf.size
+        with pytest.raises(ValueError):
+            decode_block_positions(buf, off, end)
+    with pytest.raises(ValueError):
+        decode_all_blocks_positions(bare, offs)
+    # one position-less block ahead of well-formed positional blocks: a
+    # decoder bounded only by the payload's end reads the next block's
+    # bytes as positions and the whole row decodes without an error
+    pos = np.concatenate([np.arange(t, dtype=np.int64) for t in tfs[4:]])
+    tail, tail_blocks = encode_blocks(docids[4:], tfs[4:], dls[4:], 9.0, 4,
+                                      positions=pos)
+    row_offs = [0] + [offs[1] + b[2] for b in tail_blocks]
+    with pytest.raises(ValueError):
+        decode_all_blocks_positions(bare[:offs[1]] + tail, row_offs)
+    d, t, _l, p = decode_all_blocks_positions(tail, [b[2] for b in tail_blocks])
+    np.testing.assert_array_equal(d, docids[4:])
+    np.testing.assert_array_equal(p, pos)

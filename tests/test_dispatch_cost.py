@@ -1,0 +1,90 @@
+"""What one dispatched top-k call costs Spark: its job count and the
+width of its kernel stage, read from the status tracker under a job
+group, and the bound on the (query, term) pairs a call may dispatch."""
+
+import os
+import uuid
+
+import pytest
+
+_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description",
+               "spark.job.interruptOnCancel")
+
+
+@pytest.fixture(scope="module")
+def idx(spark, tmpdir_session):
+    from aarhus_spark.operators.build import build_index
+    from aarhus_spark.sources.fixtures import gen_pages
+    out = os.path.join(tmpdir_session, "idx_dispatch_cost")
+    build_index(spark, spark.createDataFrame(gen_pages(200)), out,
+                n_partitions=2, n_buckets=2, salts=2)
+    return out
+
+
+def _queries(spark, texts):
+    # a LocalRelation, as callers pass it: reading it runs no job
+    from aarhus_spark.operators.search import local_df
+    return local_df(spark, list(enumerate(texts)), "query_id long, qtext string")
+
+
+def _traced(spark, plan) -> tuple[list, list[int], int]:
+    """(rows, job ids, tasks the last job ran) of building and
+    collecting one call under a fresh job group."""
+    sc = spark.sparkContext
+    group = f"dispatch-cost-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "dispatch cost")
+    try:
+        rows = plan().collect()
+    finally:
+        for key in _GROUP_KEYS:
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    # the map stage an earlier job ran is listed again, skipped, with
+    # no completed task
+    tasks = sum(tracker.getStageInfo(s).numCompletedTasks
+                for s in tracker.getJobInfo(jobs[-1]).stageIds)
+    return rows, jobs, tasks
+
+
+def test_search_calls_run_two_jobs(spark, idx):
+    from aarhus_spark.operators.search import search_phrase, search_topk
+    from aarhus_spark.operators.spans import search_span_near
+    terms = _queries(spark, ["the data", "index of", "merge the", "to in"])
+    phrases = _queries(spark, ["of the", "in the"])
+    calls = {
+        "topk": lambda: search_topk(spark, idx, terms),
+        "phrase": lambda: search_phrase(spark, idx, phrases),
+        "span_near": lambda: search_span_near(spark, idx, phrases, slop=2,
+                                              in_order=False),
+    }
+    for name, plan in calls.items():
+        rows, jobs, _ = _traced(spark, plan)
+        assert rows, name
+        assert len(jobs) == 2, (name, jobs)
+    rows, jobs, _ = _traced(spark, lambda: search_topk(spark, idx, terms,
+                                                       n_ranges=3))
+    assert rows and len(jobs) <= 3, jobs
+
+
+def test_kernel_stage_spreads_queries_over_tasks(spark, idx):
+    """AQE coalesces a small shuffle by bytes into one partition; the
+    kernel stage must still run the 4 queries' groups in parallel."""
+    from aarhus_spark.operators.search import search_topk
+    terms = _queries(spark, ["the data", "index of", "merge the", "to in"])
+    rows, _, tasks = _traced(spark, lambda: search_topk(spark, idx, terms))
+    assert {r["query_id"] for r in rows} == {0, 1, 2, 3}
+    assert tasks > 1
+
+
+def test_query_rows_budget_raises(spark, idx, monkeypatch):
+    from aarhus_spark import config
+    from aarhus_spark.operators.search import search_phrase, search_topk
+    qdf = _queries(spark, ["the data of", "index of the"])   # 6 pairs
+    monkeypatch.setattr(config, "QUERY_ROWS_BUDGET", 6)
+    assert search_topk(spark, idx, qdf).collect()
+    monkeypatch.setattr(config, "QUERY_ROWS_BUDGET", 5)
+    for op in (search_topk, search_phrase):
+        with pytest.raises(ValueError, match="QUERY_ROWS_BUDGET"):
+            op(spark, idx, qdf)

@@ -1,8 +1,9 @@
 """Value identity across executor parallelism: every op that runs through
-the per-query dispatcher (``search._per_query``), and ``search_taat``,
-returns the same rows, with scores equal bit for bit, in a local[1]
-session as in the suite's local[4] session — with one group per query
-and with (query, docid range) groups."""
+the per-query dispatcher (``search._per_query``), ``search_taat``, and the
+ES scored ops over them (rescore, function_score, highlight and the match
+set every ES aggregation reads) return the same rows, with scores equal
+bit for bit, in a local[1] session as in the suite's local[4] session —
+with one group per query and with (query, docid range) groups."""
 
 import json
 import os
@@ -11,18 +12,20 @@ import sys
 
 import pytest
 
+from aarhus_spark.sources.fixtures import gen_pages
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 TESTS = os.path.dirname(os.path.abspath(__file__))
-
+_N_PAGES = 240
 _TERMS = ["the data", "hash the", "index of", "merge the", "spark", "of in"]
 _PHRASES = ["of the", "the the", "in the", "to the"]
 
 
 def _rows(spark, root: str) -> list[list]:
-    """(op, n_ranges, query_id, rank, docid, score.hex()) for every
-    dispatched op at n_ranges 1 and 3, over the multi-field index
-    ``root`` (its ``field=text`` dir is a plain positional index)."""
-    from aarhus_spark.operators import search
+    """(op, n_ranges, *row) for every dispatched op at n_ranges 1 and 3,
+    floats as ``float.hex``, over the multi-field index ``root`` (its
+    ``field=text`` dir is a plain positional index)."""
+    from aarhus_spark.operators import eslayer, search
     from aarhus_spark.operators.multifield import search_multi_match
     from aarhus_spark.operators.spans import (search_intervals,
                                               search_span_first,
@@ -30,6 +33,7 @@ def _rows(spark, root: str) -> list[list]:
                                               search_span_not)
 
     text = os.path.join(root, "field=text")
+    docs = spark.createDataFrame(gen_pages(_N_PAGES)).select("url", "text")
     qdf = spark.createDataFrame(list(enumerate(_TERMS)),
                                 "query_id long, qtext string")
     ph = spark.createDataFrame(list(enumerate(_PHRASES)),
@@ -70,6 +74,15 @@ def _rows(spark, root: str) -> list[list]:
         # multi_match sizes its fan-out from default_n_ranges alone
         "multi_match": lambda nr: search_multi_match(
             spark, root, qdf, k=7, boosts={"title": 2.0}),
+        "rescore": lambda nr: eslayer.search_rescore(
+            spark, text, ph, window_size=20, k=7, rescore_weight=2.0,
+            n_ranges=nr),
+        # function_score and matches read the TAAT match set, like taat
+        "function_score": lambda nr: eslayer.search_function_score(
+            spark, text, qdf, k=7),
+        "highlight": lambda nr: eslayer.search_highlight(
+            spark, text, qdf, docs, k=7, window=3, n_ranges=nr),
+        "matches": lambda nr: eslayer.search_matches(spark, text, qdf),
     }
     out = []
     sized = search.default_n_ranges
@@ -77,8 +90,8 @@ def _rows(spark, root: str) -> list[list]:
         for nr in (1, 3):
             search.default_n_ranges = lambda n_docs, nr=nr: nr
             for name, op in ops.items():
-                out += [[name, nr, r["query_id"], r["rank"], r["docid"],
-                         float(r["score"]).hex()] for r in op(nr).collect()]
+                out += [[name, nr, *(v.hex() if isinstance(v, float) else v
+                                      for v in r)] for r in op(nr).collect()]
     finally:
         search.default_n_ranges = sized
     return sorted(out)
@@ -88,9 +101,8 @@ def _rows(spark, root: str) -> list[list]:
 def mf_root(spark, tmpdir_session):
     from pyspark.sql import functions as F
     from aarhus_spark.operators.multifield import build_field_indexes
-    from aarhus_spark.sources.fixtures import gen_pages
     root = os.path.join(tmpdir_session, "parallelism_mf")
-    build_field_indexes(spark, spark.createDataFrame(gen_pages(240)), root,
+    build_field_indexes(spark, spark.createDataFrame(gen_pages(_N_PAGES)), root,
                         fields={"text": F.col("text"),
                                 "title": F.substring(F.col("text"), 1, 60)},
                         n_partitions=2, n_buckets=2, salts=2)
@@ -112,7 +124,9 @@ def test_local1_equals_local4_bitwise(spark, mf_root):
         (op, nr) for op in ("topk", "phrase", "phrase_proximity",
                             "phrase_prefix", "phrase_prefix_one_token",
                             "span_near", "span_not", "span_first",
-                            "intervals", "taat", "multi_match")
+                            "intervals", "taat", "multi_match",
+                            "rescore", "function_score", "highlight",
+                            "matches")
         for nr in (1, 3)}
     code = f"""
 import json, sys
