@@ -19,14 +19,19 @@ SURVEY.md §1.4 / §2.9 F9. Postings for one segment row are stored as
   value of each posting stored absolute — per-posting streams are
   therefore independently concatenable and sliceable at posting
   boundaries). The stream sits AFTER the dls stream inside each
-  block, so ``decode_block`` (the BM25 scoring hot path) never reads
-  or skips a single position byte — only ``decode_block_positions``
-  pays for them.
+  block, so the scoring view (``positions=False``) gathers no
+  position value — it only counts them to check the block's end.
 
-VByte format: little-endian 7-bit groups, MSB set = continuation
-(final byte has MSB clear). Encode/decode are numpy-vectorized —
-no per-value Python loop; the decode loop is over the ≤10 byte
-positions of a varint, not over values.
+Blocks decode through ONE scanner (``_scan``): a block ends where the
+next one starts (the last at the payload's end), one continuation-bit
+scan delimits every varint of a run of blocks, and one ≤10-round
+gather decodes the wanted values — no per-block or per-value Python
+loop. Three views wrap it: :func:`decode_all_blocks` and
+:func:`decode_blocks` (scoring streams, optionally positions, over a
+block range) and :func:`decode_blocks_pos_bytes` (verbatim position
+bytes for the merger and compaction). VByte format: little-endian
+7-bit groups, MSB set = continuation (final byte has MSB clear); a
+uint64 takes at most 10 bytes.
 
 Non-SQL-expressible (binary payloads) → rows-only harness check
 (SURVEY §2.9 F9).
@@ -68,30 +73,6 @@ def vbyte_encode(values: np.ndarray) -> bytes:
     """Encode a non-negative int64 array to VByte bytes (vectorized)."""
     out, _ = _vbyte_encode_arr(values)
     return out.tobytes()
-
-
-def vbyte_decode(buf: np.ndarray, n: int, offset: int = 0) -> tuple[np.ndarray, int]:
-    """Decode ``n`` VByte values from ``buf`` (uint8 array) starting at
-    ``offset``. Returns (values uint64 array, next offset). Vectorized:
-    loops over byte-positions (≤10), not values."""
-    if n == 0:
-        return np.empty(0, dtype=np.uint64), offset
-    # a uint64 takes at most 10 VByte bytes: scanning only the next 10·n
-    # keeps one block's decode O(block), not O(rest of the payload)
-    b = buf[offset:offset + 10 * n]
-    is_last = (b & 0x80) == 0
-    # index of the terminating byte of each of the first n values
-    ends = np.flatnonzero(is_last)[:n]
-    if ends.size < n:
-        raise ValueError("vbyte_decode: buffer truncated")
-    starts = np.concatenate(([0], ends[:-1] + 1))
-    out = np.zeros(n, dtype=np.uint64)
-    lens = ends - starts + 1
-    maxlen = int(lens.max())
-    for i in range(maxlen):
-        sel = lens > i
-        out[sel] |= (b[starts[sel] + i] & np.uint64(0x7F)).astype(np.uint64) << np.uint64(7 * i)
-    return out, offset + int(ends[-1]) + 1
 
 
 def _pos_deltas(flat_pos: np.ndarray, tfs: np.ndarray) -> np.ndarray:
@@ -262,135 +243,132 @@ def encode_blocks(
     return out.tobytes(), blocks
 
 
-def decode_block(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Decode the single block starting at byte ``offset``."""
-    return decode_block_ext(payload, offset)[:3]
+def _runs(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(s, s + l)`` for every (s, l) pair — the
+    repeat/arange index math of each segmented gather below."""
+    shift = np.repeat(starts - (np.cumsum(lens) - lens), lens)
+    return shift + np.arange(shift.size, dtype=np.int64)
 
 
-def decode_block_positions(payload: bytes | np.ndarray, offset: int,
-                           end: int | None = None) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode a v4 block INCLUDING its position stream ->
-    (docids, tfs, dls, flat_positions); posting i owns the next tf_i
-    position values. ``end`` is the block's end byte (the next block's
-    offset, or the payload length for the last block): with it, a v3
-    (position-less) block raises wherever it sits in the payload —
-    without it, only a last block does, and an earlier one decodes the
-    next block's bytes as its positions (see :func:`decode_positions_at`)."""
-    d, tfs, dls, off = decode_block_ext(payload, offset)
-    return d, tfs, dls, decode_positions_at(payload, off, tfs, end=end)
+def _gather(b: np.ndarray, starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """uint64 values of the varints at byte ``starts`` (``lens`` ≤ 10
+    bytes each): one OR per byte round over the values still that long."""
+    out = (b[starts] & 0x7F).astype(np.uint64)
+    idx, r = np.flatnonzero(lens > 1), 1
+    while idx.size:
+        out[idx] |= (b[starts[idx] + r] & 0x7F).astype(np.uint64) << np.uint64(7 * r)
+        r += 1
+        idx = idx[lens[idx] > r]
+    return out
 
 
-def decode_block_ext(payload: bytes | np.ndarray, offset: int) -> tuple[np.ndarray, np.ndarray, np.ndarray, int]:
-    """Decode a block's three scoring streams AND return the byte offset
-    where its v4 position stream starts — so a later pass can decode
-    ONLY the positions (:func:`decode_positions_at`) without re-decoding
-    docids/tfs/dls. The phrase two-pass hot path: pass 1 scores and
-    intersects on this; pass 2 pays for position bytes only in blocks
-    still holding candidates."""
+def _scan(payload: bytes | np.ndarray, offsets, lo: int, hi: int | None,
+          positions: str | None) -> tuple:
+    """Decode blocks ``[lo, hi)`` of a row whose blocks start at byte
+    ``offsets`` — the one block decoder every public view wraps.
+
+    Block i ends where block i+1 starts, the row's last block at the
+    end of the payload. One continuation-bit scan over the blocks'
+    contiguous bytes delimits every varint; header, stream and
+    position value indices follow by repeat/arange over the per-block
+    counts, and the wanted values come out of one ≤10-round gather.
+    Raises ValueError when the offsets leave the payload or split a
+    varint, a varint runs past its block's end or past 64 bits, or a
+    block's value count disagrees with its header: ``positions=None``
+    accepts a block with or without its Σtf position values;
+    ``"values"`` (decoded flat positions) and ``"bytes"`` (verbatim
+    position bytes and per-posting byte lengths) require them.
+
+    Returns (docids, tfs, dls, per-block posting counts, positions)."""
     buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    (n_arr, off) = vbyte_decode(buf, 1, offset)
-    n = int(n_arr[0])
-    deltas, off = vbyte_decode(buf, n, off)
-    tfs, off = vbyte_decode(buf, n, off)
-    dls, off = vbyte_decode(buf, n, off)
-    return np.cumsum(deltas.astype(np.int64)), tfs.astype(np.int64), dls.astype(np.int64), off
-
-
-def decode_positions_at(payload: bytes | np.ndarray, pos_off: int,
-                        tfs: np.ndarray, end: int | None = None) -> np.ndarray:
-    """Decode a v4 block's position stream given its start offset (from
-    :func:`decode_block_ext`) and the block's tfs — flat positions,
-    posting i owns the next tf_i values.
-
-    ``end`` bounds the stream at the NEXT block's byte offset (or the
-    payload length for the last block). With it, a position-less
-    (v3-style) or truncated payload raises instead of silently decoding
-    the next block's header bytes as position deltas — the stream must
-    both FIT within [pos_off, end) and END there exactly (a trailing
-    gap means the offsets don't describe this payload)."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    tfs = np.asarray(tfs, dtype=np.int64)
-    view = buf if end is None else buf[:end]
-    try:
-        pdeltas, nxt = vbyte_decode(view, int(tfs.sum()), pos_off)
-    except ValueError as e:
-        raise ValueError("decode_positions_at: position stream truncated "
-                         "or absent (v3-style payload?)") from e
-    if end is not None and nxt != end:
+    offs = np.asarray(offsets, dtype=np.int64)
+    hi = offs.size if hi is None else hi
+    if not 0 <= lo <= hi <= offs.size:
+        raise ValueError(f"blocks [{lo}, {hi}) outside a row of {offs.size} blocks")
+    bounds = np.empty(hi - lo + 1, dtype=np.int64)
+    bounds[:-1] = offs[lo:hi]
+    bounds[-1] = offs[hi] if hi < offs.size else buf.size
+    if bounds[0] < 0 or bounds[-1] > buf.size or (np.diff(bounds) <= 0).any():
+        raise ValueError("block offsets are not ascending within the payload")
+    if bounds[0] > 0 and buf[bounds[0] - 1] >= 0x80:
+        raise ValueError(f"block offset {bounds[0]} falls inside a varint")
+    b = buf[bounds[0]:bounds[-1]]
+    rel = bounds - bounds[0]
+    last = b < 0x80                          # the one continuation-bit scan
+    if not last[rel[1:] - 1].all():
+        raise ValueError("block truncated: a varint runs past its block's end")
+    term = np.flatnonzero(last)
+    vlen = np.diff(term, prepend=-1)
+    if vlen.size and vlen.max() >= 10 and ((vlen > 10).any() or (b[term[vlen == 10]] > 1).any()):
+        raise ValueError("varint longer than 64 bits")
+    vstart = term - (vlen - 1)
+    first = np.searchsorted(term, rel[:-1])  # value index of each block's header
+    nvals = np.diff(first, append=term.size)
+    hdr = _gather(b, vstart[first], vlen[first])
+    if (hdr > ((nvals - 1) // 3).astype(np.uint64)).any():
+        raise ValueError("block truncated: fewer values than its header's 3n")
+    n = hdr.astype(np.int64)
+    m = int(n.sum())
+    d_idx = _runs(first + 1, n)
+    nn = np.repeat(n, n)
+    pcount = nvals - 1 - 3 * n
+    idx = [d_idx, d_idx + nn, d_idx + 2 * nn]
+    if positions is not None:
+        idx.append(_runs(first + 1 + 3 * n, pcount))
+    idx = np.concatenate(idx)
+    vals = _gather(b, vstart[idx], vlen[idx])
+    tfs, dls = vals[m:2 * m].view(np.int64), vals[2 * m:3 * m].view(np.int64)
+    cn = np.concatenate(([0], np.cumsum(n)))
+    ct = np.concatenate(([0], np.cumsum(tfs)))
+    ok = pcount == ct[cn[1:]] - ct[cn[:-1]]
+    if positions is None:
+        ok |= pcount == 0
+    if not ok.all():
+        bi = int(np.flatnonzero(~ok)[0])
         raise ValueError(
-            f"decode_positions_at: position stream ended at byte {nxt}, "
-            f"expected block end {end} — payload/offset mismatch")
-    return _pos_undelta(pdeltas, tfs)
+            f"block {lo + bi}: {int(pcount[bi])} values after its scoring "
+            f"streams, Σtf={int(ct[cn[bi + 1]] - ct[cn[bi]])} — position stream "
+            f"absent, truncated or followed by stray bytes (payload/offset mismatch)")
+    # segmented cumsum: uint64 wraps modulo 2^64, so subtracting each
+    # block's running base leaves the exact docids even near 2^63
+    c = np.cumsum(vals[:m])
+    base = np.concatenate((np.zeros(1, np.uint64), c))[cn[:-1]]
+    docids = (c - np.repeat(base, n)).view(np.int64)
+    pos = None
+    if positions == "values":
+        pos = _pos_undelta(vals[3 * m:], tfs)
+    elif positions == "bytes":
+        cv = np.concatenate(([0], np.cumsum(vlen[idx[3 * m:]])))
+        plens = cv[ct[1:]] - cv[ct[:-1]]
+        cp = np.concatenate(([0], np.cumsum(plens)))
+        sec = cp[cn[1:]] - cp[cn[:-1]]       # a block's position bytes end at its end
+        pos = (b[_runs(rel[1:] - sec, sec)], plens)
+    return docids, tfs, dls, n, pos
 
 
-def decode_blocks_keep_pos_flat(payload: bytes | np.ndarray,
-                                offsets: list[int] | np.ndarray
-                                ) -> tuple[np.ndarray, np.ndarray, np.ndarray,
-                                           np.ndarray, np.ndarray]:
+def decode_blocks(payload: bytes | np.ndarray, offsets, lo: int = 0,
+                  hi: int | None = None, positions: bool = False) -> tuple:
+    """Decode blocks ``[lo, hi)`` (default: all) of a row whose blocks
+    start at byte ``offsets`` -> (docids, tfs, dls, per-block posting
+    counts, flat positions or None). Posting i owns the next tf_i
+    position values. The scoring hot path (``positions=False``) reads
+    v3 and v4 blocks alike; ``positions=True`` raises on a block
+    without a position stream."""
+    return _scan(payload, offsets, lo, hi, "values" if positions else None)
+
+
+def decode_blocks_pos_bytes(payload: bytes | np.ndarray, offsets
+                            ) -> tuple[np.ndarray, np.ndarray, np.ndarray,
+                                       np.ndarray, np.ndarray]:
     """Decode every block's scoring streams but keep the position
-    sections as ONE verbatim byte buffer with per-posting byte lengths
-    — the (pbuf, plens) shape :func:`encode_blocks` re-blocks by pure
-    byte concatenation (``pos_encoded`` path). It materializes NO
-    per-posting Python bytes objects: per-value boundaries come from
-    one vectorized continuation-bit scan per block and the buffer is
-    sliced numpy-side. The merge path (build.py _make_merger) and
-    compaction (compact.py): per-posting position runs are
-    independently concatenable (deltas reset at posting starts), so a
-    merge or docid remap never needs to decode or re-encode a position
-    value.
-
-    Returns (docids, tfs, dls, pos_buf uint8, per_posting_byte_lens).
-    """
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    offs = [int(o) for o in offsets]
-    bounds = offs[1:] + [buf.size]
-    ds, ts, ls, pbs, pls = [], [], [], [], []
-    for off, end in zip(offs, bounds):
-        d, tfs, dls, o = decode_block_ext(buf, off)
-        total = int(tfs.sum())
-        b = buf[o:end]
-        vends = np.flatnonzero((b & 0x80) == 0)
-        if vends.size < total:
-            raise ValueError("decode_blocks_keep_pos_flat: position stream truncated")
-        vends = vends[:total]
-        psum = np.cumsum(tfs)
-        pe = vends[psum - 1] + 1 if total else np.empty(0, np.int64)
-        # end-exactness (mirrors decode_positions_at): the position
-        # stream must END at the block boundary — a trailing gap means
-        # the offsets don't describe this payload, and passing the bytes
-        # verbatim into a merged index would embed the misalignment
-        if (int(pe[-1]) if total else 0) != b.size:
-            raise ValueError(
-                f"decode_blocks_keep_pos_flat: position stream ended at byte "
-                f"{int(pe[-1]) if total else 0} of {b.size} in block — "
-                f"payload/offset mismatch (v3-style payload?)")
-        ps = np.concatenate(([0], pe[:-1])) if total else np.empty(0, np.int64)
-        ds.append(d)
-        ts.append(tfs)
-        ls.append(dls)
-        pbs.append(b[:int(pe[-1])] if total else b[:0])
-        pls.append(pe - ps)
-    if not ds:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy(), np.empty(0, np.uint8), z.copy()
-    return (np.concatenate(ds), np.concatenate(ts), np.concatenate(ls),
-            np.concatenate(pbs), np.concatenate(pls))
-
-
-def decode_all_blocks_positions(payload: bytes | np.ndarray, offsets: list[int] | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Decode every block of a v4 blocked run with positions, each
-    bounded at its block's end (raises on a position-less run)."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    offs = [int(o) for o in offsets]
-    ds, ts, ls, ps = [], [], [], []
-    for off, end in zip(offs, offs[1:] + [buf.size]):
-        d, t, l, p = decode_block_positions(buf, off, end)
-        ds.append(d); ts.append(t); ls.append(l); ps.append(p)
-    if not ds:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy(), z.copy()
-    return (np.concatenate(ds), np.concatenate(ts),
-            np.concatenate(ls), np.concatenate(ps))
+    sections VERBATIM -> (docids, tfs, dls, pos_buf uint8,
+    per_posting_byte_lens): the ``pos_encoded`` shape
+    :func:`encode_blocks` re-blocks by byte concatenation. Per-posting
+    position runs are independently concatenable (deltas reset at
+    posting starts), so the merger (build.py) and compaction never
+    decode or re-encode a position value."""
+    docids, tfs, dls, _n, (pbuf, plens) = _scan(payload, offsets, 0, None, "bytes")
+    return docids, tfs, dls, pbuf, plens
 
 
 def permute_poslists(flat_pos: np.ndarray, tfs: np.ndarray, order: np.ndarray) -> np.ndarray:
@@ -411,15 +389,4 @@ def permute_poslists(flat_pos: np.ndarray, tfs: np.ndarray, order: np.ndarray) -
 
 def decode_all_blocks(payload: bytes | np.ndarray, offsets: list[int] | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode every block of a blocked run (given the block offsets)."""
-    buf = np.frombuffer(payload, dtype=np.uint8) if isinstance(payload, (bytes, bytearray)) else payload
-    ds, ts, ls = [], [], []
-    for off in offsets:
-        d, t, l = decode_block(buf, int(off))
-        ds.append(d)
-        ts.append(t)
-        ls.append(l)
-    if not ds:
-        z = np.empty(0, np.int64)
-        return z, z.copy(), z.copy()
-    return np.concatenate(ds), np.concatenate(ts), np.concatenate(ls)
-
+    return _scan(payload, offsets, 0, None, None)[:3]

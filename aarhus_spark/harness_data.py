@@ -897,7 +897,7 @@ def q_postings_codec_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from .codec import decode_block
+    from .codec import decode_blocks
     from .harness import _ensure_index
     from .operators.build import IndexPaths
 
@@ -914,13 +914,11 @@ def q_postings_codec_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             for term, n, fd, payload, blks in zip(pdf["term"], pdf["n"],
                                                   pdf["first_docid"],
                                                   pdf["postings"], pdf["blocks"]):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                ds = []
-                for b in blks:
-                    d, t, l = decode_block(buf, int(b["offset"]))
-                    ds.append(d)
-                    assert d[-1] == b["last_docid"]
-                alld = np.concatenate(ds) if ds else np.empty(0, np.int64)
+                alld, _, _, counts, _ = decode_blocks(
+                    payload, [b["offset"] for b in blks])
+                # each block's last docid is its stored last_docid
+                assert (alld[np.cumsum(counts) - 1]
+                        == [b["last_docid"] for b in blks]).all()
                 ok = alld.size == int(n)
                 if ok and alld.size:
                     ok = int(alld[0]) == int(fd)

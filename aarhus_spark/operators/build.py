@@ -56,7 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec import (decode_all_blocks_positions, decode_blocks_keep_pos_flat,
+from ..codec import (decode_blocks, decode_blocks_pos_bytes,
                      encode_blocks, encode_pos_chunks, permute_poslists)
 from ..config import (BLOCK_SIZE, FORMAT_VERSION, HEAD_DF_QUANTILE,
                       MAX_POSTINGS_PER_ROW, SALTS)
@@ -847,14 +847,14 @@ def _make_merger(avgdl: float, max_postings_per_row: int):
         # docid-sorted, and the merge never needs to touch a position
         # VALUE — per-posting position byte runs are independently
         # concatenable (deltas reset at posting starts), so they pass
-        # through verbatim (decode_blocks_keep_pos_flat → the
+        # through verbatim (decode_blocks_pos_bytes → the
         # encode_blocks pos_encoded path). Round 6: this replaced a
         # full position decode + re-encode (O(Σtf) VByte work per head
         # term, the dominant and worst-scaling share of the merge
         # stage) with O(n-postings) scoring-stream decode + byte
         # concat; the docid argsort on already-sorted data is gone too.
         g = g.sort_values("salt")
-        parts = [decode_blocks_keep_pos_flat(p, [b["offset"] for b in blocks])
+        parts = [decode_blocks_pos_bytes(p, [b["offset"] for b in blocks])
                  for p, blocks in zip(g["postings"], g["blocks"])]
         docids = np.concatenate([p[0] for p in parts])
         tfs = np.concatenate([p[1] for p in parts])
@@ -862,9 +862,9 @@ def _make_merger(avgdl: float, max_postings_per_row: int):
         if docids.size > 1 and not bool(np.all(docids[1:] > docids[:-1])):
             # defensive fallback (never expected under range salting):
             # overlapping ranges need the full re-sort + re-encode
-            fparts = [decode_all_blocks_positions(p, [b["offset"] for b in blocks])
+            fparts = [decode_blocks(p, [b["offset"] for b in blocks], positions=True)
                       for p, blocks in zip(g["postings"], g["blocks"])]
-            flat_pos = np.concatenate([p[3] for p in fparts])
+            flat_pos = np.concatenate([p[4] for p in fparts])
             order = np.argsort(docids, kind="stable")
             flat_pos = permute_poslists(flat_pos, tfs, order)
             docids, tfs, dls = docids[order], tfs[order], dls[order]

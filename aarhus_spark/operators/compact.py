@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..codec import decode_blocks_keep_pos_flat
+from ..codec import decode_blocks_pos_bytes
 from ..config import (BLOCK_SIZE, FORMAT_VERSION, HEAD_DF_QUANTILE,
                       MAX_POSTINGS_PER_ROW, SALTS)
 from .build import (FragmentCommitter, IndexPaths, _salt_of, byte_runs,
@@ -111,7 +111,7 @@ def decode_fragments_to_tokens(spark: SparkSession, dirs: list[str]) -> DataFram
     """Per-posting (dir_id, docid, term, tf, dl, posb) rows from every
     fragment row of every dir — the fragment encoder's exact inverse.
     Position runs pass through as VERBATIM bytes
-    (decode_blocks_keep_pos_flat, the merger's decoder, which also
+    (decode_blocks_pos_bytes, the merger's decoder, which also
     rejects a block whose position stream does not end at the next
     block's offset): per-posting streams are self-delimiting and
     independently concatenable, so the compacted index reproduces them
@@ -126,7 +126,7 @@ def decode_fragments_to_tokens(spark: SparkSession, dirs: list[str]) -> DataFram
             for pdf in batches:
                 for term, payload, blks in zip(pdf["term"], pdf["postings"],
                                                pdf["blocks"]):
-                    d, tf, dl, pbuf, plens = decode_blocks_keep_pos_flat(
+                    d, tf, dl, pbuf, plens = decode_blocks_pos_bytes(
                         payload, [b["offset"] for b in blks])
                     if not d.size:
                         continue

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
-from ..codec import decode_block, decode_block_ext, decode_positions_at
+from ..codec import decode_blocks
 from ..config import FORMAT_VERSION, TOP_K
 from ..hashing import xxhash64 as spark_xxhash64
 from ..scoring import idf as _idf
@@ -522,14 +522,14 @@ def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
                 rows = []
                 for term, first, payload, blks in zip(
                         pdf["term"], pdf["first_docid"], pdf["postings"], pdf["blocks"]):
-                    buf = np.frombuffer(payload, dtype=np.uint8)
+                    offs = _offsets(blks)
                     c, prev_last = 0, int(first) - 1
-                    for b in blks:
+                    for bi, b in enumerate(blks):
                         last = int(b["last_docid"])
                         lo = np.searchsorted(dead_arr, prev_last + 1, side="left")
                         hi = np.searchsorted(dead_arr, last, side="right")
                         if hi > lo:  # some dead docid falls in this block's span
-                            d_ids, _, _ = decode_block(buf, int(b["offset"]))
+                            d_ids = decode_blocks(payload, offs, bi, bi + 1)[0]
                             c += int(np.isin(d_ids, dead_arr[lo:hi],
                                              assume_unique=True).sum())
                         prev_last = last
@@ -770,32 +770,18 @@ def search_taat(
             # plain dir): idf comes from the row's own stored global df.
             for term, row_df, payload, blks in zip(
                     pdf["term"], pdf["df"], pdf["postings"], pdf["blocks"]):
-                buf = np.frombuffer(payload, dtype=np.uint8)
-                if prox:
-                    # proximity mode also carries each posting's
-                    # position list through the aggregation
-                    parts, pos_parts = [], []
-                    for bi, b in enumerate(blks):
-                        blk_end = (int(blks[bi + 1]["offset"])
-                                   if bi + 1 < len(blks) else buf.size)
-                        d, tf, dl, pos_off = decode_block_ext(buf, int(b["offset"]))
-                        pos_parts.append(decode_positions_at(
-                            buf, pos_off, tf, end=blk_end))
-                        parts.append((d, tf, dl))
-                else:
-                    parts = [decode_block(buf, int(b["offset"])) for b in blks]
-                if not parts:
+                # proximity mode also carries each posting's position
+                # list through the aggregation
+                docids, tfs, dls, _, pos = decode_blocks(
+                    payload, _offsets(blks), positions=prox)
+                if not docids.size:
                     continue
-                docids = np.concatenate([p[0] for p in parts])
-                tfs = np.concatenate([p[1] for p in parts])
-                dls = np.concatenate([p[2] for p in parts])
                 w = _idf(float(dfg[term]) if dfg is not None
                          else float(row_df), n_docs)
                 # exact: partial recomputed from (tf, dl) with the
                 # COMBINED avgdl — stored block bounds are not used here
                 contrib = w * _partial(tfs, dls, avgdl)
                 if prox:
-                    pos = np.concatenate(pos_parts).astype(np.int64)
                     yield pd.DataFrame({
                         "term": term, "docid": docids, "contrib": contrib,
                         "pos": np.split(pos, np.cumsum(tfs)[:-1])})
@@ -898,12 +884,18 @@ def _empty_result() -> pd.DataFrame:
                          "score": pd.Series([], dtype="float64")})
 
 
+def _offsets(blks) -> np.ndarray:
+    """A row's block byte offsets, the block index every decode takes."""
+    return np.fromiter((b["offset"] for b in blks), np.int64, len(blks))
+
+
 def _block_table(g: pd.DataFrame, n_docs: int, avgdl: float,
                  dfg: dict | None, ti0: int = 0
                  ) -> tuple[list[str], list[float], list[tuple]]:
     """Sorted terms, their idfs, and the block-max table of one index's
-    term rows: one ``(start, end, ub, ti, payload, offset, end_byte)``
-    tuple per posting block, ``ti`` = ti0 + the term's sorted position
+    term rows: one ``(start, end, ub, ti, payload, offsets, bi)`` tuple
+    per posting block (``offsets`` = its row's block offsets, ``bi`` its
+    index there), ``ti`` = ti0 + the term's sorted position
     (the frozen summation order §1.3.4). Chunks of the same term behave
     as extra blocks.
 
@@ -931,18 +923,13 @@ def _block_table(g: pd.DataFrame, n_docs: int, avgdl: float,
                    n_docs)
         idfs.append(idf)
         for (_t, _chunk, first_docid, _df, blks, payload, src_avgdl) in rows:
-            buf = np.frombuffer(payload, dtype=np.uint8)
+            offs = _offsets(blks)
             scale = max(1.0, avgdl / float(src_avgdl)) if src_avgdl is not None else 1.0
             prev_last = int(first_docid) - 1
             for bi, b in enumerate(blks):
-                # end byte = next block's offset (payload end for the
-                # last) — bounds the lazy position decode in proximity
-                # mode, exactly like the phrase two-pass path
-                blk_end = (int(blks[bi + 1]["offset"])
-                           if bi + 1 < len(blks) else buf.size)
                 blocks.append((prev_last + 1, int(b["last_docid"]),
                                idf * float(b["max_partial"]) * scale,
-                               ti, buf, int(b["offset"]), blk_end))
+                               ti, payload, offs, bi))
                 prev_last = int(b["last_docid"])
     return terms, idfs, blocks
 
@@ -975,7 +962,7 @@ class _BlockScan:
         n_iv = self.ends.size
         self.ubs = np.zeros((n_groups, n_iv), dtype=np.float64)
         self.cover: list[list[int]] = [[] for _ in range(n_iv)]
-        for bi, (s, e, ub, ti, _buf, _off, _end) in enumerate(self.blocks):
+        for bi, (s, e, ub, ti, _payload, _offs, _rbi) in enumerate(self.blocks):
             lo = np.searchsorted(self.ends, s, side="left")
             hi = np.searchsorted(self.ends, e, side="left")
             grp = group_of_ti[ti] if group_of_ti is not None and ti >= 0 else 0
@@ -984,8 +971,7 @@ class _BlockScan:
                 self.cover[iv].append(bi)
         self.decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
         self.neg: dict[int, np.ndarray] = {}      # must_not block docids
-        self.ext: dict[int, tuple[np.ndarray, int]] = {}  # prox: (tfs, pos_off)
-        self.pos: dict[int, np.ndarray] = {}      # prox: decoded positions
+        self.pos: dict[int, tuple] = {}           # prox: (tfs, positions)
 
     def walk(self, ub: np.ndarray, top: "_TopK") -> Iterator[tuple[int, int, int]]:
         """(interval, lo_docid, hi_docid) in descending-bound order,
@@ -1011,24 +997,20 @@ class _BlockScan:
         per_term: list[tuple] = []
         excl: list[np.ndarray] = []
         for bi in sorted(self.cover[iv], key=lambda b: self.blocks[b][3]):
-            _s, _e, _ub, ti, buf, off, _end = self.blocks[bi]
+            _s, _e, _ub, ti, payload, offs, rbi = self.blocks[bi]
             if ti < 0:
                 if bi not in self.neg:
-                    self.neg[bi] = decode_block(buf, off)[0]
+                    self.neg[bi] = decode_blocks(payload, offs, rbi, rbi + 1)[0]
                 dneg = self.neg[bi]
                 mneg = (dneg >= lo_d) & (dneg <= hi_d)
                 if mneg.any():
                     excl.append(dneg[mneg])
                 continue
             if bi not in self.decoded:
-                if self.prox:
-                    # ext variant records where the position stream
-                    # starts; the stream itself decodes lazily, only
-                    # for blocks whose docs survive the theta mask
-                    d, t, l, pos_off = decode_block_ext(buf, off)
-                    self.ext[bi] = (t, pos_off)
-                else:
-                    d, t, l = decode_block(buf, off)
+                # scoring streams only: in proximity mode positions
+                # decode later (positions_of), only for blocks whose
+                # docs survive the theta mask
+                d, t, l, _, _ = decode_blocks(payload, offs, rbi, rbi + 1)
                 self.decoded[bi] = (
                     d, self.idfs[ti] * _partial(t, l, self.avgdls[ti]))
             d, c = self.decoded[bi]
@@ -1036,6 +1018,15 @@ class _BlockScan:
             if sel.any():
                 per_term.append((d[sel], c[sel], ti, bi, sel))
         return per_term, excl
+
+    def positions_of(self, bi: int) -> tuple[np.ndarray, np.ndarray]:
+        """``(tfs, flat positions)`` of block ``bi``, decoded once."""
+        if bi not in self.pos:
+            _s, _e, _ub, _ti, payload, offs, rbi = self.blocks[bi]
+            _, t, _, _, p = decode_blocks(payload, offs, rbi, rbi + 1,
+                                          positions=True)
+            self.pos[bi] = (t, p)
+        return self.pos[bi]
 
 
 class _TopK:
@@ -1149,10 +1140,11 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     theta mask (BM25 ≥ theta) keeps a superset of the docs that can
     enter the heap. Positions decode lazily — only for blocks in
     intervals that actually get scored, only after the theta mask —
-    via the same decode_block_ext/decode_positions_at two-pass split
-    the phrase path uses. Bit-identical to search_taat's proximity
-    mode (the width funnels through the same _min_window_flat and the
-    adjustment is the same double expression s * (1.0/(1.0+w)))."""
+    via the same two-pass split the phrase path uses (scoring streams
+    first, a block's positions only once a candidate in it survives).
+    Bit-identical to search_taat's proximity mode (the width funnels
+    through the same _min_window_flat and the adjustment is the same
+    double expression s * (1.0/(1.0+w)))."""
     prox = score_mode == "proximity"
 
     if range_hi is None:
@@ -1180,7 +1172,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     # present in the interval cover so the gather loop can decode them
     # lazily and mask their docids
     if gneg is not None and len(gneg):
-        blocks += [(s, e, 0.0, -1, buf, off, end) for s, e, _ub, _ti, buf, off, end
+        blocks += [(s, e, 0.0, -1, *rest) for s, e, _ub, _ti, *rest
                    in _block_table(gneg, n_docs, avgdl, dfg)[2]]
 
     scan = _BlockScan(blocks, range_lo, range_hi, idfs,
@@ -1247,7 +1239,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
         uniq, scores = top.mask(uniq, scores)
         if prox and uniq.size:
             # positions ONLY for theta-surviving candidates: decode a
-            # block's position stream at most once (scan.pos), slice
+            # block's positions at most once (scan.positions_of), slice
             # the interval's docs (sel), then the candidates' runs
             didx_l: list[np.ndarray] = []
             pos_l: list[np.ndarray] = []
@@ -1256,12 +1248,8 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
                 m = np.isin(dsel, uniq, assume_unique=True)
                 if not m.any():
                     continue
-                tf_full, pos_off2 = scan.ext[bi2]
-                if bi2 not in scan.pos:
-                    buf2, end2 = scan.blocks[bi2][4], scan.blocks[bi2][6]
-                    scan.pos[bi2] = decode_positions_at(
-                        buf2, pos_off2, tf_full, end=end2)
-                pos_sel = scan.pos[bi2][np.repeat(sel2, tf_full)]
+                tf_full, pos_full = scan.positions_of(bi2)
+                pos_sel = pos_full[np.repeat(sel2, tf_full)]
                 tf_sel = tf_full[sel2]
                 idx = np.searchsorted(uniq, dsel[m])
                 didx_l.append(np.repeat(idx, tf_sel[m]))
@@ -1688,19 +1676,16 @@ def _decode_candidate_positions(g: pd.DataFrame, required, any_of=(),
     """Shared two-pass positional decode for every positional kernel
     (the decode step of :func:`_positional_topk`).
 
-    PASS 1 decodes scoring streams only (``decode_block_ext`` never
-    touches the position bytes, but records where they start), keeps
-    per-term blocks overlapping [range_lo, range_hi], and intersects
+    PASS 1 decodes scoring streams only, one call per row over its
+    contiguous blocks overlapping [range_lo, range_hi], and intersects
     the candidate docids (rows/dirs are docid-disjoint so each term's
     docids are sorted unique after the ordered concat): a doc needs
     every ``required`` term and at least one term of every ``any_of``
     group (the intervals query's any_of leaves, phrase_prefix's
     expansions) — an any_of term, or even a whole block set, may be
     absent as long as its group is still covered. Dead docids drop from
-    the intersection. PASS 2 decodes the position stream ONLY for
-    blocks that still hold a candidate — picking it up at the byte
-    offset pass 1 recorded, so scoring streams are never decoded twice
-    — and keeps candidate docs' rows per term.
+    the intersection. PASS 2 decodes positions ONLY for blocks that
+    still hold a candidate, and keeps candidate docs' rows per term.
 
     ``optional`` terms are decoded and candidate-restricted the same
     way but do NOT participate in the intersection and may be absent
@@ -1726,27 +1711,28 @@ def _decode_candidate_positions(g: pd.DataFrame, required, any_of=(),
 
     all_terms = sorted({t for grp in groups for t in grp}) + [
         t for t in optional if t in term_rows]
-    per_term_blocks: dict[str, list[tuple]] = {}   # (d,tf,dl,buf,pos_off,sel,tf_full,blk_end)
+    per_term_blocks: dict[str, list[tuple]] = {}   # (d,tf,dl,sel,payload,offs,bi)
     for t in all_terms:
         blocks = []
         for (_t, chunk, first, blks, payload, _src) in sorted(
                 term_rows.get(t, []), key=lambda r: (int(r[2]), int(r[1]))):
-            buf = np.frombuffer(payload, dtype=np.uint8)
-            prev_last = int(first) - 1
-            for bi, b in enumerate(blks):
-                last = int(b["last_docid"])
-                if last >= range_lo and prev_last + 1 <= range_hi:
-                    d, tf, dl, pos_off = decode_block_ext(buf, int(b["offset"]))
-                    sel = (d >= range_lo) & (d <= range_hi)
-                    if sel.any():
-                        # end bound = next block's offset (payload end for
-                        # the last block) so pass 2's position decode is
-                        # validated against the block boundary
-                        blk_end = (int(blks[bi + 1]["offset"])
-                                   if bi + 1 < len(blks) else buf.size)
-                        blocks.append((d[sel], tf[sel], dl[sel], buf,
-                                       pos_off, sel, tf, blk_end))
-                prev_last = last
+            lasts = np.fromiter((b["last_docid"] for b in blks), np.int64,
+                                len(blks))
+            starts = np.concatenate(([int(first)], lasts[:-1] + 1))
+            # the blocks overlapping the range are contiguous
+            b_lo = int(np.searchsorted(lasts, range_lo, side="left"))
+            b_hi = int(np.searchsorted(starts, range_hi, side="right"))
+            if b_lo >= b_hi:
+                continue
+            offs = _offsets(blks)
+            d, tf, dl, counts, _ = decode_blocks(payload, offs, b_lo, b_hi)
+            cut = np.cumsum(counts)[:-1]
+            for bi, d_b, tf_b, dl_b in zip(range(b_lo, b_hi), np.split(d, cut),
+                                           np.split(tf, cut), np.split(dl, cut)):
+                sel = (d_b >= range_lo) & (d_b <= range_hi)
+                if sel.any():
+                    blocks.append((d_b[sel], tf_b[sel], dl_b[sel], sel,
+                                   payload, offs, bi))
         if not blocks and t in hard_required:
             return none
         per_term_blocks[t] = blocks
@@ -1777,11 +1763,12 @@ def _decode_candidate_positions(g: pd.DataFrame, required, any_of=(),
     per_term: dict[str, tuple] = {}
     for t in all_terms:
         ds, tfl, dll, pfl = [], [], [], []
-        for (d, tf, dl, buf, pos_off, sel, tf_full, blk_end) in per_term_blocks[t]:
+        for (d, tf, dl, sel, payload, offs, bi) in per_term_blocks[t]:
             keep = np.isin(d, inter, assume_unique=True)
             if not keep.any():
                 continue
-            pos = decode_positions_at(buf, pos_off, tf_full, end=blk_end)
+            _, tf_full, _, _, pos = decode_blocks(payload, offs, bi, bi + 1,
+                                                  positions=True)
             pos = pos[np.repeat(sel, tf_full)]    # range-restrict like pass 1
             ds.append(d[keep]); tfl.append(tf[keep]); dll.append(dl[keep])
             pfl.append(pos[np.repeat(keep, tf)])

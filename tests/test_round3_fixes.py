@@ -9,7 +9,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from aarhus_spark.codec import decode_block
+from aarhus_spark.codec import decode_blocks
 from aarhus_spark.config import FORMAT_VERSION
 from aarhus_spark.operators.build import IndexPaths, build_index
 from aarhus_spark.operators.search import load_stats, search_wand
@@ -65,8 +65,8 @@ def test_first_docid_matches_decoded_postings(spark, idx):
                 .select("first_docid", "blocks", "postings").collect())
         assert rows
         for r in rows:
-            buf = np.frombuffer(r["postings"], dtype=np.uint8)
-            d, _, _ = decode_block(buf, int(r["blocks"][0]["offset"]))
+            d = decode_blocks(r["postings"],
+                              [b["offset"] for b in r["blocks"]], 0, 1)[0]
             assert int(r["first_docid"]) == int(d[0])
             # and the last block's last_docid bounds the row from above
             assert int(r["first_docid"]) <= int(r["blocks"][-1]["last_docid"])

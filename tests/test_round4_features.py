@@ -9,8 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aarhus_spark.codec import (decode_all_blocks_positions,
-                                decode_block_positions)
+from aarhus_spark.codec import decode_blocks
 from aarhus_spark.operators.build import IndexPaths, build_index
 from aarhus_spark.operators.compact import compact_indexes
 from aarhus_spark.operators.incremental import build_delta
@@ -61,8 +60,8 @@ def test_positions_roundtrip_through_index(spark, idx):
     checked = 0
     for term, blks, payload in zip(frags["term"], frags["blocks"],
                                    frags["postings"]):
-        d, tf, dl, pos = decode_all_blocks_positions(
-            payload, [b["offset"] for b in blks])
+        d, tf, dl, _, pos = decode_blocks(
+            payload, [b["offset"] for b in blks], positions=True)
         psum = np.concatenate(([0], np.cumsum(tf)))
         for i, docid in enumerate(d[:5]):  # bounded per term
             toks = toks_by_url[url_of[int(docid)]]
@@ -82,8 +81,8 @@ def test_segment_rows_also_carry_positions(spark, idx):
             .select("term", "blocks", "postings").limit(20).toPandas())
     assert len(segs) > 0
     for blks, payload in zip(segs["blocks"], segs["postings"]):
-        d, tf, dl, pos = decode_all_blocks_positions(
-            payload, [b["offset"] for b in blks])
+        d, tf, dl, _, pos = decode_blocks(
+            payload, [b["offset"] for b in blks], positions=True)
         assert pos.size == int(tf.sum())
         # positions strictly ascending within each posting, < dl
         psum = np.concatenate(([0], np.cumsum(tf)))

@@ -13,8 +13,6 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from aarhus_spark.codec import (decode_block_ext, decode_block_positions,
-                                decode_positions_at, encode_blocks)
 from aarhus_spark.operators.build import IndexPaths, build_index
 from aarhus_spark.operators.incremental import build_delta
 from aarhus_spark.operators.search import (load_tombstones, search_phrase,
@@ -383,36 +381,6 @@ def test_phrase_delta_only_docid_domain(spark, tmpdir_session):
     res = search_phrase(spark, [base_dir, delta_dir], qdf, k=20,
                         n_ranges=3).toPandas()
     assert len(res) == 8
-
-
-# ---------------------------------------------------------------------------
-# codec: ext/positions-at split decode
-# ---------------------------------------------------------------------------
-
-def test_codec_bounded_and_ext_decoders():
-    rng = np.random.default_rng(7)
-    n = 700
-    docids = np.cumsum(rng.integers(1, 9, size=n, dtype=np.int64))
-    tfs = rng.integers(1, 6, size=n).astype(np.int64)
-    dls = rng.integers(20, 400, size=n).astype(np.int64)
-    pos = np.concatenate([np.sort(rng.choice(1000, size=int(t), replace=False))
-                          for t in tfs]).astype(np.int64)
-    payload, blocks = encode_blocks(docids, tfs, dls, avgdl=120.0,
-                                    block_size=128, positions=pos)
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    offs = [b[2] for b in blocks] + [buf.size]
-    got_pos, got_d = [], []
-    for i in range(len(blocks)):
-        # ext + positions-at == full positional decode
-        d3, t3, l3, po = decode_block_ext(buf, offs[i])
-        flat = decode_positions_at(buf, po, t3)
-        d4, t4, l4, flat4 = decode_block_positions(buf, offs[i])
-        assert (d3 == d4).all() and (t3 == t4).all() and (l3 == l4).all()
-        assert (flat == flat4).all()
-        got_pos.append(flat)
-        got_d.append(d3)
-    assert (np.concatenate(got_d) == docids).all()
-    assert (np.concatenate(got_pos) == pos).all()
 
 
 # ---------------------------------------------------------------------------

@@ -6,10 +6,8 @@
    buffers) produces a bit-identical index to the round-6 contract:
    e2e build → decode → compare against a pandas re-derivation, plus
    carry-across-batch behaviour exercised directly.
-3. ``decode_blocks_keep_pos_flat`` end-exactness: trailing garbage in a
-   block's position section raises instead of passing through verbatim.
-4. ``scripts/search.py`` flag/mode validation errors.
-5. ``candidate_segments`` pushes the thash predicate for tail lookups.
+3. ``scripts/search.py`` flag/mode validation errors.
+4. ``candidate_segments`` pushes the thash predicate for tail lookups.
 """
 
 from __future__ import annotations
@@ -67,8 +65,7 @@ def _posting_batch(rows):
 def test_encoder_carry_across_batches(tmp_path):
     """A (term, salt) run spanning three Arrow batches must encode as
     ONE fragment, with the position bytes stitched in order."""
-    from aarhus_spark.codec import (decode_all_blocks_positions,
-                                    encode_pos_chunks)
+    from aarhus_spark.codec import decode_blocks, encode_pos_chunks
     from aarhus_spark.operators.build import _make_fragment_encoder
 
     frag_dir, man_dir = str(tmp_path / "frags"), str(tmp_path / "mans")
@@ -94,8 +91,8 @@ def test_encoder_carry_across_batches(tmp_path):
     assert len(frag) == 1, "run spanning batches must become ONE fragment"
     r = frag[0]
     assert r["term"] == "zz" and r["n"] == 30 and r["thash"] == xxhash64("zz")
-    d, t, l, p = decode_all_blocks_positions(
-        r["postings"], [b["offset"] for b in r["blocks"]])
+    d, t, l, _, p = decode_blocks(
+        r["postings"], [b["offset"] for b in r["blocks"]], positions=True)
     np.testing.assert_array_equal(d, docids)
     np.testing.assert_array_equal(p, positions)
 
@@ -139,33 +136,7 @@ def test_tokenize_postings_pandas_wrapper():
 
 
 # ---------------------------------------------------------------------------
-# 3. decode_blocks_keep_pos_flat end-exactness
-# ---------------------------------------------------------------------------
-
-def test_keep_pos_flat_rejects_trailing_garbage():
-    from aarhus_spark.codec import (decode_blocks_keep_pos_flat,
-                                    encode_blocks, encode_pos_chunks)
-    docids = np.arange(5, dtype=np.int64)
-    tfs = np.full(5, 2, np.int64)
-    dls = np.full(5, 4, np.int64)
-    pos = np.tile(np.array([0, 2], np.int64), 5)
-    buf, plens = encode_pos_chunks(pos, tfs)
-    payload, blocks = encode_blocks(docids, tfs, dls, 4.0, 128,
-                                    pos_encoded=(buf, plens))
-    offs = [b[2] for b in blocks]
-    # clean payload decodes
-    d, t, l, pb, pl = decode_blocks_keep_pos_flat(payload, offs)
-    np.testing.assert_array_equal(d, docids)
-    # trailing garbage byte in the last block's position section: the
-    # stream no longer ends at the block boundary -> must raise
-    bad = np.concatenate([np.frombuffer(payload, np.uint8),
-                          np.array([0x01], np.uint8)])
-    with pytest.raises(ValueError, match="payload/offset mismatch"):
-        decode_blocks_keep_pos_flat(bad, offs)
-
-
-# ---------------------------------------------------------------------------
-# 4. scripts/search.py flag validation
+# 3. scripts/search.py flag validation
 # ---------------------------------------------------------------------------
 
 @pytest.mark.parametrize("argv", [
@@ -185,7 +156,7 @@ def test_search_cli_rejects_incompatible_flags(argv):
 
 
 # ---------------------------------------------------------------------------
-# 5. thash pushdown reaches the tail scan
+# 4. thash pushdown reaches the tail scan
 # ---------------------------------------------------------------------------
 
 def test_tail_lookup_pushes_thash(spark, tmpdir_session, sf_dir):
