@@ -275,8 +275,16 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
     the E(html) extraction, and the empty-text filter all run inside
     the same partition-sorted pass (one Python/Arrow round trip),
     and the separate dedup-window exchange of :func:`prepare_pages`
-    disappears. Two-pass offsets as in the docstring below.
-    Returns (docid, url, text), persisted.
+    disappears.
+
+    Docids are dense url ranks in global sort order, in two passes over
+    the range-partitioned, partition-sorted frame: pass 1 collects the
+    per-partition counts (tiny) to compute offsets; pass 2 adds offset
+    + local index inside mapInPandas. Correct for ANY range boundary
+    choice (ranges are disjoint and ordered), so it is
+    partition-count-independent — unlike monotonically_increasing_id.
+    The frame is persisted so both passes see the same materialization.
+    Returns ((docid, url, text, warc_ts, dl), N, Σdl).
     """
     rp = (
         pages.filter(F.col("lang") == "en")                    # P2 → pushed to scan
@@ -343,47 +351,6 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
         assign, schema="docid long, url string, text string, warc_ts timestamp, dl long")
     return out, acc, sumdl
 
-
-def assign_docids(spark: SparkSession, prepared: DataFrame, n_partitions: int) -> DataFrame:
-    """Deterministic dense docids = rank of url in global sort order.
-
-    Two passes over a range-partitioned, partition-sorted frame: pass 1
-    collects per-partition counts (tiny) to compute offsets; pass 2 adds
-    offset + local index inside mapInPandas. Correct for ANY range
-    boundary choice (ranges are disjoint and ordered), so it is
-    partition-count-independent — unlike monotonically_increasing_id.
-    The frame is persisted so both passes see the same materialization
-    (at production scale: checkpoint to object store instead).
-    """
-    rp = (
-        prepared.repartitionByRange(n_partitions, "url")
-        .sortWithinPartitions("url")
-        .withColumn("pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    counts = {r["pid"]: r["cnt"] for r in rp.groupBy("pid").agg(F.count("*").alias("cnt")).collect()}
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    b_offsets = spark.sparkContext.broadcast(offsets)
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        local = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            off = b_offsets.value[int(pdf["pid"].iloc[0])]
-            pdf = pdf.assign(docid=np.arange(local, local + len(pdf), dtype=np.int64) + off)
-            local += len(pdf)
-            yield pdf[["docid", "url", "text"]]
-
-    return rp.mapInPandas(assign, schema="docid long, url string, text string")
-
-
-# ---------------------------------------------------------------------------
-# T1: tokenize → (docid, term, tf, dl)
-# ---------------------------------------------------------------------------
 
 def tokenize_docs(docs: DataFrame) -> DataFrame:
     """mapInPandas; inside each Arrow batch everything is vectorized
@@ -640,9 +607,9 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
                 # was 6.9 s (zstd) vs 4.5 s (snappy/none). Heavy codecs
                 # here are pure CPU overhead (guide §2.3: high-entropy
                 # payloads); snappy keeps cheap insurance for corpora
-                # whose metadata columns do compress. Env-overridable.
-                codec = os.environ.get("AARHUS_FRAG_CODEC", "snappy")
-                self.writer = pq.ParquetWriter(self.tmp, FRAG_PA_SCHEMA, compression=codec)
+                # whose metadata columns do compress.
+                self.writer = pq.ParquetWriter(self.tmp, FRAG_PA_SCHEMA,
+                                               compression="snappy")
             cols = {k: [r[k] for r in self.pending] for k in FRAG_PA_SCHEMA.names}
             self.writer.write_table(pa.table(cols, schema=FRAG_PA_SCHEMA))
             self.frag_rows += len(self.pending)

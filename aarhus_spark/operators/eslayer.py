@@ -72,24 +72,46 @@ dictionary rewrites).
 
 from __future__ import annotations
 
-import os as _os
+import functools
 from collections import Counter
 from math import log
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import TOP_K
 from ..textops import tokenize
-from .build import read_dictionary, read_doclens
-from .search import (_as_dirs, load_stats_multi, local_df, localize_queries,
-                     search_phrase, search_taat, search_topk)
+from .search import (_as_dirs, _chain_stats, _global_df_map, _QueryAnalysis,
+                     _readers, candidate_segments, chain_dictionary,
+                     load_stats_multi, load_tombstones, local_df,
+                     localize_queries, read_query_rows, search_phrase,
+                     search_taat, search_topk)
 
 # url host — same expression in the DuckDB twin (harness)
 HOST_RE = r"^https?://([^/]+)"
+
+
+def _tokens(text: str) -> Column:
+    """The frozen T(text) as JVM column functions: lower-cased
+    [a-z0-9]+ runs of at most 64 chars, in order."""
+    return F.filter(F.split(F.lower(text), "[^a-z0-9]+"),
+                    lambda t: (t != F.lit("")) & (F.length(t) <= F.lit(64)))
+
+
+def _dl_stats(round_to: int) -> list[Column]:
+    """The Q25 metric columns over doc length and host: ``stats``,
+    ``percentiles`` (p50, p95) and ``cardinality``."""
+    return [F.count("*").alias("doc_count"),
+            F.min("dl").alias("min_dl"),
+            F.max("dl").alias("max_dl"),
+            F.sum("dl").alias("sum_dl"),
+            F.round(F.avg("dl"), round_to).alias("avg_dl"),
+            F.round(F.percentile("dl", F.lit(0.5)), round_to).alias("p50_dl"),
+            F.round(F.percentile("dl", F.lit(0.95)), round_to).alias("p95_dl"),
+            F.countDistinct("host").alias("host_card")]
 
 
 def search_matches(spark: SparkSession, index_dir, queries: DataFrame,
@@ -113,19 +135,14 @@ def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
     filter (broadcast anti-join, bounded by TOMBSTONE_BUDGET — the same
     device the retrieval path uses). The per-docid window stays as
     defense in depth against a duplicate-docid writer bug."""
-    import pandas as _pd
-
-    from .search import load_tombstones
     dirs = _as_dirs(index_dir)
-    meta = None
-    for i, d in enumerate(dirs):
-        piece = (read_doclens(spark, d)
-                 .withColumn("__gen", F.lit(i)))
-        meta = piece if meta is None else meta.unionByName(piece)
+    meta = functools.reduce(DataFrame.unionByName, [
+        _readers(spark, d).doclens.withColumn("__gen", F.lit(i))
+        for i, d in enumerate(dirs)])
     dead, _dl = load_tombstones(spark, dirs)
     if dead.size:
         dead_df = spark.createDataFrame(
-            _pd.DataFrame({"docid": dead.astype("int64")}))
+            pd.DataFrame({"docid": dead.astype("int64")}))
         meta = meta.join(F.broadcast(dead_df), "docid", "left_anti")
     if len(dirs) == 1:
         return meta.drop("__gen")
@@ -233,27 +250,17 @@ def search_significant_terms(spark: SparkSession, index_dir,
     fg_size = matched.groupBy("query_id").agg(
         F.count("*").alias("fg_size"))
     meta = _doc_meta(spark, index_dir).select("docid", "url")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda t: (t != F.lit("")) & (F.length(t) <= F.lit(64)))
     docterms = (matched.join(meta, "docid")
                 .join(docs.select("url", "text"), "url")
                 .select("query_id",
-                        F.explode(F.array_distinct(toks)).alias("term")))
+                        F.explode(F.array_distinct(_tokens("text"))).alias("term")))
     fg = docterms.groupBy("query_id", "term").agg(
         F.count("*").alias("fg_df"))
-    dirs = _as_dirs(index_dir)
-    dic = None
-    for d in dirs:
-        piece = (read_dictionary(spark, d)
-                 .select("term", "df"))
-        dic = piece if dic is None else dic.unionByName(piece)
-    dic = dic.groupBy("term").agg(F.sum("df").alias("bg_df"))
+    dic = chain_dictionary(spark, index_dir).withColumnRenamed("df", "bg_df")
     # bg_size = tombstone-corrected live N (the retrieval path's N_eff);
     # bg_df stays the STORED dictionary df — exactly Lucene/ES, whose
     # docFreq ignores deletions until segments merge while live-doc
     # counts exclude them (compaction purges both here)
-    from .search import _chain_stats
     n_total, _, _, _dead = _chain_stats(spark, index_dir)
     fgp = F.col("fg_df").cast("double") / F.col("fg_size").cast("double")
     bgp = F.col("bg_df").cast("double") / F.lit(float(n_total))
@@ -292,13 +299,7 @@ def suggest_terms(spark: SparkSession, index_dir, words: DataFrame,
     as the Q12-Q16 dictionary rewrites."""
     if suggest_mode not in ("always", "missing", "popular"):
         raise ValueError(f"unknown suggest_mode {suggest_mode!r}")
-    dirs = _as_dirs(index_dir)
-    dic = None
-    for d in dirs:
-        piece = (read_dictionary(spark, d)
-                 .select("term", "df"))
-        dic = piece if dic is None else dic.unionByName(piece)
-    dic = dic.groupBy("term").agg(F.sum("df").alias("df"))
+    dic = chain_dictionary(spark, index_dir)
     w = words.select("word_id", F.lower(F.col("word")).alias("word"))
     own = dic.withColumnRenamed("term", "word").withColumnRenamed(
         "df", "own_df")
@@ -413,7 +414,6 @@ def search_highlight(spark: SparkSession, index_dir, queries: DataFrame,
             F.desc(F.round("score", round_to)), F.asc("docid"))
         top = (top.withColumn("rank", F.row_number().over(w0)))
     meta = _doc_meta(spark, index_dir).select("docid", "url")
-    from .search import _QueryAnalysis
     qa = _QueryAnalysis(spark, queries)
     qarr = local_df(
         spark,
@@ -423,10 +423,7 @@ def search_highlight(spark: SparkSession, index_dir, queries: DataFrame,
     hit = (top.join(meta, "docid")
            .join(docs.select("url", "text"), "url")
            .join(F.broadcast(qarr), "query_id"))
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda t: (t != F.lit("")) & (F.length(t) <= F.lit(64)))
-    hit = hit.withColumn("toks", toks)
+    hit = hit.withColumn("toks", _tokens("text"))
     # first (1-based) position of any query term; hits always match ≥1
     # positive term, so the min is well-defined on the disjunctive path
     firstpos = F.array_min(F.filter(
@@ -470,15 +467,8 @@ def mlt_select_terms(spark: SparkSession, index_dir, seed_text: str,
     cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
     if not cand:
         return []
-    dirs = _as_dirs(index_dir)
-    n_docs, _, _ = load_stats_multi(dirs)
-    dfm: Counter = Counter()
-    for d in dirs:
-        rows = (read_dictionary(spark, d)
-                .select("term", "df")
-                .filter(F.col("term").isin(cand)).collect())
-        for r in rows:
-            dfm[r["term"]] += int(r["df"])
+    n_docs, _, _ = load_stats_multi(_as_dirs(index_dir))
+    dfm = _global_df_map(spark, index_dir, cand)
     # max(min_doc_freq, 1): with min_doc_freq=0 an out-of-dictionary
     # term would pass the filter and divide by dfm[t] == 0
     scored = [(t, round(tf[t] * log(1.0 + n_docs / dfm[t]), 9))
@@ -499,7 +489,7 @@ def more_like_this(spark: SparkSession, index_dir, queries: DataFrame,
     with the seed doc itself excluded from the hits (``include: false``,
     the ES default). Returns (query_id, rank, docid, score) re-ranked
     after exclusion."""
-    qrows = queries.select("query_id", "like_url").collect()
+    qrows = read_query_rows(queries, "query_id", "like_url")
     meta = _doc_meta(spark, index_dir).select("docid", "url")
     plans, seeds = [], []
     for r in qrows:
@@ -564,15 +554,7 @@ def search_metric_aggs(spark: SparkSession, index_dir, queries: DataFrame,
         j = j.filter(F.col("warc_ts") >= F.to_timestamp(F.lit(ts_lo)))
     if ts_hi is not None:
         j = j.filter(F.col("warc_ts") < F.to_timestamp(F.lit(ts_hi)))
-    return j.groupBy("query_id").agg(
-        F.count("*").alias("doc_count"),
-        F.min("dl").alias("min_dl"),
-        F.max("dl").alias("max_dl"),
-        F.sum("dl").alias("sum_dl"),
-        F.round(F.avg("dl"), round_to).alias("avg_dl"),
-        F.round(F.percentile("dl", F.lit(0.5)), round_to).alias("p50_dl"),
-        F.round(F.percentile("dl", F.lit(0.95)), round_to).alias("p95_dl"),
-        F.countDistinct("host").alias("host_card"))
+    return j.groupBy("query_id").agg(*_dl_stats(round_to))
 
 
 def search_boosting(spark: SparkSession, index_dir, queries: DataFrame,
@@ -1004,15 +986,12 @@ def search_explain(spark: SparkSession, index_dir, queries: DataFrame,
     the dictionary lookup is a pushed point scan. Returns (query_id,
     rank, docid, term, tf, df, idf_r, tfn_r, contrib_r, score_r)."""
     from ..config import B, K1
-    from .search import (_QueryAnalysis, _chain_stats, _global_df_map,
-                         candidate_segments)
     queries = localize_queries(spark, queries)  # top-k + analysis passes
     top = search_topk(spark, index_dir, queries, k=k, n_ranges=n_ranges)
     if rank_round_to is not None:
         w0 = Window.partitionBy("query_id").orderBy(
             F.desc(F.round("score", rank_round_to)), F.asc("docid"))
         top = top.withColumn("rank", F.row_number().over(w0))
-    dirs = _as_dirs(index_dir)
     # tombstone-corrected stats (N_eff, avgdl_eff, df_eff), the SAME
     # values the retrieval path scores with — explain contributions
     # must sum back to the retrieval score on re-crawl chains too
@@ -1020,27 +999,13 @@ def search_explain(spark: SparkSession, index_dir, queries: DataFrame,
     qa = _QueryAnalysis(spark, queries)
     qterms = qa.qterms_df()
     terms = qa.terms
-    if dead.size:
-        seg = candidate_segments(spark, index_dir, terms)
-        dfm = _global_df_map(spark, index_dir, terms, seg=seg, dead=dead)
-        dfs = local_df(
-            spark,
-            [(t, int(v)) for t, v in sorted(dfm.items())],
-            "term string, df long")
-    else:
-        dfs = None
-        for d in dirs:
-            piece = (read_dictionary(spark, d)
-                     .select("term", "df").filter(F.col("term").isin(terms)))
-            dfs = piece if dfs is None else dfs.unionByName(piece)
-        dfs = dfs.groupBy("term").agg(F.sum("df").cast("long").alias("df"))
+    seg = candidate_segments(spark, index_dir, terms) if dead.size else None
+    dfm = _global_df_map(spark, index_dir, terms, seg=seg, dead=dead)
+    dfs = local_df(spark, sorted(dfm.items()), "term string, df long")
     meta = _doc_meta(spark, index_dir).select("docid", "url", "dl")
     hit = (top.join(meta, "docid")
            .join(docs.select("url", "text"), "url"))
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "[^a-z0-9]+"),
-        lambda t: (t != F.lit("")) & (F.length(t) <= F.lit(64)))
-    tf = (hit.withColumn("term", F.explode(toks))
+    tf = (hit.withColumn("term", F.explode(_tokens("text")))
           .join(F.broadcast(qterms), ["query_id", "term"])
           .groupBy("query_id", "rank", "docid", "score", "dl", "term")
           .agg(F.count("*").cast("long").alias("tf")))
@@ -1086,10 +1051,9 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
     suggestion, edits, doc_count)."""
     from itertools import product
 
-    from .search import search_taat
     out_schema = ("phrase_id long, phrase string, srank long, "
                   "suggestion string, edits long, doc_count long")
-    rows = phrases.select("phrase_id", "phrase").collect()
+    rows = read_query_rows(phrases, "phrase_id", "phrase")
     words = sorted({w for r in rows for w in tokenize(r["phrase"])})
     if not words:
         return spark.createDataFrame([], out_schema)
@@ -1137,9 +1101,8 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
 # registered-set size above which percolate switches from the
 # broadcast nested-loop plan (predicate cost O(|registered|) PER DOC)
 # to term→query candidate pre-selection (cost O(doc's distinct tokens)
-# per doc — the ES percolator-index shape). Env-overridable.
-PERCOLATE_PRESELECT_MIN = int(
-    _os.environ.get("AARHUS_PERCOLATE_PRESELECT_MIN", 4096))
+# per doc — the ES percolator-index shape).
+PERCOLATE_PRESELECT_MIN = 4096
 
 
 def percolate(spark: SparkSession, queries: DataFrame,
@@ -1200,20 +1163,15 @@ def percolate(spark: SparkSession, queries: DataFrame,
     if candidate_preselect:
         return _percolate_preselect(spark, qv, docs)
 
-    def _tok(col):
-        return F.filter(
-            F.split(F.lower(col), "[^a-z0-9]+"),
-            lambda t: (t != F.lit("")) & (F.length(t) <= F.lit(64)))
-
-    d = docs.select("url", F.array_distinct(_tok(F.col("text")))
+    d = docs.select("url", F.array_distinct(_tokens("text"))
                     .alias("tarr"),
                     F.concat(F.lit(" "),
-                             F.concat_ws(" ", _tok(F.col("text"))),
+                             F.concat_ws(" ", _tokens("text")),
                              F.lit(" ")).alias("hay"))
 
     term_q = (queries.filter(F.col("kind").isin("must", "msm"))
               .select("query_id", "kind", "msm",
-                      F.array_distinct(_tok(F.col("qtext")))
+                      F.array_distinct(_tokens("qtext"))
                       .alias("qarr")))
     need = (F.when(F.col("kind") == "must", F.size("qarr"))
             .otherwise(F.col("msm")))
@@ -1225,7 +1183,7 @@ def percolate(spark: SparkSession, queries: DataFrame,
     phrase_q = (queries.filter(F.col("kind") == "phrase")
                 .select("query_id", "kind",
                         F.concat(F.lit(" "),
-                                 F.concat_ws(" ", _tok(F.col("qtext"))),
+                                 F.concat_ws(" ", _tokens("qtext")),
                                  F.lit(" ")).alias("needle")))
     phrase_hits = (d.join(
         F.broadcast(phrase_q), F.col("hay").contains(F.col("needle")))
@@ -1378,13 +1336,5 @@ def global_metric_aggs(spark: SparkSession, index_dir,
     meta = _doc_meta(spark, index_dir).select(
         "docid", "dl",
         F.regexp_extract("url", bucket_regex, 1).alias("host"))
-    g = meta.agg(
-        F.count("*").alias("doc_count"),
-        F.min("dl").alias("min_dl"),
-        F.max("dl").alias("max_dl"),
-        F.sum("dl").alias("sum_dl"),
-        F.round(F.avg("dl"), round_to).alias("avg_dl"),
-        F.round(F.percentile("dl", F.lit(0.5)), round_to).alias("p50_dl"),
-        F.round(F.percentile("dl", F.lit(0.95)), round_to).alias("p95_dl"),
-        F.countDistinct("host").alias("host_card"))
+    g = meta.agg(*_dl_stats(round_to))
     return queries.select("query_id").distinct().crossJoin(F.broadcast(g))

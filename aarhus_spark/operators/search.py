@@ -57,8 +57,8 @@ from ..config import FORMAT_VERSION, TOP_K
 from ..hashing import xxhash64 as spark_xxhash64
 from ..scoring import idf as _idf
 from ..textops import tokenize, tokenize_series
-from .build import (IndexPaths, read_dictionary, read_fragments,
-                    read_segments)
+from .build import (IndexPaths, read_dictionary, read_doclens,
+                    read_fragments, read_segments)
 
 RESULT_SCHEMA = "query_id long, rank int, docid long, score double"
 
@@ -103,6 +103,28 @@ def _arrow_schema(schema: str):
     return to_arrow_schema(_parse_datatype_string(schema))
 
 
+def _check_rows_budget(n: int, what: str) -> None:
+    from ..config import QUERY_ROWS_BUDGET
+    if n > QUERY_ROWS_BUDGET:
+        raise ValueError(
+            f"{n} {what}, past the enforced budget of {QUERY_ROWS_BUDGET} "
+            f"(config.QUERY_ROWS_BUDGET): split the query batch.")
+
+
+def read_query_rows(queries: DataFrame, *cols: str, pandas: bool = False):
+    """The ``cols`` (default: all) of a caller's query frame on the
+    driver, as Rows (``collect``) or as a pandas frame. Query frames
+    are human-scale by contract, and the bound is enforced: at most
+    ``config.QUERY_ROWS_BUDGET + 1`` rows are read, and past the budget
+    this raises. Over a LocalRelation the limit folds into the
+    relation, so the read stays job-free (see :func:`local_df`)."""
+    from ..config import QUERY_ROWS_BUDGET
+    q = (queries.select(*cols) if cols else queries).limit(QUERY_ROWS_BUDGET + 1)
+    rows = q.toPandas() if pandas else q.collect()
+    _check_rows_budget(len(rows), "or more query frame rows read to the driver")
+    return rows
+
+
 def localize_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     """Collect a (human-scale, by contract) queries frame ONCE and
     re-embed it as an Arrow LocalRelation with the same schema.
@@ -113,15 +135,21 @@ def localize_queries(spark: SparkSession, queries: DataFrame) -> DataFrame:
     task wave PER consumer when handed an RDD-backed frame
     (``createDataFrame(list)``); localizing makes every later
     analysis/collect job-free (see :func:`local_df`). Already-local
-    frames pass through untouched, so the common pandas-backed caller
-    pays nothing. Values and schema are identical either way."""
+    frames pass through unread (their row count is still checked
+    against the budget of :func:`read_query_rows`), so the common
+    pandas-backed caller pays nothing. Values and schema are identical
+    either way."""
     try:
         plan = queries._jdf.queryExecution().optimizedPlan()
-        if plan.getClass().getSimpleName() == "LocalRelation":
-            return queries
+        n_local = (plan.data().size()
+                   if plan.getClass().getSimpleName() == "LocalRelation" else None)
     except Exception:  # pragma: no cover — introspection is best-effort
-        pass
-    return spark.createDataFrame(queries.toPandas(), schema=queries.schema)
+        n_local = None
+    if n_local is not None:
+        _check_rows_budget(n_local, "query frame rows")
+        return queries
+    return spark.createDataFrame(read_query_rows(queries, pandas=True),
+                                 schema=queries.schema)
 
 
 # ---------------------------------------------------------------------------
@@ -172,13 +200,13 @@ def load_stats(index_dir: str) -> dict:
 
 class _IndexReaders:
     """One session's readers over one committed index dir: the
-    candidate-row layers and the dictionary as DataFrames (each over a
-    parquet relation whose file listing is taken once, when it is
-    created) and the dir's tombstone rows. Valid for the stats.json
-    commit ``key``; the tombstones carry their own key, the
-    ``tombstones/`` dir's, because ``build_delta`` writes them after
-    stats.json. A cache of readers, not of results: every query still
-    scans the files."""
+    candidate-row layers, the dictionary and the doclens sink as
+    DataFrames (each over a parquet relation whose file listing is
+    taken once, when it is created) and the dir's tombstone rows.
+    Valid for the stats.json commit ``key``; the tombstones carry their
+    own key, the ``tombstones/`` dir's, because ``build_delta`` writes
+    them after stats.json. A cache of readers, not of results: every
+    query still scans the files."""
 
     def __init__(self, spark: SparkSession, index_dir: str, key: tuple):
         self._spark, self._dir, self.key = spark, index_dir, key
@@ -188,6 +216,10 @@ class _IndexReaders:
     @functools.cached_property
     def dictionary(self) -> DataFrame:
         return read_dictionary(self._spark, self._dir)
+
+    @functools.cached_property
+    def doclens(self) -> DataFrame:
+        return read_doclens(self._spark, self._dir)
 
     # The candidate-row layers (build.py merge stage) as segment
     # columns plus the dir's build avgdl (``src_avgdl``: scorers rescale
@@ -490,6 +522,25 @@ def candidate_segments(spark: SparkSession, index_dir, terms: list[str]) -> Data
     return functools.reduce(DataFrame.unionByName, parts)
 
 
+def _dictionaries(spark: SparkSession, index_dir) -> list[DataFrame]:
+    """Each chain dir's (term, df) dictionary reader; a term has one
+    row per dir it occurs in."""
+    return [_readers(spark, d).dictionary.select("term", "df")
+            for d in _as_dirs(index_dir)]
+
+
+def chain_dictionary(spark: SparkSession, index_dir) -> DataFrame:
+    """A chain's (term, df): df summed over the dirs' dictionaries. A
+    single dir's reader is returned as is — its terms are unique, so
+    no aggregation runs. The stored df, not tombstone-corrected (see
+    :func:`_global_df_map` for that)."""
+    dicts = _dictionaries(spark, index_dir)
+    if len(dicts) == 1:
+        return dicts[0]
+    return (functools.reduce(DataFrame.unionByName, dicts)
+            .groupBy("term").agg(F.sum("df").alias("df")))
+
+
 def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
                    seg: DataFrame | None = None,
                    dead: np.ndarray | None = None) -> dict[str, int]:
@@ -509,8 +560,7 @@ def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
     skipped undecoded) and counts dead members per term. Bounded by the
     query terms' postings, like the scorer scan itself."""
     term_in = _sql_in("term", terms)
-    dicts = [_readers(spark, d).dictionary.filter(term_in).select("term", "df")
-             for d in _as_dirs(index_dir)]
+    dicts = [d.filter(term_in) for d in _dictionaries(spark, index_dir)]
     out: dict[str, int] = {}
     for r in functools.reduce(DataFrame.union, dicts).collect():
         out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
@@ -554,9 +604,10 @@ class _QueryAnalysis:
 
     Query lists are driver-known, human-scale inputs (the same
     cardinality class every scorer already closure-captures), so the
-    query columns are read with ONE ``collect`` — job-free over a
-    LocalRelation (:func:`local_df`), unlike an Arrow ``toPandas`` —
-    and analyzed in-process by the identical frozen tokenizer
+    query columns are read with ONE bounded ``collect``
+    (:func:`read_query_rows`) — job-free over a LocalRelation
+    (:func:`local_df`), unlike an Arrow ``toPandas`` — and analyzed
+    in-process by the identical frozen tokenizer
     (``textops.tokenize_series``), into per-clause (query_id, term)
     pandas frames. The build's tokenizer runs over the same strings,
     so query and index terms agree by construction. The dispatcher
@@ -569,7 +620,7 @@ class _QueryAnalysis:
         self._spark = spark
         cols = [c for c in ("query_id", "qtext", "neg_qtext", "must_qtext")
                 if c in queries.columns]
-        qp = pd.DataFrame(queries.select(*cols).collect(), columns=cols)
+        qp = pd.DataFrame(read_query_rows(queries, *cols), columns=cols)
         self.qterms_pdf = self._explode(qp, "qtext")
         self.neg_pdf = (self._explode(qp, "neg_qtext")
                         if "neg_qtext" in qp.columns else None)
@@ -1400,14 +1451,8 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     that doc's docid and therefore joins the range."""
     from pyspark.sql.window import Window
 
-    from ..config import QUERY_ROWS_BUDGET
-
     rows = list(qterms)
-    if len(rows) > QUERY_ROWS_BUDGET:
-        raise ValueError(
-            f"one top-k call dispatches {len(rows)} (query, term) pairs, past the "
-            f"enforced budget of {QUERY_ROWS_BUDGET} (config.QUERY_ROWS_BUDGET): "
-            f"they ride in the plan as one literal map — split the query batch.")
+    _check_rows_budget(len(rows), "(query, term) pairs in one top-k call")
     fan: dict[str, list[dict]] = {}
     for qid, term, *kind in rows:
         fan.setdefault(term, []).append(
@@ -1877,10 +1922,9 @@ def _query_tokens(queries: DataFrame) -> dict[int, list[str]]:
     """Each query's analyzed ``qtext`` tokens, ordered and
     duplicate-keeping (the phrase "the data the" is three constraints
     at offsets 0, 1, 2); rows sharing a query_id concatenate, null or
-    token-less texts add nothing. Read with ``collect``, which runs no
-    job over a LocalRelation (see :func:`local_df`)."""
+    token-less texts add nothing. Read by :func:`read_query_rows`."""
     out: dict[int, list[str]] = {}
-    for r in queries.select("query_id", "qtext").collect():
+    for r in read_query_rows(queries, "query_id", "qtext"):
         toks = tokenize(r["qtext"]) if r["qtext"] is not None else []
         if toks:
             out.setdefault(int(r["query_id"]), []).extend(toks)
@@ -1916,37 +1960,98 @@ def search_phrase(
 
 
 # ---------------------------------------------------------------------------
-# Q12: prefix (wildcard `pre*`) term queries — ES query_string prefix
+# Q12-Q16 term rewrites (prefix, fuzzy, wildcard, regexp): one dictionary
+# scan per call
 # ---------------------------------------------------------------------------
 
 MAX_PREFIX_EXPANSIONS = 1024
 
 
-def _prefix_hi(prefix: str) -> str:
-    """Exclusive upper bound of the prefix's term range: bump the last
-    char (terms are [a-z0-9]+, so +1 of the last code point is safe)."""
-    return prefix[:-1] + chr(ord(prefix[-1]) + 1)
+class _TermCond(NamedTuple):
+    """One query row's rewrite condition on a dictionary ``term``: the
+    term range ``[prefix, prefix⊕1)`` of a literal ``prefix`` (none
+    when empty) AND the SQL predicate ``match`` (none when None). The
+    range is what reaches the parquet scan: the dictionary is written
+    term-SORTED, so row-group min/max stats prune outside it."""
+    prefix: str = ""
+    match: str | None = None
+
+    def range_sql(self) -> str:
+        # exclusive upper bound: the last char bumped (terms are
+        # [a-z0-9]+, so +1 of the last code point is safe)
+        hi = self.prefix[:-1] + chr(ord(self.prefix[-1]) + 1)
+        return f"term >= {_sql_str(self.prefix)} AND term < {_sql_str(hi)}"
+
+    def sql(self) -> str:
+        parts = (([self.range_sql()] if self.prefix else [])
+                 + ([self.match] if self.match is not None else []))
+        return " AND ".join(f"({p})" for p in parts)
 
 
-def _expand_dict_terms(spark: SparkSession, index_dir, cond,
-                       cap: int) -> list[str]:
-    """Shared dictionary-expansion kernel for every term-rewrite query
-    (prefix / fuzzy / wildcard / regexp): scan each chain dir's term
-    dictionary under ``cond`` (a Column predicate — range conditions
-    push to the parquet scan, the dictionary is written term-SORTED so
-    row-group min/max stats prune), sum df across dirs, cap at ``cap``
-    by df desc / term asc — the deterministic analog of ES's rewrite
-    cap (``indices.query.bool.max_clause_count``)."""
-    dirs = _as_dirs(index_dir)
-    dic = None
-    for d in dirs:
-        piece = (_readers(spark, d).dictionary
-                 .select("term", "df").filter(cond))
-        dic = piece if dic is None else dic.unionByName(piece)
-    rows = (dic.groupBy("term").agg(F.sum("df").alias("df"))
-            .orderBy(F.desc("df"), F.asc("term"))
-            .limit(int(cap)).collect())
-    return sorted(r["term"] for r in rows)
+def _expansion_frame(spark: SparkSession, index_dir, conds: list[_TermCond],
+                     cap: int) -> DataFrame:
+    """(qi, term): the capped expansion of every condition ``conds[qi]``
+    from ONE scan of the chain's dictionaries. Each dictionary row is
+    tagged with the indexes of the conditions it meets; when every
+    condition has a literal prefix, the OR of their ranges filters the
+    scan and reaches it as PushedFilters. On a chain df is summed per
+    (qi, term) across the dirs; each qi's terms are ranked by df desc,
+    term asc and cut at ``cap``. The chain's sum and the ranking window
+    share one Exchange on ``qi``."""
+    from pyspark.sql.window import Window
+
+    dicts = _dictionaries(spark, index_dir)
+    dic = functools.reduce(DataFrame.unionByName, dicts)
+    if all(c.prefix for c in conds):
+        dic = dic.filter(" OR ".join(f"({c.range_sql()})" for c in conds))
+    tags = ", ".join(f"IF({c.sql()}, {qi}, NULL)" for qi, c in enumerate(conds))
+    tagged = dic.selectExpr(
+        f"explode(filter(array({tags}), x -> x IS NOT NULL)) AS qi", "term", "df")
+    if len(dicts) > 1:
+        tagged = (tagged.repartition("qi").groupBy("qi", "term")
+                  .agg(F.sum("df").alias("df")))
+    w = Window.partitionBy("qi").orderBy(F.desc("df"), F.asc("term"))
+    return (tagged.withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= int(cap)).select("qi", "term"))
+
+
+def _expand_dict_terms(spark: SparkSession, index_dir, conds: list[_TermCond],
+                       cap: int) -> list[list[str]]:
+    """THE dictionary-expansion kernel of every term-rewrite query:
+    each condition's expanded terms (sorted), from one
+    :func:`_expansion_frame` ``collect`` for the whole call however
+    many rows it carries."""
+    if not conds:
+        return []
+    got: list[list[str]] = [[] for _ in conds]
+    for r in _expansion_frame(spark, index_dir, conds, cap).collect():
+        got[r["qi"]].append(r["term"])
+    return [sorted(g) for g in got]
+
+
+def _search_rewrite(spark: SparkSession, index_dir, queries: DataFrame,
+                    col: str, cond_of, k: int, cap: int,
+                    n_ranges: int | None) -> DataFrame:
+    """THE body of the single-term rewrite ops (Q12, Q13, Q15, Q16):
+    each (query_id, ``col``) row's value becomes a :class:`_TermCond`
+    (``cond_of``, which validates it), all rows expand in one
+    dictionary scan, and each expansion runs as a BM25 disjunction
+    through ``search_topk`` (WAND pruning, chunk-parallel ranges)."""
+    rows = read_query_rows(queries, "query_id", col)
+    exps = _expand_dict_terms(spark, index_dir,
+                              [cond_of(r[col]) for r in rows], cap)
+    qdf = local_df(spark, [(int(r["query_id"]), " ".join(e))
+                           for r, e in zip(rows, exps)],
+                   "query_id long, qtext string")
+    return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)
+
+
+def _prefix_cond(prefix: str) -> _TermCond:
+    p = prefix.strip().lower()
+    if not p or not all("a" <= c <= "z" or "0" <= c <= "9" for c in p):
+        raise ValueError(f"prefix must be a non-empty [a-z0-9]+ string, "
+                         f"got {prefix!r}")
+    return _TermCond(p)
 
 
 def expand_prefix_terms(spark: SparkSession, index_dir, prefix: str,
@@ -1957,12 +2062,7 @@ def expand_prefix_terms(spark: SparkSession, index_dir, prefix: str,
     capped at ``cap`` by df desc / term asc — the deterministic analog
     of ES's rewrite cap (``indices.query.bool.max_clause_count``).
     Multi-dir chains sum df across dirs before the cap."""
-    p = prefix.strip().lower()
-    if not p or not all("a" <= c <= "z" or "0" <= c <= "9" for c in p):
-        raise ValueError(f"prefix must be a non-empty [a-z0-9]+ string, "
-                         f"got {prefix!r}")
-    rng = (F.col("term") >= p) & (F.col("term") < _prefix_hi(p))
-    return _expand_dict_terms(spark, index_dir, rng, cap)
+    return _expand_dict_terms(spark, index_dir, [_prefix_cond(prefix)], cap)[0]
 
 
 def search_prefix(spark: SparkSession, index_dir, queries: DataFrame,
@@ -1971,8 +2071,7 @@ def search_prefix(spark: SparkSession, index_dir, queries: DataFrame,
     """BM25 top-k for prefix queries: each row of ``queries`` is
     (query_id, prefix); the prefix expands against the term dictionary
     (range pushdown, df-capped) and the expanded disjunction runs
-    through the standard engine path (``search_topk`` — WAND pruning,
-    chunk-parallel above the fan-out threshold).
+    through the standard engine path (:func:`_search_rewrite`).
 
     Scoring is ES ``rewrite=scoring_boolean``: expanded terms score as
     a normal BM25 disjunction (each with its own idf). ES's default
@@ -1980,21 +2079,28 @@ def search_prefix(spark: SparkSession, index_dir, queries: DataFrame,
     ranking information and its "score" is just the boost; the
     scoring rewrite is the one with verifiable semantics.
 
-    Driver-side work is one tiny dictionary-range job per distinct
-    prefix (queries per call are human-scale); everything heavy stays
-    in the engine path."""
-    qrows = queries.select("query_id", "prefix").collect()
-    expanded = [(int(r["query_id"]),
-                 " ".join(expand_prefix_terms(spark, index_dir,
-                                              r["prefix"], cap)))
-                for r in qrows]
-    qdf = local_df(spark, expanded, "query_id long, qtext string")
-    return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)
+    Driver-side work is one dictionary scan for all the call's
+    prefixes; everything heavy stays in the engine path."""
+    return _search_rewrite(spark, index_dir, queries, "prefix", _prefix_cond,
+                           k, cap, n_ranges)
 
 
 # ---------------------------------------------------------------------------
 # Q13: fuzzy term queries (ES query_string `word~N`)
 # ---------------------------------------------------------------------------
+
+def _fuzzy_cond(term: str, max_edits: int) -> _TermCond:
+    t = term.strip().lower()
+    if not t or not all("a" <= c <= "z" or "0" <= c <= "9" for c in t):
+        raise ValueError(f"fuzzy term must be a non-empty [a-z0-9]+ string, "
+                         f"got {term!r}")
+    if max_edits not in (0, 1, 2):
+        raise ValueError("max_edits must be 0, 1 or 2 (ES fuzziness)")
+    # a cheap length pre-filter ahead of the levenshtein
+    return _TermCond(match=(
+        f"length(term) BETWEEN {len(t) - max_edits} AND {len(t) + max_edits} "
+        f"AND levenshtein(term, {_sql_str(t)}) <= {max_edits}"))
+
 
 def expand_fuzzy_terms(spark: SparkSession, index_dir, term: str,
                        max_edits: int = 2,
@@ -2005,17 +2111,8 @@ def expand_fuzzy_terms(spark: SparkSession, index_dir, term: str,
     a full |vocabulary| scan like Lucene's FST automaton walk, over the
     engine's smallest table; capped by df desc / term asc like the
     prefix rewrite."""
-    t = term.strip().lower()
-    if not t or not all("a" <= c <= "z" or "0" <= c <= "9" for c in t):
-        raise ValueError(f"fuzzy term must be a non-empty [a-z0-9]+ string, "
-                         f"got {term!r}")
-    if max_edits not in (0, 1, 2):
-        raise ValueError("max_edits must be 0, 1 or 2 (ES fuzziness)")
-    # cheap length pre-filter IS pushable; levenshtein isn't
-    cond = ((F.length("term") >= len(t) - max_edits)
-            & (F.length("term") <= len(t) + max_edits)
-            & (F.levenshtein(F.col("term"), F.lit(t)) <= max_edits))
-    return _expand_dict_terms(spark, index_dir, cond, cap)
+    return _expand_dict_terms(spark, index_dir, [_fuzzy_cond(term, max_edits)],
+                              cap)[0]
 
 
 def search_fuzzy(spark: SparkSession, index_dir, queries: DataFrame,
@@ -2028,13 +2125,8 @@ def search_fuzzy(spark: SparkSession, index_dir, queries: DataFrame,
     normal BM25 disjunction through the standard engine path
     (rewrite=scoring_boolean — same declared choice as
     :func:`search_prefix`)."""
-    qrows = queries.select("query_id", "fterm").collect()
-    expanded = [(int(r["query_id"]),
-                 " ".join(expand_fuzzy_terms(spark, index_dir, r["fterm"],
-                                             max_edits, cap)))
-                for r in qrows]
-    qdf = local_df(spark, expanded, "query_id long, qtext string")
-    return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)
+    return _search_rewrite(spark, index_dir, queries, "fterm",
+                           lambda t: _fuzzy_cond(t, max_edits), k, cap, n_ranges)
 
 
 # ---------------------------------------------------------------------------
@@ -2086,24 +2178,25 @@ def search_phrase_prefix(
     max_expansions: int = MAX_PHRASE_PREFIX_EXPANSIONS,
 ) -> DataFrame:
     """ES ``match_phrase_prefix`` top-k: the query text analyzes to a
-    phrase whose LAST token is a prefix; the prefix expands against the
-    term dictionary (range-pushdown scan, df-desc cap ``max_expansions``
-    — ES default 50) and a doc matches iff the exact sequence
-    ``fixed + [e]`` occurs for some expansion e. Ranking contract in
-    :func:`_phrase_prefix_match`. Dispatches like
+    phrase whose LAST token is a prefix; every query's prefix expands
+    in one dictionary scan (range pushdown, df-desc cap
+    ``max_expansions`` — ES default 50) and a doc matches iff the exact
+    sequence ``fixed + [e]`` occurs for some expansion e. Ranking
+    contract in :func:`_phrase_prefix_match`. Dispatches like
     :func:`search_phrase`: single applyInPandas group per query on a
     small index, chunk-parallel docid ranges on a large one (exact —
     a doc's anchors are evaluated inside its one range)."""
-    plans = {qid: (toks[:-1], expand_prefix_terms(spark, index_dir, toks[-1],
-                                                  cap=max_expansions))
-             for qid, toks in _query_tokens(queries).items()}
+    tokens = _query_tokens(queries)
+    exps = dict(zip(tokens, _expand_dict_terms(
+        spark, index_dir, [_prefix_cond(toks[-1]) for toks in tokens.values()],
+        max_expansions)))
     return _positional_topk(
         spark, index_dir,
-        {qid: _PositionalTerms(fixed, [exps])
-         for qid, (fixed, exps) in plans.items()},
+        {qid: _PositionalTerms(toks[:-1], [exps[qid]])
+         for qid, toks in tokens.items()},
         n_ranges, k,
-        lambda qid, inter, per_term: _phrase_prefix_match(*plans[qid], inter,
-                                                          per_term))
+        lambda qid, inter, per_term: _phrase_prefix_match(
+            tokens[qid][:-1], exps[qid], inter, per_term))
 
 
 # ---------------------------------------------------------------------------
@@ -2122,6 +2215,18 @@ def _wildcard_literal_prefix(pattern: str) -> str:
     return pattern[:i]
 
 
+def _wildcard_cond(pattern: str) -> _TermCond:
+    p = pattern.strip().lower()
+    if not p or any(c not in _TERM_CHARS + "*?" for c in p):
+        raise ValueError(f"wildcard pattern must be a non-empty "
+                         f"[a-z0-9*?]+ string, got {pattern!r}")
+    if all(c in "*?" for c in p):
+        raise ValueError("wildcard pattern needs >=1 literal character "
+                         f"(ES rejects pure-wildcard too), got {pattern!r}")
+    like = p.replace("*", "%").replace("?", "_")
+    return _TermCond(_wildcard_literal_prefix(p), f"term LIKE {_sql_str(like)}")
+
+
 def expand_wildcard_terms(spark: SparkSession, index_dir, pattern: str,
                           cap: int = MAX_PREFIX_EXPANSIONS) -> list[str]:
     """Dictionary expansion for an ES ``wildcard`` pattern over the
@@ -2134,20 +2239,7 @@ def expand_wildcard_terms(spark: SparkSession, index_dir, pattern: str,
     like Q12 prefixes, while leading-wildcard patterns degrade to the
     full (still smallest-table) dictionary scan — the same cost shape
     Lucene documents for its wildcard automata."""
-    p = pattern.strip().lower()
-    if not p or any(c not in _TERM_CHARS + "*?" for c in p):
-        raise ValueError(f"wildcard pattern must be a non-empty "
-                         f"[a-z0-9*?]+ string, got {pattern!r}")
-    if all(c in "*?" for c in p):
-        raise ValueError("wildcard pattern needs >=1 literal character "
-                         f"(ES rejects pure-wildcard too), got {pattern!r}")
-    like = p.replace("*", "%").replace("?", "_")
-    cond = F.col("term").like(like)
-    pfx = _wildcard_literal_prefix(p)
-    if pfx:
-        cond = ((F.col("term") >= pfx)
-                & (F.col("term") < _prefix_hi(pfx)) & cond)
-    return _expand_dict_terms(spark, index_dir, cond, cap)
+    return _expand_dict_terms(spark, index_dir, [_wildcard_cond(pattern)], cap)[0]
 
 
 def search_wildcard(spark: SparkSession, index_dir, queries: DataFrame,
@@ -2160,13 +2252,8 @@ def search_wildcard(spark: SparkSession, index_dir, queries: DataFrame,
     (rewrite=scoring_boolean — the same declared choice as
     :func:`search_prefix`; ES's constant_score rewrite discards
     ranking information)."""
-    qrows = queries.select("query_id", "wpattern").collect()
-    expanded = [(int(r["query_id"]),
-                 " ".join(expand_wildcard_terms(spark, index_dir,
-                                                r["wpattern"], cap)))
-                for r in qrows]
-    qdf = local_df(spark, expanded, "query_id long, qtext string")
-    return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)
+    return _search_rewrite(spark, index_dir, queries, "wpattern",
+                           _wildcard_cond, k, cap, n_ranges)
 
 
 def _regex_literal_prefix(p: str) -> str:
@@ -2196,6 +2283,18 @@ def _regex_literal_prefix(p: str) -> str:
     return p[:max(i, 0)]
 
 
+def _regexp_cond(pattern: str) -> _TermCond:
+    p = pattern.strip().lower()
+    if not p:
+        raise ValueError("regexp pattern must be non-empty")
+    try:
+        re.compile(p)
+    except re.error as e:
+        raise ValueError(f"invalid regexp pattern {pattern!r}: {e}") from e
+    return _TermCond(_regex_literal_prefix(p),
+                     f"term RLIKE {_sql_str(f'^(?:{p})$')}")
+
+
 def expand_regexp_terms(spark: SparkSession, index_dir, pattern: str,
                         cap: int = MAX_PREFIX_EXPANSIONS) -> list[str]:
     """Dictionary expansion for an ES ``regexp`` term query. Matching is
@@ -2206,19 +2305,7 @@ def expand_regexp_terms(spark: SparkSession, index_dir, pattern: str,
     RE2-compatible syntax). A mandatory literal prefix, when one can be
     proven (:func:`_regex_literal_prefix`), pushes a term range to the
     parquet scan like Q12/Q15."""
-    p = pattern.strip().lower()
-    if not p:
-        raise ValueError("regexp pattern must be non-empty")
-    try:
-        re.compile(p)
-    except re.error as e:
-        raise ValueError(f"invalid regexp pattern {pattern!r}: {e}") from e
-    cond = F.col("term").rlike(f"^(?:{p})$")
-    pfx = _regex_literal_prefix(p)
-    if pfx:
-        cond = ((F.col("term") >= pfx)
-                & (F.col("term") < _prefix_hi(pfx)) & cond)
-    return _expand_dict_terms(spark, index_dir, cond, cap)
+    return _expand_dict_terms(spark, index_dir, [_regexp_cond(pattern)], cap)[0]
 
 
 def search_regexp(spark: SparkSession, index_dir, queries: DataFrame,
@@ -2228,13 +2315,8 @@ def search_regexp(spark: SparkSession, index_dir, queries: DataFrame,
     (query_id, rpattern); whole-term regex expansion
     (:func:`expand_regexp_terms`), scored as a BM25 disjunction through
     the standard engine path (rewrite=scoring_boolean)."""
-    qrows = queries.select("query_id", "rpattern").collect()
-    expanded = [(int(r["query_id"]),
-                 " ".join(expand_regexp_terms(spark, index_dir,
-                                              r["rpattern"], cap)))
-                for r in qrows]
-    qdf = local_df(spark, expanded, "query_id long, qtext string")
-    return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)
+    return _search_rewrite(spark, index_dir, queries, "rpattern",
+                           _regexp_cond, k, cap, n_ranges)
 
 
 def search_match_bool_prefix(spark: SparkSession, index_dir,
@@ -2244,24 +2326,20 @@ def search_match_bool_prefix(spark: SparkSession, index_dir,
     """ES ``match_bool_prefix`` — the other search-as-you-type family
     member (Q14's sibling): the analyzed terms become INDEPENDENT bool
     should clauses, the LAST term a prefix (dictionary-expanded — the
-    Q12 range scan, df-desc cap, scoring_boolean rewrite). Unlike
-    ``match_phrase_prefix`` no adjacency is required: ``quick brown
-    f`` matches docs containing ``quick``, ``brown``, or any
-    ``f``-prefixed term ANYWHERE, every matched clause scoring
+    Q12 range scan, df-desc cap, scoring_boolean rewrite; one scan for
+    all rows). Unlike ``match_phrase_prefix`` no adjacency is required:
+    ``quick brown f`` matches docs containing ``quick``, ``brown``, or
+    any ``f``-prefixed term ANYWHERE, every matched clause scoring
     independently (ES default operator OR). The expanded disjunction
     runs through the standard engine path — WAND pruning intact. A
     prefix with no dictionary expansion leaves the fixed terms alone,
     exactly ES's behavior for an unexpandable trailing token."""
-    from ..textops import tokenize
-    qrows = queries.select("query_id", "qtext").collect()
-    expanded = []
-    for r in qrows:
-        toks = tokenize(r["qtext"])
-        if not toks:
-            expanded.append((int(r["query_id"]), ""))
-            continue
-        exp = expand_prefix_terms(spark, index_dir, toks[-1], cap)
-        expanded.append((int(r["query_id"]),
-                         " ".join(sorted(set(toks[:-1]) | set(exp)))))
+    rows = read_query_rows(queries, "query_id", "qtext")
+    toks = [tokenize(r["qtext"]) for r in rows]
+    exps = iter(_expand_dict_terms(spark, index_dir,
+                                   [_prefix_cond(t[-1]) for t in toks if t], cap))
+    expanded = [(int(r["query_id"]),
+                 " ".join(sorted(set(t[:-1]) | set(next(exps)))) if t else "")
+                for r, t in zip(rows, toks)]
     qdf = local_df(spark, expanded, "query_id long, qtext string")
     return search_topk(spark, index_dir, qdf, k=k, n_ranges=n_ranges)

@@ -55,7 +55,8 @@ from pyspark.sql import DataFrame, SparkSession
 from ..config import TOP_K
 from ..textops import tokenize
 from .search import (_exact_anchor_keys, _min_window_flat, _position_keys,
-                     _PositionalTerms, _positional_topk, _sloppy_match)
+                     _PositionalTerms, _positional_topk, _sloppy_match,
+                     read_query_rows)
 
 _MASK32 = np.int64((1 << 32) - 1)
 
@@ -135,7 +136,7 @@ def search_span_near(spark: SparkSession, index_dir, queries: DataFrame,
     """Span-near top-k: each row of ``queries`` is (query_id, qtext);
     the analyzed tokens are the single-term clauses, in clause order.
     Contract in the module docstring. Returns the Q8 result shape."""
-    qrows = queries.select("query_id", "qtext").collect()
+    qrows = read_query_rows(queries, "query_id", "qtext")
     plans = {int(r["query_id"]): _clauses_of(r["qtext"]) for r in qrows}
     return _positional_topk(
         spark, index_dir,
@@ -150,7 +151,7 @@ def search_span_not(spark: SparkSession, index_dir, queries: DataFrame,
     """Span-not top-k: each row of ``queries`` is (query_id, qtext,
     exclude) — qtext the exact include phrase, exclude a single term.
     Contract in the module docstring."""
-    qrows = queries.select("query_id", "qtext", "exclude").collect()
+    qrows = read_query_rows(queries, "query_id", "qtext", "exclude")
     plans, excl = {}, {}
     for r in qrows:
         qid = int(r["query_id"])
@@ -175,7 +176,7 @@ def search_span_first(spark: SparkSession, index_dir, queries: DataFrame,
     """Span-first top-k: each row of ``queries`` is (query_id, qtext)
     with a SINGLE analyzed term; a doc matches iff the term occurs at
     position < ``end`` (0-based). Contract in the module docstring."""
-    qrows = queries.select("query_id", "qtext").collect()
+    qrows = read_query_rows(queries, "query_id", "qtext")
     plans = {}
     for r in qrows:
         toks = tokenize(r["qtext"])
@@ -261,7 +262,7 @@ def search_intervals(spark: SparkSession, index_dir, queries: DataFrame,
     required_groups`), so a rare alternative cannot empty the
     candidate set its group mate covers. Ranked by the Q8 contract:
     disjunctive BM25 over the distinct present alternatives."""
-    qrows = queries.select("query_id", "qtext").collect()
+    qrows = read_query_rows(queries, "query_id", "qtext")
     plans = {int(r["query_id"]): _parse_intervals(r["qtext"])
              for r in qrows}
     return _positional_topk(

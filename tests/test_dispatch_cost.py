@@ -88,3 +88,56 @@ def test_query_rows_budget_raises(spark, idx, monkeypatch):
     for op in (search_topk, search_phrase):
         with pytest.raises(ValueError, match="QUERY_ROWS_BUDGET"):
             op(spark, idx, qdf)
+
+
+def test_query_frame_reads_are_bounded(spark, idx, monkeypatch):
+    """Every read of a caller's query frame stops past the budget:
+    search_taat (and so every ES aggregation) and localize_queries,
+    over a LocalRelation and over an RDD-backed frame alike."""
+    from aarhus_spark import config
+    from aarhus_spark.operators.search import localize_queries, search_taat
+    texts = ["the data", "index of", "merge the"]
+    rdd_backed = spark.createDataFrame(list(enumerate(texts)),
+                                       "query_id long, qtext string")
+    monkeypatch.setattr(config, "QUERY_ROWS_BUDGET", 3)
+    for qdf in (_queries(spark, texts), rdd_backed):
+        assert search_taat(spark, idx, qdf).collect()
+        assert localize_queries(spark, qdf).count() == 3
+    monkeypatch.setattr(config, "QUERY_ROWS_BUDGET", 2)
+    for qdf in (_queries(spark, texts), rdd_backed):
+        with pytest.raises(ValueError, match="QUERY_ROWS_BUDGET"):
+            search_taat(spark, idx, qdf)
+        with pytest.raises(ValueError, match="QUERY_ROWS_BUDGET"):
+            localize_queries(spark, qdf)
+
+
+def test_rewrite_ops_run_the_same_jobs_at_1_and_8_rows(spark, idx):
+    """Every term-rewrite op expands all its query rows in one
+    dictionary scan: its job count does not grow with the rows."""
+    from aarhus_spark.operators import search as S
+    ops = {
+        "prefix": (S.search_prefix, "prefix",
+                   ["qu", "s", "dat", "merge", "in", "th", "zzz", "q"]),
+        "fuzzy": (S.search_fuzzy, "fterm",
+                  ["data", "quary", "vale", "spork", "indx", "the", "zzzz", "merg"]),
+        "wildcard": (S.search_wildcard, "wpattern",
+                     ["quer*", "s?ark*", "*08", "jo?n*", "zz*nope", "d*a", "in*", "t?e"]),
+        "regexp": (S.search_regexp, "rpattern",
+                   ["merge[0-9]*", "(hash|scan)[0-9]{0,2}", "qu.*y2?", "data|doc[0-9]+",
+                    "zzz+nope", "th.*", "s[a-z]+", "i.*"]),
+        "bool_prefix": (S.search_match_bool_prefix, "qtext",
+                        ["the dat", "quick s", "index q", "merge th", "zzz", "of the",
+                         "spark in", "a"]),
+        "phrase_prefix": (S.search_phrase_prefix, "qtext",
+                          ["of the", "the dat", "index q", "merge th", "zzz", "quick s",
+                           "spark in", "a"]),
+    }
+    for name, (op, col, values) in ops.items():
+        jobs = []
+        for n in (1, 8):
+            qdf = S.local_df(spark, list(enumerate(values[:n])),
+                             f"query_id long, {col} string")
+            rows, ids, _ = _traced(spark, lambda: op(spark, idx, qdf))
+            assert rows, (name, n)
+            jobs.append(len(ids))
+        assert jobs[0] == jobs[1] <= 4, (name, jobs)

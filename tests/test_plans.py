@@ -65,8 +65,9 @@ def test_search_uses_broadcast_and_term_pushdown(spark, tmpdir_session, pages_pa
 
 
 def test_tokenize_is_arrow_not_row_python(spark, pages_parquet):
-    from aarhus_spark.operators.build import tokenize_docs, assign_docids
-    docs = assign_docids(spark, prepare_pages(read_pages(spark, pages_parquet)), 3)
+    from aarhus_spark.operators.build import (prepare_and_assign_docids,
+                                              tokenize_docs)
+    docs, _, _ = prepare_and_assign_docids(spark, read_pages(spark, pages_parquet), 3)
     toks = tokenize_docs(docs)
     plan = _plan(toks)
     assert "MapInPandas" in plan

@@ -109,3 +109,22 @@ def test_sql_in_round_trips_quotes_and_backslashes(spark):
     assert sorted(r.thash for r in dl.filter(_sql_in("thash", longs)).collect()) \
         == sorted(int(v) for v in longs)
     assert df.filter(_sql_in("term", [])).count() == 0
+
+
+def test_doclens_reader_reused_per_commit(spark, tmpdir_session):
+    """The doclens reader is built once per commit of a dir and rebuilt
+    when the dir is rebuilt in place."""
+    from aarhus_spark.operators.search import _readers
+    pages = gen_pages(300)
+    pages = pages[~pages["url"].duplicated(keep=False)].reset_index(drop=True)
+    here = os.path.join(tmpdir_session, "rcache_doclens")
+    build_index(spark, spark.createDataFrame(pages.iloc[:100]), here, **BUILD)
+    old = _readers(spark, here).doclens
+    assert _readers(spark, here).doclens is old
+    assert old.count() == load_stats(here)["N"]
+    shutil.rmtree(here)
+    build_index(spark, spark.createDataFrame(pages.iloc[100:]), here, **BUILD)
+    new = _readers(spark, here).doclens
+    assert new is not old
+    assert new.count() == load_stats(here)["N"] > 100
+    assert _readers(spark, here).doclens is new

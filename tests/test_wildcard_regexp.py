@@ -180,3 +180,44 @@ def test_wildcard_range_pushdown_plan(spark, widx):
                    & F.col("term").like("quer%")))
     plan = dic._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan and "GreaterThanOrEqual(term" in plan
+
+
+def _dictionary_scans(df) -> list[str]:
+    """PushedFilters of each parquet scan in ``df``'s physical plan,
+    in full (the plan's string form abbreviates them)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    scans = [leaves.apply(i) for i in range(leaves.size())]
+    scans = [s.metadata() for s in scans
+             if s.getClass().getSimpleName() == "FileSourceScanExec"]
+    assert all("/dictionary" in m.apply("Location") for m in scans)
+    return [m.apply("PushedFilters") for m in scans]
+
+
+def test_expansion_frame_is_one_pushed_scan_per_dir(spark, widx, tmpdir_session):
+    """The engine's own expansion frame for a whole batch of rows reads
+    each chain dir's dictionary once; when every row has a literal
+    term prefix, the scan's PushedFilters carry every row's range."""
+    from aarhus_spark.operators.incremental import build_delta
+    from aarhus_spark.operators.search import (_expansion_frame, _fuzzy_cond,
+                                               _prefix_cond, _regexp_cond,
+                                               _wildcard_cond)
+    pdf, out, _ = widx
+    delta = os.path.join(tmpdir_session, "idx_wild_delta")
+    new = pdf.iloc[:40].copy()
+    new["url"] = new["url"] + "?v=2"
+    build_delta(spark, spark.createDataFrame(new), out, delta,
+                n_partitions=2, n_buckets=2, salts=2)
+    ranged = [_wildcard_cond("quer*"), _prefix_cond("s"),
+              _regexp_cond("merge[0-9]*")]
+    for dirs, n_dirs in ((out, 1), ([out, delta], 2)):
+        pushed = _dictionary_scans(_expansion_frame(spark, dirs, ranged, 1024))
+        assert len(pushed) == n_dirs
+        for filters in pushed:
+            for lo, hi in (("quer", "ques"), ("s", "t"), ("merge", "mergf")):
+                assert (f"And(GreaterThanOrEqual(term,{lo}),LessThan(term,{hi}))"
+                        in filters), filters
+        # a row without a literal prefix: still one scan per dir, unranged
+        pushed = _dictionary_scans(_expansion_frame(
+            spark, dirs, ranged + [_fuzzy_cond("sprk", 1)], 1024))
+        assert len(pushed) == n_dirs
+        assert not any("GreaterThanOrEqual(term" in f for f in pushed), pushed
