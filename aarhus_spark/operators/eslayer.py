@@ -9,7 +9,9 @@ of each, built over the engine's own artifacts:
 
 - :func:`search_matches` — the shared seam: the full scored match set
   (no top-k cut), because ES computes aggs/function_score over ALL
-  matching docs, not the top k.
+  matching docs, not the top k. It runs the retrieval dispatcher and
+  WAND kernel uncut (``search_topk(k=None)``), so hits and aggs score
+  on one path.
 - :func:`search_facets` — ``aggs.terms`` over the url host.
 - :func:`search_date_histogram` — ``aggs.date_histogram`` over
   ``warc_ts`` (calendar truncation, key-asc bucket order).
@@ -64,10 +66,11 @@ of each, built over the engine's own artifacts:
 - :func:`global_metric_aggs` — ES ``global`` agg: the Q25 metric row
   over the WHOLE corpus, attached to every query.
 
-Everything stays JVM-side (built-in column functions); the only
-driver-side work is per-query term selection for MLT (one indexed
-lookup + a tiny dictionary scan — the same shape as the Q12-Q16
-dictionary rewrites).
+Above the match set everything stays JVM-side (built-in column
+functions); the only driver-side work is MLT's term selection for all
+seeds (one read of their texts + one dictionary scan — the same shape
+as the Q12-Q16 dictionary rewrites) and its re-rank of k+1 hits per
+seed.
 """
 
 from __future__ import annotations
@@ -84,11 +87,11 @@ from pyspark.sql.window import Window
 
 from ..config import TOP_K
 from ..textops import tokenize
-from .search import (_as_dirs, _chain_stats, _global_df_map, _QueryAnalysis,
-                     _readers, candidate_segments, chain_dictionary,
-                     load_stats_multi, load_tombstones, local_df,
-                     localize_queries, read_query_rows, search_phrase,
-                     search_taat, search_topk)
+from .search import (RESULT_SCHEMA, _as_dirs, _chain_stats, _global_df_map,
+                     _QueryAnalysis, _readers, candidate_segments,
+                     chain_dictionary, load_stats_multi, load_tombstones,
+                     local_df, localize_queries, read_query_rows,
+                     search_phrase, search_topk)
 
 # url host — same expression in the DuckDB twin (harness)
 HOST_RE = r"^https?://([^/]+)"
@@ -116,14 +119,21 @@ def _dl_stats(round_to: int) -> list[Column]:
 
 def search_matches(spark: SparkSession, index_dir, queries: DataFrame,
                    **bool_kwargs) -> DataFrame:
-    """All matching (query_id, docid, score) for the query set — the
-    TAAT engine path without the final top-k window. Bool-query kwargs
-    (require_all / min_should_match / must_qtext / neg_qtext columns)
-    pass straight through to :func:`search_taat`; tombstoned docs are
-    already excluded there. The result is shuffle-bounded by the
-    postings of the query terms — the same bound as scored retrieval."""
-    return search_taat(spark, index_dir, queries, return_matches=True,
-                       **bool_kwargs)
+    """All matching (query_id, docid, score) for the query set:
+    :func:`search_topk` with ``k=None`` — the per-query WAND kernel
+    with nothing pruned, over ``default_n_ranges`` groups per query.
+    Bool-query kwargs (require_all / min_should_match / score_mode;
+    must_qtext / neg_qtext columns) pass straight through; tombstoned
+    docs are already excluded there. The shuffle carries the encoded
+    posting rows of the query terms — the same bound as retrieval."""
+    return search_topk(spark, index_dir, queries, k=None, **bool_kwargs)
+
+
+def _matches(spark: SparkSession, index_dir, queries: DataFrame,
+             matched: DataFrame | None, bool_kwargs: dict) -> DataFrame:
+    """The match set a caller shares across aggs, else the queries'."""
+    return (matched if matched is not None
+            else search_matches(spark, index_dir, queries, **bool_kwargs))
 
 
 def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
@@ -166,9 +176,7 @@ def search_facets(spark: SparkSession, index_dir, queries: DataFrame,
     docid key, AQE-eligible), then one hash aggregation and a tiny
     per-query window over bucket counts. Returns
     (query_id, bucket, doc_count, brank)."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select(
         "docid", F.regexp_extract("url", bucket_regex, 1).alias("bucket"))
     counts = (matched.join(meta, "docid")
@@ -199,9 +207,7 @@ def search_date_histogram(spark: SparkSession, index_dir,
     Plan shape: identical to :func:`search_facets` — matched set
     equi-joins doclens on docid, one hash agg, a tiny per-query
     window. ``date_trunc`` is a JVM column expression."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select(
         "docid",
         F.date_format(F.date_trunc(interval, "warc_ts"),
@@ -239,12 +245,12 @@ def search_significant_terms(spark: SparkSession, index_dir,
     (the engine's smallest table), a tiny per-query window. All
     JVM-side column functions."""
     if matched is None:
-        # materialized once: TWO branches consume the match set
-        # (fg_size agg + the docterms join). Lazy, the whole TAAT
-        # scoring path would run once per branch — at 180k docs this
-        # op is the heaviest ES agg, so that doubling is the dominant
-        # avoidable cost (callers batching several aggs pass a shared
-        # persisted `matched` instead; this covers the standalone call)
+        # materialized once: the fg_size agg and the docterms join both
+        # consume the match set, which lazily would score twice
+        # (callers batching aggs pass a shared persisted `matched`).
+        # Cluster caveat: an eager localCheckpoint keeps its blocks only
+        # on the executors that computed them, with no lineage, so a
+        # lost executor fails the query instead of recomputing
         matched = search_matches(spark, index_dir, queries,
                                  **bool_kwargs).localCheckpoint(eager=True)
     fg_size = matched.groupBy("query_id").agg(
@@ -337,9 +343,7 @@ def search_function_score(spark: SparkSession, index_dir,
     low-BM25 but recent doc can enter the top k). The decay is one
     JVM column expression on the matched set joined with doclens —
     no extra decode, no Python."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select("docid", "warc_ts")
     age = (F.abs(F.unix_timestamp("warc_ts")
                  - F.unix_timestamp(F.lit(origin))) / F.lit(86400.0))
@@ -368,9 +372,7 @@ def search_page(spark: SparkSession, index_dir, queries: DataFrame,
     ``round_to`` ranks and compares on round(score, round_to) instead
     of the raw double — the sort-key choice the harness twin uses so
     an FP-summation-order difference can never flip a page boundary."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     key = (F.round(F.col("score"), round_to) if round_to is not None
            else F.col("score"))
     matched = matched.withColumn("__key", key)
@@ -463,18 +465,32 @@ def mlt_select_terms(spark: SparkSession, index_dir, seed_text: str,
     cut-off term. df comes from the dictionary with a ``term IN``
     pushdown; N from the stats sink. Returns the selected terms
     sorted."""
-    tf = Counter(tokenize(seed_text))
-    cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
-    if not cand:
-        return []
+    return _mlt_select_many(spark, index_dir, [seed_text], max_query_terms,
+                            min_term_freq, min_doc_freq)[0]
+
+
+def _mlt_select_many(spark: SparkSession, index_dir, seed_texts: list[str],
+                     max_query_terms: int, min_term_freq: int = 1,
+                     min_doc_freq: int = 1) -> list[list[str]]:
+    """:func:`mlt_select_terms` for every seed text, from ONE
+    dictionary lookup over the union of their candidate terms."""
+    tfs = [Counter(tokenize(text)) for text in seed_texts]
+    cands = [sorted(t for t, c in tf.items() if c >= min_term_freq)
+             for tf in tfs]
+    union = sorted(set().union(*cands))
+    if not union:
+        return [[] for _ in seed_texts]
     n_docs, _, _ = load_stats_multi(_as_dirs(index_dir))
-    dfm = _global_df_map(spark, index_dir, cand)
-    # max(min_doc_freq, 1): with min_doc_freq=0 an out-of-dictionary
-    # term would pass the filter and divide by dfm[t] == 0
-    scored = [(t, round(tf[t] * log(1.0 + n_docs / dfm[t]), 9))
-              for t in cand if dfm.get(t, 0) >= max(min_doc_freq, 1)]
-    scored.sort(key=lambda x: (-x[1], x[0]))
-    return sorted(t for t, _ in scored[:max_query_terms])
+    dfm = _global_df_map(spark, index_dir, union)
+    out = []
+    for tf, cand in zip(tfs, cands):
+        # max(min_doc_freq, 1): with min_doc_freq=0 an out-of-dictionary
+        # term would pass the filter and divide by dfm[t] == 0
+        scored = [(t, round(tf[t] * log(1.0 + n_docs / dfm[t]), 9))
+                  for t in cand if dfm.get(t, 0) >= max(min_doc_freq, 1)]
+        scored.sort(key=lambda x: (-x[1], x[0]))
+        out.append(sorted(t for t, _ in scored[:max_query_terms]))
+    return out
 
 
 def more_like_this(spark: SparkSession, index_dir, queries: DataFrame,
@@ -482,39 +498,44 @@ def more_like_this(spark: SparkSession, index_dir, queries: DataFrame,
                    max_query_terms: int = MLT_MAX_QUERY_TERMS,
                    n_ranges: int | None = None) -> DataFrame:
     """ES ``more_like_this`` over url-identified seed docs: each row of
-    ``queries`` is (query_id, like_url); the seed's stored text is
-    fetched from ``docs`` (url-pushdown point lookup), its interesting
-    terms selected (:func:`mlt_select_terms`), and the selection scored
-    as a standard BM25 disjunction through the default engine path —
-    with the seed doc itself excluded from the hits (``include: false``,
-    the ES default). Returns (query_id, rank, docid, score) re-ranked
-    after exclusion."""
+    ``queries`` is (query_id, like_url); every seed's stored text is
+    fetched from ``docs`` in one read (the first row per url), the
+    interesting terms of all seeds selected from one dictionary lookup
+    (:func:`mlt_select_terms`), and each selection scored as a
+    standard BM25 disjunction through the default engine path — with
+    the seed doc itself excluded from the hits (``include: false``,
+    the ES default). Runs at call time; its job count does not grow
+    with the seeds. Returns (query_id, rank, docid, score), re-ranked
+    after exclusion, as a local frame."""
     qrows = read_query_rows(queries, "query_id", "like_url")
-    meta = _doc_meta(spark, index_dir).select("docid", "url")
-    plans, seeds = [], []
-    for r in qrows:
-        qid, u = int(r["query_id"]), r["like_url"]
-        srow = docs.filter(F.col("url") == u).select("text").head(1)
-        text = srow[0]["text"] if srow else ""
-        terms = mlt_select_terms(spark, index_dir, text or "",
-                                 max_query_terms)
-        plans.append((qid, " ".join(terms)))
-        seeds.append((qid, u))
-    qdf = local_df(spark, plans, "query_id long, qtext string")
-    seed_df = local_df(spark, seeds, "query_id long, url string")
-    seed_ids = (seed_df.join(meta, "url")
-                .select("query_id", F.col("docid").alias("seed_docid")))
-    # k+1 then exclude-and-rerank: the seed can occupy at most one slot
+    seeds = [(int(r["query_id"]), r["like_url"]) for r in qrows]
+    urls = sorted({u for _, u in seeds if u is not None})
+    text_of: dict[str, str] = {}
+    docid_of: dict[str, int] = {}
+    if urls:
+        in_urls = F.col("url").isin(urls)
+        for r in docs.filter(in_urls).select("url", "text").collect():
+            text_of.setdefault(r["url"], r["text"] or "")
+        docid_of = {r["url"]: r["docid"] for r in _doc_meta(spark, index_dir)
+                    .filter(in_urls).select("url", "docid").collect()}
+    selected = _mlt_select_many(spark, index_dir,
+                                [text_of.get(u, "") for _, u in seeds],
+                                max_query_terms)
+    qdf = local_df(spark, [(qid, " ".join(terms)) for (qid, _), terms
+                           in zip(seeds, selected)],
+                   "query_id long, qtext string")
+    # k+1 then exclude-and-rerank on the driver (k+1 rows per query):
+    # the seed can occupy at most one slot, and no window reshuffles
+    # the kernel's output
+    seed_of = {qid: docid_of.get(u) for qid, u in seeds}
     top = search_topk(spark, index_dir, qdf, k=k + 1, n_ranges=n_ranges)
-    kept = (top.join(F.broadcast(seed_ids), "query_id", "left")
-            .filter(F.col("seed_docid").isNull()
-                    | (F.col("docid") != F.col("seed_docid")))
-            .drop("seed_docid"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (kept.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    hits: dict[int, list[tuple[int, float]]] = {}
+    for r in sorted(top.collect(), key=lambda r: (r["query_id"], r["rank"])):
+        if r["docid"] != seed_of.get(r["query_id"]):
+            hits.setdefault(r["query_id"], []).append((r["docid"], r["score"]))
+    return local_df(spark, [(qid, rank, d, sc) for qid, hs in hits.items()
+                            for rank, (d, sc) in enumerate(hs[:k], 1)],
+                    RESULT_SCHEMA)
 
 
 def search_metric_aggs(spark: SparkSession, index_dir, queries: DataFrame,
@@ -543,9 +564,7 @@ def search_metric_aggs(spark: SparkSession, index_dir, queries: DataFrame,
     percentile is a JVM built-in, so the whole agg stays codegen'd.
     Averages/percentiles round to ``round_to`` so a summation-order
     last-ulp can never flip a compared value."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select(
         "docid", "dl", "warc_ts",
         F.regexp_extract("url", bucket_regex, 1).alias("host"))
@@ -682,7 +701,8 @@ def search_top_hits(spark: SparkSession, index_dir, queries: DataFrame,
     if matched is None:
         # materialized once: the bucket-count agg and the hit window
         # both consume the match set (same device as
-        # search_significant_terms — lazy it would score twice)
+        # search_significant_terms — lazy it would score twice; the same
+        # cluster caveat: a lost executor fails the query)
         matched = search_matches(spark, index_dir, queries,
                                  **bool_kwargs).localCheckpoint(eager=True)
     meta = _doc_meta(spark, index_dir).select(
@@ -719,9 +739,7 @@ def search_histogram(spark: SparkSession, index_dir, queries: DataFrame,
     equi-joins the doclens sink on docid (shuffle join, AQE-eligible),
     the bucket key is one JVM expression, then a hash agg and a tiny
     per-query window. Returns (query_id, bucket, doc_count, brank)."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select("docid", "dl")
     counts = (matched.join(meta, "docid")
               .withColumn("bucket", (F.floor(F.col("dl") / interval)
@@ -757,9 +775,7 @@ def search_range_agg(spark: SparkSession, index_dir, queries: DataFrame,
             for i, (key, lo, hi) in enumerate(ranges)]
     rdf = local_df(
         spark, rows, "brank long, bucket string, lo double, hi double")
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select("docid", "dl")
     j = matched.join(meta, "docid")
     cond = ((F.col("lo").isNull() | (F.col("dl") >= F.col("lo")))
@@ -791,9 +807,7 @@ def search_filters_agg(spark: SparkSession, index_dir, queries: DataFrame,
     (bucket, doc_count) rows and a zero-fill left join from the query
     list."""
     names = list(filters)
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir)
     j = matched.join(meta, "docid")
     agg = j.groupBy("query_id").agg(*[
@@ -836,9 +850,7 @@ def search_composite(spark: SparkSession, index_dir, queries: DataFrame,
     k1, k2), the broadcast cursor filter BEFORE the per-query window —
     the window ranks only buckets past the cursor. Returns
     (query_id, k1, k2, doc_count, brank)."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select(
         "docid",
         F.regexp_extract("url", bucket_regex, 1).alias("k1"),
@@ -880,9 +892,7 @@ def search_pipeline_aggs(spark: SparkSession, index_dir,
     hundred rows per query, trivially small whatever the corpus size;
     pipeline aggs in ES likewise run on the reduced buckets, never the
     documents."""
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir).select(
         "docid",
         F.date_format(F.date_trunc(interval, "warc_ts"),
@@ -934,7 +944,8 @@ def search_collapse(spark: SparkSession, index_dir, queries: DataFrame,
     if matched is None:
         # materialized once: the group-representative window and the
         # inner-hits filter both consume the match set (same device as
-        # search_significant_terms — lazy it would score twice)
+        # search_significant_terms — lazy it would score twice; the same
+        # cluster caveat: a lost executor fails the query)
         matched = search_matches(spark, index_dir, queries,
                                  **bool_kwargs).localCheckpoint(eager=True)
     meta = _doc_meta(spark, index_dir).select(
@@ -1034,7 +1045,7 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
     cartesian combinations are scored by REAL index evidence — the
     number of documents matching the WHOLE candidate phrase
     conjunctively, through the engine's own bool.must path
-    (``search_taat(require_all=True)``) — and ranked (doc_count desc,
+    (``search_matches(require_all=True)``) — and ranked (doc_count desc,
     total edits asc, suggestion asc), top ``n_suggestions`` per
     phrase. Combos equal to the input are excluded (ES suggests only
     corrections) and combos with ZERO conjunctive matches are dropped
@@ -1082,8 +1093,7 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
         return spark.createDataFrame([], out_schema)
     qdf = local_df(spark, [(cid, s) for cid, _, _, s, _ in meta],
                    "query_id long, qtext string")
-    counts = (search_taat(spark, index_dir, qdf, require_all=True,
-                          return_matches=True)
+    counts = (search_matches(spark, index_dir, qdf, require_all=True)
               .groupBy("query_id")
               .agg(F.count("*").cast("long").alias("doc_count")))
     mdf = local_df(
@@ -1294,9 +1304,7 @@ def search_adjacency_matrix(spark: SparkSession, index_dir,
     names = list(filters)
     keys = [(names[i], names[j]) for i in range(len(names))
             for j in range(i, len(names))]
-    if matched is None:
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs)
+    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
     meta = _doc_meta(spark, index_dir)
     j = matched.join(meta, "docid")
     cols = []

@@ -610,8 +610,9 @@ class _QueryAnalysis:
     in-process by the identical frozen tokenizer
     (``textops.tokenize_series``), into per-clause (query_id, term)
     pandas frames. The build's tokenizer runs over the same strings,
-    so query and index terms agree by construction. The dispatcher
-    takes the pairs as Python rows (:meth:`kinds_pdf`); only
+    so query and index terms agree by construction. The dispatcher —
+    top-k retrieval and every ES match set alike — takes the pairs as
+    Python rows (:meth:`kinds_pdf`); only the reference path
     ``search_taat`` joins them as frames (:meth:`qterms_df`,
     :meth:`kinds_df`: LocalRelations, each broadcast a Spark job).
     """
@@ -744,57 +745,45 @@ def search_taat(
     require_all: bool = False,
     min_should_match: int | None = None,
     score_mode: str = "bm25",
-    return_matches: bool = False,
 ) -> DataFrame:
     """Distributed top-k. Returns (query_id, rank, docid, score).
 
-    ``return_matches=True`` (round 7) skips the final top-k window and
-    returns the full scored match set (query_id, docid, score) — the
-    seam the ES aggregations layer (operators/eslayer.py: facets,
-    function_score, search_after pagination) hangs off, since ES
-    computes those over ALL matching docs, not the top k.
+    The reference path (Q1→Q4): every posting decodes into a JVM row,
+    joins the broadcast query terms and folds with ``collect_list`` in
+    sorted-term order. Production retrieval and the ES match sets run
+    :func:`search_topk`, which tests pin bit-identical to this fold.
+    Each option below is one more column or predicate on that single
+    aggregation: none adds a shuffle or a second decode.
 
-    ``score_mode="proximity"`` (opt-in, round 7): multiply each doc's
-    BM25 sum by 1/(1 + min_window_width) over the positions of its
-    matched positive terms (contract in :func:`_wand_one_query`). The
-    decode pass additionally carries each (term, doc) posting's
-    position list; the width is computed per (query, doc) from the
-    same collected struct array the fold already aggregates — no extra
-    shuffle — and funnels through the same ``_min_window_flat`` as the
-    WAND path, so the two stay bit-identical (asserted in tests).
+    ``score_mode="proximity"``: multiply each doc's BM25 sum by
+    1/(1 + min_window_width) over the positions of its matched
+    positive terms (contract in :func:`_wand_one_query`); the decode
+    carries each posting's positions into the folded structs.
 
-    ``require_all=True`` is conjunctive (ES ``bool.must``) semantics:
-    a document scores only if it matches EVERY analyzed query term —
-    including out-of-vocabulary terms, which therefore empty the result
-    (exactly ES's behavior for a must-clause on a missing term). The
-    filter is a counting predicate on the same aggregation the
-    disjunctive fold already does: zero extra shuffles.
+    ``require_all=True`` (ES ``bool.must``): a document scores only if
+    it matches EVERY analyzed query term, out-of-vocabulary ones
+    included, which therefore empty the result (ES's behavior for a
+    must-clause on a missing term).
 
-    ``min_should_match=m`` (ES ``bool.should`` + ``minimum_should_match``):
-    a document scores only if it matches at least m distinct analyzed
-    terms; the score sums over the terms it DOES match (standard ES
-    should-clause scoring). Same counting predicate, ``>=`` instead of
-    ``==``. A query with fewer in-vocabulary terms than m empties
-    naturally (an OOV should-clause can never match).
+    ``min_should_match=m`` (ES ``minimum_should_match``): a document
+    scores only if it matches at least m distinct analyzed terms; the
+    score sums over the terms it DOES match. A query with fewer
+    in-vocabulary terms than m empties (an OOV should-clause never
+    matches).
 
-    ``bool.must_not``: a nullable ``neg_qtext`` column on the queries
-    DataFrame is analyzed with the same tokenizer; a document matching
-    ANY excluded term is dropped before ranking and excluded terms
-    contribute nothing to the score (ES non-scoring must_not). One
-    decode pass serves both sides: excluded-term postings join the same
-    decoded stream flagged by ``kind``, so exclusion is a per-(query,
-    doc) flag on the aggregation the disjunctive fold already does —
-    zero extra shuffles, no second decode.
+    ``bool.must_not``: a nullable ``neg_qtext`` column, analyzed with
+    the same tokenizer; a document matching ANY excluded term is
+    dropped and excluded terms score nothing (ES non-scoring
+    must_not). Excluded-term postings ride the decoded stream, flagged
+    by ``kind``.
 
-    ``bool.must`` + should (mixed, round 6): a nullable ``must_qtext``
-    column holds per-query REQUIRED terms — a doc scores only if it
-    matches every analyzed must term (OOV must terms empty the query);
-    ``qtext`` then carries the optional should clauses, gated by
+    ``bool.must`` + should: a nullable ``must_qtext`` column holds
+    per-query REQUIRED terms — a doc scores only if it matches every
+    analyzed must term (OOV must terms empty the query); ``qtext``
+    then carries the optional should clauses, gated by
     ``min_should_match`` (default 0 with a must clause present — the
     ES default). Scores sum over every matched positive term once, in
-    sorted-term fold order (a term in both clauses counts as must).
-    Same single aggregation: clause-split counts are conditional sums
-    over the ``kind`` flag."""
+    sorted-term order (a term in both clauses counts as must)."""
     from pyspark.sql.window import Window
 
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
@@ -805,9 +794,7 @@ def search_taat(
     has_must = qa.must_pdf is not None
     _check_bool_args(require_all, min_should_match, has_must=has_must)
     if not terms and not must_terms:
-        return spark.createDataFrame(
-            [], schema=("query_id long, docid long, score double"
-                        if return_matches else RESULT_SCHEMA))
+        return spark.createDataFrame([], schema=RESULT_SCHEMA)
     has_neg = bool(neg_terms)
     all_terms = qa.all_terms
     seg = candidate_segments(spark, index_dir, all_terms)
@@ -914,8 +901,6 @@ def search_taat(
                               (F.lit(1.0) +
                                _width_of_entries(F.col("cs")).cast("double"))))
     scored = scored.drop("cs")
-    if return_matches:
-        return scored.select("query_id", "docid", "score")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -1082,15 +1067,19 @@ class _BlockScan:
 
 class _TopK:
     """Exact top-k by (score desc, docid asc): a (score, -docid)
-    min-heap whose root score is the pruning threshold ``theta``."""
+    min-heap whose root score is the pruning threshold ``theta``.
+    ``k=None`` keeps every match: it never fills, so ``theta`` stays
+    -inf and nothing is pruned; the matches collect as arrays, ordered
+    once in :meth:`frame`."""
 
-    def __init__(self, k: int):
+    def __init__(self, k: int | None):
         self.k = k
         self.heap: list[tuple[float, int]] = []
+        self.parts: list[tuple[np.ndarray, np.ndarray]] = []
         self.theta = -np.inf
 
     def full(self) -> bool:
-        return len(self.heap) >= self.k
+        return self.k is not None and len(self.heap) >= self.k
 
     def mask(self, docids: np.ndarray, scores: np.ndarray
              ) -> tuple[np.ndarray, np.ndarray]:
@@ -1108,6 +1097,9 @@ class _TopK:
         return docids[keep], scores[keep]
 
     def push(self, docids: np.ndarray, scores: np.ndarray) -> None:
+        if self.k is None:
+            self.parts.append((docids, scores))
+            return
         heap, k = self.heap, self.k
         for d, sc in zip(docids.tolist(), scores.tolist()):
             item = (sc, -d)
@@ -1120,17 +1112,22 @@ class _TopK:
                 self.theta = heap[0][0]
 
     def frame(self, qid: int) -> pd.DataFrame:
-        ranked = sorted(((sc, -nd) for sc, nd in self.heap),
-                        key=lambda x: (-x[0], x[1]))
+        parts = self.parts or [(
+            np.array([-nd for _, nd in self.heap], dtype=np.int64),
+            np.array([sc for sc, _ in self.heap], dtype=np.float64))]
+        docids = np.concatenate([d for d, _ in parts])
+        scores = np.concatenate([sc for _, sc in parts])
+        order = np.lexsort((docids, -scores))
         return pd.DataFrame({
             "query_id": qid,
-            "rank": np.arange(1, len(ranked) + 1, dtype=np.int32),
-            "docid": np.array([d for _, d in ranked], dtype=np.int64),
-            "score": np.array([s for s, _ in ranked], dtype=np.float64),
+            "rank": np.arange(1, order.size + 1, dtype=np.int32),
+            "docid": docids[order],
+            "score": scores[order],
         })
 
 
-def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
+def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float,
+                    k: int | None,
                     dfg: dict | None = None,
                     range_lo: int = 0, range_hi: int | None = None,
                     min_match: int | None = None,
@@ -1142,7 +1139,8 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float, k: int,
     that range are scored (blocks outside are never decoded) — the
     chunk-parallel mode of :func:`_per_query`. Exact within the
     range: a doc's full term set is present in any group that contains
-    rows overlapping its docid.
+    rows overlapping its docid. ``k=None`` scores every match in the
+    range: nothing is pruned (:class:`_TopK`).
 
     ``min_match`` (ES bool semantics on the WAND path): a doc scores
     only if it matches at least ``min_match`` distinct query terms.
@@ -1328,7 +1326,7 @@ def search_topk(
     spark: SparkSession,
     index_dir: str,
     queries: DataFrame,
-    k: int = TOP_K,
+    k: int | None = TOP_K,
     n_ranges: int | None = None,
     require_all: bool = False,
     min_should_match: int | None = None,
@@ -1336,7 +1334,8 @@ def search_topk(
 ) -> DataFrame:
     """THE default query path: per-query exact top-k with block-max
     pruning (:func:`_wand_one_query`), dispatched by
-    :func:`_per_query`. ``n_ranges`` defaults to
+    :func:`_per_query`. ``k=None`` returns every match, unranked, as
+    (query_id, docid, score) — the ES match set. ``n_ranges`` defaults to
     :func:`default_n_ranges` of the chain's raw N: one range → one
     applyInPandas group per query (small index fast path, no merge
     stage; the gathered rows are per-term encoded bytes, tiny relative
@@ -1359,7 +1358,8 @@ def search_topk(
     _check_bool_args(require_all, min_should_match,
                      has_must=must_by_q is not None)
     if not qa.terms and not qa.must_terms:
-        return spark.createDataFrame([], schema=RESULT_SCHEMA)
+        empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
+        return empty if k is not None else empty.drop("rank")
     all_terms = qa.all_terms
     seg = candidate_segments(spark, index_dir, all_terms)
     dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
@@ -1375,8 +1375,9 @@ def search_topk(
                                n_must=len(mt or ()), dead=dead,
                                score_mode=score_mode)
 
-    return _per_query(spark, seg, qa.kinds_pdf().itertuples(index=False, name=None),
+    hits = _per_query(spark, seg, qa.kinds_pdf().itertuples(index=False, name=None),
                       _as_dirs(index_dir), n_ranges, k, kernel)
+    return hits if k is not None else hits.drop("rank")
 
 
 def search_wand(spark: SparkSession, index_dir: str, queries: DataFrame,
@@ -1412,7 +1413,8 @@ def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
 
 
 def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
-               dirs: list[str], n_ranges: int, k: int, kernel) -> DataFrame:
+               dirs: list[str], n_ranges: int, k: int | None,
+               kernel) -> DataFrame:
     """THE per-query dispatch of every top-k kernel: candidate rows
     ``seg`` fanned out to the queries that hold their term, grouped and
     handed to ``kernel(qid, g, range_lo, range_hi)``, which returns
@@ -1435,7 +1437,9 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     window: global rank by (score desc, docid asc). Exact: every doc's
     docid lies in exactly one range, and every term row whose span
     covers that docid joins the range, so a kernel that only scores
-    docs inside its range sees each doc's full row set once.
+    docs inside its range sees each doc's full row set once. For the
+    same reason ``k=None`` (a match set) needs no merge: the union of
+    the groups' rows is the answer (their ranks are per group).
 
     Range bounds come from the ACTUAL docid domain (per-dir
     docid_offset + N), not [0, n_docs): a delta index queried alone has
@@ -1491,6 +1495,8 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
              .filter("__max_docid >= lo AND first_docid <= hi"))
     cands = (seg_r.repartition(n_parts, "query_id", "rng")
              .groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA))
+    if k is None:
+        return cands
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
     return (cands.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= k)

@@ -52,6 +52,8 @@ def main():
                                                search_wand,
                                                search_wand_ranges)
     from aarhus_spark.operators.eslayer import (search_facets,
+                                                search_function_score,
+                                                search_matches,
                                                 search_metric_aggs,
                                                 search_rescore,
                                                 search_significant_terms)
@@ -65,6 +67,9 @@ def main():
         "search_facets": lambda: search_facets(spark, idx_dir, qdf,
                                                n_buckets=8),
         "search_metric_aggs": lambda: search_metric_aggs(spark, idx_dir, qdf),
+        "search_matches": lambda: search_matches(spark, idx_dir, qdf),
+        "search_function_score": lambda: search_function_score(
+            spark, idx_dir, qdf),
         "search_rescore": lambda: search_rescore(spark, idx_dir, ph,
                                                  window_size=50, k=10),
         "search_sigterms": lambda: search_significant_terms(

@@ -1,6 +1,8 @@
 """What one dispatched top-k call costs Spark: its job count and the
 width of its kernel stage, read from the status tracker under a job
-group, and the bound on the (query, term) pairs a call may dispatch."""
+group, and the bound on the (query, term) pairs a call may dispatch.
+The ES match set is such a call too, and the ES ops over it run a
+fixed number of jobs."""
 
 import os
 import uuid
@@ -19,6 +21,24 @@ def idx(spark, tmpdir_session):
     build_index(spark, spark.createDataFrame(gen_pages(200)), out,
                 n_partitions=2, n_buckets=2, salts=2)
     return out
+
+
+@pytest.fixture(scope="module")
+def chain(spark, idx, tmpdir_session):
+    """``idx`` plus a delta that re-crawls every 10th url, tombstoning
+    the base versions."""
+    import pandas as pd
+    from aarhus_spark.operators.incremental import build_delta
+    from aarhus_spark.sources.fixtures import gen_pages
+    pdf = gen_pages(200)
+    rec = pdf[pdf["url"].isin(sorted(set(pdf["url"]))[::10])]
+    rec = rec.sort_values(["url", "warc_ts"]).drop_duplicates("url", keep="last")
+    rec = rec.assign(text=rec["text"].fillna("") + " recrawled revision",
+                     html=None, warc_ts=rec["warc_ts"] + pd.Timedelta(days=2))
+    delta = os.path.join(tmpdir_session, "idx_dispatch_cost_delta")
+    build_delta(spark, spark.createDataFrame(rec), idx, delta,
+                on_recrawl="tombstone", n_partitions=2, n_buckets=2, salts=2)
+    return [idx, delta]
 
 
 def _queries(spark, texts):
@@ -141,3 +161,45 @@ def test_rewrite_ops_run_the_same_jobs_at_1_and_8_rows(spark, idx):
             assert rows, (name, n)
             jobs.append(len(ids))
         assert jobs[0] == jobs[1] <= 4, (name, jobs)
+
+
+def test_match_set_ops_run_fixed_jobs(spark, idx):
+    """The ES match set is one dispatched call (search_topk with
+    k=None): 2 jobs, as for top-k. The aggregations over it add only
+    their own join and agg stages. Over the TAAT match set these ran
+    3, 6, 6 and 5 jobs."""
+    from aarhus_spark.operators import eslayer as E
+    terms = _queries(spark, ["the data", "index of", "merge the", "to in"])
+    calls = {
+        "matches": (lambda: E.search_matches(spark, idx, terms), 2),
+        "facets": (lambda: E.search_facets(spark, idx, terms), 5),
+        "metric_aggs": (lambda: E.search_metric_aggs(spark, idx, terms), 5),
+        "function_score": (lambda: E.search_function_score(spark, idx, terms),
+                           4),
+    }
+    for name, (plan, want) in calls.items():
+        _traced(spark, plan)   # the first call also fills the reader cache
+        rows, jobs, _ = _traced(spark, plan)
+        assert rows, name
+        assert len(jobs) == want, (name, jobs)
+
+
+def test_more_like_this_jobs_do_not_grow_with_seeds(spark, idx, chain):
+    """All seeds' texts come from one read of ``docs`` and their terms
+    from one dictionary lookup, on one dir and on a chain alike."""
+    from aarhus_spark.operators.eslayer import more_like_this
+    from aarhus_spark.sources.fixtures import gen_pages
+    from aarhus_spark.operators.search import local_df
+    pdf = gen_pages(200)
+    docs = spark.createDataFrame(pdf[["url", "text"]].fillna(""))
+    urls = sorted(set(pdf["url"]))[1:3]
+    for index_dir in (idx, chain):
+        jobs = []
+        for n in (1, 1, 2):   # the first call also fills the reader cache
+            seeds = local_df(spark, list(enumerate(urls[:n])),
+                             "query_id long, like_url string")
+            rows, ids, _ = _traced(spark, lambda: more_like_this(
+                spark, index_dir, seeds, docs))
+            assert {r["query_id"] for r in rows} == set(range(n))
+            jobs.append(len(ids))
+        assert jobs[1] == jobs[2], (index_dir, jobs)

@@ -1,7 +1,9 @@
 """ES layer over a base+tombstone-delta chain (round-8 advice fix):
 _doc_meta must exclude dead docids, global_metric_aggs must aggregate
-live docs only, and search_explain's per-term contributions must sum
-back to the chain retrieval score (tombstone-corrected N_eff/df_eff)."""
+live docs only, search_explain's per-term contributions must sum
+back to the chain retrieval score (tombstone-corrected N_eff/df_eff),
+and the match set every ES aggregation reads equals the reference
+TAAT fold bit for bit, on one dir and on the chain."""
 
 from __future__ import annotations
 
@@ -127,3 +129,50 @@ def test_sigterms_chain_fg_equals_monolithic(spark, es_chain):
     am = a.set_index("term")["fg_df"].to_dict()
     bm = b.set_index("term")["fg_df"].to_dict()
     assert am == bm and len(am) > 0
+
+
+_Q = "query_id long, qtext string"
+_MATCH_CASES = {
+    "plain": ([(0, "the data"), (1, "hash14 join11"), (2, "spark0 merge12")],
+              _Q, {}),
+    "require_all": ([(0, "the data"), (1, "hash14 join11"),
+                     (2, "spark0 merge12")], _Q, {"require_all": True}),
+    "min_should_match": ([(0, "the data of"), (1, "hash14 join11 sort13"),
+                          (2, "spark0")], _Q, {"min_should_match": 2}),
+    "neg_qtext": ([(0, "the data", "of"), (1, "hash14 join11", None),
+                   (2, "spark0 merge12", "zzzznotaterm")],
+                  _Q + ", neg_qtext string", {}),
+    "must_qtext": ([(0, "the data", "of"), (1, "hash14 join11", None),
+                    (2, "spark0", "in")], _Q + ", must_qtext string", {}),
+    "proximity": ([(0, "the data"), (1, "of the in"), (2, "spark0")], _Q,
+                  {"score_mode": "proximity"}),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_MATCH_CASES))
+def test_search_matches_equals_taat_bitwise(spark, es_chain, monkeypatch,
+                                            case):
+    """search_matches (the dispatcher's WAND kernel with k=None) returns
+    the reference TAAT fold's full ranking as (query_id, docid,
+    score.hex), with one group per query and with docid ranges."""
+    from aarhus_spark.operators import search
+    from aarhus_spark.operators.eslayer import search_matches
+    base_dir, delta_dir, _ = es_chain
+    rows, schema, kw = _MATCH_CASES[case]
+    qdf = spark.createDataFrame(rows, schema)
+    assert search.load_tombstones(spark, [base_dir, delta_dir])[0].size
+    for dirs in (base_dir, [base_dir, delta_dir]):
+        n_docs = search.load_stats_multi(search._as_dirs(dirs))[0]
+        taat = sorted((r["query_id"], r["docid"], r["score"].hex()) for r in
+                      search.search_taat(spark, dirs, qdf, k=n_docs,
+                                         **kw).collect())
+        assert len({r[0] for r in taat}) > 1, (case, dirs)
+        dead, _ = search.load_tombstones(spark, search._as_dirs(dirs))
+        assert not {r[1] for r in taat} & set(dead.tolist())
+        for nr in (1, 3):
+            monkeypatch.setattr(search, "default_n_ranges",
+                                lambda n, nr=nr: nr)
+            got = sorted((r["query_id"], r["docid"], r["score"].hex())
+                         for r in search_matches(spark, dirs, qdf,
+                                                 **kw).collect())
+            assert got == taat, (case, dirs, nr)

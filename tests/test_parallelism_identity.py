@@ -77,7 +77,8 @@ def _rows(spark, root: str) -> list[list]:
         "rescore": lambda nr: eslayer.search_rescore(
             spark, text, ph, window_size=20, k=7, rescore_weight=2.0,
             n_ranges=nr),
-        # function_score and matches read the TAAT match set, like taat
+        # function_score and matches fan out through default_n_ranges, so
+        # the nr=3 pass runs the match set's no-merge-window path
         "function_score": lambda nr: eslayer.search_function_score(
             spark, text, qdf, k=7),
         "highlight": lambda nr: eslayer.search_highlight(
