@@ -200,34 +200,6 @@ class IndexPaths:
 
 
 # ---------------------------------------------------------------------------
-# S3/S5 commit protocol seam (pluggable per storage backend)
-# ---------------------------------------------------------------------------
-
-class FragmentCommitter:
-    """Publishes a task-written fragment file or manifest so that resume
-    (and concurrent readers) see either the complete object or nothing.
-
-    The default POSIX implementation relies on atomic rename, which
-    exists on local disks and HDFS-like mounts but NOT on S3-style
-    object stores. For object stores, implement this seam with a
-    manifest-commit protocol instead: upload the data object under its
-    final unique name (uploads are already all-or-nothing), then publish
-    the small manifest JSON last — the manifest IS the commit marker, and
-    resume only trusts buckets whose manifest exists (DESIGN.md §S3).
-    """
-
-    def publish(self, tmp: str, dst: str) -> None:
-        raise NotImplementedError
-
-
-class PosixRenameCommitter(FragmentCommitter):
-    """Atomic-rename commit: correct on POSIX filesystems and HDFS."""
-
-    def publish(self, tmp: str, dst: str) -> None:
-        os.replace(tmp, dst)
-
-
-# ---------------------------------------------------------------------------
 # P1-P5: prepare pages
 # ---------------------------------------------------------------------------
 
@@ -541,8 +513,7 @@ def tokenize_salt_bucket(docs: DataFrame, head_terms: list[str], n_docs: int,
 
 def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
                            head_terms: list[str], n_docs: int, salts: int,
-                           docid_offset: int,
-                           committer: FragmentCommitter | None = None):
+                           docid_offset: int):
     """mapInArrow fn over partitions sorted by
     (bucket, xxhash64(term), term, docid) — equal-term runs contiguous,
     term ORDER within a bucket is hash-scattered (the external sort's
@@ -582,7 +553,7 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
             # tmp name carries the task ATTEMPT id: with speculative
             # execution or a zombie attempt, two attempts of the same
             # partition must never interleave writes into one file —
-            # each publishes its own complete tmp via the committer
+            # each publishes its own complete tmp with one os.replace
             from pyspark import TaskContext
             tc = TaskContext.get()
             att = tc.taskAttemptId() if tc is not None else 0
@@ -621,7 +592,7 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
                 self.writer.close()
                 # data object first, manifest (= commit marker) LAST:
                 # resume only trusts buckets whose manifest exists
-                _commit.publish(self.tmp, os.path.join(self.dir, "part-0.parquet"))
+                os.replace(self.tmp, os.path.join(self.dir, "part-0.parquet"))
             wall = time.time() - self.t0
             man = {"bucket": self.bucket, "rows": self.rows_in,
                    "postings": self.postings, "fragments": self.frag_rows,
@@ -630,7 +601,7 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
             dst = os.path.join(manifests_dir, f"bucket-{self.bucket}.json")
             with open(self.man_tmp, "w") as f:
                 json.dump(man, f)
-            _commit.publish(self.man_tmp, dst)  # idempotent under task retry
+            os.replace(self.man_tmp, dst)  # idempotent under task retry
             # sweep sibling tmp files left by failed/zombie/speculative
             # attempts of THIS bucket (dot-prefixed, so readers already
             # ignore them — this only stops the disk leak across retries
@@ -651,7 +622,6 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
             return man
 
     head_set = frozenset(head_terms)
-    _commit = committer or PosixRenameCommitter()
 
     def encode(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         # trailing (term, salt) run awaiting continuation in the next
@@ -889,7 +859,6 @@ def build_index(
     max_postings_per_row: int = MAX_POSTINGS_PER_ROW,
     resume: bool = False,
     docid_offset: int = 0,
-    committer: FragmentCommitter | None = None,
 ) -> dict:
     """Run the full build; returns the stats dict (also written to
     stats.json). ``resume=True`` recomputes only fragment buckets whose
@@ -1023,7 +992,7 @@ def build_index(
     n_terms, has_head = encode_merge_finalize(
         spark, salted, paths, avgdl=avgdl, head_terms=head_terms, n_docs=n_docs,
         salts=salts, n_buckets=n_buckets, max_postings_per_row=max_postings_per_row,
-        docid_offset=docid_offset, resume=resume, committer=committer, stage=stage)
+        docid_offset=docid_offset, resume=resume, stage=stage)
 
     # --- S4/S6 stats + metrics ---
     stats = {
@@ -1067,7 +1036,6 @@ def encode_merge_finalize(
     max_postings_per_row: int,
     docid_offset: int,
     resume: bool,
-    committer: FragmentCommitter | None,
     stage,
 ) -> tuple[int, bool]:
     """The shared back half of every index-producing job (build_index
@@ -1106,8 +1074,7 @@ def encode_merge_finalize(
             # (same hash function, sorted order — see FRAG_PA_SCHEMA).
             .sortWithinPartitions("bucket", F.xxhash64("term"), "term", "docid")
             .mapInArrow(_make_fragment_encoder(avgdl, paths.fragments, paths.manifests,
-                                               head_terms, n_docs, salts, docid_offset,
-                                               committer=committer),
+                                               head_terms, n_docs, salts, docid_offset),
                         schema=FRAGMENT_SUMMARY_SCHEMA)
         ).collect()  # tiny: one row per bucket; forces execution
     else:

@@ -51,9 +51,8 @@ from pyspark.sql import functions as F
 from ..codec import decode_blocks_pos_bytes
 from ..config import (BLOCK_SIZE, FORMAT_VERSION, HEAD_DF_QUANTILE,
                       MAX_POSTINGS_PER_ROW, SALTS)
-from .build import (FragmentCommitter, IndexPaths, _salt_of, byte_runs,
-                    encode_merge_finalize, read_dictionary, read_doclens,
-                    read_fragments)
+from .build import (IndexPaths, _salt_of, byte_runs, encode_merge_finalize,
+                    read_dictionary, read_doclens, read_fragments)
 
 # per-posting (format v4): posb = the posting's pre-encoded positions
 TOKENS_SCHEMA = "dir_id int, docid long, term string, tf long, dl long, posb binary"
@@ -205,7 +204,6 @@ def compact_indexes(
     head_df_quantile: float = HEAD_DF_QUANTILE,
     max_postings_per_row: int = MAX_POSTINGS_PER_ROW,
     resume: bool = False,
-    committer: FragmentCommitter | None = None,
 ) -> dict:
     """Merge ``dirs`` (a base+delta chain) into one index at ``out_dir``
     that is bit-equal to a monolithic rebuild over the union corpus.
@@ -331,7 +329,7 @@ def compact_indexes(
     n_terms, has_head = encode_merge_finalize(
         spark, salted, paths, avgdl=avgdl, head_terms=head_terms, n_docs=n_docs,
         salts=salts, n_buckets=n_buckets, max_postings_per_row=max_postings_per_row,
-        docid_offset=0, resume=resume, committer=committer, stage=stage)
+        docid_offset=0, resume=resume, stage=stage)
 
     stats = {
         "format_version": FORMAT_VERSION,

@@ -66,11 +66,15 @@ of each, built over the engine's own artifacts:
 - :func:`global_metric_aggs` — ES ``global`` agg: the Q25 metric row
   over the WHOLE corpus, attached to every query.
 
-Above the match set everything stays JVM-side (built-in column
-functions); the only driver-side work is MLT's term selection for all
-seeds (one read of their texts + one dictionary scan — the same shape
-as the Q12-Q16 dictionary rewrites) and its re-rank of k+1 hits per
-seed.
+Every op above the match set is one skeleton over a few private
+helpers: :func:`_matches` (the shared or fresh match set joined to the
+doc meta), :func:`_counts` (doc_count per query and key),
+:func:`_ranked` (a long rank per query, cut at n) for buckets, and
+``search._top_hits`` (score desc, docid asc) for hits. Above the match
+set everything stays JVM-side (built-in column functions); the only
+driver-side work is MLT's term selection for all seeds (one read of
+their texts + one dictionary scan — the same shape as the Q12-Q16
+dictionary rewrites) and its re-rank of k+1 hits per seed.
 """
 
 from __future__ import annotations
@@ -88,10 +92,11 @@ from pyspark.sql.window import Window
 from ..config import TOP_K
 from ..textops import tokenize
 from .search import (RESULT_SCHEMA, _as_dirs, _chain_stats, _global_df_map,
-                     _QueryAnalysis, _readers, candidate_segments,
-                     chain_dictionary, load_stats_multi, load_tombstones,
-                     local_df, localize_queries, read_query_rows,
-                     search_phrase, search_topk)
+                     _hit_order, _QueryAnalysis, _readers, _score_key,
+                     _top_hits, candidate_segments, chain_dictionary,
+                     load_stats_multi, load_tombstones, local_df,
+                     localize_queries, read_query_rows, search_phrase,
+                     search_topk)
 
 # url host — same expression in the DuckDB twin (harness)
 HOST_RE = r"^https?://([^/]+)"
@@ -129,11 +134,72 @@ def search_matches(spark: SparkSession, index_dir, queries: DataFrame,
     return search_topk(spark, index_dir, queries, k=None, **bool_kwargs)
 
 
+def _with_meta(spark: SparkSession, index_dir, df: DataFrame,
+               *meta_cols) -> DataFrame:
+    """``df`` joined to the live doc meta on docid: ``meta_cols``
+    (names or columns over docid, url, dl, warc_ts), or all of it."""
+    meta = _doc_meta(spark, index_dir)
+    return df.join(meta.select("docid", *meta_cols) if meta_cols else meta,
+                   "docid")
+
+
 def _matches(spark: SparkSession, index_dir, queries: DataFrame,
-             matched: DataFrame | None, bool_kwargs: dict) -> DataFrame:
-    """The match set a caller shares across aggs, else the queries'."""
-    return (matched if matched is not None
-            else search_matches(spark, index_dir, queries, **bool_kwargs))
+             matched: DataFrame | None, bool_kwargs: dict,
+             *meta_cols) -> DataFrame:
+    """The match set a caller shares across aggs, else the queries',
+    joined to the doc meta (:func:`_with_meta`)."""
+    if matched is None:
+        matched = search_matches(spark, index_dir, queries, **bool_kwargs)
+    return _with_meta(spark, index_dir, matched, *meta_cols)
+
+
+def _shared_matches(spark: SparkSession, index_dir, queries: DataFrame,
+                    matched: DataFrame | None, bool_kwargs: dict) -> DataFrame:
+    """The match set of an op that reads it twice: a caller's shared
+    ``matched`` as given, else the queries' materialized once — lazily
+    each read would score it again.
+
+    Cluster caveat: an eager localCheckpoint keeps its blocks only on
+    the executors that computed them, with no lineage, so a lost
+    executor fails the query instead of recomputing."""
+    if matched is not None:
+        return matched
+    return search_matches(spark, index_dir, queries,
+                          **bool_kwargs).localCheckpoint(eager=True)
+
+
+def _counts(j: DataFrame, *keys) -> DataFrame:
+    """doc_count per (query_id, ``keys``)."""
+    return j.groupBy("query_id", *keys).agg(F.count("*").alias("doc_count"))
+
+
+def _ranked(df: DataFrame, name: str, n: int | None, *order,
+            by=("query_id",)) -> DataFrame:
+    """``df`` plus ``name``, a long row number per ``by`` group in
+    ``order``, cut at ``n`` (None keeps all)."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    df = df.withColumn(name, F.row_number().over(w).cast("long"))
+    return df if n is None else df.filter(F.col(name) <= n)
+
+
+def _host(regex: str) -> Column:
+    """Group 1 of ``regex`` over the url — the host by default."""
+    return F.regexp_extract("url", regex, 1)
+
+
+def _calendar(interval: str) -> Column:
+    """The date_histogram key: ``warc_ts`` truncated to the calendar
+    ``interval``, formatted ``yyyy-MM-dd HH:mm:ss`` — engine-portable
+    (no epoch/timezone arithmetic in the compared output; the box and
+    the twin both run UTC)."""
+    return F.date_format(F.date_trunc(interval, "warc_ts"),
+                         "yyyy-MM-dd HH:mm:ss")
+
+
+def _dl_bucket(interval: int) -> Column:
+    """ES's histogram key over doc length: floor(dl / interval) ·
+    interval."""
+    return (F.floor(F.col("dl") / interval) * interval).cast("long")
 
 
 def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
@@ -169,24 +235,12 @@ def search_facets(spark: SparkSession, index_dir, queries: DataFrame,
     ALL matching docs by a url-derived key (``bucket_regex`` group 1 —
     host by default), count per bucket, keep the top ``n_buckets``
     buckets per query by (doc_count desc, bucket asc) — ES's terms-agg
-    ordering with its deterministic key tiebreak.
-
-    Plan shape: matched (query_id, docid, score) equi-joins the doclens
-    sink on docid (both sides large at scale → shuffle join on the
-    docid key, AQE-eligible), then one hash aggregation and a tiny
-    per-query window over bucket counts. Returns
+    ordering with its deterministic key tiebreak. Returns
     (query_id, bucket, doc_count, brank)."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid", F.regexp_extract("url", bucket_regex, 1).alias("bucket"))
-    counts = (matched.join(meta, "docid")
-              .groupBy("query_id", "bucket")
-              .agg(F.count("*").alias("doc_count")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("doc_count"), F.asc("bucket"))
-    return (counts.withColumn("brank", F.row_number().over(w).cast("long"))
-            .filter(F.col("brank") <= n_buckets)
-            .select("query_id", "bucket", "doc_count", "brank"))
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs,
+                 _host(bucket_regex).alias("bucket"))
+    return _ranked(_counts(j, "bucket"), "brank", n_buckets,
+                   F.desc("doc_count"), F.asc("bucket"))
 
 
 def search_date_histogram(spark: SparkSession, index_dir,
@@ -199,26 +253,11 @@ def search_date_histogram(spark: SparkSession, index_dir,
     calendar-truncated crawl timestamp and count per bucket. ES orders
     date_histogram buckets by KEY ascending (unlike the terms agg's
     count-desc) — ``brank`` follows that; empty buckets are omitted
-    (ES ``min_doc_count: 1``). The bucket key is the truncated
-    timestamp formatted ``yyyy-MM-dd HH:mm:ss`` so the value is
-    engine-portable (no epoch/timezone arithmetic in the compared
-    output; the box and the twin both run UTC).
-
-    Plan shape: identical to :func:`search_facets` — matched set
-    equi-joins doclens on docid, one hash agg, a tiny per-query
-    window. ``date_trunc`` is a JVM column expression."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid",
-        F.date_format(F.date_trunc(interval, "warc_ts"),
-                      "yyyy-MM-dd HH:mm:ss").alias("bucket"))
-    counts = (matched.join(meta, "docid")
-              .groupBy("query_id", "bucket")
-              .agg(F.count("*").alias("doc_count")))
-    w = Window.partitionBy("query_id").orderBy(F.asc("bucket"))
-    return (counts.withColumn("brank", F.row_number().over(w).cast("long"))
-            .filter(F.col("brank") <= n_buckets)
-            .select("query_id", "bucket", "doc_count", "brank"))
+    (ES ``min_doc_count: 1``); the key is :func:`_calendar`."""
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs,
+                 _calendar(interval).alias("bucket"))
+    return _ranked(_counts(j, "bucket"), "brank", n_buckets,
+                   F.asc("bucket"))
 
 
 def search_significant_terms(spark: SparkSession, index_dir,
@@ -242,21 +281,14 @@ def search_significant_terms(spark: SparkSession, index_dir,
     by the match set — the bound ES itself pays), one explode of the
     per-doc DISTINCT token array, a hash agg on (query_id, term), a
     broadcast of per-query fg sizes, an equi-join with the dictionary
-    (the engine's smallest table), a tiny per-query window. All
-    JVM-side column functions."""
-    if matched is None:
-        # materialized once: the fg_size agg and the docterms join both
-        # consume the match set, which lazily would score twice
-        # (callers batching aggs pass a shared persisted `matched`).
-        # Cluster caveat: an eager localCheckpoint keeps its blocks only
-        # on the executors that computed them, with no lineage, so a
-        # lost executor fails the query instead of recomputing
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs).localCheckpoint(eager=True)
+    (the engine's smallest table). All JVM-side column functions."""
+    # the fg_size agg and the docterms join both read the match set
+    matched = _shared_matches(spark, index_dir, queries, matched,
+                              bool_kwargs)
     fg_size = matched.groupBy("query_id").agg(
         F.count("*").alias("fg_size"))
-    meta = _doc_meta(spark, index_dir).select("docid", "url")
-    docterms = (matched.join(meta, "docid")
+    docterms = (_matches(spark, index_dir, queries, matched, bool_kwargs,
+                         "url")
                 .join(docs.select("url", "text"), "url")
                 .select("query_id",
                         F.explode(F.array_distinct(_tokens("text"))).alias("term")))
@@ -274,10 +306,7 @@ def search_significant_terms(spark: SparkSession, index_dir,
     scored = (fg.join(F.broadcast(fg_size), "query_id")
               .join(dic, "term")
               .withColumn("score", score))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("term"))
-    return (scored.withColumn("srank", F.row_number().over(w).cast("long"))
-            .filter(F.col("srank") <= n_terms)
+    return (_ranked(scored, "srank", n_terms, F.desc("score"), F.asc("term"))
             .select("query_id", "srank", "term", "fg_df", "bg_df", "score"))
 
 
@@ -321,10 +350,8 @@ def suggest_terms(spark: SparkSession, index_dir, words: DataFrame,
         cand = cand.filter(F.col("own_df") == 0)
     elif suggest_mode == "popular":
         cand = cand.filter(F.col("df") > F.col("own_df"))
-    win = Window.partitionBy("word_id").orderBy(
-        F.asc("distance"), F.desc("df"), F.asc("term"))
-    return (cand.withColumn("srank", F.row_number().over(win).cast("long"))
-            .filter(F.col("srank") <= n_suggestions)
+    return (_ranked(cand, "srank", n_suggestions, F.asc("distance"),
+                    F.desc("df"), F.asc("term"), by=("word_id",))
             .select("word_id", "word", "srank", "term",
                     F.col("distance").cast("long").alias("distance"), "df"))
 
@@ -343,18 +370,11 @@ def search_function_score(spark: SparkSession, index_dir,
     low-BM25 but recent doc can enter the top k). The decay is one
     JVM column expression on the matched set joined with doclens —
     no extra decode, no Python."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select("docid", "warc_ts")
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs, "warc_ts")
     age = (F.abs(F.unix_timestamp("warc_ts")
                  - F.unix_timestamp(F.lit(origin))) / F.lit(86400.0))
     mult = F.pow(F.lit(float(decay)), age / F.lit(float(scale_days)))
-    scored = (matched.join(meta, "docid")
-              .withColumn("score", F.col("score") * mult))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _top_hits(j.withColumn("score", F.col("score") * mult), k)
 
 
 def search_page(spark: SparkSession, index_dir, queries: DataFrame,
@@ -369,27 +389,22 @@ def search_page(spark: SparkSession, index_dir, queries: DataFrame,
     pages never rank what earlier pages already returned — the same
     reason ES deprecated from+size for deep paging.
 
-    ``round_to`` ranks and compares on round(score, round_to) instead
-    of the raw double — the sort-key choice the harness twin uses so
-    an FP-summation-order difference can never flip a page boundary."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    key = (F.round(F.col("score"), round_to) if round_to is not None
-           else F.col("score"))
-    matched = matched.withColumn("__key", key)
+    ``round_to`` ranks, compares and returns round(score, round_to)
+    instead of the raw double (:func:`search._score_key`), so an
+    FP-summation-order difference can never flip a page boundary."""
+    if matched is None:
+        matched = search_matches(spark, index_dir, queries, **bool_kwargs)
+    if round_to is not None:
+        matched = matched.withColumn("score", _score_key(round_to))
     if after is not None:
         matched = (
             matched.join(F.broadcast(after), "query_id", "left")
             .filter(F.col("after_score").isNull()
-                    | (F.col("__key") < F.col("after_score"))
-                    | ((F.col("__key") == F.col("after_score"))
+                    | (F.col("score") < F.col("after_score"))
+                    | ((F.col("score") == F.col("after_score"))
                        & (F.col("docid") > F.col("after_docid"))))
             .drop("after_score", "after_docid"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("__key"),
-                                               F.asc("docid"))
-    return (matched.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= page_size)
-            .select("query_id", "rank", "docid",
-                    F.col("__key").alias("score")))
+    return _top_hits(matched, page_size)
 
 
 def search_highlight(spark: SparkSession, index_dir, queries: DataFrame,
@@ -412,17 +427,14 @@ def search_highlight(spark: SparkSession, index_dir, queries: DataFrame,
     queries = localize_queries(spark, queries)  # top-k + analysis passes
     top = search_topk(spark, index_dir, queries, k=k, n_ranges=n_ranges)
     if round_to is not None:
-        w0 = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", round_to)), F.asc("docid"))
-        top = (top.withColumn("rank", F.row_number().over(w0)))
-    meta = _doc_meta(spark, index_dir).select("docid", "url")
+        top = _top_hits(top, None, round_to)
     qa = _QueryAnalysis(spark, queries)
     qarr = local_df(
         spark,
         [(int(q), sorted(set(g))) for q, g in
          qa.qterms_pdf.groupby("query_id")["term"]],
         "query_id long, qterms array<string>")
-    hit = (top.join(meta, "docid")
+    hit = (_with_meta(spark, index_dir, top, "url")
            .join(docs.select("url", "text"), "url")
            .join(F.broadcast(qarr), "query_id"))
     hit = hit.withColumn("toks", _tokens("text"))
@@ -564,11 +576,8 @@ def search_metric_aggs(spark: SparkSession, index_dir, queries: DataFrame,
     percentile is a JVM built-in, so the whole agg stays codegen'd.
     Averages/percentiles round to ``round_to`` so a summation-order
     last-ulp can never flip a compared value."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid", "dl", "warc_ts",
-        F.regexp_extract("url", bucket_regex, 1).alias("host"))
-    j = matched.join(meta, "docid")
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs,
+                 "dl", "warc_ts", _host(bucket_regex).alias("host"))
     if ts_lo is not None:
         j = j.filter(F.col("warc_ts") >= F.to_timestamp(F.lit(ts_lo)))
     if ts_hi is not None:
@@ -588,9 +597,8 @@ def search_boosting(spark: SparkSession, index_dir, queries: DataFrame,
 
     Plan shape: two engine match sets (each shuffle-bounded by its own
     query terms' postings) left-joined on (query_id, docid); the
-    demotion is one JVM CASE expression; then the standard per-query
-    top-k window. Rows with a null ``neg_qtext`` take the plain-BM25
-    path unchanged."""
+    demotion is one JVM CASE expression; then the top-k cut. Rows with
+    a null ``neg_qtext`` take the plain-BM25 path unchanged."""
     queries = localize_queries(spark, queries)  # pos + neg + head passes
     pos = search_matches(spark, index_dir,
                          queries.select("query_id", "qtext"))
@@ -607,11 +615,7 @@ def search_boosting(spark: SparkSession, index_dir, queries: DataFrame,
                                   * F.lit(float(negative_boost)))
                            .otherwise(F.col("score")))
                .drop("__neg"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (pos.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return _top_hits(pos, k)
 
 
 def search_constant_score(spark: SparkSession, index_dir,
@@ -622,12 +626,8 @@ def search_constant_score(spark: SparkSession, index_dir,
     (ES uses it to cache pure filters). Ties break docid asc, so the
     top k are the k smallest matching docids — fully deterministic.
     Bool-query kwargs pass through to the match-set seam."""
-    matched = (search_matches(spark, index_dir, queries, **bool_kwargs)
-               .withColumn("score", F.lit(float(boost))))
-    w = Window.partitionBy("query_id").orderBy(F.asc("docid"))
-    return (matched.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    matched = search_matches(spark, index_dir, queries, **bool_kwargs)
+    return _top_hits(matched.withColumn("score", F.lit(float(boost))), k)
 
 
 def search_rescore(spark: SparkSession, index_dir, queries: DataFrame,
@@ -655,7 +655,7 @@ def search_rescore(spark: SparkSession, index_dir, queries: DataFrame,
     so any phrase hit inside the primary window has phrase-rank ≤ its
     primary rank ≤ window_size — no phrase hit that matters can be
     cut. Plan: two engine top-k's + one (query_id, docid) left join +
-    one window — no extra decode passes."""
+    the top-k cut — no extra decode passes."""
     queries = localize_queries(spark, queries)  # two passes, one collect
     win = search_topk(spark, index_dir, queries, k=window_size,
                       n_ranges=n_ranges)
@@ -667,13 +667,8 @@ def search_rescore(spark: SparkSession, index_dir, queries: DataFrame,
             .withColumn("score",
                         F.lit(float(query_weight)) * F.col("score")
                         + F.lit(float(rescore_weight))
-                        * F.coalesce(F.col("__phscore"), F.lit(0.0)))
-            .drop("__phscore"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                               F.asc("docid"))
-    return (comb.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+                        * F.coalesce(F.col("__phscore"), F.lit(0.0))))
+    return _top_hits(comb, k)
 
 
 def search_top_hits(spark: SparkSession, index_dir, queries: DataFrame,
@@ -689,37 +684,24 @@ def search_top_hits(spark: SparkSession, index_dir, queries: DataFrame,
     "best documents per category" idiom (group hits by host, show the
     3 best per host).
 
-    ``round_to`` ranks hits on ``round(score, round_to)`` — the same
-    cross-engine contract as :func:`search_page` — so an FP
-    summation-order difference can never flip a within-bucket rank.
+    ``round_to`` ranks and returns hits on ``round(score, round_to)``
+    — the same cross-engine contract as :func:`search_page`.
 
     Plan shape: ONE matched-set ⋈ doclens join feeds both the bucket
-    counting agg and the per-(query, bucket) hit window; the bucket
+    counting agg and the per-(query, bucket) hit ranks; the bucket
     top-N join back is a tiny broadcast (n_queries × n_buckets rows).
     Returns (query_id, bucket, doc_count, brank, hrank, docid,
     score)."""
-    if matched is None:
-        # materialized once: the bucket-count agg and the hit window
-        # both consume the match set (same device as
-        # search_significant_terms — lazy it would score twice; the same
-        # cluster caveat: a lost executor fails the query)
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs).localCheckpoint(eager=True)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid", F.regexp_extract("url", bucket_regex, 1).alias("bucket"))
-    key = (F.round(F.col("score"), round_to) if round_to is not None
-           else F.col("score"))
-    bk = matched.join(meta, "docid").withColumn("__key", key)
-    counts = (bk.groupBy("query_id", "bucket")
-              .agg(F.count("*").alias("doc_count")))
-    wb = Window.partitionBy("query_id").orderBy(
-        F.desc("doc_count"), F.asc("bucket"))
-    kept = (counts.withColumn("brank", F.row_number().over(wb).cast("long"))
-            .filter(F.col("brank") <= n_buckets))
-    wh = Window.partitionBy("query_id", "bucket").orderBy(
-        F.desc("__key"), F.asc("docid"))
-    hits = (bk.withColumn("hrank", F.row_number().over(wh).cast("long"))
-            .filter(F.col("hrank") <= k_hits))
+    # the bucket-count agg and the hit ranks both read the match set
+    matched = _shared_matches(spark, index_dir, queries, matched,
+                              bool_kwargs)
+    bk = (_matches(spark, index_dir, queries, matched, bool_kwargs,
+                   _host(bucket_regex).alias("bucket"))
+          .withColumn("__key", _score_key(round_to)))
+    kept = _ranked(_counts(bk, "bucket"), "brank", n_buckets,
+                   F.desc("doc_count"), F.asc("bucket"))
+    hits = _ranked(bk, "hrank", k_hits, *_hit_order("__key"),
+                   by=("query_id", "bucket"))
     return (hits.join(F.broadcast(kept), ["query_id", "bucket"])
             .select("query_id", "bucket", "doc_count", "brank", "hrank",
                     "docid", F.col("__key").alias("score")))
@@ -733,23 +715,11 @@ def search_histogram(spark: SparkSession, index_dir, queries: DataFrame,
     query: fixed-width numeric buckets over the matched docs' doc
     length — ``key = floor(dl / interval) * interval`` (ES's histogram
     key formula), buckets ordered by KEY ascending, empty buckets
-    omitted (``min_doc_count: 1``).
-
-    Plan shape: identical to :func:`search_facets` — the matched set
-    equi-joins the doclens sink on docid (shuffle join, AQE-eligible),
-    the bucket key is one JVM expression, then a hash agg and a tiny
-    per-query window. Returns (query_id, bucket, doc_count, brank)."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select("docid", "dl")
-    counts = (matched.join(meta, "docid")
-              .withColumn("bucket", (F.floor(F.col("dl") / interval)
-                                     * interval).cast("long"))
-              .groupBy("query_id", "bucket")
-              .agg(F.count("*").alias("doc_count")))
-    w = Window.partitionBy("query_id").orderBy(F.asc("bucket"))
-    return (counts.withColumn("brank", F.row_number().over(w).cast("long"))
-            .filter(F.col("brank") <= n_buckets)
-            .select("query_id", "bucket", "doc_count", "brank"))
+    omitted (``min_doc_count: 1``). Returns (query_id, bucket,
+    doc_count, brank)."""
+    j = (_matches(spark, index_dir, queries, matched, bool_kwargs, "dl")
+         .withColumn("bucket", _dl_bucket(interval)))
+    return _ranked(_counts(j, "bucket"), "brank", n_buckets, F.asc("bucket"))
 
 
 def search_range_agg(spark: SparkSession, index_dir, queries: DataFrame,
@@ -775,14 +745,10 @@ def search_range_agg(spark: SparkSession, index_dir, queries: DataFrame,
             for i, (key, lo, hi) in enumerate(ranges)]
     rdf = local_df(
         spark, rows, "brank long, bucket string, lo double, hi double")
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select("docid", "dl")
-    j = matched.join(meta, "docid")
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs, "dl")
     cond = ((F.col("lo").isNull() | (F.col("dl") >= F.col("lo")))
             & (F.col("hi").isNull() | (F.col("dl") < F.col("hi"))))
-    counts = (j.join(F.broadcast(rdf), cond)
-              .groupBy("query_id", "brank", "bucket")
-              .agg(F.count("*").alias("doc_count")))
+    counts = _counts(j.join(F.broadcast(rdf), cond), "brank", "bucket")
     grid = (queries.select("query_id").distinct()
             .crossJoin(F.broadcast(rdf.select("brank", "bucket"))))
     return (grid.join(counts, ["query_id", "brank", "bucket"], "left")
@@ -790,6 +756,34 @@ def search_range_agg(spark: SparkSession, index_dir, queries: DataFrame,
                     F.coalesce("doc_count", F.lit(0)).cast("long")
                     .alias("doc_count"),
                     "brank"))
+
+
+def _named_counts(j: DataFrame, named: list,
+                  grid: DataFrame | None = None) -> DataFrame:
+    """Per query, the count of ``j``'s rows meeting each (name,
+    predicate) of ``named``: ONE codegen'd hash aggregation with a
+    ``sum(CASE WHEN … )`` column per predicate (no per-predicate pass
+    over the match set), then a driver-free unpivot to (query_id,
+    bucket, doc_count, brank) rows, brank = declaration order.
+    ``grid`` (query ids) left-joins ahead of the unpivot, so a query
+    with no rows still reports every bucket, at 0."""
+    cols = [f"__f{i}" for i in range(len(named))]
+    agg = j.groupBy("query_id").agg(*[
+        F.sum(F.when(p, 1).otherwise(0)).cast("long").alias(c)
+        for c, (_, p) in zip(cols, named)])
+    doc_count = F.col("doc_count")
+    if grid is not None:
+        agg = grid.join(agg, "query_id", "left")
+        doc_count = F.coalesce(doc_count, F.lit(0))
+
+    def by_col(vals) -> Column:
+        return F.coalesce(*[F.when(F.col("fidx") == c, F.lit(v))
+                            for c, v in zip(cols, vals)])
+
+    return agg.unpivot(["query_id"], cols, "fidx", "doc_count").select(
+        "query_id", by_col([n for n, _ in named]).alias("bucket"),
+        doc_count.cast("long").alias("doc_count"),
+        by_col(range(1, len(cols) + 1)).cast("long").alias("brank"))
 
 
 def search_filters_agg(spark: SparkSession, index_dir, queries: DataFrame,
@@ -801,32 +795,11 @@ def search_filters_agg(spark: SparkSession, index_dir, queries: DataFrame,
     returned (count 0 included — ES keyed-filters semantics), ``brank``
     = declaration order.
 
-    Plan shape: ONE hash aggregation — each filter becomes a
-    ``sum(CASE WHEN … )`` column in the same codegen'd agg (no
-    per-filter pass over the match set), then a driver-free unpivot to
-    (bucket, doc_count) rows and a zero-fill left join from the query
-    list."""
-    names = list(filters)
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir)
-    j = matched.join(meta, "docid")
-    agg = j.groupBy("query_id").agg(*[
-        F.sum(F.when(F.expr(filters[n]), 1).otherwise(0)).cast("long")
-        .alias(f"__f{i}") for i, n in enumerate(names)])
-    grid = queries.select("query_id").distinct()
-    agg = grid.join(agg, "query_id", "left")
-    stacked = agg.unpivot(
-        ["query_id"], [f"__f{i}" for i in range(len(names))],
-        "fidx", "doc_count")
-    bucket = F.coalesce(*[F.when(F.col("fidx") == f"__f{i}", F.lit(n))
-                          for i, n in enumerate(names)])
-    brank = F.coalesce(*[F.when(F.col("fidx") == f"__f{i}", F.lit(i + 1))
-                         for i in range(len(names))]).cast("long")
-    return stacked.select(
-        "query_id", bucket.alias("bucket"),
-        F.coalesce(F.col("doc_count"), F.lit(0)).cast("long")
-        .alias("doc_count"),
-        brank.alias("brank"))
+    Plan shape: :func:`_named_counts` with a zero-fill left join from
+    the query list."""
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs)
+    return _named_counts(j, [(n, F.expr(p)) for n, p in filters.items()],
+                         grid=queries.select("query_id").distinct())
 
 
 def search_composite(spark: SparkSession, index_dir, queries: DataFrame,
@@ -846,19 +819,13 @@ def search_composite(spark: SparkSession, index_dir, queries: DataFrame,
     start at the first bucket. Both keys are integers/strings, so
     the cursor comparison is exact across engines (no FP).
 
-    Plan shape: one matched⋈doclens join, one hash agg on (query_id,
-    k1, k2), the broadcast cursor filter BEFORE the per-query window —
-    the window ranks only buckets past the cursor. Returns
-    (query_id, k1, k2, doc_count, brank)."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid",
-        F.regexp_extract("url", bucket_regex, 1).alias("k1"),
-        (F.floor(F.col("dl") / interval) * interval).cast("long")
-        .alias("k2"))
-    counts = (matched.join(meta, "docid")
-              .groupBy("query_id", "k1", "k2")
-              .agg(F.count("*").alias("doc_count")))
+    The broadcast cursor filter runs BEFORE the bucket ranks, so only
+    buckets past the cursor are ranked. Returns (query_id, k1, k2,
+    doc_count, brank)."""
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs,
+                 _host(bucket_regex).alias("k1"),
+                 _dl_bucket(interval).alias("k2"))
+    counts = _counts(j, "k1", "k2")
     if after is not None:
         counts = (counts.join(F.broadcast(after), "query_id", "left")
                   .filter(F.col("after_k1").isNull()
@@ -866,10 +833,7 @@ def search_composite(spark: SparkSession, index_dir, queries: DataFrame,
                           | ((F.col("k1") == F.col("after_k1"))
                              & (F.col("k2") > F.col("after_k2"))))
                   .drop("after_k1", "after_k2"))
-    w = Window.partitionBy("query_id").orderBy(F.asc("k1"), F.asc("k2"))
-    return (counts.withColumn("brank", F.row_number().over(w).cast("long"))
-            .filter(F.col("brank") <= page_size)
-            .select("query_id", "k1", "k2", "doc_count", "brank"))
+    return _ranked(counts, "brank", page_size, F.asc("k1"), F.asc("k2"))
 
 
 def search_pipeline_aggs(spark: SparkSession, index_dir,
@@ -887,35 +851,22 @@ def search_pipeline_aggs(spark: SparkSession, index_dir,
     (``None`` keeps all). ``brank`` is the key-asc position the
     pipeline aggs are defined over, ``srank`` the bucket_sort rank.
 
-    Plan shape: the Q22 date-histogram agg (matched ⋈ doclens → hash
-    agg) followed by per-query windows over the BUCKET rows — a few
-    hundred rows per query, trivially small whatever the corpus size;
-    pipeline aggs in ES likewise run on the reduced buckets, never the
-    documents."""
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid",
-        F.date_format(F.date_trunc(interval, "warc_ts"),
-                      "yyyy-MM-dd HH:mm:ss").alias("bucket"))
-    counts = (matched.join(meta, "docid")
-              .groupBy("query_id", "bucket")
-              .agg(F.count("*").alias("doc_count")))
+    The pipeline windows run over the BUCKET rows of the Q22
+    date-histogram agg — a few hundred rows per query whatever the
+    corpus size; pipeline aggs in ES likewise run on the reduced
+    buckets, never the documents."""
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs,
+                 _calendar(interval).alias("bucket"))
     wk = Window.partitionBy("query_id").orderBy(F.asc("bucket"))
     wcum = wk.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ws = Window.partitionBy("query_id").orderBy(
-        F.desc("doc_count"), F.asc("bucket"))
-    res = (counts
+    res = (_counts(j, "bucket")
            .withColumn("cum_sum", F.sum("doc_count").over(wcum)
                        .cast("long"))
            .withColumn("deriv", F.coalesce(
                F.col("doc_count") - F.lag("doc_count", 1).over(wk),
-               F.lit(0)).cast("long"))
-           .withColumn("brank", F.row_number().over(wk).cast("long"))
-           .withColumn("srank", F.row_number().over(ws).cast("long")))
-    if top_n is not None:
-        res = res.filter(F.col("srank") <= top_n)
-    return res.select("query_id", "bucket", "doc_count", "cum_sum",
-                      "deriv", "brank", "srank")
+               F.lit(0)).cast("long")))
+    return _ranked(_ranked(res, "brank", None, F.asc("bucket")), "srank",
+                   top_n, F.desc("doc_count"), F.asc("bucket"))
 
 
 def search_collapse(spark: SparkSession, index_dir, queries: DataFrame,
@@ -933,34 +884,23 @@ def search_collapse(spark: SparkSession, index_dir, queries: DataFrame,
     carries its top ``inner_k`` member hits (``inner_hits``), ranked
     within the group.
 
-    ``round_to`` ranks on the rounded score (the Q19 cross-engine
-    contract). Plan shape: matched ⋈ doclens, ONE per-(query, key)
-    window for both the representative choice and the inner-hit ranks,
-    a per-query window over the representatives only (one row per
-    group — already reduced), and a tiny broadcast join back. Returns
-    (query_id, rank, ckey, hrank, docid, score): rank = the group's
-    position, hrank = the hit's rank inside its group (hrank 1 IS the
-    representative)."""
-    if matched is None:
-        # materialized once: the group-representative window and the
-        # inner-hits filter both consume the match set (same device as
-        # search_significant_terms — lazy it would score twice; the same
-        # cluster caveat: a lost executor fails the query)
-        matched = search_matches(spark, index_dir, queries,
-                                 **bool_kwargs).localCheckpoint(eager=True)
-    meta = _doc_meta(spark, index_dir).select(
-        "docid", F.regexp_extract("url", collapse_regex, 1).alias("ckey"))
-    key = (F.round(F.col("score"), round_to) if round_to is not None
-           else F.col("score"))
-    j = matched.join(meta, "docid").withColumn("__key", key)
-    wg = Window.partitionBy("query_id", "ckey").orderBy(
-        F.desc("__key"), F.asc("docid"))
-    hits = j.withColumn("hrank", F.row_number().over(wg).cast("long"))
-    wq = Window.partitionBy("query_id").orderBy(
-        F.desc("__key"), F.asc("docid"))
-    groups = (hits.filter(F.col("hrank") == 1)
-              .withColumn("rank", F.row_number().over(wq).cast("long"))
-              .filter(F.col("rank") <= k)
+    ``round_to`` ranks and returns the rounded score (the Q19
+    cross-engine contract). ONE per-(query, key) rank serves both the
+    representative choice and the inner-hit ranks; the groups rank
+    over the representatives only (one row per group) and join back
+    as a tiny broadcast. Returns (query_id, rank, ckey, hrank, docid,
+    score): rank = the group's position, hrank = the hit's rank inside
+    its group (hrank 1 IS the representative)."""
+    # the group ranks and the inner hits both read the match set
+    matched = _shared_matches(spark, index_dir, queries, matched,
+                              bool_kwargs)
+    j = (_matches(spark, index_dir, queries, matched, bool_kwargs,
+                  _host(collapse_regex).alias("ckey"))
+         .withColumn("__key", _score_key(round_to)))
+    hits = _ranked(j, "hrank", None, *_hit_order("__key"),
+                   by=("query_id", "ckey"))
+    groups = (_ranked(hits.filter(F.col("hrank") == 1), "rank", k,
+                      *_hit_order("__key"))
               .select("query_id", "ckey", "rank"))
     return (hits.filter(F.col("hrank") <= inner_k)
             .join(F.broadcast(groups), ["query_id", "ckey"])
@@ -1000,9 +940,7 @@ def search_explain(spark: SparkSession, index_dir, queries: DataFrame,
     queries = localize_queries(spark, queries)  # top-k + analysis passes
     top = search_topk(spark, index_dir, queries, k=k, n_ranges=n_ranges)
     if rank_round_to is not None:
-        w0 = Window.partitionBy("query_id").orderBy(
-            F.desc(F.round("score", rank_round_to)), F.asc("docid"))
-        top = top.withColumn("rank", F.row_number().over(w0))
+        top = _top_hits(top, None, rank_round_to)
     # tombstone-corrected stats (N_eff, avgdl_eff, df_eff), the SAME
     # values the retrieval path scores with — explain contributions
     # must sum back to the retrieval score on re-crawl chains too
@@ -1013,8 +951,7 @@ def search_explain(spark: SparkSession, index_dir, queries: DataFrame,
     seg = candidate_segments(spark, index_dir, terms) if dead.size else None
     dfm = _global_df_map(spark, index_dir, terms, seg=seg, dead=dead)
     dfs = local_df(spark, sorted(dfm.items()), "term string, df long")
-    meta = _doc_meta(spark, index_dir).select("docid", "url", "dl")
-    hit = (top.join(meta, "docid")
+    hit = (_with_meta(spark, index_dir, top, "url", "dl")
            .join(docs.select("url", "text"), "url"))
     tf = (hit.withColumn("term", F.explode(_tokens("text")))
           .join(F.broadcast(qterms), ["query_id", "term"])
@@ -1057,7 +994,7 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
     ALL distinct words; evidence is ONE engine query batch (every
     combo a query row — the shuffle is bounded by the candidate
     terms' postings, the same bound as scored retrieval); ranking is
-    a tiny per-phrase window. Driver-side work is only the
+    a tiny per-phrase rank. Driver-side work is only the
     human-scale combo assembly. Returns (phrase_id, phrase, srank,
     suggestion, edits, doc_count)."""
     from itertools import product
@@ -1093,17 +1030,14 @@ def suggest_phrases(spark: SparkSession, index_dir, phrases: DataFrame,
         return spark.createDataFrame([], out_schema)
     qdf = local_df(spark, [(cid, s) for cid, _, _, s, _ in meta],
                    "query_id long, qtext string")
-    counts = (search_matches(spark, index_dir, qdf, require_all=True)
-              .groupBy("query_id")
-              .agg(F.count("*").cast("long").alias("doc_count")))
+    counts = _counts(search_matches(spark, index_dir, qdf, require_all=True))
     mdf = local_df(
         spark, meta, "query_id long, phrase_id long, phrase string, "
                      "suggestion string, edits long")
-    win = Window.partitionBy("phrase_id").orderBy(
-        F.desc("doc_count"), F.asc("edits"), F.asc("suggestion"))
-    return (mdf.join(counts, "query_id")   # inner: zero-evidence combos drop
-            .withColumn("srank", F.row_number().over(win).cast("long"))
-            .filter(F.col("srank") <= n_suggestions)
+    # inner join: zero-evidence combos drop
+    return (_ranked(mdf.join(counts, "query_id"), "srank", n_suggestions,
+                    F.desc("doc_count"), F.asc("edits"), F.asc("suggestion"),
+                    by=("phrase_id",))
             .select("phrase_id", "phrase", "srank", "suggestion",
                     "edits", "doc_count"))
 
@@ -1116,8 +1050,7 @@ PERCOLATE_PRESELECT_MIN = 4096
 
 
 def percolate(spark: SparkSession, queries: DataFrame,
-              docs: DataFrame,
-              candidate_preselect: bool | None = None) -> DataFrame:
+              docs: DataFrame) -> DataFrame:
     """ES *percolate* query — reverse search: match INCOMING documents
     against a set of REGISTERED queries at ingest time (alerting /
     saved-search routing), before anything reaches the index. Each
@@ -1168,9 +1101,7 @@ def percolate(spark: SparkSession, queries: DataFrame,
                 f"registered percolate query {qid_} needs msm >= 1, "
                 f"got {msm_!r}")
 
-    if candidate_preselect is None:
-        candidate_preselect = len(qv) >= PERCOLATE_PRESELECT_MIN
-    if candidate_preselect:
+    if len(qv) >= PERCOLATE_PRESELECT_MIN:
         return _percolate_preselect(spark, qv, docs)
 
     d = docs.select("url", F.array_distinct(_tokens("text"))
@@ -1295,39 +1226,18 @@ def search_adjacency_matrix(spark: SparkSession, index_dir,
     behavior) and buckets order key-asc per query. Predicates are SQL
     expressions over the doc-meta columns, like :func:`search_filters_agg`.
 
-    Plan shape: ONE codegen'd hash aggregation — every single and pair
-    key is a ``sum(CASE WHEN pa AND pb)`` column of the same agg over
-    the matched⋈doclens rows (n(n+1)/2 columns for n filters — ES
-    documents the same quadratic growth and caps n at 100), then a
-    driver-free unpivot. Returns (query_id, bucket, doc_count,
-    brank)."""
+    Plan shape: :func:`_named_counts` — every single and pair key is a
+    ``sum(CASE WHEN pa AND pb)`` column of the same agg (n(n+1)/2
+    columns for n filters — ES documents the same quadratic growth and
+    caps n at 100). Returns (query_id, bucket, doc_count, brank)."""
     names = list(filters)
-    keys = [(names[i], names[j]) for i in range(len(names))
-            for j in range(i, len(names))]
-    matched = _matches(spark, index_dir, queries, matched, bool_kwargs)
-    meta = _doc_meta(spark, index_dir)
-    j = matched.join(meta, "docid")
-    cols = []
-    for k, (a, b) in enumerate(keys):
-        pred = (F.expr(filters[a]) if a == b
-                else (F.expr(filters[a]) & F.expr(filters[b])))
-        cols.append(F.sum(F.when(pred, 1).otherwise(0)).cast("long")
-                    .alias(f"__p{k}"))
-    agg = j.groupBy("query_id").agg(*cols)
-    stacked = agg.unpivot(["query_id"],
-                          [f"__p{k}" for k in range(len(keys))],
-                          "pidx", "doc_count")
-    bucket = F.coalesce(*[
-        F.when(F.col("pidx") == f"__p{k}",
-               F.lit(a if a == b else f"{a}&{b}"))
-        for k, (a, b) in enumerate(keys)])
-    w = Window.partitionBy("query_id").orderBy(F.asc("bucket"))
-    return (stacked.select("query_id", bucket.alias("bucket"),
-                           F.col("doc_count").cast("long")
-                           .alias("doc_count"))
-            .filter(F.col("doc_count") > 0)
-            .withColumn("brank", F.row_number().over(w).cast("long"))
-            .select("query_id", "bucket", "doc_count", "brank"))
+    named = [(a if a == b else f"{a}&{b}",
+              F.expr(filters[a]) if a == b
+              else F.expr(filters[a]) & F.expr(filters[b]))
+             for i, a in enumerate(names) for b in names[i:]]
+    j = _matches(spark, index_dir, queries, matched, bool_kwargs)
+    return _ranked(_named_counts(j, named).filter(F.col("doc_count") > 0),
+                   "brank", None, F.asc("bucket"))
 
 
 def global_metric_aggs(spark: SparkSession, index_dir,
@@ -1342,7 +1252,6 @@ def global_metric_aggs(spark: SparkSession, index_dir,
     Plan shape: one hash agg over doclens to a SINGLE row, then a tiny
     broadcast cross join against the query ids."""
     meta = _doc_meta(spark, index_dir).select(
-        "docid", "dl",
-        F.regexp_extract("url", bucket_regex, 1).alias("host"))
+        "docid", "dl", _host(bucket_regex).alias("host"))
     g = meta.agg(*_dl_stats(round_to))
     return queries.select("query_id").distinct().crossJoin(F.broadcast(g))

@@ -48,9 +48,10 @@ from typing import Iterable, Iterator, NamedTuple
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+from pyspark.sql.window import Window
 
 from ..codec import decode_blocks
 from ..config import FORMAT_VERSION, TOP_K
@@ -733,6 +734,30 @@ def _dfg_from_rows(g: pd.DataFrame, dfg: dict | None) -> dict:
     return out
 
 
+def _score_key(round_to: int | None = None) -> Column:
+    """The hit sort key: the score, or round(score, round_to) — the
+    cross-engine key, so an FP summation-order difference can never
+    flip a rank."""
+    return F.col("score") if round_to is None else F.round("score", round_to)
+
+
+def _hit_order(key: Column | str = "score") -> list[Column]:
+    """THE hit order of every ranked result: ``key`` desc, docid asc."""
+    return [F.desc(key), F.asc("docid")]
+
+
+def _top_hits(df: DataFrame, k: int | None,
+              round_to: int | None = None) -> DataFrame:
+    """(query_id, rank, docid, score) of ``df`` in hit order, ``rank``
+    an int row number per query, cut at ``k`` (None keeps all).
+    ``round_to`` ranks on :func:`_score_key` and keeps the raw score."""
+    w = Window.partitionBy("query_id").orderBy(*_hit_order(_score_key(round_to)))
+    ranked = df.withColumn("rank", F.row_number().over(w))
+    if k is not None:
+        ranked = ranked.filter(F.col("rank") <= k)
+    return ranked.select("query_id", "rank", "docid", "score")
+
+
 # ---------------------------------------------------------------------------
 # Q4: distributed TAAT scoring with exact fold order
 # ---------------------------------------------------------------------------
@@ -784,8 +809,6 @@ def search_taat(
     ``min_should_match`` (default 0 with a must clause present — the
     ES default). Scores sum over every matched positive term once, in
     sorted-term order (a term in both clauses counts as must)."""
-    from pyspark.sql.window import Window
-
     n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
     _check_score_mode(score_mode)
     prox = score_mode == "proximity"
@@ -900,13 +923,7 @@ def search_taat(
             F.col("score") * (F.lit(1.0) /
                               (F.lit(1.0) +
                                _width_of_entries(F.col("cs")).cast("double"))))
-    scored = scored.drop("cs")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "docid", "score")
-    )
+    return _top_hits(scored.drop("cs"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1453,8 +1470,6 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     nothing there. Exactness never depends on this pruning, only task
     size does: any row holding a posting for a doc in [lo, hi] spans
     that doc's docid and therefore joins the range."""
-    from pyspark.sql.window import Window
-
     rows = list(qterms)
     _check_rows_budget(len(rows), "(query, term) pairs in one top-k call")
     fan: dict[str, list[dict]] = {}
@@ -1495,12 +1510,7 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
              .filter("__max_docid >= lo AND first_docid <= hi"))
     cands = (seg_r.repartition(n_parts, "query_id", "rng")
              .groupBy("query_id", "rng").applyInPandas(run, RESULT_SCHEMA))
-    if k is None:
-        return cands
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("docid"))
-    return (cands.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "docid", "score"))
+    return cands if k is None else _top_hits(cands, k)
 
 
 class _PositionalTerms(NamedTuple):
@@ -1598,7 +1608,7 @@ def _sloppy_match(phrase: list[tuple[int, str]],
                   slop: int,
                   want_width: bool = False) -> tuple[np.ndarray, np.ndarray | None]:
     """Local indexes (into ``inter``) of docs matching the phrase with
-    ``slop`` (semantics in :func:`_phrase_one_query`), plus — when
+    ``slop`` (semantics in :func:`_phrase_match`), plus — when
     ``want_width`` — each matched doc's MINIMUM window width (max−min
     of the chosen adjusted positions over all valid assignments), the
     proximity-scoring signal; None otherwise. Returns
@@ -2004,8 +2014,6 @@ def _expansion_frame(spark: SparkSession, index_dir, conds: list[_TermCond],
     (qi, term) across the dirs; each qi's terms are ranked by df desc,
     term asc and cut at ``cap``. The chain's sum and the ranking window
     share one Exchange on ``qi``."""
-    from pyspark.sql.window import Window
-
     dicts = _dictionaries(spark, index_dir)
     dic = functools.reduce(DataFrame.unionByName, dicts)
     if all(c.prefix for c in conds):

@@ -1,6 +1,6 @@
 """Capture .explain('formatted') for the touched query paths.
 
-Usage: python bench/capture_plans.py <out_dir> [index_dir]
+Usage: python bench/capture_plans.py <out_dir> [index_dir] [--docs SF_DIR | --gen-pages N]
 
 Uses only the public query API, so before/after plan files for two
 trees come from the same script:
@@ -9,9 +9,15 @@ trees come from the same script:
     PYTHONPATH=<other tree> python bench/capture_plans.py <before dir>
 
 The index must already exist (bench.py leaves /tmp/aarhus_bench_idx_0.1).
-Explain only — no job runs beyond the analysis/dictionary lookups the
-query builders themselves perform.
+``--docs`` names the sf dir whose documents the index was built from
+(sf0.1 by default); ``--gen-pages N`` says it was built from
+``gen_pages(N)``. The stored text feeds the ops that re-analyze hits.
+Explain only, apart from the jobs the query builders run themselves
+(query analysis, dictionary lookups, the eager match-set checkpoint
+of significant_terms / top_hits / collapse, and the page-1 cursors
+of the two keyset-paging probes).
 """
+import argparse
 import io
 import os
 import sys
@@ -21,6 +27,11 @@ sys.path.insert(0, os.environ.get("PYTHONPATH",
                                   os.path.dirname(os.path.dirname(os.path.abspath(__file__)))))
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", "-1")
 
+# filters / adjacency_matrix predicates over the doc-meta columns
+ES_FILTERS = {"short": "dl < 60", "long": "dl >= 60",
+              "early": "warc_ts < timestamp'2026-01-01 12:00:00'"}
+ES_RANGES = [("s", None, 40), ("m", 40, 120), ("l", 120, None)]
+
 
 def grab(df) -> str:
     buf = io.StringIO()
@@ -29,9 +40,102 @@ def grab(df) -> str:
     return buf.getvalue()
 
 
+def es_probes(spark, idx, qdf, ph, docs) -> dict:
+    """Every public ES op as name -> zero-argument builder of its
+    DataFrame, over ``idx`` (one dir or a chain), the (query_id, qtext)
+    frame ``qdf``, the phrase frame ``ph`` and the stored-text source
+    ``docs`` (url, text). ``search_page`` runs twice: from page 1, and
+    from a cursor on the rounded key."""
+    from pyspark.sql import functions as F
+
+    from aarhus_spark.operators import eslayer as es
+
+    def page_after():
+        first = es.search_page(spark, idx, qdf, page_size=5, round_to=6)
+        last = (first.filter(F.col("rank") == 5)
+                .select("query_id", F.col("score").alias("after_score"),
+                        F.col("docid").alias("after_docid")))
+        return es.search_page(spark, idx, qdf, page_size=5, round_to=6,
+                              after=spark.createDataFrame(last.collect(),
+                                                          last.schema))
+
+    def composite_after():
+        first = es.search_composite(spark, idx, qdf, page_size=4)
+        last = (first.filter(F.col("brank") == 4)
+                .select("query_id", F.col("k1").alias("after_k1"),
+                        F.col("k2").alias("after_k2")))
+        return es.search_composite(spark, idx, qdf, page_size=4,
+                                   after=spark.createDataFrame(
+                                       last.collect(), last.schema))
+
+    words = spark.createDataFrame([(0, "dta"), (1, "spark"), (2, "qurey")],
+                                  "word_id long, word string")
+    phrases = spark.createDataFrame([(0, "the dta"), (1, "hash jion")],
+                                    "phrase_id long, phrase string")
+    seeds = sorted(r["url"] for r in docs.select("url").limit(50).collect())
+    mlt_q = spark.createDataFrame([(0, seeds[0]), (1, seeds[-1])],
+                                  "query_id long, like_url string")
+    registered = spark.createDataFrame(
+        [(0, "the data", "must", 0), (1, "spark join data merge", "msm", 2),
+         (2, "the data", "phrase", 0), (3, "data zzznever", "must", 0)],
+        "query_id long, qtext string, kind string, msm int")
+    boost_q = qdf.withColumn("neg_qtext", F.when(F.col("query_id") % 2 == 0,
+                                                 F.lit("the")))
+    return {
+        "search_matches": lambda: es.search_matches(spark, idx, qdf),
+        "search_facets": lambda: es.search_facets(spark, idx, qdf,
+                                                  n_buckets=8),
+        "search_date_histogram": lambda: es.search_date_histogram(
+            spark, idx, qdf, interval="hour"),
+        "search_sigterms": lambda: es.search_significant_terms(
+            spark, idx, qdf, docs, n_terms=10),
+        "suggest_terms": lambda: es.suggest_terms(spark, idx, words),
+        "search_function_score": lambda: es.search_function_score(
+            spark, idx, qdf),
+        "search_page": lambda: es.search_page(spark, idx, qdf, page_size=5),
+        "search_page_after": page_after,
+        "search_highlight": lambda: es.search_highlight(
+            spark, idx, qdf, docs, k=10, window=4, round_to=6),
+        "more_like_this": lambda: es.more_like_this(spark, idx, mlt_q, docs,
+                                                    k=5),
+        "search_metric_aggs": lambda: es.search_metric_aggs(spark, idx, qdf),
+        "search_boosting": lambda: es.search_boosting(spark, idx, boost_q),
+        "search_constant_score": lambda: es.search_constant_score(
+            spark, idx, qdf, boost=2.0),
+        "search_rescore": lambda: es.search_rescore(spark, idx, ph,
+                                                    window_size=50, k=10),
+        "search_top_hits": lambda: es.search_top_hits(
+            spark, idx, qdf, n_buckets=4, k_hits=2, round_to=6),
+        "search_histogram": lambda: es.search_histogram(spark, idx, qdf,
+                                                        interval=20),
+        "search_range_agg": lambda: es.search_range_agg(spark, idx, qdf,
+                                                        ES_RANGES),
+        "search_filters": lambda: es.search_filters_agg(spark, idx, qdf,
+                                                        ES_FILTERS),
+        "search_composite": composite_after,
+        "search_pipeline_aggs": lambda: es.search_pipeline_aggs(
+            spark, idx, qdf, interval="hour", top_n=5),
+        "search_collapse": lambda: es.search_collapse(
+            spark, idx, qdf, k=5, inner_k=2, round_to=6),
+        "search_explain": lambda: es.search_explain(
+            spark, idx, qdf, docs, k=5, rank_round_to=6),
+        "suggest_phrases": lambda: es.suggest_phrases(spark, idx, phrases),
+        "percolate": lambda: es.percolate(spark, registered, docs),
+        "search_adjacency": lambda: es.search_adjacency_matrix(
+            spark, idx, qdf, ES_FILTERS),
+        "global_metric_aggs": lambda: es.global_metric_aggs(spark, idx, qdf),
+    }
+
+
 def main():
-    out_dir = sys.argv[1]
-    idx_dir = sys.argv[2] if len(sys.argv) > 2 else "/tmp/aarhus_bench_idx_0.1"
+    p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    p.add_argument("out_dir")
+    p.add_argument("index_dir", nargs="?", default="/tmp/aarhus_bench_idx_0.1")
+    src = p.add_mutually_exclusive_group()
+    src.add_argument("--docs", default="/root/testdata/sf0.1")
+    src.add_argument("--gen-pages", type=int)
+    args = p.parse_args()
+    out_dir, idx_dir = args.out_dir, args.index_dir
     os.makedirs(out_dir, exist_ok=True)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
 
@@ -41,22 +145,20 @@ def main():
     spark.sparkContext.setLogLevel("ERROR")
 
     import pandas as pd
-    from aarhus_spark.sources.fixtures import gen_queries
-    from aarhus_spark.sources.io import pages_from_documents
+    from aarhus_spark.sources.fixtures import gen_pages, gen_queries
     qdf = spark.createDataFrame(gen_queries(pd.DataFrame()))
     ph = spark.createDataFrame(
         [(0, "hash join"), (1, "sort data")], "query_id long, qtext string")
-    pages = pages_from_documents(spark, "/root/testdata/sf0.1")
+    if args.gen_pages:
+        pages = spark.createDataFrame(
+            gen_pages(args.gen_pages).drop_duplicates("url", keep="last"))
+    else:
+        from aarhus_spark.sources.io import pages_from_documents
+        pages = pages_from_documents(spark, args.docs)
 
     from aarhus_spark.operators.search import (search_phrase, search_taat,
                                                search_wand,
                                                search_wand_ranges)
-    from aarhus_spark.operators.eslayer import (search_facets,
-                                                search_function_score,
-                                                search_matches,
-                                                search_metric_aggs,
-                                                search_rescore,
-                                                search_significant_terms)
 
     plans = {
         "search_taat": lambda: search_taat(spark, idx_dir, qdf),
@@ -64,25 +166,13 @@ def main():
         "search_wand_ranges": lambda: search_wand_ranges(
             spark, idx_dir, qdf, n_ranges=8),
         "search_phrase": lambda: search_phrase(spark, idx_dir, ph),
-        "search_facets": lambda: search_facets(spark, idx_dir, qdf,
-                                               n_buckets=8),
-        "search_metric_aggs": lambda: search_metric_aggs(spark, idx_dir, qdf),
-        "search_matches": lambda: search_matches(spark, idx_dir, qdf),
-        "search_function_score": lambda: search_function_score(
-            spark, idx_dir, qdf),
-        "search_rescore": lambda: search_rescore(spark, idx_dir, ph,
-                                                 window_size=50, k=10),
-        "search_sigterms": lambda: search_significant_terms(
-            spark, idx_dir, qdf, pages, n_terms=10),
+        **es_probes(spark, idx_dir, qdf, ph, pages),
     }
-    # r8 session-2 additions: the span and highlight paths gained
-    # LocalRelation query frames (search.local_df) — capture them too
-    from aarhus_spark.operators.eslayer import search_highlight
+    # r8 session-2 additions: the span path gained LocalRelation query
+    # frames (search.local_df) — capture it too
     from aarhus_spark.operators.spans import search_span_near
     plans["search_span"] = lambda: search_span_near(
         spark, idx_dir, ph, slop=3, in_order=True)
-    plans["search_highlight"] = lambda: search_highlight(
-        spark, idx_dir, qdf, pages, k=10, window=4)
     # both arms of the per-query dispatcher: the single-group WAND path
     # through search_topk and the (query, docid range) path of every
     # positional kernel

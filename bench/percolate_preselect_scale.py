@@ -49,6 +49,7 @@ def main() -> None:
     cpus = int(sys.argv[2]) if len(sys.argv) > 2 else 32
     qs = [int(x) for x in sys.argv[3:]] or [512, 4096, 16384]
 
+    from aarhus_spark.operators import eslayer
     from aarhus_spark.operators.eslayer import percolate
     from aarhus_spark.session import get_spark
     from aarhus_spark.sources.fixtures import gen_pages_spark
@@ -68,12 +69,13 @@ def main() -> None:
             gen_registered(q), "query_id long, qtext string, kind string, msm int")
         walls = {}
         counts = {}
-        for label, flag in (("bnl", False), ("preselect", True)):
+        # each plan is reached through the registered-set size threshold
+        for label, threshold in (("bnl", q + 1), ("preselect", 0)):
+            eslayer.PERCOLATE_PRESELECT_MIN = threshold
             best = None
             for _ in range(2):
                 t0 = time.time()
-                n = percolate(spark, qdf, docs,
-                              candidate_preselect=flag).count()
+                n = percolate(spark, qdf, docs).count()
                 w = time.time() - t0
                 best = w if best is None or w < best else best
             walls[label] = round(best, 3)

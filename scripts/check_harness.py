@@ -17,6 +17,7 @@ from __future__ import annotations
 import argparse
 import decimal
 import math
+import os
 import sys
 
 sys.path.insert(0, ".")
@@ -49,15 +50,19 @@ def session(kind: str):
 
 
 def main():
-    import duckdb
-    from aarhus_spark.harness import TABLES
-    import __spark_entry__ as entry  # the REAL driver surface
-
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("--session", choices=("engine", "default"), default="engine")
     args, sys.argv[1:] = p.parse_known_args()
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
+    # the manifest-audit oracle reads its sf dir at import time: point it
+    # at the dir under test before the harness is imported
+    os.environ.setdefault("AARHUS_ORACLE_SF_DIR", sf_dir)
+
+    import duckdb
+    from aarhus_spark.harness import TABLES
+    import __spark_entry__ as entry  # the REAL driver surface
+
     spark = session(args.session)
     print(f"session={args.session} arrow="
           f"{spark.conf.get('spark.sql.execution.arrow.pyspark.enabled')} "

@@ -10,6 +10,7 @@ from math import log
 import pytest
 
 from aarhus_spark import oracle
+from aarhus_spark.operators import eslayer as es
 from aarhus_spark.operators.build import build_index
 from aarhus_spark.operators.eslayer import (HOST_RE, mlt_select_terms,
                                             more_like_this, search_facets,
@@ -878,11 +879,13 @@ def test_global_metric_aggs_query_independent(spark, eidx):
         float(np.percentile(dls, 50, method="linear")), abs=1e-9)
 
 
-def test_percolate_preselect_equals_broadcast(spark, eidx):
+def test_percolate_preselect_equals_broadcast(spark, eidx, monkeypatch):
     """The candidate pre-selection percolator (large registered sets)
     must produce EXACTLY the broadcast nested-loop plan's matches —
     same (url, query_id, kind) rows — across must/msm/phrase kinds,
-    including queries that match nothing."""
+    including queries that match nothing. Each plan is reached through
+    the registered-set size threshold."""
+    from aarhus_spark.operators import eslayer
     from aarhus_spark.operators.eslayer import percolate
     out, oidx, docs, ddf = eidx
     reg = [(0, "the data query2", "must", 0),
@@ -893,22 +896,132 @@ def test_percolate_preselect_equals_broadcast(spark, eidx):
            (5, "the", "msm", 1)]
     qdf = spark.createDataFrame(
         reg, "query_id long, qtext string, kind string, msm int")
-    a = sorted(map(tuple, percolate(spark, qdf, docs,
-                                    candidate_preselect=False).collect()))
-    b = sorted(map(tuple, percolate(spark, qdf, docs,
-                                    candidate_preselect=True).collect()))
+    monkeypatch.setattr(eslayer, "PERCOLATE_PRESELECT_MIN", len(reg) + 1)
+    a = sorted(map(tuple, percolate(spark, qdf, docs).collect()))
+    monkeypatch.setattr(eslayer, "PERCOLATE_PRESELECT_MIN", len(reg))
+    b = sorted(map(tuple, percolate(spark, qdf, docs).collect()))
     assert a == b and len(a) > 0
 
 
-def test_percolate_preselect_rejects_degenerate(spark, eidx):
+def test_percolate_preselect_rejects_degenerate(spark, eidx, monkeypatch):
+    from aarhus_spark.operators import eslayer
     from aarhus_spark.operators.eslayer import percolate
     out, oidx, docs, ddf = eidx
     bad = spark.createDataFrame([(0, "...", "must", 0)],
                                 "query_id long, qtext string, kind string, msm int")
     import pytest as _pytest
+    monkeypatch.setattr(eslayer, "PERCOLATE_PRESELECT_MIN", 1)  # preselect
     with _pytest.raises(ValueError, match="zero terms"):
-        percolate(spark, bad, docs, candidate_preselect=True)
+        percolate(spark, bad, docs)
     badmsm = spark.createDataFrame([(0, "data", "msm", 0)],
                                    "query_id long, qtext string, kind string, msm int")
+    monkeypatch.setattr(eslayer, "PERCOLATE_PRESELECT_MIN", 2)  # broadcast
     with _pytest.raises(ValueError, match="msm >= 1"):
-        percolate(spark, badmsm, docs, candidate_preselect=False)
+        percolate(spark, badmsm, docs)
+
+
+_RESULT = "struct<query_id:bigint,rank:int,docid:bigint,score:double>"
+_BUCKETS = "struct<query_id:bigint,bucket:string,doc_count:bigint,brank:bigint>"
+_METRICS = ("struct<query_id:bigint,doc_count:bigint,min_dl:bigint,"
+            "max_dl:bigint,sum_dl:bigint,avg_dl:double,p50_dl:double,"
+            "p95_dl:double,host_card:bigint>")
+_FILTERS = {"short": "dl < 60", "long": "dl >= 60"}
+
+
+# public ES op -> (call over (spark, index, queries, docs), pinned schema)
+_SCHEMAS = {
+    "search_matches": (lambda s, i, q, d: es.search_matches(s, i, q),
+                       "struct<query_id:bigint,docid:bigint,score:double>"),
+    "search_facets": (lambda s, i, q, d: es.search_facets(s, i, q), _BUCKETS),
+    "search_date_histogram": (
+        lambda s, i, q, d: es.search_date_histogram(s, i, q), _BUCKETS),
+    "search_significant_terms": (
+        lambda s, i, q, d: es.search_significant_terms(s, i, q, d),
+        "struct<query_id:bigint,srank:bigint,term:string,fg_df:bigint,"
+        "bg_df:bigint,score:double>"),
+    "suggest_terms": (
+        lambda s, i, q, d: es.suggest_terms(
+            s, i, s.createDataFrame([(0, "dta")],
+                                    "word_id long, word string")),
+        "struct<word_id:bigint,word:string,srank:bigint,term:string,"
+        "distance:bigint,df:bigint>"),
+    "search_function_score": (
+        lambda s, i, q, d: es.search_function_score(s, i, q), _RESULT),
+    "search_page": (lambda s, i, q, d: es.search_page(s, i, q, round_to=6),
+                    _RESULT),
+    "search_highlight": (
+        lambda s, i, q, d: es.search_highlight(s, i, q, d, round_to=6),
+        "struct<query_id:bigint,rank:int,docid:bigint,snippet:string>"),
+    "more_like_this": (
+        lambda s, i, q, d: es.more_like_this(
+            s, i, s.createDataFrame([(0, d.first()["url"])],
+                                    "query_id long, like_url string"), d),
+        _RESULT),
+    "search_metric_aggs": (
+        lambda s, i, q, d: es.search_metric_aggs(s, i, q), _METRICS),
+    "search_boosting": (
+        lambda s, i, q, d: es.search_boosting(
+            s, i, q.selectExpr("*", "'the' AS neg_qtext")), _RESULT),
+    "search_constant_score": (
+        lambda s, i, q, d: es.search_constant_score(s, i, q), _RESULT),
+    "search_rescore": (lambda s, i, q, d: es.search_rescore(s, i, q),
+                       _RESULT),
+    "search_top_hits": (
+        lambda s, i, q, d: es.search_top_hits(s, i, q, round_to=6),
+        "struct<query_id:bigint,bucket:string,doc_count:bigint,"
+        "brank:bigint,hrank:bigint,docid:bigint,score:double>"),
+    "search_histogram": (
+        lambda s, i, q, d: es.search_histogram(s, i, q),
+        "struct<query_id:bigint,bucket:bigint,doc_count:bigint,brank:bigint>"),
+    "search_range_agg": (
+        lambda s, i, q, d: es.search_range_agg(
+            s, i, q, [("s", None, 60), ("l", 60, None)]), _BUCKETS),
+    "search_filters_agg": (
+        lambda s, i, q, d: es.search_filters_agg(s, i, q, _FILTERS),
+        _BUCKETS),
+    "search_composite": (
+        lambda s, i, q, d: es.search_composite(s, i, q),
+        "struct<query_id:bigint,k1:string,k2:bigint,doc_count:bigint,"
+        "brank:bigint>"),
+    "search_pipeline_aggs": (
+        lambda s, i, q, d: es.search_pipeline_aggs(s, i, q, top_n=3),
+        "struct<query_id:bigint,bucket:string,doc_count:bigint,"
+        "cum_sum:bigint,deriv:bigint,brank:bigint,srank:bigint>"),
+    "search_collapse": (
+        lambda s, i, q, d: es.search_collapse(s, i, q, round_to=6),
+        "struct<query_id:bigint,rank:bigint,ckey:string,hrank:bigint,"
+        "docid:bigint,score:double>"),
+    "search_explain": (
+        lambda s, i, q, d: es.search_explain(s, i, q, d, rank_round_to=6),
+        "struct<query_id:bigint,rank:int,docid:bigint,term:string,"
+        "tf:bigint,df:bigint,idf_r:double,tfn_r:double,contrib_r:double,"
+        "score_r:double>"),
+    "suggest_phrases": (
+        lambda s, i, q, d: es.suggest_phrases(
+            s, i, s.createDataFrame([(0, "the dta")],
+                                    "phrase_id long, phrase string")),
+        "struct<phrase_id:bigint,phrase:string,srank:bigint,"
+        "suggestion:string,edits:bigint,doc_count:bigint>"),
+    "percolate": (
+        lambda s, i, q, d: es.percolate(
+            s, s.createDataFrame(
+                [(0, "the data", "must", 0)],
+                "query_id long, qtext string, kind string, msm int"), d),
+        "struct<url:string,query_id:bigint,kind:string>"),
+    "search_adjacency_matrix": (
+        lambda s, i, q, d: es.search_adjacency_matrix(s, i, q, _FILTERS),
+        _BUCKETS),
+    "global_metric_aggs": (
+        lambda s, i, q, d: es.global_metric_aggs(s, i, q), _METRICS),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_SCHEMAS))
+def test_es_op_output_schema(spark, eidx, op):
+    """Each public ES op's output column names and types, pinned — the
+    oracle gate compares values, not types (an int rank turning long,
+    or a count turning double, would pass it)."""
+    out, _, docs, _ = eidx
+    qdf = spark.createDataFrame(QUERIES, "query_id long, qtext string")
+    call, schema = _SCHEMAS[op]
+    assert call(spark, out, qdf, docs).schema.simpleString() == schema
