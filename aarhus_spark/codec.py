@@ -371,22 +371,6 @@ def decode_blocks_pos_bytes(payload: bytes | np.ndarray, offsets
     return docids, tfs, dls, pbuf, plens
 
 
-def permute_poslists(flat_pos: np.ndarray, tfs: np.ndarray, order: np.ndarray) -> np.ndarray:
-    """Reorder a flat per-posting position stream to follow a posting
-    permutation (``order`` over postings, e.g. from a docid argsort):
-    posting order[i]'s position segment becomes segment i. Vectorized
-    segment gather — no per-posting Python loop."""
-    tfs = np.asarray(tfs, dtype=np.int64)
-    if flat_pos.size == 0:
-        return np.asarray(flat_pos, dtype=np.int64)
-    starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-    l = tfs[order]
-    s = starts[order]
-    out_starts = np.concatenate(([0], np.cumsum(l)[:-1]))
-    idx = np.repeat(s - out_starts, l) + np.arange(int(l.sum()), dtype=np.int64)
-    return np.asarray(flat_pos, dtype=np.int64)[idx]
-
-
 def decode_all_blocks(payload: bytes | np.ndarray, offsets: list[int] | np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Decode every block of a blocked run (given the block offsets)."""
     return _scan(payload, offsets, 0, None, None)[:3]

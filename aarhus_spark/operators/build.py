@@ -56,8 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..codec import (decode_blocks, decode_blocks_pos_bytes,
-                     encode_blocks, encode_pos_chunks, permute_poslists)
+from ..codec import decode_blocks_pos_bytes, encode_blocks, encode_pos_chunks
 from ..config import (BLOCK_SIZE, FORMAT_VERSION, HEAD_DF_QUANTILE,
                       MAX_POSTINGS_PER_ROW, SALTS)
 from ..hashing import xxhash64 as spark_xxhash64
@@ -206,13 +205,17 @@ class IndexPaths:
 def prepare_pages(pages: DataFrame) -> DataFrame:
     """lang filter, E(html) where text is null, empty guard, dedup-by-url
     latest-warc_ts-wins with max-text tiebreak (frozen §1.3.3).
-    Returns (url, text).
+    Returns the winning page rows (url, warc_ts, text and every other
+    page column; a caller's projection prunes the rest through the
+    window, P1).
 
-    Standalone operator form (one url-shuffle for the dedup window).
-    ``build_index`` does NOT call this — it uses the fused
-    :func:`prepare_and_assign_docids`, which performs dedup + extract +
-    filter inside the docid range-shuffle and saves a full-corpus
-    exchange; both produce identical rows (asserted in tests).
+    Standalone operator form (one url-shuffle for the dedup window),
+    used by ``multifield.build_field_indexes``, whose field expressions
+    may read any page column. ``build_index`` does NOT call this — it
+    uses the fused :func:`prepare_and_assign_docids`, which performs
+    dedup + extract + filter inside the docid range-shuffle and saves a
+    full-corpus exchange; both produce identical rows (asserted in
+    tests).
     """
     from pyspark.sql.window import Window
 
@@ -221,17 +224,15 @@ def prepare_pages(pages: DataFrame) -> DataFrame:
         return extract_series(html)
 
     w = Window.partitionBy("url").orderBy(F.desc("warc_ts"), F.desc_nulls_last("text"))
-    df = (
+    return (
         pages
         .filter(F.col("lang") == "en")                       # P2 → pushed to scan
         .withColumn("rn", F.row_number().over(w))            # P4 dedup
-        .filter(F.col("rn") == 1)
+        .filter(F.col("rn") == 1).drop("rn")
         .withColumn("text", F.when(F.col("text").isNull(),
                                    extract_udf(F.col("html"))).otherwise(F.col("text")))  # P5
         .filter(F.col("text").isNotNull() & (F.length("text") > 0))  # P3
-        .select("url", "text")                               # P1 → html pruned
     )
-    return df
 
 
 # ---------------------------------------------------------------------------
@@ -247,16 +248,8 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
     the E(html) extraction, and the empty-text filter all run inside
     the same partition-sorted pass (one Python/Arrow round trip),
     and the separate dedup-window exchange of :func:`prepare_pages`
-    disappears.
-
-    Docids are dense url ranks in global sort order, in two passes over
-    the range-partitioned, partition-sorted frame: pass 1 collects the
-    per-partition counts (tiny) to compute offsets; pass 2 adds offset
-    + local index inside mapInPandas. Correct for ANY range boundary
-    choice (ranges are disjoint and ordered), so it is
-    partition-count-independent — unlike monotonically_increasing_id.
-    The frame is persisted so both passes see the same materialization.
-    Returns ((docid, url, text, warc_ts, dl), N, Σdl).
+    disappears. Docids come from :func:`_dense_docids`.
+    Returns ((docid, url, text, warc_ts, dl) persisted, N, Σdl).
     """
     rp = (
         pages.filter(F.col("lang") == "en")                    # P2 → pushed to scan
@@ -291,22 +284,31 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
                 dl = tokenize_series(pdf["text"]).map(len)
                 yield pdf[["url", "text", "warc_ts"]].assign(dl=dl.astype("int64"))
 
-    deduped = (
-        rp.mapInPandas(dedup_extract,
-                       schema="url string, text string, warc_ts timestamp, dl long")
-        .withColumn("pid", F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # ONE pass collects both the per-partition counts (docid offsets)
-    # and Σdl (corpus avgdl) — no separate full-corpus agg job
-    rows = deduped.groupBy("pid").agg(
+    deduped = rp.mapInPandas(
+        dedup_extract, schema="url string, text string, warc_ts timestamp, dl long")
+    return _dense_docids(spark, deduped, ["url", "text", "warc_ts", "dl"], docid_offset)
+
+
+def _dense_docids(spark: SparkSession, rp: DataFrame, cols: list[str],
+                  docid_offset: int):
+    """T8 for build and compaction: docids are dense url ranks in global
+    sort order, from ``rp`` range-partitioned and partition-sorted by
+    url, in two passes: pass 1 collects the per-partition counts and
+    Σdl (tiny; no separate full-corpus agg job) to compute offsets;
+    pass 2 adds offset + local index inside mapInPandas. Correct for
+    ANY range boundary choice (ranges are disjoint and ordered), so it
+    is partition-count-independent — unlike monotonically_increasing_id.
+    ``rp`` is persisted with its partition id so both passes see the
+    same materialization. Returns ((docid, *cols) persisted, N, Σdl)."""
+    ranked = (rp.withColumn("pid", F.spark_partition_id())
+              .persist(StorageLevel.MEMORY_AND_DISK))
+    rows = ranked.groupBy("pid").agg(
         F.count("*").alias("cnt"), F.sum("dl").alias("sumdl")).collect()
-    counts = {r["pid"]: r["cnt"] for r in rows}
     sumdl = sum(int(r["sumdl"] or 0) for r in rows)
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc + docid_offset
-        acc += counts[pid]
+    offsets, acc = {}, docid_offset
+    for r in sorted(rows, key=lambda r: r["pid"]):
+        offsets[r["pid"]] = acc
+        acc += r["cnt"]
     b_offsets = spark.sparkContext.broadcast(offsets)
 
     def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -317,11 +319,12 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
             off = b_offsets.value[int(pdf["pid"].iloc[0])]
             pdf = pdf.assign(docid=np.arange(local, local + len(pdf), dtype=np.int64) + off)
             local += len(pdf)
-            yield pdf[["docid", "url", "text", "warc_ts", "dl"]]
+            yield pdf[["docid", *cols]]
 
-    out = deduped.mapInPandas(
-        assign, schema="docid long, url string, text string, warc_ts timestamp, dl long")
-    return out, acc, sumdl
+    schema = T.StructType([T.StructField("docid", T.LongType())] + [
+        T.StructField(c, ranked.schema[c].dataType) for c in cols])
+    out = ranked.mapInPandas(assign, schema=schema)
+    return out.persist(StorageLevel.MEMORY_AND_DISK), acc - docid_offset, sumdl
 
 
 def tokenize_docs(docs: DataFrame) -> DataFrame:
@@ -345,16 +348,6 @@ def tokenize_docs(docs: DataFrame) -> DataFrame:
             yield tf[["docid", "term", "tf", "dl"]]
 
     return docs.mapInPandas(tok, schema=TOKENS_SCHEMA)
-
-
-def _salt_of(terms: pd.Series, docids: pd.Series, head_set: frozenset,
-             n_docs: int, salts: int, docid_offset: int) -> np.ndarray:
-    """Docid-range salt for head terms, 0 for tail (vectorized)."""
-    is_head = terms.isin(head_set).to_numpy()
-    rel = docids.to_numpy(np.int64) - docid_offset
-    return np.where(is_head,
-                    np.minimum(salts - 1, rel * salts // max(n_docs, 1)),
-                    0).astype(np.int32), is_head
 
 
 def _tokenize_batch_core(docids: pd.Series, texts: pd.Series):
@@ -432,6 +425,36 @@ def byte_runs(buf: np.ndarray, lens: np.ndarray) -> list[bytes]:
 _SALT_MIX = np.uint64(0x9E3779B97F4A7C15)
 
 
+def _salt_key(uniques, codes: np.ndarray, docids: np.ndarray, head_set: frozenset,
+              n_docs: int, salts: int, docid_offset: int):
+    """T5 per posting: ``(is_head, salt)`` — the docid-RANGE salt for
+    head terms (monotone in docid, so a term's salted fragments are
+    docid-disjoint and the merge is an ordered concat), 0 for tail.
+    Head membership is tested once per UNIQUE term (``uniques``) and
+    gathered by ``codes``."""
+    uniq_head = np.fromiter((u in head_set for u in uniques), np.bool_,
+                            count=len(uniques))
+    is_head = uniq_head[codes]
+    salt = np.where(is_head,
+                    np.minimum(salts - 1,
+                               (docids - docid_offset) * salts // max(n_docs, 1)),
+                    0).astype(np.int32)
+    return is_head, salt
+
+
+def _bucket_key(uniques, codes: np.ndarray, docids: np.ndarray, head_set: frozenset,
+                n_docs: int, salts: int, n_buckets: int, docid_offset: int) -> np.ndarray:
+    """The shuffle key and resume unit of every index writer:
+    ``bucket = hash(term) ^ mix(salt) mod n_buckets`` per posting, the
+    term hash taken once per UNIQUE term (``pd.util.hash_array`` — C
+    siphash with a fixed key, deterministic across processes, which the
+    per-bucket resume relies on)."""
+    _, salt = _salt_key(uniques, codes, docids, head_set, n_docs, salts, docid_offset)
+    uniq_hash = pd.util.hash_array(np.asarray(uniques, dtype=object))
+    return ((uniq_hash[codes] ^ (salt.astype(np.uint64) * _SALT_MIX))
+            % np.uint64(n_buckets)).astype(np.int32)
+
+
 def _binary_from_buffer(buf: np.ndarray, lens: np.ndarray) -> pa.Array:
     """Arrow binary array over ONE contiguous uint8 buffer + per-value
     byte lengths — zero-copy for the data buffer, no per-value Python."""
@@ -463,13 +486,11 @@ def tokenize_salt_bucket(docs: DataFrame, head_terms: list[str], n_docs: int,
     which round 6 measured as the dominant 1->4 scaling loss
     (BENCH/BASELINE.md).
 
-    salt/is_head/bucket are all derived vectorized per UNIQUE term then
-    gathered by code (``pd.util.hash_array`` - C siphash with a fixed
-    key, deterministic across processes, which the per-bucket resume
-    relies on — hashing per-unique yields bit-identical buckets to the
-    old per-posting hash), so the token stream needs NO broadcast join
-    and carries only one extra int32 through the big shuffle. The
-    encoder recomputes salt/is_head from the same closure inputs.
+    The bucket is derived vectorized per UNIQUE term then gathered by
+    code (:func:`_bucket_key`), so the token stream needs NO broadcast
+    join and carries only one extra int32 through the big shuffle. The
+    encoder recomputes salt/is_head from the same closure inputs
+    (:func:`_salt_key`).
     """
     head_set = frozenset(head_terms)
 
@@ -484,18 +505,8 @@ def tokenize_salt_bucket(docs: DataFrame, head_terms: list[str], n_docs: int,
             if core is None:
                 continue
             docid, codes, uniques, tfs, dl, buf, plens = core
-            # per-UNIQUE head/hash, gathered per posting by code
-            uniq_head = np.fromiter((u in head_set for u in uniques),
-                                    np.bool_, count=uniques.size)
-            uniq_hash = pd.util.hash_array(uniques)
-            is_head = uniq_head[codes]
-            rel = docid - docid_offset
-            salt = np.where(is_head,
-                            np.minimum(salts - 1, rel * salts // max(n_docs, 1)),
-                            0).astype(np.int32)
-            bucket = ((uniq_hash[codes]
-                       ^ (salt.astype(np.uint64) * _SALT_MIX))
-                      % np.uint64(n_buckets)).astype(np.int32)
+            bucket = _bucket_key(uniques, codes, docid, head_set, n_docs,
+                                 salts, n_buckets, docid_offset)
             term = pc.take(pa.array(uniques, type=pa.string()),
                            pa.array(codes, type=pa.int64()))
             yield pa.RecordBatch.from_arrays(
@@ -688,17 +699,11 @@ def _make_fragment_encoder(avgdl: float, fragments_dir: str, manifests_dir: str,
             poffs = np.frombuffer(posb.buffers()[1], dtype=off_dt)[
                 posb.offset: posb.offset + len(posb) + 1].astype(np.int64)
             pdata = np.frombuffer(posb.buffers()[2], dtype=np.uint8)
-            # salt/is_head recomputed per UNIQUE term from the same
-            # closure inputs the tokenizer used (they are not shuffled —
-            # one int32 less through the big exchange)
-            uniq_head = np.fromiter((u in head_set for u in uniques),
-                                    np.bool_, count=len(uniques))
-            is_head_a = uniq_head[codes]
-            salt_a = np.where(
-                is_head_a,
-                np.minimum(salts - 1,
-                           (docid - docid_offset) * salts // max(n_docs, 1)),
-                0).astype(np.int32)
+            # salt/is_head recomputed from the same closure inputs the
+            # tokenizer used (they are not shuffled — one int32 less
+            # through the big exchange)
+            is_head_a, salt_a = _salt_key(uniques, codes, docid, head_set,
+                                          n_docs, salts, docid_offset)
             # The stream is sorted with equal-term runs contiguous and
             # salt MONOTONE in docid within a term (range salting), so
             # every (term, salt) group is one contiguous run: detect
@@ -797,30 +802,13 @@ def _make_merger(avgdl: float, max_postings_per_row: int):
         tfs = np.concatenate([p[1] for p in parts])
         dls = np.concatenate([p[2] for p in parts])
         if docids.size > 1 and not bool(np.all(docids[1:] > docids[:-1])):
-            # defensive fallback (never expected under range salting):
-            # overlapping ranges need the full re-sort + re-encode
-            fparts = [decode_blocks(p, [b["offset"] for b in blocks], positions=True)
-                      for p, blocks in zip(g["postings"], g["blocks"])]
-            flat_pos = np.concatenate([p[4] for p in fparts])
-            order = np.argsort(docids, kind="stable")
-            flat_pos = permute_poslists(flat_pos, tfs, order)
-            docids, tfs, dls = docids[order], tfs[order], dls[order]
-            psum = np.concatenate(([0], np.cumsum(tfs)))
-            df_total, cf_total = int(docids.size), int(tfs.sum())
-            rows = []
-            for ci, s in enumerate(range(0, df_total, max_postings_per_row)):
-                e = min(s + max_postings_per_row, df_total)
-                payload, blocks = encode_blocks(
-                    docids[s:e], tfs[s:e], dls[s:e], avgdl, BLOCK_SIZE,
-                    positions=flat_pos[int(psum[s]):int(psum[e])])
-                rows.append({
-                    "term": term, "df": df_total, "cf": cf_total, "chunk": ci,
-                    "n": e - s,
-                    "first_docid": int(docids[s]),
-                    "blocks": [{"last_docid": b[0], "max_partial": b[1], "offset": b[2]} for b in blocks],
-                    "postings": payload,
-                })
-            return pd.DataFrame(rows)
+            # range salting keeps a term's fragments docid-disjoint (the
+            # salt is monotone in docid; the resume guard and heads.json
+            # keep one salt space), so an overlap is a corrupt or mixed
+            # fragment store — not something to re-sort silently
+            raise ValueError(
+                f"head fragments of term {term!r} overlap in docid: the "
+                f"fragment store is corrupt or mixes two salt spaces")
         pbuf = np.concatenate([p[3] for p in parts])
         plens = np.concatenate([p[4] for p in parts])
         boff = np.concatenate(([0], np.cumsum(plens)))
@@ -844,8 +832,146 @@ def _make_merger(avgdl: float, max_postings_per_row: int):
 
 
 # ---------------------------------------------------------------------------
-# build_index: the orchestrator
+# The index-writing frame: build_index and compact_indexes differ only in
+# the token stream they feed encode_merge_finalize
 # ---------------------------------------------------------------------------
+
+class _IndexJob:
+    """The ledger every index-writing job keeps (``build_index`` and
+    ``compact_indexes``): paths and partition defaults, the
+    completed-resume early return (``done``), the resume config guard
+    and ``build_config.json``, T5's persisted head set, the per-stage
+    metrics log and the final ``stats.json`` + ``metrics.jsonl``."""
+
+    def __init__(self, spark: SparkSession, out_dir: str, *,
+                 n_partitions: int | None, n_buckets: int | None, salts: int,
+                 head_df_quantile: float, max_postings_per_row: int,
+                 resume: bool, docid_offset: int):
+        from ..metrics import SpillTracker
+        self.paths = IndexPaths(out_dir)
+        os.makedirs(self.paths.manifests, exist_ok=True)
+        self.n_partitions = n_partitions or max(spark.sparkContext.defaultParallelism, 8)
+        self.n_buckets = n_buckets or self.n_partitions
+        self.salts, self.head_df_quantile = salts, head_df_quantile
+        self.max_postings_per_row = max_postings_per_row
+        self.resume, self.docid_offset = resume, docid_offset
+        self.metrics: list[dict] = []
+        self.t0 = time.time()
+        self._spill = SpillTracker(spark)
+        self.done: dict | None = None
+        # completed job: resume is a no-op whatever config was requested
+        # (config changes only the physical layout, not the logical index)
+        if resume and os.path.exists(self.paths.stats) and _dir_complete(self.paths.segments):
+            with open(self.paths.stats) as f:
+                self.done = json.load(f)
+            return
+        # resume guard: refuse to CONTINUE an interrupted run under a
+        # different config — mixing two bucket-id / salt / codec spaces
+        # silently corrupts the index. A fresh run persists its config
+        # before any fragment is written.
+        cfg = {"format_version": FORMAT_VERSION,
+               "n_buckets": self.n_buckets, "salts": salts, "docid_offset": docid_offset,
+               "block_size": BLOCK_SIZE, "max_postings_per_row": max_postings_per_row,
+               "head_df_quantile": head_df_quantile}
+        if resume and os.path.exists(self.paths.build_config):
+            with open(self.paths.build_config) as f:
+                stored = json.load(f)
+            if stored != cfg:
+                diff = {k: (stored.get(k), cfg[k]) for k in cfg if stored.get(k) != cfg[k]}
+                raise ValueError(
+                    f"resume=True with a different build config than the original "
+                    f"run (stored vs current): {diff}. Resuming would mix incompatible "
+                    f"bucket-id spaces; rerun with the original config or rebuild "
+                    f"without resume.")
+        else:
+            with open(self.paths.build_config, "w") as f:
+                json.dump(cfg, f)
+
+    def stage(self, name: str, t0: float, **kw) -> None:
+        # S6: per-stage wall + executor spill deltas (SURVEY §4.2)
+        self.metrics.append({"stage": name, "wall_s": time.time() - t0,
+                             **self._spill.delta(), **kw})
+
+    def head_set(self, df: DataFrame, frac: float) -> tuple[list[str], int]:
+        """T5 head terms: (term, df) rows above the ``head_df_quantile``
+        of ``df`` — a ``frac`` sample's counts (build) or the exact
+        union dictionary (compaction, frac = 1) — and at least
+        2·BLOCK_SIZE·frac, so a head term spans more than two blocks.
+        Persisted to ``heads.json``: resume MUST reuse the original
+        classification or bucket assignments would shift mid-job."""
+        heads_path = os.path.join(self.paths.root, "heads.json")
+        if self.resume and os.path.exists(heads_path):
+            with open(heads_path) as f:
+                heads = json.load(f)
+            return heads["terms"], heads["thr"]
+        # persisted: the quantile pass and the head filter both consume
+        # this frame — without the persist its upstream (the sample
+        # tokenize+agg) runs TWICE (measured ~half the head-detect wall)
+        df = df.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
+            t = df.agg(F.percentile_approx("df", self.head_df_quantile).alias("t")).collect()[0]["t"]
+            thr = max(int(t or 0), int(2 * BLOCK_SIZE * frac) + 1)
+            terms = [r["term"] for r in df.filter(F.col("df") > thr).select("term").collect()]
+        finally:
+            df.unpersist()
+        with open(heads_path, "w") as f:
+            json.dump({"terms": terms, "thr": thr, "frac": frac}, f)
+        return terms, thr
+
+    def finish(self, *, n_docs: int, avgdl: float, n_terms: int, has_head: bool,
+               head_thr: int, **extra) -> dict:
+        """S4/S6: write stats.json and append the stage log to metrics.jsonl."""
+        stats = {
+            "format_version": FORMAT_VERSION,
+            "N": n_docs,
+            "avgdl": avgdl,
+            "n_terms": n_terms,
+            # layered store: does fragments/ hold tail rows — and segments/
+            # any merged head rows — to union at query time? Cached here so
+            # per-query planning never stats a directory (at object-store
+            # scale a LIST call per query per dir) and never scans an empty
+            # layer
+            "has_tail": os.path.isdir(self.paths.fragments) and bool(os.listdir(self.paths.fragments)),
+            "has_head": has_head,
+            "build_config": {
+                "n_partitions": self.n_partitions, "n_buckets": self.n_buckets,
+                "salts": self.salts, "head_thr": head_thr, "docid_offset": self.docid_offset,
+                "block_size": BLOCK_SIZE, "max_postings_per_row": self.max_postings_per_row,
+            },
+            **extra,
+            "wall_s": time.time() - self.t0,
+        }
+        with open(self.paths.stats, "w") as f:
+            json.dump(stats, f, indent=1)
+        with open(self.paths.metrics, "a") as f:
+            for m in self.metrics:
+                f.write(json.dumps(m) + "\n")
+        return stats
+
+
+def _concurrently(spark: SparkSession, *jobs) -> list[tuple[object, float]]:
+    """Run independent Spark jobs, one driver thread each, so the second
+    back-fills executors the first leaves idle (guide §2.6). ``jobs``
+    are ``(job description, fn)`` pairs; returns each fn's (result,
+    wall) in order.
+
+    Rule: a persisted frame that two of the jobs read must be
+    materialized BEFORE this call (build_index's ``docs.count()``) —
+    two concurrent first consumers would otherwise race the cache and
+    each compute it (measured +9.6 s on a 1M-page local[1] build)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run(desc: str, fn):
+        spark.sparkContext.setJobDescription(desc)
+        t = time.time()
+        return fn(), time.time() - t
+
+    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+        futures = [pool.submit(run, desc, fn) for desc, fn in jobs]
+        out = [f.result() for f in futures]
+    spark.sparkContext.setJobDescription(None)
+    return out
+
 
 def build_index(
     spark: SparkSession,
@@ -863,190 +989,71 @@ def build_index(
     """Run the full build; returns the stats dict (also written to
     stats.json). ``resume=True`` recomputes only fragment buckets whose
     manifest is missing and skips completed stages."""
-    paths = IndexPaths(out_dir)
-    os.makedirs(paths.manifests, exist_ok=True)
-    cpus = spark.sparkContext.defaultParallelism
-    n_partitions = n_partitions or max(cpus, 8)
-    n_buckets = n_buckets or n_partitions
-    metrics: list[dict] = []
-    t_build0 = time.time()
-
-    from ..metrics import SpillTracker
-    spill = SpillTracker(spark)
-
-    def stage(name: str, t0: float, **kw) -> None:
-        # S6: per-stage wall + executor spill deltas (SURVEY §4.2)
-        metrics.append({"stage": name, "wall_s": time.time() - t0,
-                        **spill.delta(), **kw})
-
-    # completed build: resume is a no-op whatever config was requested
-    # (config changes only the physical layout, not the logical index)
-    if resume and os.path.exists(paths.stats) and _dir_complete(paths.segments):
-        with open(paths.stats) as f:
-            return json.load(f)
-
-    # --- resume guard: refuse to CONTINUE an interrupted run under a
-    #     different config — mixing two bucket-id / salt / codec spaces
-    #     silently corrupts the index ---
-    cfg = {"format_version": FORMAT_VERSION,
-           "n_buckets": n_buckets, "salts": salts, "docid_offset": docid_offset,
-           "block_size": BLOCK_SIZE, "max_postings_per_row": max_postings_per_row,
-           "head_df_quantile": head_df_quantile}
-    if resume and os.path.exists(paths.build_config):
-        with open(paths.build_config) as f:
-            stored = json.load(f)
-        if stored != cfg:
-            diff = {k: (stored.get(k), cfg[k]) for k in cfg if stored.get(k) != cfg[k]}
-            raise ValueError(
-                f"resume=True with a different build config than the original "
-                f"run (stored vs current): {diff}. Resuming would mix incompatible "
-                f"bucket-id spaces; rerun with the original config or rebuild "
-                f"without resume.")
+    job = _IndexJob(spark, out_dir, n_partitions=n_partitions, n_buckets=n_buckets,
+                    salts=salts, head_df_quantile=head_df_quantile,
+                    max_postings_per_row=max_postings_per_row, resume=resume,
+                    docid_offset=docid_offset)
+    if job.done is not None:
+        return job.done
 
     # --- P1-P5 + T2 + T8 (fused: one url range-shuffle, one Python pass;
     #     dl computed inline so no pass over the token stream is needed
     #     for doclens/corpus stats) ---
     t0 = time.time()
-    docs, n_docs, sumdl = prepare_and_assign_docids(spark, pages, n_partitions, docid_offset)
-    docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    docs, n_docs, sumdl = prepare_and_assign_docids(spark, pages, job.n_partitions,
+                                                    docid_offset)
     avgdl = float(sumdl) / n_docs if n_docs else 0.0
 
-    # --- persist the build config BEFORE the fragment stage (validated
-    #     against it on resume — see the guard at the top) ---
-    if not (resume and os.path.exists(paths.build_config)):
-        with open(paths.build_config, "w") as f:
-            json.dump(cfg, f)
-
-    # --- S4 doclens sink ∥ T5 head-term detection (guide §2.6: the two
-    #     jobs share no dependency — both consume the persisted docs —
-    #     so the sample tokenize back-fills executors the write leaves
-    #     idle; measured ~0.6 s off every build at sf0.1). Head set on
-    #     a SAMPLE (one small python pass; the full token stream is
-    #     touched exactly once, in the fragment job). The head set is
-    #     persisted: resume MUST reuse the original classification or
-    #     bucket assignments would shift mid-build. ---
-    # materialize the docs cache ONCE before the pool: two concurrent
-    # first consumers would otherwise race the cache and each compute
-    # the assign pass (the full text round-trips Python/Arrow there) —
-    # measured +9.6 s on a 1M-page local[1] build
-    docs.count()
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _write_doclens() -> float:
-        spark.sparkContext.setJobDescription("build: doclens sink")
-        t = time.time()
-        docs.select("docid", "url", "dl", "warc_ts") \
-            .write.mode("overwrite").parquet(paths.doclens)
-        return time.time() - t
-
-    def _head_detect() -> tuple[list, int, float]:
-        spark.sparkContext.setJobDescription("build: head-detect sample")
-        t = time.time()
-        heads_path = os.path.join(out_dir, "heads.json")
-        if resume and os.path.exists(heads_path):
-            with open(heads_path) as f:
-                heads_meta = json.load(f)
-            return heads_meta["terms"], heads_meta["thr"], time.time() - t
-        # 20k docs bounds the sample tokenize to a constant cost at any
-        # corpus size; the df-quantile threshold estimate is already
-        # stable well below this (head terms sit orders of magnitude
-        # above the 99.9th percentile)
-        target = 20_000
-        frac = min(1.0, target / max(n_docs, 1))
-        sample = docs if frac >= 1.0 else docs.sample(fraction=frac, seed=42)
-        # persisted: the quantile pass and the head filter both consume
-        # this frame — without the persist the sample tokenize+agg runs
-        # TWICE (measured ~half the head-detect stage wall)
-        df_s = (tokenize_docs(sample).groupBy("term")
-                .agg(F.count("*").alias("df"))
-                .persist(StorageLevel.MEMORY_AND_DISK))
-        try:
-            thr_row = df_s.agg(F.percentile_approx("df", head_df_quantile).alias("t")).collect()[0]
-            thr = max(int(thr_row["t"] or 0), int(2 * BLOCK_SIZE * frac) + 1)
-            terms = [r["term"] for r in
-                     df_s.filter(F.col("df") > thr).select("term").collect()]
-        finally:
-            df_s.unpersist()
-        with open(heads_path, "w") as f:
-            json.dump({"terms": terms, "thr": thr, "frac": frac}, f)
-        return terms, thr, time.time() - t
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_dl = pool.submit(_write_doclens)
-        f_hd = pool.submit(_head_detect)
-        f_dl.result()
-        head_terms, head_thr, hd_wall = f_hd.result()
-    spark.sparkContext.setJobDescription(None)
+    # --- S4 doclens sink ∥ T5 head-term detection (the two jobs share
+    #     no dependency — both consume the persisted docs — so the
+    #     sample tokenize back-fills executors the write leaves idle;
+    #     measured ~0.6 s off every build at sf0.1). Head set on a
+    #     SAMPLE (one small python pass; the full token stream is
+    #     touched exactly once, in the fragment job). 20k docs bounds
+    #     the sample tokenize to a constant cost at any corpus size; the
+    #     df-quantile threshold estimate is already stable well below
+    #     this (head terms sit orders of magnitude above the 99.9th
+    #     percentile) ---
+    frac = min(1.0, 20_000 / max(n_docs, 1))
+    sample = docs if frac >= 1.0 else docs.sample(fraction=frac, seed=42)
+    docs.count()    # both jobs read docs: materialize it first (_concurrently)
+    _, ((head_terms, head_thr), hd_wall) = _concurrently(
+        spark,
+        ("build: doclens sink", lambda: docs.select("docid", "url", "dl", "warc_ts")
+         .write.mode("overwrite").parquet(job.paths.doclens)),
+        ("build: head-detect sample", lambda: job.head_set(
+            tokenize_docs(sample).groupBy("term").agg(F.count("*").alias("df")), frac)))
     # stage names/count unchanged (manifest_audit counts distinct
     # stages); the two walls overlap on the cluster
-    stage("prepare+docids+doclens", t0, n_docs=n_docs, avgdl=avgdl)
-    stage("head-detect", time.time() - hd_wall,
-          head_thr=head_thr, n_head=len(head_terms))
+    job.stage("prepare+docids+doclens", t0, n_docs=n_docs, avgdl=avgdl)
+    job.stage("head-detect", time.time() - hd_wall,
+              head_thr=head_thr, n_head=len(head_terms))
 
     # --- T1 tokenize + T5 salt/bucket in ONE python pass → big shuffle
     #     (token stream flows straight into the encoder: never persisted,
     #     never re-read, no broadcast join, shuffle key is one int32) ---
     salted = tokenize_salt_bucket(docs, head_terms, n_docs, salts,
-                                  n_buckets, docid_offset)
-
-    n_terms, has_head = encode_merge_finalize(
-        spark, salted, paths, avgdl=avgdl, head_terms=head_terms, n_docs=n_docs,
-        salts=salts, n_buckets=n_buckets, max_postings_per_row=max_postings_per_row,
-        docid_offset=docid_offset, resume=resume, stage=stage)
-
-    # --- S4/S6 stats + metrics ---
-    stats = {
-        "format_version": FORMAT_VERSION,
-        "N": n_docs,
-        "avgdl": avgdl,
-        "n_terms": n_terms,
-        # layered store: does fragments/ hold tail rows — and segments/
-        # any merged head rows — to union at query time? Cached here so
-        # per-query planning never stats a directory (at object-store
-        # scale a LIST call per query per dir) and never scans an empty
-        # layer
-        "has_tail": os.path.isdir(paths.fragments) and bool(os.listdir(paths.fragments)),
-        "has_head": has_head,
-        "build_config": {
-            "n_partitions": n_partitions, "n_buckets": n_buckets,
-            "salts": salts, "head_thr": head_thr, "docid_offset": docid_offset,
-            "block_size": BLOCK_SIZE, "max_postings_per_row": max_postings_per_row,
-        },
-        "wall_s": time.time() - t_build0,
-    }
-    with open(paths.stats, "w") as f:
-        json.dump(stats, f, indent=1)
-    with open(paths.metrics, "a") as f:
-        for m in metrics:
-            f.write(json.dumps(m) + "\n")
+                                  job.n_buckets, docid_offset)
+    stats = encode_merge_finalize(spark, salted, job, avgdl=avgdl, n_docs=n_docs,
+                                  head_terms=head_terms, head_thr=head_thr)
     docs.unpersist()
     return stats
 
 
-def encode_merge_finalize(
-    spark: SparkSession,
-    salted: DataFrame,
-    paths: IndexPaths,
-    *,
-    avgdl: float,
-    head_terms: list[str],
-    n_docs: int,
-    salts: int,
-    n_buckets: int,
-    max_postings_per_row: int,
-    docid_offset: int,
-    resume: bool,
-    stage,
-) -> tuple[int, bool]:
+def encode_merge_finalize(spark: SparkSession, salted: DataFrame, job: _IndexJob, *,
+                          avgdl: float, n_docs: int, head_terms: list[str],
+                          head_thr: int, **extra) -> dict:
     """The shared back half of every index-producing job (build_index
     and compact_indexes): resume-filter → THE big bucket shuffle →
     fragment encode with the per-bucket checkpoint sink → head-merge
-    overlay → dictionary. ``salted`` is the per-posting token stream
-    (docid, term, tf, dl, posb, bucket). Returns (n_terms, has_head) —
-    has_head = the merged overlay holds at least one segment row."""
+    overlay → dictionary → stats. ``salted`` is the per-posting token
+    stream (docid, term, tf, dl, posb, bucket); ``extra`` entries join
+    the stats dict, which is returned."""
+    paths, n_buckets = job.paths, job.n_buckets
+    max_postings_per_row = job.max_postings_per_row
     # --- resume filter: only buckets without a manifest ---
-    done = _done_buckets(paths.manifests) if resume else set()
-    if not resume:
+    done = _done_buckets(paths.manifests) if job.resume else set()
+    if not job.resume:
         import shutil
         shutil.rmtree(paths.fragments, ignore_errors=True)
         shutil.rmtree(paths.manifests, ignore_errors=True)
@@ -1074,13 +1081,14 @@ def encode_merge_finalize(
             # (same hash function, sorted order — see FRAG_PA_SCHEMA).
             .sortWithinPartitions("bucket", F.xxhash64("term"), "term", "docid")
             .mapInArrow(_make_fragment_encoder(avgdl, paths.fragments, paths.manifests,
-                                               head_terms, n_docs, salts, docid_offset),
+                                               head_terms, n_docs, job.salts,
+                                               job.docid_offset),
                         schema=FRAGMENT_SUMMARY_SCHEMA)
         ).collect()  # tiny: one row per bucket; forces execution
     else:
         summary = []
-    stage("fragments", t0, n_buckets=n_buckets, resumed_buckets=len(done),
-          built_buckets=len(summary))
+    job.stage("fragments", t0, n_buckets=n_buckets, resumed_buckets=len(done),
+              built_buckets=len(summary))
 
     # --- T7 merge → segments (HEAD/oversized terms only) ---
     # Tail fragments (one unsalted row per term, already ≤ one chunk)
@@ -1121,8 +1129,6 @@ def encode_merge_finalize(
     # no read-back count job; and the two independent finalize jobs
     # (head merge overlay, dictionary) run CONCURRENTLY so the second
     # back-fills executors freed by the first's stragglers (guide §2.6).
-    from concurrent.futures import ThreadPoolExecutor
-
     from pyspark.sql import Observation
     obs = Observation()
     dic = (frags.groupBy("term")
@@ -1136,29 +1142,21 @@ def encode_merge_finalize(
     obs_head = Observation()
     head = head.observe(obs_head, F.count(F.lit(1)).alias("head_rows"))
 
-    def _write_segments() -> tuple[int, float]:
-        spark.sparkContext.setJobDescription("finalize: head merge overlay")
-        t = time.time()
-        head.write.mode("overwrite").parquet(paths.segments)
-        return int(obs_head.get["head_rows"]), time.time() - t
+    def write(frame: DataFrame, path: str, observed: Observation, name: str) -> int:
+        frame.write.mode("overwrite").parquet(path)
+        return int(observed.get[name])
 
-    def _write_dictionary() -> tuple[int, float]:
-        spark.sparkContext.setJobDescription("finalize: dictionary")
-        t = time.time()
-        dic.write.mode("overwrite").parquet(paths.dictionary)
-        return int(obs.get["n_terms"]), time.time() - t
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_seg = pool.submit(_write_segments)
-        f_dic = pool.submit(_write_dictionary)
-        head_rows, seg_wall = f_seg.result()
-        n_terms, dic_wall = f_dic.result()
-    spark.sparkContext.setJobDescription(None)
+    (head_rows, seg_wall), (n_terms, dic_wall) = _concurrently(
+        spark,
+        ("finalize: head merge overlay",
+         lambda: write(head, paths.segments, obs_head, "head_rows")),
+        ("finalize: dictionary", lambda: write(dic, paths.dictionary, obs, "n_terms")))
     # stage names/count unchanged (manifest_audit counts distinct
     # stages); the two walls now OVERLAP on the cluster
-    stage("merge+segments", t0 + max(0.0, (time.time() - t0) - seg_wall))
-    stage("dictionary", time.time() - dic_wall, n_terms=n_terms)
-    return n_terms, head_rows > 0
+    job.stage("merge+segments", t0 + max(0.0, (time.time() - t0) - seg_wall))
+    job.stage("dictionary", time.time() - dic_wall, n_terms=n_terms)
+    return job.finish(n_docs=n_docs, avgdl=avgdl, n_terms=n_terms,
+                      has_head=head_rows > 0, head_thr=head_thr, **extra)
 
 
 def _dir_complete(path: str) -> bool:

@@ -164,7 +164,10 @@ def lsh_candidate_pairs(sig: DataFrame, n_hashes: int = 8, band_size: int = 2,
     # DataFrame would leak cached partitions on every call in a
     # long-lived session (the caller can't unpersist what it never
     # sees). localCheckpoint truncates the lineage so downstream
-    # consumers never re-derive from the unpersisted bands.
+    # consumers never re-derive from the unpersisted bands. Cluster
+    # caveat: an eager localCheckpoint keeps its blocks only on the
+    # executors that computed them, with no lineage, so a lost executor
+    # fails the consumer instead of recomputing.
     cand = cand.localCheckpoint(eager=True)
     bands.unpersist()
     return cand
@@ -217,8 +220,9 @@ def minhash_lsh_dedup(df: DataFrame, n_hashes: int = 8, band_size: int = 2,
     cand, bands = _lsh_candidate_pairs_lazy(sig, n_hashes, band_size,
                                             max_bucket)
     # eager: materialize the verified pairs, then release the shingle
-    # and bands caches (same leak-on-return argument as
-    # lsh_candidate_pairs)
+    # and bands caches (same leak-on-return argument and cluster
+    # caveat as lsh_candidate_pairs: a lost executor fails the
+    # consumer instead of recomputing)
     out = jaccard_verify(cand, sh, threshold).localCheckpoint(eager=True)
     bands.unpersist()
     sh.unpersist()
@@ -247,6 +251,8 @@ def ngram_jaccard_pairs(df: DataFrame, threshold: float = 0.5,
         .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
+    # eager, then release the shingle cache (same leak-on-return
+    # argument and cluster caveat as lsh_candidate_pairs)
     out = jaccard_verify(cand, sh, threshold).localCheckpoint(eager=True)
     sh.unpersist()
     return out

@@ -55,41 +55,22 @@ def build_field_indexes(spark: SparkSession, pages: DataFrame,
     ``fields`` maps field name → Column expression producing that
     field's text from the canonical page row (columns: url, warc_ts,
     html, text, lang — ``text`` already extracted/deduped).  The first
-    step applies the frozen P2-P4 prepare ONCE (lang filter, E(html)
-    where text is null, empty-text guard, dedup-by-url latest-wins) so
-    every field sees the same winning row per url; per-field builds
-    then substitute the field expression as the page text (empty →
-    :data:`EMPTY_FIELD_SENTINEL`, which indexes as dl=0) and run the
-    standard :func:`~aarhus_spark.operators.build.build_index`.  Docids
+    step applies the frozen P2-P4 prepare ONCE
+    (:func:`~aarhus_spark.operators.build.prepare_pages`: lang filter,
+    E(html) where text is null, empty-text guard, dedup-by-url
+    latest-wins) so every field sees the same winning row per url;
+    per-field builds then substitute the field expression as the page
+    text (empty → :data:`EMPTY_FIELD_SENTINEL`, which indexes as dl=0)
+    and run the standard :func:`~aarhus_spark.operators.build.build_index`.  Docids
     are assigned by lexicographic url order over identical url sets,
     so the per-field maps are identical by construction (asserted
     cheaply here via N).
     """
-    from pyspark.sql.window import Window
-
-    from ..textops import extract_series
-    from .build import build_index
-
-    import pyspark.sql.types as T
-
-    @F.pandas_udf(T.StringType())
-    def extract_udf(html: pd.Series) -> pd.Series:
-        return extract_series(html)
-
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"),
-                                          F.desc_nulls_last("text"))
-    base = (
-        pages
-        .filter(F.col("lang") == "en")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1).drop("rn")
-        .withColumn("text", F.when(F.col("text").isNull(),
-                                   extract_udf(F.col("html")))
-                    .otherwise(F.col("text")))
-        .filter(F.col("text").isNotNull() & (F.length("text") > 0))
-    )
     from pyspark import StorageLevel
-    base = base.persist(StorageLevel.MEMORY_AND_DISK)
+
+    from .build import build_index, prepare_pages
+
+    base = prepare_pages(pages).persist(StorageLevel.MEMORY_AND_DISK)
     stats: dict[str, dict] = {}
     try:
         for name, expr in fields.items():

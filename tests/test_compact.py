@@ -87,6 +87,12 @@ def test_compact_resume_recomputes_only_missing_bucket(spark, three_indexes,
     assert _done_buckets(p.manifests) == {0, 1, 3, 4}
     base = os.path.join(tmpdir_session, "cp_base")
     delta = os.path.join(tmpdir_session, "cp_delta")
+    # continuing the interrupted compaction under another config would
+    # mix two bucket spaces: refused before any bucket is touched
+    with pytest.raises(ValueError, match="build config"):
+        compact_indexes(spark, [base, delta], broken, n_partitions=4, n_buckets=5,
+                        salts=3, resume=True)
+    assert _done_buckets(p.manifests) == {0, 1, 3, 4}
     compact_indexes(spark, [base, delta], broken, n_partitions=4, n_buckets=5,
                     salts=2, resume=True)
     assert _done_buckets(p.manifests) == set(range(5))

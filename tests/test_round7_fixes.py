@@ -124,6 +124,32 @@ def test_encoder_salt_boundary_splits_runs(tmp_path):
     assert all(r["is_head"] for r in frag)
 
 
+def test_merger_refuses_overlapping_head_fragments():
+    """Range salting keeps a head term's fragments docid-disjoint, so
+    overlapping fragments mean a corrupt or mixed fragment store: the
+    merger raises, naming the term, instead of re-sorting."""
+    from aarhus_spark.codec import encode_blocks, encode_pos_chunks
+    from aarhus_spark.operators.build import _make_merger
+
+    def fragment(salt, docids):
+        docids = np.asarray(docids, dtype=np.int64)
+        tfs = np.ones(docids.size, dtype=np.int64)
+        payload, blocks = encode_blocks(
+            docids, tfs, np.full(docids.size, 3, dtype=np.int64), 3.0, 128,
+            pos_encoded=encode_pos_chunks(np.zeros(docids.size, np.int64), tfs))
+        return {"term": "hh", "salt": salt, "is_head": True, "n": docids.size,
+                "cf": docids.size, "first_docid": int(docids[0]),
+                "blocks": [{"last_docid": b[0], "max_partial": b[1], "offset": b[2]}
+                           for b in blocks],
+                "postings": payload}
+
+    merge = _make_merger(avgdl=3.0, max_postings_per_row=1000)
+    merged = merge(("hh",), pd.DataFrame([fragment(1, [3, 4]), fragment(0, [0, 1, 2])]))
+    assert list(merged["n"]) == [5] and list(merged["first_docid"]) == [0]
+    with pytest.raises(ValueError, match="'hh' overlap"):
+        merge(("hh",), pd.DataFrame([fragment(0, [0, 2, 4]), fragment(1, [1, 3])]))
+
+
 def test_tokenize_postings_pandas_wrapper():
     """The pandas materialization (kept for compat) still produces the
     v4 per-posting shape with correct positions."""
