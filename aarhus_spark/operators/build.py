@@ -249,7 +249,8 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
     the same partition-sorted pass (one Python/Arrow round trip),
     and the separate dedup-window exchange of :func:`prepare_pages`
     disappears. Docids come from :func:`_dense_docids`.
-    Returns ((docid, url, text, warc_ts, dl) persisted, N, Σdl).
+    Returns ((docid, url, text, warc_ts, dl) persisted and materialized,
+    N, Σdl).
     """
     rp = (
         pages.filter(F.col("lang") == "en")                    # P2 → pushed to scan
@@ -286,11 +287,12 @@ def prepare_and_assign_docids(spark: SparkSession, pages: DataFrame,
 
     deduped = rp.mapInPandas(
         dedup_extract, schema="url string, text string, warc_ts timestamp, dl long")
-    return _dense_docids(spark, deduped, ["url", "text", "warc_ts", "dl"], docid_offset)
+    return _dense_docids(spark, deduped, ["url", "text", "warc_ts", "dl"],
+                         docid_offset, DataFrame.count)
 
 
 def _dense_docids(spark: SparkSession, rp: DataFrame, cols: list[str],
-                  docid_offset: int):
+                  docid_offset: int, materialize):
     """T8 for build and compaction: docids are dense url ranks in global
     sort order, from ``rp`` range-partitioned and partition-sorted by
     url, in two passes: pass 1 collects the per-partition counts and
@@ -299,7 +301,12 @@ def _dense_docids(spark: SparkSession, rp: DataFrame, cols: list[str],
     ANY range boundary choice (ranges are disjoint and ordered), so it
     is partition-count-independent — unlike monotonically_increasing_id.
     ``rp`` is persisted with its partition id so both passes see the
-    same materialization. Returns ((docid, *cols) persisted, N, Σdl)."""
+    same materialization, and released once ``materialize`` (the
+    caller's first action over the output: build's count, compaction's
+    doclens write) has loaded the output — Spark re-plans a cached
+    dependent that is not loaded yet when its input is unpersisted.
+    The offsets broadcast stays: a lost cached partition of the output
+    recomputes through it. Returns ((docid, *cols) persisted, N, Σdl)."""
     ranked = (rp.withColumn("pid", F.spark_partition_id())
               .persist(StorageLevel.MEMORY_AND_DISK))
     rows = ranked.groupBy("pid").agg(
@@ -323,8 +330,10 @@ def _dense_docids(spark: SparkSession, rp: DataFrame, cols: list[str],
 
     schema = T.StructType([T.StructField("docid", T.LongType())] + [
         T.StructField(c, ranked.schema[c].dataType) for c in cols])
-    out = ranked.mapInPandas(assign, schema=schema)
-    return out.persist(StorageLevel.MEMORY_AND_DISK), acc - docid_offset, sumdl
+    out = ranked.mapInPandas(assign, schema=schema).persist(StorageLevel.MEMORY_AND_DISK)
+    materialize(out)
+    ranked.unpersist()
+    return out, acc - docid_offset, sumdl
 
 
 def tokenize_docs(docs: DataFrame) -> DataFrame:
@@ -956,9 +965,10 @@ def _concurrently(spark: SparkSession, *jobs) -> list[tuple[object, float]]:
     wall) in order.
 
     Rule: a persisted frame that two of the jobs read must be
-    materialized BEFORE this call (build_index's ``docs.count()``) —
-    two concurrent first consumers would otherwise race the cache and
-    each compute it (measured +9.6 s on a 1M-page local[1] build)."""
+    materialized BEFORE this call (build_index's docs, counted by
+    :func:`_dense_docids`) — two concurrent first consumers would
+    otherwise race the cache and each compute it (measured +9.6 s on a
+    1M-page local[1] build)."""
     from concurrent.futures import ThreadPoolExecutor
 
     def run(desc: str, fn):
@@ -1016,7 +1026,7 @@ def build_index(
     #     percentile) ---
     frac = min(1.0, 20_000 / max(n_docs, 1))
     sample = docs if frac >= 1.0 else docs.sample(fraction=frac, seed=42)
-    docs.count()    # both jobs read docs: materialize it first (_concurrently)
+    # both jobs read docs, already materialized (_concurrently's rule)
     _, ((head_terms, head_thr), hd_wall) = _concurrently(
         spark,
         ("build: doclens sink", lambda: docs.select("docid", "url", "dl", "warc_ts")

@@ -168,25 +168,14 @@ def compact_indexes(
     t0 = time.time()
 
     def docid_map():
-        from .search import load_tombstones
-        dead, _ = load_tombstones(spark, dirs)
-        union_dl = _union_doclens(spark, dirs)
-        if dead.size:
-            # Arrow path (one numpy→Arrow column), not a python list of
-            # tuples — bounded by TOMBSTONE_BUDGET but needlessly
-            # driver-heavy near the ceiling otherwise (same fix as
-            # incremental.py mask path)
-            dead_df = spark.createDataFrame(
-                pd.DataFrame({"dead_docid": dead.astype(np.int64)}))
-            union_dl = union_dl.join(
-                F.broadcast(dead_df),
-                union_dl["old_docid"] == dead_df["dead_docid"],
-                "left_anti")
+        from .search import _drop_dead, load_tombstones
+        union_dl = _drop_dead(spark, _union_doclens(spark, dirs),
+                              load_tombstones(spark, dirs)[0], "old_docid")
         rp = union_dl.repartitionByRange(job.n_partitions, "url").sortWithinPartitions("url")
-        m, n, sdl = _dense_docids(spark, rp, ["dir_id", "old_docid", "url", "dl", "warc_ts"], 0)
-        m.select("docid", "url", "dl", "warc_ts") \
-            .write.mode("overwrite").parquet(job.paths.doclens)
-        return m, n, sdl
+        return _dense_docids(
+            spark, rp, ["dir_id", "old_docid", "url", "dl", "warc_ts"], 0,
+            lambda m: m.select("docid", "url", "dl", "warc_ts")
+            .write.mode("overwrite").parquet(job.paths.doclens))
 
     dic = reduce(DataFrame.unionByName,
                  [read_dictionary(spark, d).select("term", "df") for d in dirs])

@@ -91,12 +91,11 @@ from pyspark.sql.window import Window
 
 from ..config import TOP_K
 from ..textops import tokenize
-from .search import (RESULT_SCHEMA, _as_dirs, _chain_stats, _global_df_map,
+from .search import (RESULT_SCHEMA, _chain, _drop_dead, _global_df_map,
                      _hit_order, _QueryAnalysis, _readers, _score_key,
                      _top_hits, candidate_segments, chain_dictionary,
-                     load_stats_multi, load_tombstones, local_df,
-                     localize_queries, read_query_rows, search_phrase,
-                     search_topk)
+                     local_df, localize_queries, read_query_rows,
+                     search_phrase, search_topk)
 
 # url host — same expression in the DuckDB twin (harness)
 HOST_RE = r"^https?://([^/]+)"
@@ -208,19 +207,14 @@ def _doc_meta(spark: SparkSession, index_dir) -> DataFrame:
     FRESH docid for the new row and record the superseded base docid in
     the delta's tombstones/ parquet (operators/incremental.py), so
     docids never collide across dirs; liveness is purely the tombstone
-    filter (broadcast anti-join, bounded by TOMBSTONE_BUDGET — the same
-    device the retrieval path uses). The per-docid window stays as
-    defense in depth against a duplicate-docid writer bug."""
-    dirs = _as_dirs(index_dir)
-    meta = functools.reduce(DataFrame.unionByName, [
+    filter (:func:`~.search._drop_dead`, the same device the retrieval
+    path uses). The per-docid window stays as defense in depth against
+    a duplicate-docid writer bug."""
+    chain = _chain(spark, index_dir)
+    meta = _drop_dead(spark, functools.reduce(DataFrame.unionByName, [
         _readers(spark, d).doclens.withColumn("__gen", F.lit(i))
-        for i, d in enumerate(dirs)])
-    dead, _dl = load_tombstones(spark, dirs)
-    if dead.size:
-        dead_df = spark.createDataFrame(
-            pd.DataFrame({"docid": dead.astype("int64")}))
-        meta = meta.join(F.broadcast(dead_df), "docid", "left_anti")
-    if len(dirs) == 1:
+        for i, d in enumerate(chain.dirs)]), chain.dead)
+    if len(chain.dirs) == 1:
         return meta.drop("__gen")
     w = Window.partitionBy("docid").orderBy(F.desc("__gen"))
     return (meta.withColumn("__rn", F.row_number().over(w))
@@ -269,7 +263,8 @@ def search_significant_terms(spark: SparkSession, index_dir,
     query's matched docs (foreground) relative to the whole corpus
     (background). fg_df = matched docs containing the term (re-analyze
     the stored text, ES field-data style), bg_df = dictionary df,
-    fg_size = |matched| per query, bg_size = N from the stats sink.
+    fg_size = |matched| per query, bg_size = the chain's live N
+    (:func:`~.search._chain`).
 
     Score is JLH (ES's classic significance heuristic):
     ``(fg%/bg%) · (fg% − bg%)`` — computed as ONE double expression
@@ -299,9 +294,9 @@ def search_significant_terms(spark: SparkSession, index_dir,
     # bg_df stays the STORED dictionary df — exactly Lucene/ES, whose
     # docFreq ignores deletions until segments merge while live-doc
     # counts exclude them (compaction purges both here)
-    n_total, _, _, _dead = _chain_stats(spark, index_dir)
     fgp = F.col("fg_df").cast("double") / F.col("fg_size").cast("double")
-    bgp = F.col("bg_df").cast("double") / F.lit(float(n_total))
+    bgp = (F.col("bg_df").cast("double")
+           / F.lit(float(_chain(spark, index_dir).n_docs)))
     score = F.round((fgp / bgp) * (fgp - bgp), round_to)
     scored = (fg.join(F.broadcast(fg_size), "query_id")
               .join(dic, "term")
@@ -474,9 +469,10 @@ def mlt_select_terms(spark: SparkSession, index_dir, seed_text: str,
     max_query_terms — the rounding makes the selection key exactly
     reproducible across engines (the harness DuckDB twin computes the
     identical key), so a last-ulp libm difference can never swap the
-    cut-off term. df comes from the dictionary with a ``term IN``
-    pushdown; N from the stats sink. Returns the selected terms
-    sorted."""
+    cut-off term. df is the stored dictionary df, with a ``term IN``
+    pushdown, and N the chain's live N — Lucene MoreLikeThis's docFreq
+    and numDocs, and the convention of :func:`search_significant_terms`.
+    Returns the selected terms sorted."""
     return _mlt_select_many(spark, index_dir, [seed_text], max_query_terms,
                             min_term_freq, min_doc_freq)[0]
 
@@ -492,8 +488,8 @@ def _mlt_select_many(spark: SparkSession, index_dir, seed_texts: list[str],
     union = sorted(set().union(*cands))
     if not union:
         return [[] for _ in seed_texts]
-    n_docs, _, _ = load_stats_multi(_as_dirs(index_dir))
-    dfm = _global_df_map(spark, index_dir, union)
+    chain = _chain(spark, index_dir)
+    n_docs, dfm = chain.n_docs, _global_df_map(spark, chain, union)
     out = []
     for tf, cand in zip(tfs, cands):
         # max(min_doc_freq, 1): with min_doc_freq=0 an out-of-dictionary
@@ -944,12 +940,13 @@ def search_explain(spark: SparkSession, index_dir, queries: DataFrame,
     # tombstone-corrected stats (N_eff, avgdl_eff, df_eff), the SAME
     # values the retrieval path scores with — explain contributions
     # must sum back to the retrieval score on re-crawl chains too
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    chain = _chain(spark, index_dir)
+    n_docs, avgdl = chain.n_docs, chain.avgdl
     qa = _QueryAnalysis(spark, queries)
     qterms = qa.qterms_df()
     terms = qa.terms
-    seg = candidate_segments(spark, index_dir, terms) if dead.size else None
-    dfm = _global_df_map(spark, index_dir, terms, seg=seg, dead=dead)
+    dfm = _global_df_map(spark, chain, terms,
+                         candidate_segments(spark, chain.dirs, terms))
     dfs = local_df(spark, sorted(dfm.items()), "term string, df long")
     hit = (_with_meta(spark, index_dir, top, "url", "dl")
            .join(docs.select("url", "text"), "url"))

@@ -40,7 +40,7 @@ Query time then serves EXACTLY the monolithic latest-wins results
 (driver-verified): dead docids are masked from every candidate set,
 N/avgdl are corrected from the tombstoned dl's, and per-query-term df
 is corrected by counting dead members during the (already-necessary)
-candidate decode (operators/search.py `_chain_stats` /
+candidate decode (operators/search.py `_chain` /
 `_global_df_map`). Compaction purges tombstones physically
 (operators/compact.py) — the chain + mask is the cheap steady state
 between compactions, the compacted index the clean state after.
@@ -49,8 +49,8 @@ between compactions, the compacted index the clean state after.
 from __future__ import annotations
 
 import os
+from functools import reduce
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -122,7 +122,7 @@ def split_delta_pages(spark: SparkSession, pages: DataFrame,
     """
     from pyspark.sql.window import Window
 
-    from .search import load_tombstones
+    from .search import _drop_dead, load_tombstones
 
     w = Window.partitionBy("url").orderBy(F.desc("warc_ts"),
                                           F.desc_nulls_last("text"))
@@ -132,35 +132,16 @@ def split_delta_pages(spark: SparkSession, pages: DataFrame,
     # urls already superseded by an EARLIER tombstone delta are dead in
     # their original dir — only the LIVE copy of a url may be re-crawled
     # (otherwise a twice-re-crawled url would enter the delta twice and
-    # its dead docid would be tombstoned twice). Broadcast anti-join,
-    # not a driver-built isin literal: the dead set is budget-bounded
-    # (load_tombstones) but an In-expression over a collected python
-    # list bloats the plan and the task closure linearly with it.
-    dead, _ = load_tombstones(spark, base_dirs)
-    # Arrow path (pandas frame), not a Python list of tuples: bounded by
-    # TOMBSTONE_BUDGET but row-by-row driver serialization is needlessly
-    # slow near the 2M ceiling
-    dead_df = (spark.createDataFrame(pd.DataFrame({"docid": dead.astype("int64")}))
-               if dead.size else None)
-
-    fresh = pages
-    recrawled = None
-    tombstones = None
-    for d in base_dirs:
-        done = read_doclens(spark, d)
-        if dead_df is not None:
-            done = done.join(F.broadcast(dead_df), "docid", "left_anti")
-        base = done.select("url", "docid", "dl",
-                           F.col("warc_ts").alias("base_ts"))
-        hits = (pages.join(base, "url")
-                .filter(F.col("warc_ts") > F.col("base_ts")))
-        t = hits.select("docid", "dl", "url")
-        r = hits.select(*pages.columns)
-        tombstones = t if tombstones is None else tombstones.unionByName(t)
-        recrawled = r if recrawled is None else recrawled.unionByName(r)
-        fresh = fresh.join(done.select("url"), "url", "left_anti")
-    delta_pages = fresh if recrawled is None else fresh.unionByName(recrawled)
-    return delta_pages, tombstones
+    # its dead docid would be tombstoned twice)
+    done = _drop_dead(spark, reduce(DataFrame.unionByName,
+                                    [read_doclens(spark, d) for d in base_dirs]),
+                      load_tombstones(spark, base_dirs)[0])
+    hits = (pages.join(done.select("url", "docid", "dl",
+                                   F.col("warc_ts").alias("base_ts")), "url")
+            .filter(F.col("warc_ts") > F.col("base_ts")))
+    fresh = pages.join(done.select("url"), "url", "left_anti")
+    return (fresh.unionByName(hits.select(*pages.columns)),
+            hits.select("docid", "dl", "url"))
 
 
 def build_delta(
@@ -182,12 +163,11 @@ def build_delta(
         fresh, tombstones = split_delta_pages(spark, pages, base_dirs)
         stats = build_index(spark, fresh, delta_dir, docid_offset=offset,
                             **build_kwargs)
-        if tombstones is not None:
-            # written AFTER the index commit: a killed build leaves no
-            # tombstones behind, so the chain keeps serving the base
-            # versions (stale-but-consistent) until the delta exists
-            tombstones.write.mode("overwrite").parquet(
-                os.path.join(delta_dir, "tombstones"))
+        # written AFTER the index commit: a killed build leaves no
+        # tombstones behind, so the chain keeps serving the base
+        # versions (stale-but-consistent) until the delta exists
+        tombstones.write.mode("overwrite").parquet(
+            os.path.join(delta_dir, "tombstones"))
         return stats
     fresh = new_pages_only(spark, pages, base_dirs, on_recrawl=on_recrawl)
     return build_index(spark, fresh, delta_dir, docid_offset=offset, **build_kwargs)

@@ -121,13 +121,12 @@ def search_multi_match(spark: SparkSession, index_root: str,
     boost, and the fields fold in field-name order from 0.0 — the sum
     left to right, the best with ``greatest`` — so scores are
     bit-identical to summing per-field TAAT scores in that order.
-    Above one docid range (``default_n_ranges``) the kernel runs per
-    (query, docid range) and the ranges merge
-    (:func:`~.search._per_query`).
+    Above one docid range the kernel runs per (query, docid range) and
+    the ranges merge (:func:`~.search._per_query`, which sizes the
+    fan-out from a field's docid domain: fields share docids).
     """
-    from .search import (RESULT_SCHEMA, _chain_stats, _dfg_or_none,
-                         _per_query, _QueryAnalysis, candidate_segments,
-                         default_n_ranges)
+    from .search import (RESULT_SCHEMA, _chain, _df_of, _per_query,
+                         _QueryAnalysis, candidate_segments)
 
     if mode not in ("best_fields", "most_fields"):
         raise ValueError(f"unknown multi_match mode: {mode!r}")
@@ -138,22 +137,20 @@ def search_multi_match(spark: SparkSession, index_root: str,
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     fstats, seg, dead = [], None, np.empty(0, dtype=np.int64)
     for name in fields:
-        fdir = _field_dir(index_root, name)
-        n_docs, avgdl, _, fdead = _chain_stats(spark, fdir)
-        fseg = candidate_segments(spark, fdir, qa.terms)
-        fstats.append((name, n_docs, avgdl,
-                       _dfg_or_none(spark, fdir, qa.terms, fseg, fdead),
+        chain = _chain(spark, _field_dir(index_root, name))
+        fseg = candidate_segments(spark, chain.dirs, qa.terms)
+        fstats.append((name, chain.n_docs, chain.avgdl,
+                       _df_of(spark, chain, qa.terms, fseg),
                        float(boosts.get(name, 1.0))))
         # docids are shared across fields: a doc dead in one is dead
-        dead = np.union1d(dead, fdead)
+        dead = np.union1d(dead, chain.dead)
         fseg = fseg.withColumn("field", F.lit(name))
         seg = fseg if seg is None else seg.unionByName(fseg)
     args = (fstats, dead, mode, float(tie_breaker), k)
-    with open(os.path.join(index_root, MULTIFIELD_MANIFEST)) as f:
-        n_ranges = default_n_ranges(json.load(f)["N"])
+    # the last field's domain serves: fields share docids
     return _per_query(
         spark, seg, qa.qterms_pdf.itertuples(index=False, name=None),
-        [_field_dir(index_root, name) for name in fields], n_ranges, k,
+        chain.domain, None, k,
         lambda qid, g, lo, hi: _multi_match_one_query(
             g, *args, range_lo=lo, range_hi=hi))
 
@@ -183,7 +180,7 @@ def _multi_match_one_query(g: pd.DataFrame, fstats: list[tuple],
     """Exact combined top-k for one query (or one docid range of it)
     over field-tagged candidate rows.
 
-    ``fstats`` = (field, N, avgdl, df map or None, boost) per field in
+    ``fstats`` = (field, N, avgdl, df source, boost) per field in
     name order. Every field's blocks go into ONE block table (term
     indexes field-major, terms sorted within a field) cut into one set
     of elementary intervals (``search._BlockScan``). A candidate's
@@ -206,11 +203,11 @@ def _multi_match_one_query(g: pd.DataFrame, fstats: list[tuple],
     idfs: list[float] = []
     avgdls: list[float] = []
     field_of_ti: list[int] = []
-    for fi, (name, n_docs, avgdl, dfg, _boost) in enumerate(fstats):
+    for fi, (name, n_docs, avgdl, df_of, _boost) in enumerate(fstats):
         gf = g[g["field"] == name]
         if not len(gf):
             continue
-        _, fidfs, fblocks = _block_table(gf, n_docs, avgdl, dfg,
+        _, fidfs, fblocks = _block_table(gf, n_docs, avgdl, df_of,
                                          ti0=len(idfs))
         blocks += fblocks
         idfs += fidfs

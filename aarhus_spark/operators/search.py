@@ -28,13 +28,15 @@ Q7 ``harness.q_bm25_brute_sql`` — the brute-force Spark SQL twin
   (explode → join → agg → window), checked against the harness's
   DuckDB oracle ``harness._bm25_oracle_sql``.
 
-``search_topk`` is the DEFAULT entry point: it sizes the chunk-parallel
-fan-out from the index stats (``default_n_ranges``). Every top-k kernel
-(WAND, phrase, phrase_prefix, spans, intervals, multi_match) runs
-through one dispatcher, :func:`_per_query`: one group per query when one
-range suffices (small indexes, no merge stage), otherwise one group per
-(query, docid range) plus a merge window. ``search_wand`` and
-``search_wand_ranges`` are ``search_topk`` with the fan-out fixed.
+``search_topk`` is the DEFAULT entry point. Every scored op reads its
+index chain once (:func:`_chain`: live N and avgdl, dead docids, docid
+domain). Every top-k kernel (WAND, phrase, phrase_prefix, spans,
+intervals, multi_match) runs through one dispatcher, :func:`_per_query`,
+which sizes the chunk-parallel fan-out from the domain
+(``default_n_ranges``): one group per query when one range suffices
+(small indexes, no merge stage), otherwise one group per (query, docid
+range) plus a merge window. ``search_wand`` and ``search_wand_ranges``
+are ``search_topk`` with the fan-out fixed.
 """
 
 from __future__ import annotations
@@ -302,23 +304,6 @@ def _as_dirs(index_dir) -> list[str]:
     return [index_dir] if isinstance(index_dir, str) else list(index_dir)
 
 
-def load_stats_multi(dirs: list[str]) -> tuple[int, float, dict[str, float]]:
-    """Combined corpus stats over one or more index dirs (base + deltas):
-    N = ΣN_i, avgdl = Σ(avgdl_i·N_i)/N. Returns per-dir avgdl too — WAND
-    block bounds were computed with each dir's own avgdl and must be
-    rescaled by max(1, avgdl_comb/avgdl_dir) to stay safe upper bounds
-    (partial is increasing in avgdl; proof in operators/incremental.py).
-    """
-    n_total, sumdl, per_dir = 0, 0.0, {}
-    for d in dirs:
-        st = load_stats(d)
-        n_total += int(st["N"])
-        sumdl += float(st["avgdl"]) * int(st["N"])
-        per_dir[d] = float(st["avgdl"])
-    avgdl = sumdl / n_total if n_total else 0.0
-    return n_total, avgdl, per_dir
-
-
 def load_tombstones(spark: SparkSession, dirs) -> tuple[np.ndarray, int]:
     """Dead (tombstoned) docids over an index chain, with their Σdl.
 
@@ -327,7 +312,7 @@ def load_tombstones(spark: SparkSession, dirs) -> tuple[np.ndarray, int]:
     one (docid, dl, url) row per base document superseded by a
     re-crawl. Query time must (a) never return a dead docid, and
     (b) score with corpus stats AS IF the dead docs were gone —
-    N_eff, avgdl_eff here; per-term df correction in
+    N_eff, avgdl_eff in :func:`_chain`; per-term df correction in
     :func:`_global_df_map` (the monolithic-rebuild equivalence the
     harness verifies depends on all three).
 
@@ -363,43 +348,72 @@ def load_tombstones(spark: SparkSession, dirs) -> tuple[np.ndarray, int]:
     return dead, int(pdf["dl"].sum())
 
 
-def _chain_stats(spark: SparkSession, index_dir) -> tuple[int, float, dict[str, float], np.ndarray]:
-    """Combined (N_eff, avgdl_eff, per-dir avgdl, dead docids) for an
-    index chain, tombstones applied: N_eff = ΣN − |dead|, avgdl_eff =
-    (Σdl − Σdl_dead)/N_eff. The per-dir avgdl (for block-bound
-    rescaling) stays the BUILD-time value — the stored bounds were
-    computed with it; max(1, avgdl_eff/avgdl_dir) remains a safe upper
-    bound by the monotonicity proof in load_stats_multi."""
+class _Chain(NamedTuple):
+    """An index chain (base + deltas) as every scored op reads it, once
+    per call (:func:`_chain`): its ``dirs``; the LIVE corpus stats a
+    monolithic rebuild without the tombstoned docs would score with,
+    ``n_docs`` = N_eff = ΣN − |dead| and ``avgdl`` = avgdl_eff =
+    (Σdl − Σdl_dead)/N_eff; ``dead``, the sorted tombstoned docids
+    (:func:`load_tombstones`); and ``domain``, the inclusive docid
+    range (lo, hi), (0, -1) when empty.
+
+    Each dir's stored block bounds were computed with its own BUILD
+    avgdl (``src_avgdl`` on every candidate row); scorers rescale them
+    by max(1, avgdl/src_avgdl), which stays a safe upper bound because
+    BM25's partial is increasing in avgdl (proof in
+    operators/incremental.py)."""
+    dirs: list[str]
+    n_docs: int
+    avgdl: float
+    dead: np.ndarray
+    domain: tuple[int, int]
+
+
+def _chain(spark: SparkSession, index_dir) -> _Chain:
+    """THE read of an index chain (one dir or a list) for a scored op:
+    stats.json per dir (:func:`load_stats`) and the tombstones.
+
+    The domain comes from each dir's persisted build_config
+    (docid_offset + N): docids are dense in [offset, offset + N) per
+    dir by construction (dense url-rank + offset, build.py), so it is
+    exact, and unlike [0, ΣN) it stays correct for a delta index
+    queried on its own, whose docids all sit at offset ≥ N_base. On a
+    dense chain its size is ΣN, the raw count the fan-out is sized
+    from (:func:`_per_query`)."""
     dirs = _as_dirs(index_dir)
-    n_total, avgdl, per_dir = load_stats_multi(dirs)
-    dead, dl_dead = load_tombstones(spark, dirs)
-    if dead.size:
-        sumdl = avgdl * n_total - dl_dead
-        n_total -= int(dead.size)
-        avgdl = sumdl / n_total if n_total else 0.0
-    return n_total, avgdl, per_dir, dead
-
-
-def docid_domain(dirs: list[str]) -> tuple[int, int]:
-    """Inclusive [lo, hi] docid domain over the index dirs, from each
-    dir's persisted build_config (docid_offset + N). Docids are dense in
-    [offset, offset+N) per dir by construction (dense url-rank + offset,
-    build.py), so this is exact — and unlike ``[0, ΣN)`` it stays correct
-    for a delta index queried on its own, whose docids all sit at
-    offset ≥ N_base (they would otherwise fall outside every range and
-    silently return empty results)."""
-    lo, hi = None, None
+    n_docs, sumdl, lo, hi = 0, 0.0, None, None
     for d in dirs:
         st = load_stats(d)
         n = int(st["N"])
-        if n == 0:
-            continue
-        off = int(st.get("build_config", {}).get("docid_offset", 0))
-        lo = off if lo is None else min(lo, off)
-        hi = off + n - 1 if hi is None else max(hi, off + n - 1)
-    if lo is None:
-        return 0, -1
-    return lo, hi
+        n_docs += n
+        sumdl += float(st["avgdl"]) * n
+        if n:
+            off = int(st.get("build_config", {}).get("docid_offset", 0))
+            lo = off if lo is None else min(lo, off)
+            hi = off + n - 1 if hi is None else max(hi, off + n - 1)
+    avgdl = sumdl / n_docs if n_docs else 0.0
+    dead, dl_dead = load_tombstones(spark, dirs)
+    if dead.size:
+        sumdl = avgdl * n_docs - dl_dead
+        n_docs -= int(dead.size)
+        avgdl = sumdl / n_docs if n_docs else 0.0
+    return _Chain(dirs, n_docs, avgdl, dead,
+                  (0, -1) if lo is None else (lo, hi))
+
+
+def _drop_dead(spark: SparkSession, df: DataFrame, dead: np.ndarray,
+               col: str = "docid") -> DataFrame:
+    """``df`` without the rows whose ``col`` is a dead docid: THE
+    tombstone filter on a frame, one broadcast left-anti join (``df``
+    itself when nothing is dead). A join, not an In-literal, so the
+    plan and the task closure stay flat in the dead set; the set
+    reaches the JVM as one Arrow column, not a Python list of tuples,
+    whose row-by-row serialization is needlessly slow near
+    config.TOMBSTONE_BUDGET."""
+    if not dead.size:
+        return df
+    dead_df = spark.createDataFrame(pd.DataFrame({col: dead.astype(np.int64)}))
+    return df.join(F.broadcast(dead_df), col, "left_anti")
 
 
 # ---------------------------------------------------------------------------
@@ -542,31 +556,32 @@ def chain_dictionary(spark: SparkSession, index_dir) -> DataFrame:
             .groupBy("term").agg(F.sum("df").alias("df")))
 
 
-def _global_df_map(spark: SparkSession, index_dir, terms: list[str],
-                   seg: DataFrame | None = None,
-                   dead: np.ndarray | None = None) -> dict[str, int]:
-    """Global df per candidate term = Σ df over the per-dir dictionaries
-    (tiny: ≤ |dirs|·|query terms| rows collected, summed on the driver).
-    ONE ``collect`` over the union of the dirs' dictionary readers, each
-    with a pushed ``term IN`` filter, instead of aggregating the segment
-    rows — the segments are then scanned exactly once, by the scorer.
+def _global_df_map(spark: SparkSession, chain: _Chain, terms: list[str],
+                   seg: DataFrame | None = None) -> dict[str, int]:
+    """Global df per candidate term = Σ df over the chain's per-dir
+    dictionaries (tiny: ≤ |dirs|·|query terms| rows, collected and
+    summed in-process). ONE ``collect`` over the union of the dirs'
+    dictionary readers, each with a pushed ``term IN`` filter, instead
+    of aggregating the segment rows — the segments are then scanned
+    exactly once, by the scorer. Without ``seg`` this is the STORED df.
 
-    With tombstones (``dead`` non-empty and ``seg`` given): df must
-    count LIVE postings only — a monolithic rebuild would never have
-    indexed the superseded doc. The dictionaries can't know which docs
-    died after their build, so the correction is computed at query time
-    from the candidate rows themselves: one extra distributed pass that
-    decodes ONLY blocks whose docid span intersects the dead set
-    (searchsorted skip — on a mostly-live index nearly every block is
-    skipped undecoded) and counts dead members per term. Bounded by the
-    query terms' postings, like the scorer scan itself."""
+    With ``seg`` (the terms' candidate rows) on a chain with dead
+    docids: df must count LIVE postings only — a monolithic rebuild
+    would never have indexed the superseded doc. The dictionaries can't
+    know which docs died after their build, so the correction is
+    computed at query time from the candidate rows themselves: one
+    extra distributed pass that decodes ONLY blocks whose docid span
+    intersects the dead set (searchsorted skip — on a mostly-live index
+    nearly every block is skipped undecoded) and counts dead members
+    per term. Bounded by the query terms' postings, like the scorer
+    scan itself."""
     term_in = _sql_in("term", terms)
-    dicts = [d.filter(term_in) for d in _dictionaries(spark, index_dir)]
+    dicts = [d.filter(term_in) for d in _dictionaries(spark, chain.dirs)]
     out: dict[str, int] = {}
     for r in functools.reduce(DataFrame.union, dicts).collect():
         out[r["term"]] = out.get(r["term"], 0) + int(r["df"])
-    if dead is not None and dead.size and seg is not None and out:
-        dead_arr = dead  # closure capture (sorted)
+    if chain.dead.size and seg is not None and out:
+        dead_arr = chain.dead  # closure capture (sorted)
 
         def count_dead(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             for pdf in batches:
@@ -707,31 +722,23 @@ class _QueryAnalysis:
         return out
 
 
-def _dfg_or_none(spark: SparkSession, index_dir, terms: list[str],
-                 seg: DataFrame, dead: np.ndarray) -> dict[str, int] | None:
-    """Global-df map ONLY when the segment rows' own ``df`` column can't
-    serve: multi-dir chains (per-dir rows carry per-dir df) or live
-    tombstones (df must count live postings). On a single plain dir the
-    stored df IS the global df — head chunks carry the merger's
-    df_total, tail rows df = n — so the dictionary-lookup job (and with
-    tombstones, the correction pass) is skipped entirely; scorers fall
-    back to the per-row df."""
-    dirs = _as_dirs(index_dir)
-    if len(dirs) == 1 and not dead.size:
-        return None
-    return _global_df_map(spark, index_dir, terms, seg=seg, dead=dead)
+def _stored_df(term: str, row_df) -> float:
+    return float(row_df)
 
 
-def _dfg_from_rows(g: pd.DataFrame, dfg: dict | None) -> dict:
-    """Per-group term→df map from the candidate rows themselves (the
-    dfg=None fast path; every chunk row stores the term's global df)."""
-    if dfg is not None:
-        return dfg
-    out: dict = {}
-    for t, df_ in zip(g["term"], g["df"]):
-        if t not in out:
-            out[t] = float(df_)
-    return out
+def _df_of(spark: SparkSession, chain: _Chain, terms: list[str],
+           seg: DataFrame):
+    """THE df a scorer of the candidate rows ``seg`` reads, as
+    ``df_of(term, row_df) → float`` (``row_df``: a row's stored ``df``).
+    On a single plain dir the stored df IS the global df — head chunks
+    carry the merger's df_total, tail rows df = n — so the row's value
+    serves and no dictionary job runs. On a multi-dir chain (per-dir
+    rows carry per-dir df) or with dead docids (df must count live
+    postings) it is the :func:`_global_df_map` value."""
+    if len(chain.dirs) == 1 and not chain.dead.size:
+        return _stored_df
+    dfm = _global_df_map(spark, chain, terms, seg)
+    return lambda term, _row_df: float(dfm[term])
 
 
 def _score_key(round_to: int | None = None) -> Column:
@@ -809,7 +816,8 @@ def search_taat(
     ``min_should_match`` (default 0 with a must clause present — the
     ES default). Scores sum over every matched positive term once, in
     sorted-term order (a term in both clauses counts as must)."""
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    chain = _chain(spark, index_dir)
+    n_docs, avgdl = chain.n_docs, chain.avgdl
     _check_score_mode(score_mode)
     prox = score_mode == "proximity"
     qa = _QueryAnalysis(spark, queries)
@@ -820,15 +828,14 @@ def search_taat(
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     has_neg = bool(neg_terms)
     all_terms = qa.all_terms
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
+    seg = candidate_segments(spark, chain.dirs, all_terms)
+    df_of = _df_of(spark, chain, all_terms, seg)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..scoring import partial as _partial
         for pdf in batches:
             # few rows per batch (one per (term, chunk)); plain column
-            # zip — no pandas row materialization. dfg=None (single
-            # plain dir): idf comes from the row's own stored global df.
+            # zip — no pandas row materialization
             for term, row_df, payload, blks in zip(
                     pdf["term"], pdf["df"], pdf["postings"], pdf["blocks"]):
                 # proximity mode also carries each posting's position
@@ -837,8 +844,7 @@ def search_taat(
                     payload, _offsets(blks), positions=prox)
                 if not docids.size:
                     continue
-                w = _idf(float(dfg[term]) if dfg is not None
-                         else float(row_df), n_docs)
+                w = _idf(df_of(term, row_df), n_docs)
                 # exact: partial recomputed from (tf, dl) with the
                 # COMBINED avgdl — stored block bounds are not used here
                 contrib = w * _partial(tfs, dls, avgdl)
@@ -852,15 +858,8 @@ def search_taat(
 
     dec_schema = ("term string, docid long, contrib double, pos array<long>"
                   if prox else "term string, docid long, contrib double")
-    decoded = seg.select("term", "df", "blocks", "postings").mapInPandas(
-        decode, schema=dec_schema)
-    if dead.size:
-        # Arrow path, not a Python list of tuples: the dead set is
-        # budget-bounded at TOMBSTONE_BUDGET (2M) and a row-by-row
-        # driver serialization is needlessly slow near that ceiling
-        dead_df = spark.createDataFrame(
-            pd.DataFrame({"docid": dead.astype(np.int64)}))
-        decoded = decoded.join(F.broadcast(dead_df), "docid", "left_anti")
+    decoded = _drop_dead(spark, seg.select("term", "df", "blocks", "postings")
+                         .mapInPandas(decode, schema=dec_schema), chain.dead)
 
     # proximity mode rides the SAME aggregation: the struct gains the
     # pos array as a trailing field (sort_array still orders by the
@@ -943,23 +942,23 @@ def _offsets(blks) -> np.ndarray:
 
 
 def _block_table(g: pd.DataFrame, n_docs: int, avgdl: float,
-                 dfg: dict | None, ti0: int = 0
+                 df_of, ti0: int = 0
                  ) -> tuple[list[str], list[float], list[tuple]]:
     """Sorted terms, their idfs, and the block-max table of one index's
     term rows: one ``(start, end, ub, ti, payload, offsets, bi)`` tuple
     per posting block (``offsets`` = its row's block offsets, ``bi`` its
     index there), ``ti`` = ti0 + the term's sorted position
     (the frozen summation order §1.3.4). Chunks of the same term behave
-    as extra blocks.
+    as extra blocks; a term's df is ``df_of`` (:func:`_df_of`) of its
+    first row.
 
     Rows from a delta/base mix are ordered by (first_docid, chunk) —
     src docid ranges are disjoint across dirs by construction
     (docid_offset). Block bounds stored at build time used that dir's
     avgdl; rescale by max(1, avgdl/src_avgdl) — a proven-safe upper
-    bound (partial is increasing in avgdl; see load_stats_multi
-    docstring). Each row's first block starts at the row's TRUE
-    first_docid (stored since format v3), so a block never covers
-    intervals before its first posting."""
+    bound (see :class:`_Chain`). Each row's first block starts at the
+    row's TRUE first_docid (stored since format v3), so a block never
+    covers intervals before its first posting."""
     # plain column zip — no pandas row materialization (an iterrows
     # here costs one Python Series build per (term, chunk) row)
     src_it = g["src_avgdl"] if "src_avgdl" in g.columns else [None] * len(g)
@@ -972,8 +971,7 @@ def _block_table(g: pd.DataFrame, n_docs: int, avgdl: float,
     blocks: list[tuple] = []
     for ti, t in enumerate(terms, ti0):
         rows = sorted(term_rows[t], key=lambda r: (int(r[2]), int(r[1])))
-        idf = _idf(float(dfg[t]) if dfg is not None else float(rows[0][3]),
-                   n_docs)
+        idf = _idf(df_of(t, rows[0][3]), n_docs)
         idfs.append(idf)
         for (_t, _chunk, first_docid, _df, blks, payload, src_avgdl) in rows:
             offs = _offsets(blks)
@@ -1145,7 +1143,7 @@ class _TopK:
 
 def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float,
                     k: int | None,
-                    dfg: dict | None = None,
+                    df_of=_stored_df,
                     range_lo: int = 0, range_hi: int | None = None,
                     min_match: int | None = None,
                     must_terms: frozenset | None = None,
@@ -1225,7 +1223,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float,
             # no positive term has postings here — nothing can score
             # (a must_not-only query is not a top-k relevance query)
             return _empty_result()
-    terms, idfs, blocks = _block_table(g, n_docs, avgdl, dfg)
+    terms, idfs, blocks = _block_table(g, n_docs, avgdl, df_of)
     # must-clause term indexes; a must term with NO postings in this
     # group leaves len(must_ti) < n_must and every interval skips —
     # the OOV-must → empty contract falls out for free
@@ -1239,7 +1237,7 @@ def _wand_one_query(g: pd.DataFrame, n_docs: int, avgdl: float,
     # lazily and mask their docids
     if gneg is not None and len(gneg):
         blocks += [(s, e, 0.0, -1, *rest) for s, e, _ub, _ti, *rest
-                   in _block_table(gneg, n_docs, avgdl, dfg)[2]]
+                   in _block_table(gneg, n_docs, avgdl, df_of)[2]]
 
     scan = _BlockScan(blocks, range_lo, range_hi, idfs,
                       [avgdl] * len(idfs), prox=prox)
@@ -1353,7 +1351,7 @@ def search_topk(
     pruning (:func:`_wand_one_query`), dispatched by
     :func:`_per_query`. ``k=None`` returns every match, unranked, as
     (query_id, docid, score) — the ES match set. ``n_ranges`` defaults to
-    :func:`default_n_ranges` of the chain's raw N: one range → one
+    the dispatcher's sizing (:func:`_per_query`): one range → one
     applyInPandas group per query (small index fast path, no merge
     stage; the gathered rows are per-term encoded bytes, tiny relative
     to the corpus); more → chunk-parallel WAND over fixed docid ranges
@@ -1366,9 +1364,8 @@ def search_topk(
     are bit-identical to it (asserted in tests).
     ``score_mode="proximity"``: opt-in position-window score weighting
     (contract in :func:`_wand_one_query`)."""
-    if n_ranges is None:
-        n_ranges = default_n_ranges(load_stats_multi(_as_dirs(index_dir))[0])
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    chain = _chain(spark, index_dir)
+    n_docs, avgdl, dead = chain.n_docs, chain.avgdl, chain.dead
     _check_score_mode(score_mode)
     qa = _QueryAnalysis(spark, queries)
     must_by_q = qa.must_term_map()
@@ -1378,8 +1375,8 @@ def search_topk(
         empty = spark.createDataFrame([], schema=RESULT_SCHEMA)
         return empty if k is not None else empty.drop("rank")
     all_terms = qa.all_terms
-    seg = candidate_segments(spark, index_dir, all_terms)
-    dfg = _dfg_or_none(spark, index_dir, all_terms, seg=seg, dead=dead)
+    seg = candidate_segments(spark, chain.dirs, all_terms)
+    df_of = _df_of(spark, chain, all_terms, seg)
     qn = qa.qn_map() if require_all else None
 
     def kernel(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
@@ -1387,13 +1384,13 @@ def search_topk(
         mt = (frozenset(must_by_q.get(qid, ())) if must_by_q is not None
               else None)
         mm = qn[qid] if qn is not None else min_should_match
-        return _wand_one_query(g, n_docs, avgdl, k, dfg, range_lo=lo,
+        return _wand_one_query(g, n_docs, avgdl, k, df_of, range_lo=lo,
                                range_hi=hi, min_match=mm, must_terms=mt,
                                n_must=len(mt or ()), dead=dead,
                                score_mode=score_mode)
 
     hits = _per_query(spark, seg, qa.kinds_pdf().itertuples(index=False, name=None),
-                      _as_dirs(index_dir), n_ranges, k, kernel)
+                      chain.domain, n_ranges, k, kernel)
     return hits if k is not None else hits.drop("rank")
 
 
@@ -1430,7 +1427,7 @@ def default_n_ranges(n_docs: int, target_docs_per_range: int = 1 << 22) -> int:
 
 
 def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
-               dirs: list[str], n_ranges: int, k: int | None,
+               domain: tuple[int, int], n_ranges: int | None, k: int | None,
                kernel) -> DataFrame:
     """THE per-query dispatch of every top-k kernel: candidate rows
     ``seg`` fanned out to the queries that hold their term, grouped and
@@ -1446,8 +1443,11 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     defaultParallelism)`` hash partitions of the group key, which AQE
     does not coalesce into one task and the ``groupBy`` reuses.
 
+    ``n_ranges`` None: :func:`default_n_ranges` of the size of
+    ``domain``, the chain's inclusive docid range (:class:`_Chain`) —
+    the one site that sizes the fan-out, for every op.
     ``n_ranges <= 1``: one applyInPandas group per query, range
-    (0, None). Otherwise the docid space is cut into ``n_ranges`` fixed
+    (0, None). Otherwise the domain is cut into ``n_ranges`` fixed
     global ranges, each (query, range) pair is an independent group
     running the kernel restricted to [range_lo, range_hi], and the
     per-range candidates (≤ n_ranges·k per query) merge with the Q6
@@ -1470,6 +1470,9 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     nothing there. Exactness never depends on this pruning, only task
     size does: any row holding a posting for a doc in [lo, hi] spans
     that doc's docid and therefore joins the range."""
+    dom_lo, dom_hi = domain
+    if n_ranges is None:
+        n_ranges = default_n_ranges(dom_hi - dom_lo + 1)
     rows = list(qterms)
     _check_rows_budget(len(rows), "(query, term) pairs in one top-k call")
     fan: dict[str, list[dict]] = {}
@@ -1492,7 +1495,6 @@ def _per_query(spark: SparkSession, seg: DataFrame, qterms: Iterable[tuple],
     if n_ranges <= 1:
         return (fanned.repartition(n_parts, "query_id").groupBy("query_id")
                 .applyInPandas(run, RESULT_SCHEMA))
-    dom_lo, dom_hi = docid_domain(dirs)
     if dom_hi < dom_lo:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
     width = max(1, (dom_hi - dom_lo + 1 + n_ranges - 1) // n_ranges)
@@ -1534,10 +1536,11 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
     """THE decode → match → score skeleton of every positional op
     (phrase, phrase_prefix, spans, intervals), over :func:`_per_query`.
 
-    Driver side: chain stats, candidate rows for the terms of every
-    ``plans`` entry ({query_id: :class:`_PositionalTerms`}), global df
-    and the distinct (query_id, term) rows; ``n_ranges`` defaults to
-    :func:`default_n_ranges` of N_eff. Per group: the two-pass
+    At plan time: the chain (:func:`_chain`), candidate rows for the
+    terms of every ``plans`` entry ({query_id: :class:`_PositionalTerms`}),
+    the df source (:func:`_df_of`) and the distinct (query_id, term)
+    rows; ``n_ranges`` None leaves the fan-out to :func:`_per_query`.
+    Per group: the two-pass
     :func:`_decode_candidate_positions`, then the op's match step
     ``match(qid, inter, per_term)``, then the ranking — the
     disjunctive BM25 sum over the query's scored terms in sorted-term
@@ -1553,14 +1556,15 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
     phrase)."""
     from ..scoring import partial as _partial
 
-    n_docs, avgdl, _, dead = _chain_stats(spark, index_dir)
+    chain = _chain(spark, index_dir)
+    n_docs, avgdl, dead = chain.n_docs, chain.avgdl, chain.dead
     query_terms = {qid: sorted({*p.scored, *p.optional})
                    for qid, p in plans.items()}
     terms = sorted({t for ts in query_terms.values() for t in ts})
     if not terms:
         return spark.createDataFrame([], schema=RESULT_SCHEMA)
-    seg = candidate_segments(spark, index_dir, terms)
-    dfg = _dfg_or_none(spark, index_dir, terms, seg=seg, dead=dead)
+    seg = candidate_segments(spark, chain.dirs, terms)
+    df_of = _df_of(spark, chain, terms, seg)
 
     def kernel(qid: int, g: pd.DataFrame, lo: int, hi: int | None) -> pd.DataFrame:
         p = plans[qid]
@@ -1572,7 +1576,7 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
         if matched_local.size == 0:
             return _empty_result()
         matched = inter[matched_local]
-        df_of = _dfg_from_rows(g, dfg)
+        row_df = dict(zip(g["term"], g["df"]))
         scores = np.zeros(matched.size, dtype=np.float64)
         for t in p.scored:
             if t not in per_term:
@@ -1580,7 +1584,7 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
             d, tf, dl, _pos = per_term[t]
             sel = np.isin(d, only.get(t, matched), assume_unique=True)
             idx = np.searchsorted(matched, d[sel])
-            scores[idx] += _idf(float(df_of[t]), n_docs) * _partial(
+            scores[idx] += _idf(df_of(t, row_df[t]), n_docs) * _partial(
                 tf[sel], dl[sel], avgdl)
         if widths is not None:
             scores *= 1.0 / (1.0 + widths.astype(np.float64))
@@ -1594,9 +1598,7 @@ def _positional_topk(spark: SparkSession, index_dir, plans: dict,
 
     return _per_query(spark, seg,
                       [(qid, t) for qid, ts in query_terms.items() for t in ts],
-                      _as_dirs(index_dir),
-                      n_ranges if n_ranges is not None
-                      else default_n_ranges(n_docs), k, kernel)
+                      chain.domain, n_ranges, k, kernel)
 
 
 # ---------------------------------------------------------------------------

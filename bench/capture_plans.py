@@ -6,7 +6,12 @@ Uses only the public query API, so before/after plan files for two
 trees come from the same script:
 
     python bench/capture_plans.py plans/r09            # current tree
-    PYTHONPATH=<other tree> python bench/capture_plans.py <before dir>
+    cd <other tree> && PYTHONPATH=. python <this tree>/bench/capture_plans.py <before dir>
+
+Run each side from inside its own tree: Spark's Python workers put
+their working directory first on ``sys.path``, so a run started in
+another tree would score with that tree's kernels while its main
+process plans with PYTHONPATH's.
 
 The index must already exist (bench.py leaves /tmp/aarhus_bench_idx_0.1).
 ``--docs`` names the sf dir whose documents the index was built from
@@ -41,11 +46,12 @@ def grab(df) -> str:
 
 
 def es_probes(spark, idx, qdf, ph, docs) -> dict:
-    """Every public ES op as name -> zero-argument builder of its
+    """Every scored op as name -> zero-argument function returning its
     DataFrame, over ``idx`` (one dir or a chain), the (query_id, qtext)
     frame ``qdf``, the phrase frame ``ph`` and the stored-text source
-    ``docs`` (url, text). ``search_page`` runs twice: from page 1, and
-    from a cursor on the rounded key."""
+    ``docs`` (url, text): the retrieval ops (:func:`retrieval_probes`)
+    and every public ES op. ``search_page`` runs twice: from page 1,
+    and from a cursor on the rounded key."""
     from pyspark.sql import functions as F
 
     from aarhus_spark.operators import eslayer as es
@@ -82,6 +88,7 @@ def es_probes(spark, idx, qdf, ph, docs) -> dict:
     boost_q = qdf.withColumn("neg_qtext", F.when(F.col("query_id") % 2 == 0,
                                                  F.lit("the")))
     return {
+        **retrieval_probes(spark, idx, qdf, ph, boost_q),
         "search_matches": lambda: es.search_matches(spark, idx, qdf),
         "search_facets": lambda: es.search_facets(spark, idx, qdf,
                                                   n_buckets=8),
@@ -127,6 +134,57 @@ def es_probes(spark, idx, qdf, ph, docs) -> dict:
     }
 
 
+def retrieval_probes(spark, idx, qdf, ph, neg_q) -> dict:
+    """The retrieval ops as name -> zero-argument function, over ``idx``:
+    TAAT; top-k at 1 and 3 docid ranges in the plain, require_all,
+    must_not (``neg_q``: ``qdf`` with a neg_qtext column) and
+    proximity forms; phrase at slop 0 and 2, phrase_prefix, the span
+    ops and intervals; the term-rewrite ops and match_bool_prefix."""
+    from aarhus_spark.operators import search as s
+    from aarhus_spark.operators import spans
+
+    def rows(col, *vals):
+        return spark.createDataFrame(list(enumerate(vals)),
+                                     f"query_id long, {col} string")
+
+    out = {"search_taat": lambda: s.search_taat(spark, idx, qdf)}
+    for form, q, kw in (("", qdf, {}), ("_and", qdf, {"require_all": True}),
+                        ("_not", neg_q, {}),
+                        ("_prox", qdf, {"score_mode": "proximity"})):
+        for nr in (1, 3):
+            out[f"search_topk{form}_r{nr}"] = (
+                lambda q=q, kw=kw, nr=nr: s.search_topk(spark, idx, q,
+                                                        n_ranges=nr, **kw))
+    span_not = spark.createDataFrame(
+        [(0, "the data", "sort"), (1, "sort data", "the")],
+        "query_id long, qtext string, exclude string")
+    return {
+        **out,
+        "search_phrase_slop0": lambda: s.search_phrase(spark, idx, ph),
+        "search_phrase_slop2": lambda: s.search_phrase(spark, idx, ph, slop=2),
+        "search_phrase_prefix": lambda: s.search_phrase_prefix(
+            spark, idx, rows("qtext", "the da", "sort d")),
+        "search_span_near": lambda: spans.search_span_near(
+            spark, idx, ph, slop=3, in_order=True),
+        "search_span_not": lambda: spans.search_span_not(
+            spark, idx, span_not, post=2),
+        "search_span_first": lambda: spans.search_span_first(
+            spark, idx, rows("qtext", "data", "the"), end=5),
+        "search_intervals": lambda: spans.search_intervals(
+            spark, idx, rows("qtext", "the|of data", "sort data"), max_gaps=2),
+        "search_prefix": lambda: s.search_prefix(
+            spark, idx, rows("prefix", "da", "sp")),
+        "search_fuzzy": lambda: s.search_fuzzy(
+            spark, idx, rows("fterm", "dta", "sprak")),
+        "search_wildcard": lambda: s.search_wildcard(
+            spark, idx, rows("wpattern", "d*a", "s?ort")),
+        "search_regexp": lambda: s.search_regexp(
+            spark, idx, rows("rpattern", "da.*", "s[a-z]+")),
+        "search_match_bool_prefix": lambda: s.search_match_bool_prefix(
+            spark, idx, rows("qtext", "the da", "sort j")),
+    }
+
+
 def main():
     p = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     p.add_argument("out_dir")
@@ -156,12 +214,10 @@ def main():
         from aarhus_spark.sources.io import pages_from_documents
         pages = pages_from_documents(spark, args.docs)
 
-    from aarhus_spark.operators.search import (search_phrase, search_taat,
-                                               search_wand,
+    from aarhus_spark.operators.search import (search_phrase, search_wand,
                                                search_wand_ranges)
 
     plans = {
-        "search_taat": lambda: search_taat(spark, idx_dir, qdf),
         "search_wand": lambda: search_wand(spark, idx_dir, qdf),
         "search_wand_ranges": lambda: search_wand_ranges(
             spark, idx_dir, qdf, n_ranges=8),

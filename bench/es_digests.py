@@ -1,5 +1,5 @@
-"""Row digests of every public ES op, on one index dir and on a
-tombstoned base+delta chain.
+"""Row digests of every scored op (the retrieval ops and every public
+ES op), on one index dir and on a tombstoned base+delta chain.
 
 Usage: python bench/es_digests.py <work_dir> [n_pages]
 
@@ -13,7 +13,12 @@ A digest is the sha1 of the sorted rows' repr (floats exact), so two
 trees agree on a probe iff their rows and schemas are equal:
 
     python bench/es_digests.py /tmp/esd > after.jsonl
-    PYTHONPATH=<other tree> python bench/es_digests.py /tmp/esd > before.jsonl
+    cd <other tree> && PYTHONPATH=. python <this tree>/bench/es_digests.py /tmp/esd > before.jsonl
+
+Run each side from inside its own tree: Spark's Python workers put
+their working directory first on ``sys.path``, so a run started in
+another tree would score with that tree's kernels while its main
+process plans with PYTHONPATH's.
 """
 import hashlib
 import json

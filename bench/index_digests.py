@@ -28,7 +28,12 @@ ran: the job ids the status tracker lists that appeared during the call
 (nothing here sets a job group, so every job is listed). Compare two trees:
 
     python bench/index_digests.py /tmp/idx_d > after.jsonl
-    PYTHONPATH=<other tree> python bench/index_digests.py /tmp/idx_d > before.jsonl
+    cd <other tree> && PYTHONPATH=. python <this tree>/bench/index_digests.py /tmp/idx_d > before.jsonl
+
+Run each side from inside its own tree: Spark's Python workers put
+their working directory first on ``sys.path``, so a run started in
+another tree would score with that tree's kernels while its main
+process plans with PYTHONPATH's.
 """
 import hashlib
 import json

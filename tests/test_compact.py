@@ -130,3 +130,31 @@ def test_compact_rejects_misaligned_position_stream(spark, three_indexes,
     assert decode_fragments_to_tokens(spark, [mono]).count() > 0
     with pytest.raises(Exception, match="payload/offset mismatch"):
         decode_fragments_to_tokens(spark, [bad]).count()
+
+
+def test_index_writers_release_their_cache(spark, tmpdir_session):
+    """build_index, build_delta and compact_indexes each leave the
+    session's persisted RDDs as they found them: the dense-docid
+    ranking's partition-id frame is released once its output is
+    loaded, and the output once the index is written."""
+    import pandas as pd
+
+    pdf = gen_pages(150)
+    base = os.path.join(tmpdir_session, "rel_base")
+    delta = os.path.join(tmpdir_session, "rel_delta")
+    comp = os.path.join(tmpdir_session, "rel_comp")
+    rec = pdf.sort_values(["url", "warc_ts"]).drop_duplicates("url", keep="last")
+    rec = rec.iloc[::7].assign(warc_ts=lambda d: d["warc_ts"] + pd.Timedelta(days=2))
+    kw = dict(n_partitions=2, n_buckets=3, salts=2)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    start = persistent().size()
+    sizes = []
+    build_index(spark, spark.createDataFrame(pdf), base, **kw)
+    sizes.append(persistent().size())
+    build_delta(spark, spark.createDataFrame(rec), base, delta,
+                on_recrawl="tombstone", **kw)
+    sizes.append(persistent().size())
+    compact_indexes(spark, [base, delta], comp, **kw)
+    sizes.append(persistent().size())
+    assert os.path.isdir(os.path.join(delta, "tombstones"))
+    assert sizes == [start] * 3

@@ -162,7 +162,7 @@ def test_search_matches_equals_taat_bitwise(spark, es_chain, monkeypatch,
     qdf = spark.createDataFrame(rows, schema)
     assert search.load_tombstones(spark, [base_dir, delta_dir])[0].size
     for dirs in (base_dir, [base_dir, delta_dir]):
-        n_docs = search.load_stats_multi(search._as_dirs(dirs))[0]
+        n_docs = search._chain(spark, dirs).n_docs
         taat = sorted((r["query_id"], r["docid"], r["score"].hex()) for r in
                       search.search_taat(spark, dirs, qdf, k=n_docs,
                                          **kw).collect())
@@ -176,3 +176,61 @@ def test_search_matches_equals_taat_bitwise(spark, es_chain, monkeypatch,
                          for r in search_matches(spark, dirs, qdf,
                                                  **kw).collect())
             assert got == taat, (case, dirs, nr)
+
+
+def test_mlt_selects_with_live_n(spark, es_chain):
+    """more_like_this's term selection on a tombstoned chain scores
+    with the chain's live N and the stored dictionary df (Lucene
+    MoreLikeThis: numDocs and docFreq), the convention of
+    significant_terms; the raw ΣN would select differently here."""
+    from collections import Counter
+    from math import log
+
+    from aarhus_spark.operators.build import read_dictionary
+    from aarhus_spark.operators.eslayer import mlt_select_terms
+    from aarhus_spark.operators.search import load_stats
+    from aarhus_spark.textops import tokenize
+
+    base_dir, delta_dir, mono_dir = es_chain
+    dirs = [base_dir, delta_dir]
+    raw_n = sum(int(load_stats(d)["N"]) for d in dirs)
+    live_n = int(load_stats(mono_dir)["N"])
+    assert raw_n > live_n
+    df: dict[str, int] = {}
+    for d in dirs:
+        for r in read_dictionary(spark, d).select("term", "df").collect():
+            df[r["term"]] = df.get(r["term"], 0) + int(r["df"])
+
+    def twin(text, n_docs, mqt):
+        tf = Counter(tokenize(text))
+        scored = [(t, round(c * log(1.0 + n_docs / df[t]), 9))
+                  for t, c in tf.items() if df.get(t, 0) >= 1]
+        scored.sort(key=lambda x: (-x[1], x[0]))
+        return sorted(t for t, _ in scored[:mqt])
+
+    texts = gen_pages(200)["text"].dropna()
+    seed, mqt = next((text, mqt) for text in texts for mqt in range(2, 12)
+                     if twin(text, raw_n, mqt) != twin(text, live_n, mqt))
+    assert twin(seed, raw_n, mqt) != twin(seed, live_n, mqt)
+    assert mlt_select_terms(spark, dirs, seed, max_query_terms=mqt) == \
+        twin(seed, live_n, mqt)
+
+
+def test_fan_out_is_sized_once(spark, es_chain, monkeypatch):
+    """Every scored op sizes its docid-range fan-out from the same
+    number on a tombstoned chain: the retrieval path and the
+    positional ops pass default_n_ranges one value."""
+    from aarhus_spark.operators import search
+    from aarhus_spark.operators.spans import search_span_near
+    base_dir, delta_dir, _ = es_chain
+    dirs = [base_dir, delta_dir]
+    assert search.load_tombstones(spark, dirs)[0].size
+    sized, seen = search.default_n_ranges, []
+    monkeypatch.setattr(search, "default_n_ranges",
+                        lambda n: seen.append(n) or sized(n))
+    qdf = spark.createDataFrame([(0, "the data"), (1, "sort data")],
+                                "query_id long, qtext string")
+    search.search_topk(spark, dirs, qdf)
+    search.search_phrase(spark, dirs, qdf)
+    search_span_near(spark, dirs, qdf, slop=3)
+    assert len(seen) == 3 and len(set(seen)) == 1, seen

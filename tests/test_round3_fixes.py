@@ -77,12 +77,12 @@ def test_range_join_low_bound_prunes(spark, idx):
     entirely below its docid span. Reconstructed from the same inputs
     the operator uses: with the low-side bound, a row joins exactly
     ceil(span/width)-ish ranges instead of every range ≥ its start."""
-    from aarhus_spark.operators.search import docid_domain
+    from aarhus_spark.operators.search import _chain
     _, out = idx
     frags = (spark.read.parquet(IndexPaths(out).fragments)
              .withColumn("max_docid", F.element_at("blocks", -1)["last_docid"])
              .select("first_docid", "max_docid").collect())
-    lo_dom, hi_dom = docid_domain([out])
+    lo_dom, hi_dom = _chain(spark, [out]).domain
     n_ranges = 8
     width = max(1, (hi_dom - lo_dom + 1 + n_ranges - 1) // n_ranges)
     bounds = [(lo_dom + r * width, lo_dom + (r + 1) * width - 1)
